@@ -103,6 +103,9 @@ def curate_corpus(
     `checkpoint_dir` makes the lineage cut DURABLE (VERDICT r7 #3):
     each stage is written to
     ``{checkpoint_dir}/stage_{NN}_{name}`` as parquet and read back,
+    each with one column beyond the working corpus columns: ``_nt``
+    (bigint, the per-document token count the attrition ledger sums;
+    the returned corpus drops it),
     so the run is restartable after executor (or whole-application)
     loss and every intermediate corpus is independently re-readable —
     the difference at the 100 TB design point between resuming after

@@ -185,7 +185,7 @@ def _resolve_max_bucket(
     size_source: DataFrame, max_bucket: int | None | str
 ) -> int | None:
     """Resolve the ``"auto"`` sentinel with the same optimizer-estimate
-    gate as `maybe_broadcast`/`cosine_topk_pairs_blocked`: provably
+    gate as `maybe_broadcast`/`cosine_topk_pairs`: provably
     small corpora keep the uncapped historical behavior; large or
     unknown-size corpora default to `MINHASH_MAX_BUCKET` — the measured
     zipf hot-bucket degeneration (one bucket = 49% of a 50k-doc corpus,

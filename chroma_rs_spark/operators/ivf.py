@@ -23,7 +23,7 @@ splits hot cells at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chroma_rs_spark.functions.vector import (
@@ -32,7 +32,9 @@ from chroma_rs_spark.functions.vector import (
     l2_norm,
     vector_lit_sql,
 )
-from chroma_rs_spark.operators.knn import DIST_DECIMALS
+from chroma_rs_spark.operators import kernel
+from chroma_rs_spark.operators.kernel import DIST_DECIMALS
+from chroma_rs_spark.plans import fan_out
 
 
 def _seq_norm(vec: list[float]) -> float:
@@ -63,7 +65,7 @@ def assign_cells(
     per row is the irreducible work. Same doubles as the naive form
     (norms accumulate in the same order), ~3x less interpreted work.
     For wide vectors or large centroid counts, the Arrow-batch path
-    (knn_exact_local_topk's matmul) is the next gear.
+    (`ivf_topk`, scored by operators/kernel.py) is the next gear.
     """
     # zero-norm vectors cannot be assigned a cosine cell (ANSI SQL
     # would raise on the division): dropped, the unscorable-vector rule
@@ -132,13 +134,13 @@ def ivf_topk(
     against the broadcast centroid/query matrices), keeping only the
     local top-k per query — the shuffle after mapInPandas carries at
     most |batches| x |queries| x k rows, exactly like
-    `knn_exact_local_topk`. Rounding/tie-break semantics are identical
-    to the HOF formulation (round to DIST_DECIMALS, -0.0 folded to
-    +0.0, ties to the lower centroid/neighbor id), so results stay
-    oracle-checkable bit-for-bit.
+    `knn_exact_local_topk`. Assignment, driver-side probe selection
+    and scoring all run the shared numpy kernel (operators/kernel.py):
+    round to DIST_DECIMALS, -0.0 folded to +0.0, ties to the lower
+    centroid/neighbor id, so results stay oracle-checkable
+    bit-for-bit.
     """
     import numpy as np
-    import pandas as pd
 
     centroids, queries = (
         precollected
@@ -146,93 +148,43 @@ def ivf_topk(
         else collect_small_vectors(items, n_centroids, n_queries, item_id, item_emb)
     )
 
-    # driver-side probe selection (queries and centroids are tiny):
-    # same rounding + lower-id tie-break as every ranking in the engine
     cids = np.array([c for c, _ in centroids], dtype=np.int64)
     cmat = np.array([v for _, v in centroids], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    probe_cells: dict[int, set[int]] = {}
+    cnorm = kernel.norms(cmat)
     qids = [q[0] for q in queries]
     qmat = np.array([v for _, v in queries], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    for j, (qid, qv) in enumerate(queries):
-        d = np.round(1.0 - (cmat @ qmat[j]) / (cnorm * qnorm[j]), DIST_DECIMALS)
-        order = np.lexsort((cids, d))
-        probe_cells[qid] = {int(cids[c]) for c in order[:n_probe]}
+    qnorm = kernel.norms(qmat)
+    # driver-side probe selection (queries and centroids are tiny): the
+    # n_probe nearest cells per query by (rounded distance, cell id)
+    d_cq = kernel.rounded(kernel.distances("cosine", cmat, qmat, cnorm, qnorm))
+    probe_cells = {
+        qid: cids[np.lexsort((cids, d_cq[:, j]))[:n_probe]]
+        for j, qid in enumerate(qids)
+    }
 
-    from collections.abc import Iterator
-
-    out_schema = f"query_id long, neighbor_id {item_id_type}, distance double"
-
-    def assign_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.stack(pdf[item_emb].to_numpy()).astype(np.float64)
-            ids = pdf[item_id].to_numpy()
-            if ids.dtype == object:
-                # string ids: numpy U-strings lexsort (object arrays
-                # don't); code-point order == Spark's string ordering
-                ids = ids.astype(str)
-            inorm = np.linalg.norm(emb, axis=1)
-            # assignment: argmin over (rounded distance, centroid id);
-            # cmat rows are ordered by ascending cid, so argmin's
-            # first-occurrence tie rule IS the lower-id tie-break.
-            # Zero-norm rows yield NaN everywhere and are excluded by
-            # the finite mask below (the unscorable-vector rule).
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d_assign = np.round(
-                    1.0 - (emb @ cmat.T) / (inorm[:, None] * cnorm[None, :]),
-                    DIST_DECIMALS,
-                )
-                d_q = (
-                    np.round(
-                        1.0 - (emb @ qmat.T) / (inorm[:, None] * qnorm[None, :]),
-                        DIST_DECIMALS,
-                    )
-                    + 0.0
-                )
-            cell = cids[np.argmin(d_assign, axis=1)]
-            rows = []
-            for j, qid in enumerate(qids):
-                mask = np.isin(cell, list(probe_cells[qid]))
-                if not mask.any():
-                    continue
-                mask = mask & np.isfinite(d_q[:, j])
-                if not mask.any():
-                    continue
-                mids, md = ids[mask], d_q[mask, j]
-                # exact local top-k by (distance, id): lexsort is total
-                order = np.lexsort((mids, md))[: min(k, len(mids))]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": mids[order],
-                            "distance": md[order],
-                        }
-                    )
-                )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
-
-    from chroma_rs_spark.plans import fan_out
+    def score(pdf):
+        emb = kernel.matrix(pdf[item_emb])
+        inorm = kernel.norms(emb)
+        # assignment: argmin over (rounded distance, centroid id); cmat
+        # rows are ordered by ascending cid, so argmin's first-occurrence
+        # tie rule IS the lower-id tie-break. Zero-norm rows score NaN
+        # everywhere and are dropped by the kernel's finite mask.
+        d_cell = kernel.rounded(kernel.distances("cosine", emb, cmat, inorm, cnorm))
+        cell = cids[np.argmin(d_cell, axis=1)]
+        d_q = kernel.rounded(kernel.distances("cosine", emb, qmat, inorm, qnorm))
+        probed = np.stack([np.isin(cell, probe_cells[q]) for q in qids], axis=1)
+        return kernel.topk_per_query(
+            qids, pdf[item_id].to_numpy(), d_q, k,
+            ("query_id", "neighbor_id", "distance"), mask=probed,
+        )
 
     src = fan_out(
         items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
     )
-    candidates = src.mapInPandas(assign_score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
+    candidates = kernel.map_batches(
+        src, score, f"query_id long, neighbor_id {item_id_type}, distance double"
     )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        # bigint rank: scale-correct (>2^31 rows) and matches the int64 a
-        # SQL engine's row_number() emits — keeps oracle hashes type-exact
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                "neighbor_id", "distance")
-    )
+    return kernel.merge_topk(candidates, k, "query_id", "neighbor_id", "distance")
 
 
 def train_centroids_kmeans(

@@ -1,0 +1,200 @@
+"""The one numpy scoring kernel behind every vectorized top-k path.
+
+The exact cosine-pair operator (operators/similarity.py), the
+scale-path exact KNN (`knn_exact_local_topk`), IVF search (`ivf_topk`:
+cell assignment, probe selection and probed-cell scoring) and PQ ADC
+(`pq_adc_topk`) share one shape: score a block of rows locally with a
+float64 matmul inside an Arrow batch or group, keep a local top-k,
+then merge the bounded candidate set with one window or
+TakeOrderedAndProject (the per-partition-top-k-then-merge shape of
+REPOSE, PAPERS.md). This module holds the single copy of each piece
+of that arithmetic, so the paths agree bit-for-bit by construction:
+
+* `matrix` — Arrow list column to a float64 (n, dim) matrix;
+* `cosine_sim` / `distances` — cosine, squared-l2 and ip matrices;
+* `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
+* `topk_per_query` — per-query `lexsort((ids, d))[:k]` over finite
+  entries, string ids lexsorted as numpy U-strings;
+* `pair_topk` — the tie-inclusive threshold select of the pair tiles;
+* `map_batches` / `merge_topk` — the Spark glue on either side.
+
+Every ranking orders by (distance rounded to DIST_DECIMALS, id), so
+ties break on id exactly like the global window and the SQL oracles.
+"""
+
+from __future__ import annotations
+
+import sys
+from collections.abc import Callable, Sequence
+from typing import TYPE_CHECKING
+
+import numpy as np
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+if TYPE_CHECKING:  # pandas loads lazily, inside the scoring tasks
+    import pandas as pd
+
+DIST_DECIMALS = 6  # rounding for deterministic cross-engine ranking
+
+# The scoring closures run in Python workers, which need not have this
+# package on their import path: ship this module by value, like the
+# closures' own code.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def matrix(col: pd.Series) -> np.ndarray:
+    """(n, dim) float64 matrix from an Arrow array<float|double> column."""
+    return np.stack(col.to_numpy()).astype(np.float64)
+
+
+def norms(mat: np.ndarray) -> np.ndarray:
+    return np.linalg.norm(mat, axis=1)
+
+
+def cosine_sim(a, b, a_norm=None, b_norm=None) -> np.ndarray:
+    """(len(a), len(b)) unrounded cosine similarity. A zero-norm or
+    non-finite row yields NaN: unscorable, dropped by the finite masks
+    below."""
+    a_norm = norms(a) if a_norm is None else a_norm
+    b_norm = norms(b) if b_norm is None else b_norm
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (a @ b.T) / (a_norm[:, None] * b_norm[None, :])
+
+
+def distances(metric: str, a, b, a_norm=None, b_norm=None) -> np.ndarray:
+    """(len(a), len(b)) unrounded distance matrix: cosine = 1 - sim,
+    l2 = squared L2 via |a|^2 - 2ab + |b|^2, ip = 1 - a.b."""
+    if metric == "cosine":
+        return 1.0 - cosine_sim(a, b, a_norm, b_norm)
+    with np.errstate(invalid="ignore", over="ignore"):
+        if metric == "l2":
+            return (
+                (a * a).sum(axis=1)[:, None]
+                - 2.0 * (a @ b.T)
+                + (b * b).sum(axis=1)[None, :]
+            )
+        if metric == "ip":
+            return 1.0 - a @ b.T
+    raise ValueError(f"unknown metric {metric!r}")
+
+
+def rounded(x: np.ndarray, fold_zero: bool = True) -> np.ndarray:
+    """Round to DIST_DECIMALS (numpy half-even). `+ 0.0` folds -0.0 to
+    +0.0 — the `ROUND(...) + 0.0` every distance oracle applies; pair
+    similarities keep the sign of zero, like their oracle."""
+    r = np.round(x, DIST_DECIMALS)
+    return r + 0.0 if fold_zero else r
+
+
+def _sortable(ids: np.ndarray) -> np.ndarray:
+    # object (string) ids: numpy U-strings lexsort, object arrays don't;
+    # code-point order == Spark's string ordering
+    return ids.astype(str) if ids.dtype == object else ids
+
+
+def topk_per_query(
+    qids: Sequence,
+    ids: np.ndarray,
+    d: np.ndarray,
+    k: int,
+    cols: tuple[str, str, str],
+    mask: np.ndarray | None = None,
+) -> pd.DataFrame | None:
+    """Local top-k per query column of the (n_items, n_queries)
+    rounded distance matrix `d`: the k smallest finite (distance, id)
+    rows, optionally restricted by a same-shape boolean `mask`.
+    Non-finite distances are unscorable pairs (zero-norm under cosine,
+    NaN components) and never become candidates. lexsort rather than
+    argpartition: ties at the k-th boundary (rounding manufactures
+    exact ties) must break on id like the global window, or a tied
+    lowest-id candidate could be dropped locally. `cols` names the
+    (query, id, distance) output columns."""
+    import pandas as pd
+
+    ids = _sortable(ids)
+    keep = np.isfinite(d) if mask is None else mask & np.isfinite(d)
+    q_col, id_col, d_col = cols
+    frames = []
+    for j, qid in enumerate(qids):
+        sel = keep[:, j]
+        mids, md = ids[sel], d[sel, j]
+        if md.size == 0:
+            continue
+        top = np.lexsort((mids, md))[:k]
+        frames.append(pd.DataFrame({q_col: qid, id_col: mids[top], d_col: md[top]}))
+    return pd.concat(frames, ignore_index=True) if frames else None
+
+
+def pair_topk(
+    ids_a: np.ndarray,
+    mat_a: np.ndarray,
+    ids_b: np.ndarray,
+    mat_b: np.ndarray,
+    top_n: int,
+    upper: bool,
+    b_norm: np.ndarray | None = None,
+) -> pd.DataFrame | None:
+    """Local top-N cosine pairs between two row blocks as (id_a < id_b,
+    cosine_sim) rows. `upper=True` keeps only id_a < id_b (the blocks
+    overlap, so each unordered pair appears twice); `upper=False`
+    keeps every distinct-id pair and orients it by id (the blocks are
+    disjoint, so each pair appears once, in block order).
+
+    The select keeps ALL pairs tied with the N-th best value, so the
+    global (sim desc, id_a, id_b) merge never loses a candidate a local
+    block dropped arbitrarily."""
+    import pandas as pd
+
+    sims = rounded(cosine_sim(mat_a, mat_b, b_norm=b_norm), fold_zero=False)
+    pair = (
+        ids_a[:, None] < ids_b[None, :] if upper else ids_a[:, None] != ids_b[None, :]
+    )
+    ia, ib = np.nonzero(pair & np.isfinite(sims))
+    if ia.size == 0:
+        return None
+    s = sims[ia, ib]
+    keep = min(top_n, s.size)
+    kth = np.partition(-s, keep - 1)[keep - 1]
+    sel = np.nonzero(s >= -kth)[0]
+    a, b = ids_a[ia[sel]], ids_b[ib[sel]]
+    return pd.DataFrame(
+        {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b), "cosine_sim": s[sel]}
+    )
+
+
+def map_batches(
+    df: DataFrame,
+    score: Callable[[pd.DataFrame], pd.DataFrame | None],
+    schema: str,
+) -> DataFrame:
+    """mapInPandas of `score` over every non-empty Arrow batch; a batch
+    scoring to None emits nothing."""
+
+    def run(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            out = score(pdf)
+            if out is not None:
+                yield out
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def merge_topk(
+    cands: DataFrame, k: int, query_col: str, id_col: str, dist_col: str
+) -> DataFrame:
+    """Global top-k per query over the local candidates: row_number()
+    by (distance, id) <= k. Returns (query, rank bigint, id, distance)
+    — bigint rank on every public ranking, the int64 a SQL engine's
+    row_number() emits."""
+    w = Window.partitionBy(query_col).orderBy(
+        F.col(dist_col).asc(), F.col(id_col).asc()
+    )
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_col, F.col("rank").cast("long").alias("rank"), id_col, dist_col)
+    )

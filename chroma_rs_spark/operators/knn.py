@@ -17,10 +17,15 @@ Two physical strategies, same logical semantics:
   mid-size collections but becomes the bottleneck at 100 TB.
 
 * `knn_exact_local_topk` — the scale path: per-partition top-k in a
-  vectorized Arrow batch (numpy matmul), so only |partitions| x
-  |queries| x k candidate rows ever shuffle; the final window runs on
-  that tiny set. At 1000 executors this turns an all-to-all shuffle of
-  the cross product into a near-map-only plan.
+  vectorized Arrow batch, scored by the shared numpy kernel
+  (operators/kernel.py — the same arithmetic as the pair, IVF and PQ
+  paths), so only |partitions| x |queries| x k candidate rows ever
+  shuffle; the final window runs on that tiny set. At 1000 executors
+  this turns an all-to-all shuffle of the cross product into a
+  near-map-only plan.
+
+`knn_exact` stays the SQL-HOF form because the declared knn oracles
+replay its arithmetic, and the collection's exact query path runs it.
 
 Determinism: ranks order by (distance rounded to 6 dp, item id) so
 top-k sets and orderings are reproducible and engine-independent
@@ -29,7 +34,7 @@ top-k sets and orderings are reproducible and engine-independent
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,11 +44,11 @@ from chroma_rs_spark.functions.vector import (
     l2_distance,
     l2_norm,
 )
+from chroma_rs_spark.operators import kernel
+from chroma_rs_spark.operators.kernel import DIST_DECIMALS
 from chroma_rs_spark.plans import fan_out
 
 METRICS = ("cosine", "l2", "ip")
-
-DIST_DECIMALS = 6  # rounding for deterministic cross-engine ranking
 
 
 def _distance_col(
@@ -201,88 +206,33 @@ def knn_exact_local_topk(
     `queries` is a driver-side list of (qid, vector) — the query set is
     small by contract (A8 batches a handful of probe vectors). Each
     Arrow batch computes all-pairs distances with one numpy matmul and
-    keeps only k candidates per query, so the shuffle after
-    mapInPandas carries at most |batches| * |queries| * k rows.
+    keeps only k candidates per query (operators/kernel.py), so the
+    shuffle after mapInPandas carries at most |batches| * |queries| * k
+    rows. Unscorable pairs (NaN distance: zero-norm under cosine) are
+    excluded, mirroring knn_exact's NULL-distance filter.
     """
     import numpy as np
-    import pandas as pd
 
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
     qids = [q[0] for q in queries]
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64)  # (nq, dim)
-    qnorm = np.linalg.norm(qmat, axis=1)
 
-    out_schema = (
-        f"{query_id} long, {item_id} {id_type}, distance double"
-    )
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.stack(pdf[item_emb].to_numpy()).astype(np.float64)  # (n, dim)
-            if metric == "l2":
-                # |a-b|^2 = |a|^2 - 2ab + |b|^2
-                d = (
-                    (emb * emb).sum(axis=1)[:, None]
-                    - 2.0 * (emb @ qmat.T)
-                    + (qmat * qmat).sum(axis=1)[None, :]
-                )
-            elif metric == "ip":
-                d = 1.0 - emb @ qmat.T
-            else:  # cosine
-                inorm = np.linalg.norm(emb, axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    d = 1.0 - (emb @ qmat.T) / (inorm[:, None] * qnorm[None, :])
-            d = np.round(d, DIST_DECIMALS) + 0.0  # (n, nq); +0.0 folds -0.0 → +0.0
-            ids = pdf[item_id].to_numpy()
-            if ids.dtype == object:
-                # string ids: U-strings lexsort (object arrays don't);
-                # code-point order == Spark's string ordering
-                ids = ids.astype(str)
-            rows = []
-            for j, qid in enumerate(qids):
-                dj = d[:, j]
-                # NaN = unscorable pair (zero-norm under cosine) —
-                # excluded, mirroring knn_exact's NULL-distance filter
-                fin = np.isfinite(dj)
-                mids, md = ids[fin], dj[fin]
-                if md.size == 0:
-                    continue
-                kk = min(k, md.size)
-                # lexsort, not argpartition: ties at the k-th boundary
-                # (round-6 manufactures exact ties) must break on item
-                # id exactly like the global window and the oracle, or
-                # a tied lowest-id candidate could be dropped per-batch
-                sel = np.lexsort((mids, md))[:kk]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            query_id: qid,
-                            item_id: mids[sel],
-                            "distance": md[sel],
-                        }
-                    )
-                )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
+    def score(pdf):
+        d = kernel.rounded(kernel.distances(metric, kernel.matrix(pdf[item_emb]), qmat))
+        return kernel.topk_per_query(
+            qids, pdf[item_id].to_numpy(), d, k, (query_id, item_id, "distance")
+        )
 
     # null embeddings are unscorable — see knn_exact
     src = fan_out(
         items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
     )
-    candidates = src.mapInPandas(local_topk, schema=out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("distance").asc(), F.col(item_id).asc()
+    candidates = kernel.map_batches(
+        src, score, f"{query_id} long, {item_id} {id_type}, distance double"
     )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, F.col("rank").cast("long").alias("rank"),
-                item_id, "distance")
-    )
+    return kernel.merge_topk(candidates, k, query_id, item_id, "distance")
 
 
 def with_norm(

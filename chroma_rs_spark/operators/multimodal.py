@@ -1395,7 +1395,9 @@ def audio_ahash64(samples: list[int], n_channels: int) -> int | None:
     windows over the frame sequence, bit i set iff the window's summed
     ABSOLUTE mixdown, cross-multiplied against the global sum, exceeds
     its share (window_sum * total_frames > total_sum * window_len).
-    Clips shorter than 64 frames are unscorable (None)."""
+    Clips shorter than 64 frames are unscorable (None). Samples must be
+    integers in the int16 range [-32768, 32767]; anything else raises
+    ValueError (the int64 exactness argument below depends on it)."""
     if not samples or n_channels < 1:
         return None
     n_frames = len(samples) // n_channels
@@ -1409,7 +1411,10 @@ def audio_ahash64(samples: list[int], n_channels: int) -> int | None:
     # match the scalar loop bit-for-bit.
     import numpy as np
 
-    arr = np.asarray(samples[: n_frames * n_channels], dtype=np.int64)
+    arr = np.asarray(samples[: n_frames * n_channels])
+    if arr.dtype.kind not in "iu" or arr.min() < -32768 or arr.max() > 32767:
+        raise ValueError("audio_ahash64: samples must be int16-range integers")
+    arr = arr.astype(np.int64, copy=False)
     mix = np.abs(arr.reshape(n_frames, n_channels).sum(axis=1))
     csum = np.concatenate(([0], np.cumsum(mix)))
     wb = [(i * n_frames) // 64 for i in range(65)]

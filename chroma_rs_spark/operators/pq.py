@@ -24,39 +24,45 @@ Spark shapes (matching the repo's discipline):
   This is the justified Pandas-UDF case: M*K per-row distance argmins
   would otherwise be an interpreted HOF tree.
 * **search (ADC)** — broadcast the per-query LUTs inside the task
-  closure, np.take + sum per subspace, local top-k per partition,
-  then one tiny window over |partitions| x |queries| x k candidates —
-  the same bounded-shuffle shape as knn_exact_local_topk.
+  closure, gather + sum per subspace, then the shared numpy kernel's
+  local top-k per partition and one tiny window over |partitions| x
+  |queries| x k candidates (operators/kernel.py — the same
+  bounded-shuffle shape and arithmetic as knn_exact_local_topk).
 * **rescore** — the production pattern: PQ retrieves an oversampled
   candidate set, an id-join against the raw vectors re-scores them
   exactly (distances identical to the exact path's doubles), and the
   final top-k ranks on exact distances. Recall is then a property of
-  the oversample factor, not of quantization error alone.
+  the oversample factor, not of quantization error alone. The
+  collection's `query(index="pq")` re-scores the `pq_adc_topk` pool
+  through `knn_exact`; `pq_topk_rescored_df` is the SQL-replayable
+  chain the declared `pq_topk` row runs.
 
 Verification: tests/test_pq.py pins encode codes and ADC distances
-bit-for-bit against a pure-numpy reference, checks determinism, and
-holds a measured recall band for PQ+rescore vs exact KNN. Every suite
-seat is FULLY oracle-checked (round 11 retired the last rows-only
-row): `pq_adc_topk` runs `pq_adc_topk_df` over `hash_codebooks`
+bit-for-bit against a pure-numpy reference and checks determinism;
+tests/test_collection_pq.py holds the exact re-scored distances and
+the measured recall band end to end. Every suite seat is FULLY
+oracle-checked (round 11 retired the last rows-only row):
+`pq_adc_topk` runs `pq_adc_topk_df` over `hash_codebooks`
 (data-independent md5-derived literals a DuckDB oracle embeds
 verbatim), and `pq_topk` runs the TRAINED chain end to end —
 `train_pq_codebooks_df` uses the knn_ivf_trained fixed-point
 discipline (micro-unit HUGEINT means, in-order round-6 folds), so
 the DuckDB twin unrolls the full training and replays
 encode + LUT + ADC + exact rescore on the trained tables. The numpy
-`train_pq_codebooks`/`pq_topk_rescored` kernels remain as the
-vectorized production alternative, recall-banded rather than
-hash-gated (BLAS pairwise summation is not SQL-replayable).
+`train_pq_codebooks` trainer remains the vectorized production
+alternative the collection index builds use, recall-banded rather
+than hash-gated (BLAS pairwise summation is not SQL-replayable).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from chroma_rs_spark.operators.knn import DIST_DECIMALS
+from chroma_rs_spark.operators import kernel
+from chroma_rs_spark.operators.kernel import DIST_DECIMALS
 
 
 def train_pq_codebooks(
@@ -144,30 +150,18 @@ def pq_encode(
     import pandas as pd
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, k, sub = books.shape
+    m, _k, sub = books.shape
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.stack(pdf[item_emb].to_numpy()).astype(np.float64)
-            n = emb.shape[0]
-            codes = np.empty((n, m), dtype=np.int32)
-            for mi in range(m):
-                x = emb[:, mi * sub : (mi + 1) * sub]
-                c = books[mi]
-                d = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ c.T)
-                    + (c * c).sum(axis=1)[None, :]
-                )
-                codes[:, mi] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {"id": pdf[item_id], "codes": list(codes)}
-            )
+    def encode(pdf):
+        emb = kernel.matrix(pdf[item_emb])
+        codes = np.empty((emb.shape[0], m), dtype=np.int32)
+        for mi in range(m):
+            x = emb[:, mi * sub : (mi + 1) * sub]
+            codes[:, mi] = np.argmin(kernel.distances("l2", x, books[mi]), axis=1)
+        return pd.DataFrame({"id": pdf[item_id], "codes": list(codes)})
 
     out = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
-    return out.mapInPandas(encode, schema=f"id {id_type}, codes array<int>")
+    return kernel.map_batches(out, encode, f"id {id_type}, codes array<int>")
 
 
 def pq_adc_topk(
@@ -183,117 +177,40 @@ def pq_adc_topk(
 
     Per task: LUT[m][j] = exact squared L2 between the query's m-th
     subvector and codebook[m][j]; candidate distance = sum of M
-    lookups (np.take, vectorized). Local top-k per Arrow batch, then
-    one window over the bounded candidate set. Distances are rounded
-    to DIST_DECIMALS with -0.0 folded, ranks tie-break on id — the
-    engine-wide determinism contract.
+    lookups (vectorized, folded in subspace order). Local top-k per
+    Arrow batch and the window merge are the shared numpy kernel's
+    (operators/kernel.py): distances rounded to DIST_DECIMALS with
+    -0.0 folded, ranks tie-break on id — the engine-wide determinism
+    contract.
     """
     import numpy as np
-    import pandas as pd
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, kk_, sub = books.shape
+    m, _k, sub = books.shape
     qids = [q[0] for q in queries]
-    qmat = np.asarray([q[1] for q in queries], dtype=np.float64)
-    # (nq, m, k) LUTs, built once on the driver (tiny) and shipped in
+    qmat = np.asarray([q[1] for q in queries], dtype=np.float64).reshape(-1, m * sub)
+    # (m, k, nq) LUTs, built once on the driver (tiny) and shipped in
     # the task closure like the IVF centroid matrices
-    luts = np.empty((len(qids), m, kk_), dtype=np.float64)
-    for j in range(len(qids)):
+    luts = np.stack([
+        ((books[mi][:, None, :] - qmat[None, :, mi * sub : (mi + 1) * sub]) ** 2).sum(2)
+        for mi in range(m)
+    ])
+
+    def score(pdf):
+        codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
+        # d[i, j] = sum_m LUT[m, codes[i, m], j], accumulated in m order
+        d = np.zeros((len(codes), len(qids)), dtype=np.float64)
         for mi in range(m):
-            diff = books[mi] - qmat[j, mi * sub : (mi + 1) * sub][None, :]
-            luts[j, mi] = (diff * diff).sum(axis=1)
+            d += luts[mi][codes[:, mi]]
+        return kernel.topk_per_query(
+            qids, pdf["id"].to_numpy(), kernel.rounded(d), k,
+            ("query_id", "id", "adc_dist"),
+        )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-            rows = []
-            for j, qid in enumerate(qids):
-                # d[i] = sum_m LUT[j, m, codes[i, m]]
-                d = np.zeros(len(ids), dtype=np.float64)
-                for mi in range(m):
-                    d += luts[j, mi][codes[:, mi]]
-                d = np.round(d, DIST_DECIMALS) + 0.0
-                kk = min(k, len(ids))
-                sel = np.lexsort((ids, d))[:kk]
-                rows.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "id": ids[sel], "adc_dist": d[sel]}
-                    )
-                )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
-
-    cands = codes.mapInPandas(
-        score, schema=f"query_id long, id {id_type}, adc_dist double"
+    cands = kernel.map_batches(
+        codes, score, f"query_id long, id {id_type}, adc_dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                "id", "adc_dist")
-    )
-
-
-def pq_topk_rescored(
-    items: DataFrame,
-    codebooks,
-    queries: Sequence[tuple],
-    k: int = 10,
-    oversample: int = 4,
-    item_id: str = "vec_id",
-    item_emb: str = "embedding",
-    id_type: str = "long",
-) -> DataFrame:
-    """Production PQ search: ADC retrieves k*oversample candidates,
-    an id-join against the raw vectors re-scores them with the EXACT
-    squared-L2 (same rounded doubles as the exact KNN path), and the
-    final top-k ranks on exact distances.
-
-    Scale shape: the candidate set is |queries| x k x oversample rows
-    — the only thing joined back against the corpus (a semi-join-sized
-    probe of the id index / bucketed layout at 100 TB), so the raw
-    vectors of non-candidates are never read twice.
-    """
-    from chroma_rs_spark.functions.vector import l2_distance, vector_lit_sql
-
-    if not queries:
-        raise ValueError("pq_topk_rescored: queries must be non-empty")
-    cand = pq_adc_topk(
-        pq_encode(items, codebooks, item_id, item_emb, id_type=id_type),
-        codebooks,
-        queries,
-        k=int(k) * int(oversample),
-        id_type=id_type,
-    ).select(F.col("id").alias(item_id), "query_id")
-    raw = items.select(item_id, item_emb)
-    joined = cand.join(raw, item_id)
-    exact = None
-    for qid, qv in queries:
-        d = F.round(
-            l2_distance(f"`{item_emb}`", vector_lit_sql(qv)), DIST_DECIMALS
-        ) + F.lit(0.0)
-        cond = F.col("query_id") == F.lit(qid)
-        exact = F.when(cond, d) if exact is None else exact.when(cond, d)
-    scored = joined.select(
-        "query_id", F.col(item_id).alias("id"), exact.alias("distance")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                "id", "distance")
-    )
+    return kernel.merge_topk(cands, k, "query_id", "id", "adc_dist")
 
 
 def train_pq_codebooks_df(
@@ -510,8 +427,8 @@ def pq_topk_rescored_df(
     round-6 squared L2, and the final top-k ranks on exact distances
     (ties to the lower id). With `codebooks` from
     train_pq_codebooks_df every stage — training included — replays
-    in ANSI SQL, unlike pq_topk_rescored whose numpy ADC kernels use
-    pairwise summation no SQL engine reproduces bitwise.
+    in ANSI SQL, unlike the numpy pq_encode + pq_adc_topk kernels,
+    whose pairwise summation no SQL engine reproduces bitwise.
 
     Returns (probe_id, rank, neighbor_id, distance)."""
     from chroma_rs_spark.functions.vector import l2_distance
@@ -541,19 +458,7 @@ def pq_topk_rescored_df(
             ),
         )
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            probe_id,
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "distance",
-        )
-    )
+    return kernel.merge_topk(scored, k, probe_id, "neighbor_id", "distance")
 
 
 def hash_codebooks(m: int = 8, k: int = 16, sub: int = 8):
@@ -813,18 +718,11 @@ def pq_adc_topk_df(
         "_vid",
         f"{_adc_fold_sql(m, kk, DIST_DECIMALS)} AS adc_dist",
     )
-    wq = Window.partitionBy("_qid").orderBy(
-        F.col("adc_dist").asc(), F.col("_vid").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(probe_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("_vid").alias("neighbor_id"),
-            "adc_dist",
-        )
+    return kernel.merge_topk(adc, k, "_qid", "_vid", "adc_dist").select(
+        F.col("_qid").alias(probe_id),
+        "rank",
+        F.col("_vid").alias("neighbor_id"),
+        "adc_dist",
     )
 
 

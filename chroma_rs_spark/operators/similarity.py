@@ -1,7 +1,9 @@
 """Similarity search over embedding columns (SURVEY.md §2.3 [EXT]).
 
-* `cosine_topk_pairs` — exact all-pairs top-N most-similar pairs
-  (baseline; quadratic, fine for small/medium collections).
+* `cosine_topk_pairs` — the one exact all-pairs top-N most-similar
+  pairs operator: numpy-scored (operators/kernel.py), with a
+  driver-collect shape for small inputs and a tiled shape above a
+  size gate; quadratic compute either way.
 * `signbucket_ann` — LSH-bucketed approximate nearest neighbours:
   vectors are bucketed by the sign pattern of their leading
   dimensions (a fixed, data-independent set of axis-aligned
@@ -15,18 +17,19 @@ Exact KNN (brute force top-k per query) lives in operators/knn.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from chroma_rs_spark.functions.vector import cosine_distance, dot_product, l2_norm
+from chroma_rs_spark.operators import kernel
 from chroma_rs_spark.plans import fan_out
 
 _INTEGRAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def _norm_scorable(norm_col: Column) -> Column:
-    """norm ∈ (0, inf) — the shared unscorable-row exclusion of the
-    exact pair operators — as ONE reference to the norm column.
+    """norm ∈ (0, inf) — semantic_dedup's unscorable-row exclusion —
+    as ONE reference to the norm column.
 
     The spelled-out `(n != 0) & ~isnan(n) & (n != inf)` references the
     aliased norm THREE times; pushed below the projection that computes
@@ -43,10 +46,9 @@ def _norm_scorable(norm_col: Column) -> Column:
 
 
 def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
-    """The numpy pair kernels emit a fixed `id_a long, id_b long`
-    schema and orient pairs with integer min/max — a string id would
-    miscast or crash at runtime, and the gate failover
-    (blocked -> tiled_np) would silently inherit the constraint
+    """The numpy pair kernel emits a fixed `id_a long, id_b long`
+    schema and orients pairs with integer min/max — a string id would
+    miscast or crash at runtime, on either side of the size gate
     (ADVICE r6). Fail loudly at plan-build instead."""
     t = dict(df.dtypes).get(id_col)
     if t not in _INTEGRAL_ID_TYPES:
@@ -59,379 +61,120 @@ def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
         )
 
 
+# Above this optimizer-estimated input size (or when the estimate is
+# unknown) the collect shape's driver-side reference matrix becomes the
+# bottleneck, then the OOM: the numpy tile shape takes over.
+COLLECT_MAX_BYTES = 256 << 20
+# tile-shape sizing: about one block side per this many estimated bytes
+TILE_TARGET_BYTES = 64 << 20
+
+
 def cosine_topk_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     top_n: int = 20,
-    dim: int | None = None,
+    n_blocks: int | None = None,
 ) -> DataFrame:
-    """Exact top-N most-cosine-similar pairs (id_a < id_b). Pass `dim`
-    for the unrolled codegen distance (functions/vector.py).
+    """Exact top-N most-cosine-similar pairs (id_a < id_b, cosine_sim
+    rounded to 6 decimals), ordered by (cosine_sim desc, id_a, id_b).
 
-    Zero-norm, NaN/inf-norm and NaN-sim rows are unscorable and
-    excluded — the shared contract of all three exact pair operators
-    (this one, `cosine_topk_pairs_blocked`'s np.isfinite mask, and
-    `cosine_topk_pairs_tiled`); without the guard a single NaN
-    component sorts FIRST under Spark's NaN-greatest descending order
-    and hijacks the top-N."""
-    def side(suffix: str) -> DataFrame:
-        return (
-            df.filter(F.col(emb_col).isNotNull())
-            .select(
-                F.col(id_col).alias(f"id_{suffix}"),
-                F.col(emb_col).alias(f"emb_{suffix}"),
-                l2_norm(f"`{emb_col}`", dim).alias(f"norm_{suffix}"),
-            )
-            .filter(_norm_scorable(F.col(f"norm_{suffix}")))
-        )
+    NULL, zero-norm and non-finite vectors are unscorable (their
+    similarity is NaN) and excluded. Every pair is scored by the
+    shared numpy kernel (operators/kernel.py: one float64 matmul per
+    block, half-even rounding, a tile-local top-N that keeps ALL ties
+    at the cutoff so the global id tie-break never loses a candidate),
+    and the global top-N is one TakeOrderedAndProject over the
+    candidates — never a sort of the n^2/2 pair set.
 
-    sim = F.round(
-        dot_product("emb_a", "emb_b", dim)
-        / (F.col("norm_a") * F.col("norm_b")),
-        6,
-    )
-    return (
-        side("a").join(side("b"), F.col("id_a") < F.col("id_b"))
-        # NaN sims become NULL inside the projection (single reference
-        # to the pairwise dot fold — a separate `~isnan` filter is
-        # pushed into the join condition and evaluates the
-        # CodegenFallback HOF twice per pair, round 13) and sort after
-        # every valid sim under DESC NULLS LAST; the post-limit NOT
-        # NULL filter yields the identical top-N set, order and values.
-        .select(
-            "id_a",
-            "id_b",
-            F.nanvl(sim, F.lit(None).cast("double")).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), "id_a", "id_b")
-        .limit(top_n)
-        .filter(F.col("cosine_sim").isNotNull())
-    )
+    Two physical shapes, chosen by the optimizer's size estimate of the
+    (id, embedding) projection; both run the same kernel, so the
+    result is identical on either side of the gate:
 
+    * collect (estimate <= COLLECT_MAX_BYTES): the reference matrix is
+      collected to the driver and each Arrow batch of rows is scored
+      against it in one stage. Fastest for small corpora, where the
+      tile shape's shuffle costs more than the scoring.
+    * tiles (larger or unknown estimate): rows hash into `n_blocks`
+      blocks (default from the estimate, at most 64; 16 when there is
+      no estimate) and ship to their upper-triangle (bi, bj) tile
+      memberships — (B+1) copies per row — and each tile group is
+      scored in applyInPandas. No driver materialization; per-tile
+      memory is 2*(n/B)*dim*8 bytes. About 12x faster than the collect
+      shape at 20k vectors (SCALE.md).
 
-# Above this optimizer-estimated input size the blocked path's
-# driver-side reference-matrix collect becomes the bottleneck (and then
-# the OOM): fail over to the shuffle-keyed LSH path instead.
-BLOCKED_MAX_COLLECT_BYTES = 256 << 20
-
-
-def cosine_topk_pairs_blocked(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    top_n: int = 20,
-    max_collect_bytes: int = BLOCKED_MAX_COLLECT_BYTES,
-) -> DataFrame:
-    """Exact top-N most-similar pairs via blocked matrix products.
-
-    Each Arrow batch multiplies its block of rows against the full
-    (broadcast) matrix with one numpy matmul and keeps only its local
-    top-N upper-triangle pairs, so the final global top-N sorts
-    |partitions| x top_n candidates instead of n^2/2 pairs. Same
-    result contract as `cosine_topk_pairs` (round-6 sims, id
-    tie-breaks).
-
-    SIZE-GATED: the reference matrix is collected to the driver, which
-    is only sane while the (id, embedding) projection fits comfortably
-    in driver memory. Past `max_collect_bytes` (optimizer estimate, or
-    unknown) the call fails over to `cosine_topk_pairs_tiled_np` — the
-    EXACT numpy-scored tile join with NO driver materialization, which
-    shares this path's scoring kernel so results are bit-identical on
-    both sides of the gate INCLUDING 6th-decimal rounding boundaries
-    (np.round half-even both sides; pinned by
-    tests/test_similarity_bucketed.py). Measured at 20k vectors the
-    tiled_np path is ~12x faster than this one anyway (2.0 s vs
-    24.5 s, tools notes in SCALE.md) — the gate keeps the collect path
-    only for small corpora where its single-stage shape wins. For
-    corpora where even the O(n^2) distributed compute is too much,
-    `cosine_pairs_bucketed` is the documented approximate successor.
+    Still O(n^2) compute — it is exact; `cosine_pairs_bucketed` is the
+    approximate scale path.
     """
-    import numpy as np
-    import pandas as pd
-
     from chroma_rs_spark.plans.partitioning import plan_size_bytes
 
-    _require_integral_id(df, id_col, "cosine_topk_pairs_blocked")
-    src0 = df.filter(F.col(emb_col).isNotNull()).select(id_col, emb_col)
-    est = plan_size_bytes(src0)
-    if est < 0 or est > max_collect_bytes:
-        return cosine_topk_pairs_tiled_np(
-            df, id_col=id_col, emb_col=emb_col, top_n=top_n, est_bytes=est
+    _require_integral_id(df, id_col, "cosine_topk_pairs")
+    src = df.filter(F.col(emb_col).isNotNull()).select(
+        F.col(id_col).alias("_id"), F.col(emb_col).alias("_emb")
+    )
+    est = plan_size_bytes(src)
+    schema = "id_a long, id_b long, cosine_sim double"
+    if 0 <= est <= COLLECT_MAX_BYTES:
+        cand = _collect_shape(src, top_n, schema)
+    else:
+        if n_blocks is None:
+            n_blocks = 16 if est < 0 else max(2, min(64, est // TILE_TARGET_BYTES + 1))
+        cand = _tile_shape(src, top_n, n_blocks, schema)
+    return cand.orderBy(F.col("cosine_sim").desc(), "id_a", "id_b").limit(top_n)
+
+
+def _collect_shape(src: DataFrame, top_n: int, schema: str) -> DataFrame:
+    ref = src.orderBy("_id").toPandas()
+    if ref.empty:
+        return src.sparkSession.createDataFrame([], schema)
+    ref_ids = ref["_id"].to_numpy()
+    ref_mat = kernel.matrix(ref["_emb"])
+    ref_norm = kernel.norms(ref_mat)
+
+    def score(pdf):
+        return kernel.pair_topk(
+            pdf["_id"].to_numpy(), kernel.matrix(pdf["_emb"]),
+            ref_ids, ref_mat, top_n, upper=True, b_norm=ref_norm,
         )
-
-    ref = src0.orderBy(id_col).collect()
-    ref_ids = np.array([r[0] for r in ref], dtype=np.int64)
-    ref_mat = np.asarray([r[1] for r in ref], dtype=np.float64)
-    ref_norm = np.linalg.norm(ref_mat, axis=1)
-
-    def block_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = (mat @ ref_mat.T) / (
-                    np.linalg.norm(mat, axis=1)[:, None] * ref_norm[None, :]
-                )
-            sims = np.round(sims, 6)
-            # upper triangle only: id_a < id_b
-            # zero-norm rows yield NaN sims — unscorable, excluded
-            mask = (ids[:, None] < ref_ids[None, :]) & np.isfinite(sims)
-            ia, ib = np.nonzero(mask)
-            if ia.size == 0:
-                continue
-            s = sims[ia, ib]
-            keep = min(top_n, s.size)
-            # threshold-select including ALL ties at the cutoff value, so
-            # the global id-tiebreak never loses a candidate a local
-            # block dropped arbitrarily
-            kth = np.partition(-s, keep - 1)[keep - 1]
-            sel = np.nonzero(s >= -kth)[0]
-            yield pd.DataFrame(
-                {
-                    "id_a": ids[ia[sel]],
-                    "id_b": ref_ids[ib[sel]],
-                    "cosine_sim": s[sel],
-                }
-            )
 
     # spread the row blocks across cores when the input is big enough
     # to beat the repartition shuffle (tiny scans stay single-task)
-    src = fan_out(df.filter(F.col(emb_col).isNotNull()).select(id_col, emb_col))
-    cand = src.mapInPandas(
-        block_topk, schema="id_a long, id_b long, cosine_sim double"
-    )
-    return cand.orderBy(F.col("cosine_sim").desc(), "id_a", "id_b").limit(top_n)
+    return kernel.map_batches(fan_out(src), score, schema)
 
 
-def cosine_topk_pairs_tiled(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    top_n: int = 20,
-    n_blocks: int | None = None,
-    est_bytes: int = -1,
-    target_block_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Exact top-N most-similar pairs via a tiled block-pair join —
-    the no-driver-collect successor to `cosine_topk_pairs_blocked`.
-
-    Rows are hashed into `n_blocks` blocks; the upper-triangle set of
-    block pairs (i <= j) is broadcast and each side replicates onto its
-    block-pair keys, so the join shuffles each row ~n_blocks times
-    instead of forming a cross product, and every reducer scores one
-    (block_i x block_j) tile. The global top-N comes from
-    TakeOrderedAndProject (per-partition top-N merged on the driver),
-    never a full sort of the n^2/2 pair set.
-
-    Same result contract as `cosine_topk_pairs` (round-6 sims, id
-    tie-breaks, zero-norm/NULL/non-finite rows excluded) — equal on
-    well-formed corpora (pinned at the gate boundary by
-    tests/test_similarity_bucketed.py). Residual divergence risk vs the
-    numpy blocked path is confined to values landing exactly on a
-    6th-decimal rounding boundary (np.round is binary half-even, Spark
-    round is decimal HALF_UP) — the same accepted boundary class as
-    every cross-engine oracle in the suite. Still O(n^2) compute (it is
-    EXACT); for corpora where that is intractable,
-    `cosine_pairs_bucketed` is the approximate scale path.
-    """
-    if n_blocks is None:
-        if est_bytes < 0:
-            # unknown size — and this path is chosen precisely when the
-            # optimizer estimate is unavailable, so assume big: a
-            # conservative 16 blocks (136 tiles) keeps each reducer's
-            # tile ~(n/16)^2 instead of handing an (n/2)^2 tile to the
-            # minimum tiling because "unknown" parsed as "zero bytes"
-            n_blocks = 16
-        else:
-            # one tile side ~target_block_bytes; cap so |tiles| =
-            # B(B+1)/2 stays a sane task count at very large estimates
-            n_blocks = max(2, min(64, (est_bytes // target_block_bytes) + 1))
-    src = (
-        df.filter(F.col(emb_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(emb_col).alias("_emb"),
-            l2_norm(f"`{emb_col}`").alias("_norm"),
-        )
-        # zero-norm AND non-finite-norm rows are unscorable — mirrors
-        # the blocked path's np.isfinite mask (a NaN/inf component would
-        # otherwise sort FIRST under Spark's NaN-greatest descending
-        # order and hijack the top-N)
-        .filter(_norm_scorable(F.col("_norm")))
-        .withColumn("_blk", F.pmod(F.hash("_id"), F.lit(n_blocks)))
-    )
-    spark = df.sparkSession
-    tiles = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "bi int, bj int",
-    )
-    a = src.join(
-        F.broadcast(tiles), F.col("_blk") == F.col("bi")
-    ).select(
-        "bi", "bj",
-        F.col("_id").alias("id_a"),
-        F.col("_emb").alias("_ea"),
-        F.col("_norm").alias("_na"),
-    )
-    b = src.join(
-        F.broadcast(tiles), F.col("_blk") == F.col("bj")
-    ).select(
-        "bi", "bj",
-        F.col("_id").alias("id_b"),
-        F.col("_emb").alias("_eb"),
-        F.col("_norm").alias("_nb"),
-    )
-    sim = F.round(
-        dot_product("_ea", "_eb") / (F.col("_na") * F.col("_nb")), 6
-    )
-    # Each unordered cross-block pair materializes exactly once, with its
-    # orientation fixed by BLOCK order (a from bi's block, b from bj's) —
-    # not id order. Keep it whichever way round the ids land and
-    # normalize with least/greatest; only diagonal tiles (bi == bj) see
-    # both orderings and need the id_a < id_b dedup.
-    return (
-        a.join(b, ["bi", "bj"])
-        .filter(
-            (F.col("id_a") != F.col("id_b"))
-            & ((F.col("bi") != F.col("bj")) | (F.col("id_a") < F.col("id_b")))
-        )
-        .select(
-            F.least("id_a", "id_b").alias("id_lo"),
-            F.greatest("id_a", "id_b").alias("id_hi"),
-            sim.alias("cosine_sim"),
-        )
-        .select(
-            F.col("id_lo").alias("id_a"),
-            F.col("id_hi").alias("id_b"),
-            "cosine_sim",
-        )
-        # finite-norm rows can still produce a NaN product in exotic
-        # float corners; keep the blocked path's finite-only contract.
-        # NaN is excluded via nanvl->NULL in the projection + a
-        # POST-limit NOT NULL filter (round 13): a pre-sort
-        # `~isnan(cosine_sim)` filter is pushed below the projection
-        # and evaluates the pairwise dot fold twice per cross-block
-        # pair (HOFs are CodegenFallback — no subexpression
-        # elimination). NULLs sort after every valid sim under the
-        # default DESC NULLS LAST, so the top-N set, order and values
-        # are identical; the filter cannot push through the limit.
-        .withColumn(
-            "cosine_sim",
-            F.nanvl(F.col("cosine_sim"), F.lit(None).cast("double")),
-        )
-        .orderBy(F.col("cosine_sim").desc(), "id_a", "id_b")
-        .limit(top_n)
-        .filter(F.col("cosine_sim").isNotNull())
-    )
-
-
-def cosine_topk_pairs_tiled_np(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    top_n: int = 20,
-    n_blocks: int | None = None,
-    est_bytes: int = -1,
-    target_block_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Exact top-N most-similar pairs via numpy-scored tiles — the
-    scale successor that replaces BOTH prior exact plans' weak halves:
-    no driver-side matrix collect (unlike `cosine_topk_pairs_blocked`)
-    and one numpy matmul per tile instead of a per-pair SQL HOF dot
-    product (unlike `cosine_topk_pairs_tiled`, measured 7-45x slower
-    per pair than matmul at sf0.1 — tools/tiled_np_proof.py).
-
-    Rows hash into `n_blocks` blocks; each row is shipped to its
-    upper-triangle tile memberships tagged A (its block is the tile's
-    bi) or B (bj) — (B+1) copies per row, the same shuffle volume as
-    the SQL tiled join — and each (bi, bj) group scores its tile with
-    one float64 matmul, masks the diagonal tile's lower triangle, and
-    keeps its tile-local top-N WITH ties at the cutoff (so the global
-    id tie-break never loses a candidate). The global top-N is a
-    TakeOrderedAndProject over |tiles| x ~top_n candidate rows.
-
-    Scoring is the SAME numpy kernel as the blocked path (np.round
-    half-even), so the size-gate failover blocked -> tiled_np is
-    bit-identical INCLUDING values on the 6th-decimal rounding
-    boundary — the half-up-vs-half-even divergence class the SQL
-    tiled fallback documented is gone. Per-tile memory is
-    2*(n/B)*dim*8 bytes, driver memory is O(top_n).
-    """
-    import numpy as np
+def _tile_shape(src: DataFrame, top_n: int, n_blocks: int, schema: str) -> DataFrame:
     import pandas as pd
 
-    _require_integral_id(df, id_col, "cosine_topk_pairs_tiled_np")
-    if n_blocks is None:
-        if est_bytes < 0:
-            n_blocks = 16
-        else:
-            n_blocks = max(2, min(64, (est_bytes // target_block_bytes) + 1))
-    src = (
-        df.filter(F.col(emb_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(emb_col).alias("_emb"),
-            l2_norm(f"`{emb_col}`").alias("_norm"),
-        )
-        .filter(_norm_scorable(F.col("_norm")))
-        .withColumn("_blk", F.pmod(F.hash("_id"), F.lit(n_blocks)))
-    )
-    spark = df.sparkSession
-    tiles = spark.createDataFrame(
+    keyed = src.withColumn("_blk", F.pmod(F.hash("_id"), F.lit(n_blocks)))
+    tiles = src.sparkSession.createDataFrame(
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
-    a = src.join(F.broadcast(tiles), F.col("_blk") == F.col("bi")).select(
-        "bi", "bj", F.lit(0).alias("_side"), "_id", "_emb"
-    )
-    b = src.join(F.broadcast(tiles), F.col("_blk") == F.col("bj")).select(
-        "bi", "bj", F.lit(1).alias("_side"), "_id", "_emb"
-    )
 
-    empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []})
+    def side(blk: str, tag: int) -> DataFrame:
+        return keyed.join(F.broadcast(tiles), F.col("_blk") == F.col(blk)).select(
+            "bi", "bj", F.lit(tag).alias("_side"), "_id", "_emb"
+        )
 
-    def score_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = key
-        a_rows = pdf[pdf["_side"] == 0]
-        b_rows = pdf[pdf["_side"] == 1]
-        if a_rows.empty or b_rows.empty:
-            return empty
-        ids_a = a_rows["_id"].to_numpy()
-        ids_b = b_rows["_id"].to_numpy()
-        mat_a = np.stack(a_rows["_emb"].to_numpy()).astype(np.float64)
-        mat_b = np.stack(b_rows["_emb"].to_numpy()).astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (mat_a @ mat_b.T) / (
-                np.linalg.norm(mat_a, axis=1)[:, None]
-                * np.linalg.norm(mat_b, axis=1)[None, :]
-            )
-        sims = np.round(sims, 6)
-        if bi == bj:
-            mask = (ids_a[:, None] < ids_b[None, :]) & np.isfinite(sims)
-        else:
-            # cross-block ids are hash-disjoint; keep the inequality
-            # anyway as a cheap invariant guard
-            mask = (ids_a[:, None] != ids_b[None, :]) & np.isfinite(sims)
-        ia, ib = np.nonzero(mask)
-        if ia.size == 0:
-            return empty
-        s = sims[ia, ib]
-        keep = min(top_n, s.size)
-        kth = np.partition(-s, keep - 1)[keep - 1]
-        sel = np.nonzero(s >= -kth)[0]
-        lo = np.minimum(ids_a[ia[sel]], ids_b[ib[sel]])
-        hi = np.maximum(ids_a[ia[sel]], ids_b[ib[sel]])
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine_sim": s[sel]})
+    empty = pd.DataFrame(columns=["id_a", "id_b", "cosine_sim"])
 
-    cand = (
-        a.unionByName(b)
+    def score_tile(key, pdf):
+        a, b = pdf[pdf["_side"] == 0], pdf[pdf["_side"] == 1]
+        # diagonal tiles see every pair twice (keep id_a < id_b);
+        # cross-block tiles see each pair once, in block order
+        out = None if a.empty or b.empty else kernel.pair_topk(
+            a["_id"].to_numpy(), kernel.matrix(a["_emb"]),
+            b["_id"].to_numpy(), kernel.matrix(b["_emb"]),
+            top_n, upper=key[0] == key[1],
+        )
+        return empty if out is None else out
+
+    return (
+        side("bi", 0)
+        .unionByName(side("bj", 1))
         .groupBy("bi", "bj")
-        .applyInPandas(score_tile, schema="id_a long, id_b long, cosine_sim double")
+        .applyInPandas(score_tile, schema=schema)
     )
-    return cand.orderBy(F.col("cosine_sim").desc(), "id_a", "id_b").limit(top_n)
 
 
 def cosine_pairs_bucketed(
@@ -444,9 +187,8 @@ def cosine_pairs_bucketed(
     top_n: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Near-dup pair mining with NO driver-side collect — the 100 TB
-    path `cosine_topk_pairs_blocked` documents as its successor beyond
-    ~1M vectors.
+    """Near-dup pair mining with NO quadratic compute — the 100 TB
+    path `cosine_topk_pairs` documents as its approximate successor.
 
     LSH banding for cosine: each vector gets `bands` bucket keys (the
     sign pattern of a disjoint slice of `n_planes` dimensions per
@@ -637,15 +379,7 @@ def signbucket_ann(
             dist.alias("distance"),
         )
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, F.col("rank").cast("long").alias("rank"),
-                "neighbor_id", "distance")
-    )
+    return kernel.merge_topk(scored, k, probe_id, "neighbor_id", "distance")
 
 
 def semantic_dedup(

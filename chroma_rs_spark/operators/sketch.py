@@ -68,7 +68,10 @@ def cms_build(
     is cell-for-cell identical to feeding the raw occurrence stream —
     and when the caller already aggregated per-item counts for another
     purpose, the sketch rides that table instead of re-scanning and
-    re-exploding the corpus.
+    re-exploding the corpus. Weights must be non-NULL and positive (a
+    NULL or non-positive count has no occurrence-stream equivalent);
+    a violating row fails the query in-plan with `raise_error`, no
+    extra job.
     """
     buckets = F.array(
         *[_seeded_bucket(item_col, r, width) for r in range(depth)]
@@ -78,7 +81,13 @@ def cms_build(
         if weight_col is None
         else F.sum(F.col(weight_col))
     )
-    extra = [] if weight_col is None else [F.col(weight_col)]
+    extra = []
+    if weight_col is not None:
+        w = F.col(weight_col)
+        bad = F.raise_error(
+            F.lit(f"cms_build: weight_col {weight_col!r} must be non-NULL and positive")
+        )
+        extra = [F.when(w.isNull() | (w <= 0), bad).otherwise(w).alias(weight_col)]
     return (
         items.select(F.posexplode(buckets).alias("row", "bucket"), *extra)
         .filter(F.col("bucket").isNotNull())

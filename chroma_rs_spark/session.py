@@ -26,7 +26,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # local[N] defaults to the CPUs this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or int(cpus))
     builder = (

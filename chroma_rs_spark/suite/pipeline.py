@@ -30,7 +30,7 @@ from chroma_rs_spark.operators.multimodal import (
 )
 from chroma_rs_spark.operators.similarity import (
     cosine_pairs_bucketed,
-    cosine_topk_pairs_blocked,
+    cosine_topk_pairs,
     signbucket_ann,
 )
 from chroma_rs_spark.sources.tables import load_table
@@ -236,7 +236,7 @@ LIMIT 20
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk_pairs_blocked(emb, top_n=20)
+    return cosine_topk_pairs(emb, top_n=20)
 
 
 # the unscorable-vector rule as a PER-ROW filter (n norm evals, and no

@@ -942,9 +942,10 @@ EXTRA_QUERIES = {
     # PQ, fully oracle-checked: data-independent md5-derived codebooks
     # (identical literals embedded in the SQL) + the DataFrame-native
     # in-order-fold ADC plan, so DuckDB replays encode + LUT + ADC
-    # exactly. The trained-codebook production search (pq_topk_rescored)
-    # stays pinned by tests/test_pq.py numpy bit-parity + recall band
-    # and tests/test_collection_pq.py end-to-end.
+    # exactly. The trained-codebook production search (collection
+    # query(index="pq"): numpy pq_encode + pq_adc_topk, re-scored by
+    # knn_exact) stays pinned by tests/test_pq.py numpy bit-parity and
+    # tests/test_collection_pq.py end to end (exact distances, recall).
     "pq_adc_topk": QueryDef(q_pq_adc_topk, _pq_adc_oracle()),
     # round 11: the last rows-only seat retired — q_pq_topk now runs
     # the oracle-replayable trained chain (train_pq_codebooks_df), so

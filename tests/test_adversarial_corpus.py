@@ -106,6 +106,15 @@ QUERIES = [
     # drops, whitespace-only folds to empty — empty docs become ONE
     # duplicate group on both engines)
     "dedup_unicode_normalized",
+    # the numpy-kernel rows (operators/kernel.py) over the NULL/zero
+    # vector edges: scale-path exact KNN and IVF with lowest-id and
+    # k-means-trained centroids (assignment, probe selection, probed-
+    # cell scoring); plus the PQ ADC row, whose DataFrame plan
+    # tests/test_pq.py pins the numpy ADC kernel to
+    "knn_cosine_scale",
+    "knn_ivf",
+    "knn_ivf_trained",
+    "pq_adc_topk",
 ]
 
 

@@ -249,6 +249,10 @@ def test_checkpoint_dir_bit_equal_and_reloadable(curated, spark, tmp_path):
         reloaded = spark.read.parquet(f"{ckpt}/{d}")
         assert reloaded.count() == rep[name]["n_docs"], d
         assert rep[name]["stage_no"] == no
+        # the documented extra column: per-doc token counts ride the
+        # stage artifacts, never the returned corpus
+        assert "_nt" in reloaded.columns, d
+    assert "_nt" not in corpus2.columns
 
 
 def test_url_dedup_stage_runs_first(spark):

@@ -206,6 +206,20 @@ def test_audio_ahash64_matches_scalar_reference():
         assert audio_ahash64(samples, ch) == scalar(samples, ch)
 
 
+def test_audio_ahash64_rejects_samples_outside_int16():
+    """The int64 exactness argument needs int16-range integer samples:
+    anything else raises instead of hashing silently."""
+    import pytest
+
+    from chroma_rs_spark.operators.multimodal import audio_ahash64
+
+    for bad in (32768, -32769, 1 << 70, 0.5):
+        samples = [0] * 127 + [bad]
+        with pytest.raises(ValueError, match="int16"):
+            audio_ahash64(samples, 1)
+    assert audio_ahash64([-32768, 32767] * 64, 1) is not None
+
+
 def test_video_near_dup_planted(spark):
     """Planted (doc_id, frame_md5) streams: docs 1/2 share 3 frames,
     doc 3 shares only 1 (below min_shared), doc 4 disjoint; a

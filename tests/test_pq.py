@@ -1,16 +1,14 @@
 """Product quantization (operators/pq.py): encode/ADC bit-parity with
-a pure-numpy reference, deterministic training, and a measured recall
-band for the rescored search against exact KNN."""
+a pure-numpy reference and deterministic training. The re-scored
+search's exact distances and recall band are pinned end to end in
+tests/test_collection_pq.py."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from chroma_rs_spark.operators.knn import knn_exact_local_topk
 from chroma_rs_spark.operators.pq import (
     pq_adc_topk,
     pq_encode,
-    pq_topk_rescored,
     train_pq_codebooks,
 )
 from tests.conftest import SF001_DIR
@@ -97,37 +95,6 @@ def test_adc_matches_numpy_reference(emb, np_data, books):
             assert np.float64(g[1]).view(np.int64) == np.float64(e[1]).view(
                 np.int64
             )
-
-
-def test_rescored_search_recall_and_exact_distances(spark, emb, np_data, books):
-    ids, mat = np_data
-    queries = [(int(ids[i]), mat[i].tolist()) for i in (0, 7, 42)]
-    k = 10
-    exact = knn_exact_local_topk(emb, queries, k=k, metric="l2", item_id="vec_id")
-    exact_by_q = {}
-    exact_dist = {}
-    for r in exact.collect():
-        exact_by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
-        exact_dist[(r["query_id"], r["vec_id"])] = r["distance"]
-    res = pq_topk_rescored(emb, books, queries, k=k, oversample=4).collect()
-    hits = total = 0
-    for r in res:
-        total += 1
-        if r["id"] in exact_by_q[r["query_id"]]:
-            hits += 1
-            # rescored distance IS the exact rounded squared-L2
-            assert np.float64(r["distance"]).view(np.int64) == np.float64(
-                exact_dist[(r["query_id"], r["id"])]
-            ).view(np.int64)
-    recall = hits / total
-    # synthetic near-uniform embeddings are the hard case for PQ; the
-    # band is measured (≥0.5 observed with margin at m=8,k=16,ovs=4)
-    assert recall >= 0.4, f"recall {recall:.2f} below band"
-    # the self vector always survives: ADC(self) is the minimum of the
-    # per-subspace quantization errors, far inside the oversample
-    for qid, _ in queries:
-        mine = [r for r in res if r["query_id"] == qid and r["rank"] == 1]
-        assert mine and mine[0]["id"] == qid and mine[0]["distance"] == 0.0
 
 
 def test_df_adc_path_matches_numpy_path_on_hash_codebooks(spark):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from chroma_rs_spark.functions.vector import dot_product, l2_norm
@@ -94,55 +95,74 @@ def test_more_bands_never_lose_pairs(spark):
     assert few <= more
 
 
-def test_blocked_gate_failover_bit_equal(spark):
-    """cosine_topk_pairs_blocked is size-gated: past the collect budget
-    it fails over to the EXACT tiled block-pair join (no driver
-    materialization). The result must be bit-identical on both sides of
-    the gate, at any tiling."""
-    import pandas as pd
-
-    from chroma_rs_spark.operators.similarity import (
-        cosine_topk_pairs_blocked,
-        cosine_topk_pairs_tiled,
-        cosine_topk_pairs_tiled_np,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    base = cosine_topk_pairs_blocked(emb, top_n=20).toPandas()
-    forced = cosine_topk_pairs_blocked(emb, top_n=20, max_collect_bytes=0).toPandas()
-    pd.testing.assert_frame_equal(base, forced)
-    for n_blocks in (2, 7):
-        tiled = cosine_topk_pairs_tiled(emb, top_n=20, n_blocks=n_blocks).toPandas()
-        pd.testing.assert_frame_equal(base, tiled)
-        # the numpy-scored tile path (the actual gate failover target)
-        # must agree at any tiling, including one with more blocks than
-        # some tiles have rows
-        tnp = cosine_topk_pairs_tiled_np(
-            emb, top_n=20, n_blocks=n_blocks
-        ).toPandas()
-        pd.testing.assert_frame_equal(base, tnp)
-
-
-def test_tiled_handles_id_order_opposing_block_order(spark):
-    """Regression: a cross-block pair materializes with its orientation
-    fixed by BLOCK order, not id order — pairs where hash(id_a)'s block
-    sorts after hash(id_b)'s must not be dropped. With n_blocks=2 and
-    sequential ids, roughly half of all cross pairs hit this path."""
-    import pandas as pd
-
-    from chroma_rs_spark.operators.similarity import (
-        cosine_topk_pairs,
-        cosine_topk_pairs_tiled,
-    )
-
+def _edge_pair_corpus():
+    """60 sequential ids of random 16-dim vectors (with n_blocks=2
+    about half of all cross-block pairs have block order opposite to id
+    order), 6 identical copies of one vector in DESCENDING id order (15
+    exactly tied pairs at sim 1.0: a local select that drops ties at
+    its cutoff keeps the high-id pairs it sees first), and the
+    unscorable rows: NULL, zero, NaN and inf."""
     rng = np.random.default_rng(11)
-    rows = [
-        (i, [float(x) for x in rng.normal(0.0, 1.0, size=16)]) for i in range(60)
+    rows = [(i, [float(x) for x in rng.normal(0.0, 1.0, size=16)]) for i in range(60)]
+    twin = [float(x) for x in rng.normal(0.0, 1.0, size=16)]
+    rows += [(105 - i, twin) for i in range(6)]
+    rows += [
+        (200, None),
+        (201, [0.0] * 16),
+        (202, [float("nan")] + [1.0] * 15),
+        (203, [float("inf")] + [1.0] * 15),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = cosine_topk_pairs(df, top_n=30).toPandas()
-    tiled = cosine_topk_pairs_tiled(df, top_n=30, n_blocks=2).toPandas()
-    pd.testing.assert_frame_equal(exact, tiled)
+    return rows
+
+
+def _reference_pairs(rows, top_n):
+    """Test-local float64 model of the exact pair contract: every
+    id_a < id_b pair with a finite cosine, rounded half-even to 6
+    decimals, ordered (sim desc, id_a, id_b), first top_n."""
+    ids = np.array([i for i, v in rows if v is not None])
+    mat = np.array([v for _, v in rows if v is not None], dtype=np.float64)
+    norm = np.sqrt((mat * mat).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = np.round((mat @ mat.T) / np.outer(norm, norm), 6)
+    pairs = [
+        (int(ids[a]), int(ids[b]), float(sims[a, b]))
+        for a in range(len(ids))
+        for b in range(len(ids))
+        if ids[a] < ids[b] and np.isfinite(sims[a, b])
+    ]
+    pairs.sort(key=lambda p: (-p[2], p[0], p[1]))
+    return pairs[:top_n]
+
+
+@pytest.mark.parametrize(
+    "shape,n_blocks",
+    [("collect", None), ("tiles", None), ("tiles", 1), ("tiles", 2), ("tiles", 7)],
+)
+def test_cosine_topk_pairs_matches_reference(
+    spark, tmp_path, monkeypatch, shape, n_blocks
+):
+    """The one exact pair operator equals an independent numpy model on
+    both sides of its size gate (the tile shape forced by lowering the
+    gate constant), at any tiling — including more blocks than some
+    tiles have rows, the cutoff falling inside a run of tied sims, and
+    NULL/zero/NaN/inf vectors, which never pair."""
+    from chroma_rs_spark.operators import similarity
+
+    if shape == "tiles":
+        monkeypatch.setattr(similarity, "COLLECT_MAX_BYTES", -1)
+    rows = _edge_pair_corpus()
+    # a parquet scan carries a real size estimate (an in-memory frame's
+    # is unknown, which always selects the tile shape)
+    spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(
+        str(tmp_path / "corpus")
+    )
+    df = spark.read.parquet(str(tmp_path / "corpus"))
+    for top_n in (4, 30):
+        out = similarity.cosine_topk_pairs(df, top_n=top_n, n_blocks=n_blocks)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("FlatMapGroupsInPandas" in plan) == (shape == "tiles")
+        got = [(r["id_a"], r["id_b"], r["cosine_sim"]) for r in out.collect()]
+        assert got == _reference_pairs(rows, top_n)
 
 
 def test_semantic_dedup_planted_twins(spark):
@@ -216,25 +236,21 @@ def test_semantic_dedup_size_derived_k_bounds_pair_join(spark):
     assert n2 <= 4
 
 
-def test_pair_kernels_reject_non_integral_ids(spark):
-    """ADVICE r6: the numpy pair kernels hardcode 'id_a long, id_b
+def test_pair_kernels_reject_non_integral_ids(spark, monkeypatch):
+    """ADVICE r6: the numpy pair kernel hardcodes 'id_a long, id_b
     long' — a string id must fail LOUDLY at plan-build, on both sides
-    of the blocked -> tiled_np gate failover."""
-    import pytest as _pytest
-
-    from chroma_rs_spark.operators.similarity import (
-        cosine_topk_pairs_blocked,
-        cosine_topk_pairs_tiled_np,
-    )
+    of cosine_topk_pairs' size gate."""
+    from chroma_rs_spark.operators import similarity
 
     df = spark.createDataFrame(
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
         "vec_id string, embedding array<double>",
     )
-    with _pytest.raises(TypeError, match="integral"):
-        cosine_topk_pairs_blocked(df)
-    with _pytest.raises(TypeError, match="integral"):
-        cosine_topk_pairs_tiled_np(df)
+    with pytest.raises(TypeError, match="integral"):
+        similarity.cosine_topk_pairs(df)
+    monkeypatch.setattr(similarity, "COLLECT_MAX_BYTES", -1)
+    with pytest.raises(TypeError, match="integral"):
+        similarity.cosine_topk_pairs(df)
 
 
 def test_ann_recall_perfect_and_missed(spark):

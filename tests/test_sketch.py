@@ -76,6 +76,21 @@ def test_cms_weighted_build_matches_occurrence_stream(spark):
     assert weighted.exceptAll(stream).count() == 0
 
 
+def test_cms_weighted_build_rejects_null_and_nonpositive_weights(spark):
+    """weight_col= requires non-NULL positive counts: a violating row
+    fails the query in-plan instead of silently dropping or negating
+    occurrences."""
+    import pytest
+
+    for bad in (None, 0, -3):
+        counts = spark.createDataFrame(
+            [("a", 2), ("b", bad)], "item string, n long"
+        )
+        sketch = cms_build(counts, "item", depth=2, width=8, weight_col="n")
+        with pytest.raises(Exception, match="non-NULL and positive"):
+            sketch.collect()
+
+
 def test_cms_never_seen_estimates_can_be_zero(spark):
     items = _items(spark, ["x", "y"])
     sketch = cms_build(items, "item", depth=4, width=1 << 16)
