@@ -23,9 +23,10 @@ this API identical; the logical plans below don't change.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -302,8 +303,8 @@ def _check_dim(engine: Engine, coll: Collection, df: DataFrame) -> None:
 
 
 def _recover_interrupted_overwrite(path: str, cleanup: bool = False) -> None:
-    """Finish (or roll back) an _overwrite interrupted between its two
-    renames, so a crash can never lose the collection.
+    """Finish (or roll back) a _swap_in interrupted between its two
+    renames, so a crash can never lose the collection or an index.
 
     Completeness of the temp dir is judged by Spark's own _SUCCESS
     commit marker (written only after every task of the job committed):
@@ -349,20 +350,21 @@ def _recover_interrupted_overwrite(path: str, cleanup: bool = False) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
-def _overwrite(engine: Engine, coll: Collection, df: DataFrame) -> None:
-    """Read-modify-overwrite via atomic temp-dir swap: the new state is
-    fully written (and _SUCCESS-committed) beside the live dir, then two
-    directory renames swap it in. Every crash window is covered by
-    _recover_interrupted_overwrite on the next read — the collection is
-    always either the complete old state or the complete new state.
-    Concurrent WRITERS are still undefined behavior (single-writer
-    contract, SURVEY §7 hard part (a)); readers are safe throughout.
-    """
-    path = engine.data_path(coll.id)
+def _swap_in(path: str, write: Callable[[str], None]) -> None:
+    """The one crash-safe directory replace (data overwrites and every
+    index artifact): `write(tmp)` writes the complete new state beside
+    the live dir, ending in a top-level _SUCCESS marker, then two
+    renames swap it in, parking the old state rather than destroying
+    it first. _recover_interrupted_overwrite heals every crash window
+    on the next read. Concurrent WRITERS are undefined behavior
+    (single-writer contract, SURVEY §7 hard part (a)); readers are
+    safe throughout."""
     _recover_interrupted_overwrite(path, cleanup=True)
-    tmp = path + ".__tmp"
-    _write(engine, coll, df, tmp, "overwrite")
-    old = path + ".__old"
+    tmp, old = path + ".__tmp", path + ".__old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    if not os.path.isfile(os.path.join(tmp, "_SUCCESS")):
+        raise EngineError(f"write did not commit: {tmp}")
     if os.path.isdir(path):
         os.replace(path, old)
     try:
@@ -381,6 +383,14 @@ def _overwrite(engine: Engine, coll: Collection, df: DataFrame) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _overwrite(engine: Engine, coll: Collection, df: DataFrame) -> None:
+    """Read-modify-overwrite of the collection data via _swap_in."""
+    _swap_in(
+        engine.data_path(coll.id),
+        lambda tmp: _write(engine, coll, df, tmp, "overwrite"),
+    )
+
+
 def _predicate(
     where: dict | None, where_document: dict | None, ids: Sequence[str] | None
 ) -> Column | None:
@@ -397,6 +407,27 @@ def _predicate(
     for p in preds[1:]:
         combined = combined & p
     return combined
+
+
+def _filtered_items(
+    engine: Engine,
+    coll: Collection,
+    ids: Sequence[str] | None,
+    where: dict | None,
+    where_document: dict | None,
+) -> DataFrame:
+    """The items the read paths (get / query / query_diverse) work on:
+    the ids / where / where_document predicate plus the partition-
+    pruning conjunct of `where`, applied before any projection or
+    distance work so Catalyst prunes columns and directories."""
+    df = items_df(engine, coll, keep_partition_col=True)
+    pred = _predicate(where, where_document, ids)
+    if pred is not None:
+        df = df.filter(pred)
+    ppred = _partition_pred(where, _partition_key(engine, coll))
+    if ppred is not None:
+        df = df.filter(ppred)
+    return df.drop(PARTITION_COL)
 
 
 # -- A1 add / A2 upsert / A3 update ------------------------------------
@@ -616,14 +647,7 @@ def get(
     Projection (`include`) happens first so Catalyst prunes Parquet
     columns; ordering by id makes pagination deterministic.
     """
-    df = items_df(engine, coll, keep_partition_col=True)
-    pred = _predicate(where, where_document, ids)
-    if pred is not None:
-        df = df.filter(pred)
-    ppred = _partition_pred(where, _partition_key(engine, coll))
-    if ppred is not None:
-        df = df.filter(ppred)
-    df = df.drop(PARTITION_COL)
+    df = _filtered_items(engine, coll, ids, where, where_document)
     cols = ["id"] + [INCLUDE_COLS[i] for i in include if i in INCLUDE_COLS]
     df = df.select(*cols).orderBy("id")
     if offset:
@@ -641,45 +665,56 @@ def peek(engine: Engine, coll: Collection, limit: int = 10) -> DataFrame:
     return items_df(engine, coll).orderBy("id").limit(limit)
 
 
-# -- A8 query (KNN) -----------------------------------------------------
+# -- index artifacts: build once, load per query -------------------------
+#
+# Every index is a tiny driver-trained artifact persisted beside the
+# collection data and read back by each query. Two table formats
+# exist, each written and parsed in one place: centroids
+# (label, pos, centroid) — the ivf index and the ivfpq coarse
+# quantizer — and codebooks (m, code, pos, value) — the pq index and
+# the ivfpq residual quantizer. Materialized codes tables hold the
+# encoded items of one index ("pq" or "ivfpq", `_CODES`). Every write
+# goes through _swap_in.
+
+IVF_INDEX_DIR = "ivf_index"
+PQ_INDEX_DIR = "pq_index"
+PQ_CODES_DIR = "pq_codes"
+IVFPQ_INDEX_DIR = "ivfpq_index"
+IVFPQ_CODES_DIR = "ivfpq_codes"
+
+# index -> (codes dir, codes schema) of its materialized scan tier
+_CODES = {
+    "pq": (PQ_CODES_DIR, "id string, codes array<int>"),
+    "ivfpq": (IVFPQ_CODES_DIR, "id string, cell int, codes array<int>"),
+}
 
 
+def _write_table(
+    df: DataFrame, path: str, partition_by: str | None = None
+) -> None:
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
+        raise EngineError(f"index write did not commit: {path}")
 
 
 def _atomic_index_write(
     df: DataFrame, path: str, partition_by: str | None = None
 ) -> None:
-    """Persist a tiny index artifact with the same crash discipline as
-    the data dir: write fully (and _SUCCESS-committed) into a temp dir,
-    then one rename swap — a crash mid-build leaves the OLD index
-    intact instead of a deleted-or-partial directory that a later load
-    would silently zero-fill."""
-    tmp = path + ".__tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
-    if not os.path.isfile(os.path.join(tmp, "_SUCCESS")):
-        raise EngineError(f"index write did not commit: {tmp}")
-    # same two-rename discipline as _overwrite: the old index is parked,
-    # never destroyed before the new one is in place, so every crash
-    # window leaves a complete index recoverable by
-    # _recover_interrupted_overwrite (which the loaders run).
-    old = path + ".__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(path):
-        os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    """Persist one index table through _swap_in: a crash mid-build
+    leaves the OLD index intact instead of a deleted-or-partial
+    directory that a later load would silently zero-fill."""
+    _swap_in(path, lambda tmp: _write_table(df, tmp, partition_by))
 
 
 def _committed_index_dir(path: str) -> bool:
     """An index dir is loadable iff Spark's commit marker is present —
     a partial directory must read as ABSENT (transient retrain /
     explicit rebuild), never as a silently truncated artifact. A crash
-    between _atomic_index_write's two renames is healed first (promote
-    the committed tmp, else restore the parked old index)."""
+    between _swap_in's two renames is healed first (promote the
+    committed tmp, else restore the parked old index)."""
     _recover_interrupted_overwrite(path)
     return (
         os.path.isdir(path)
@@ -688,7 +723,201 @@ def _committed_index_dir(path: str) -> bool:
     )
 
 
-IVF_INDEX_DIR = "ivf_index"
+def _centroid_table(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    return spark.createDataFrame(
+        [
+            (int(lab), int(pos), float(v))
+            for lab, vec in cents
+            for pos, v in enumerate(vec)
+        ],
+        "label INT, pos INT, centroid DOUBLE",
+    ).coalesce(1)
+
+
+def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]] | None:
+    if not _committed_index_dir(path):
+        return None
+    # k x dim rows — tiny by contract (the persisted index artifact)
+    by_label: dict[int, dict[int, float]] = {}
+    for r in spark.read.parquet(path).collect():
+        by_label.setdefault(int(r["label"]), {})[int(r["pos"])] = float(
+            r["centroid"]
+        )
+    return [
+        (lab, [d[p] for p in sorted(d)]) for lab, d in sorted(by_label.items())
+    ]
+
+
+def _codebook_table(spark, books) -> DataFrame:
+    return spark.createDataFrame(
+        [
+            (mi, ci, pos, float(books[mi, ci, pos]))
+            for mi in range(books.shape[0])
+            for ci in range(books.shape[1])
+            for pos in range(books.shape[2])
+        ],
+        "m INT, code INT, pos INT, value DOUBLE",
+    ).coalesce(1)
+
+
+def _read_codebooks(spark, path: str):
+    import numpy as np
+
+    if not _committed_index_dir(path):
+        return None
+    rows = spark.read.parquet(path).collect()
+    m = max(r["m"] for r in rows) + 1
+    k = max(r["code"] for r in rows) + 1
+    sub = max(r["pos"] for r in rows) + 1
+    books = np.zeros((m, k, sub), dtype=np.float64)
+    for r in rows:
+        books[r["m"], r["code"], r["pos"]] = r["value"]
+    return books
+
+
+def _ivfpq_index_committed(cdir: str) -> bool:
+    """Both composite-index tables committed, after healing a crashed
+    root-level promote (build_ivfpq_index swaps the whole generation in
+    one rename, so centroids/codebooks can never mix generations)."""
+    root = os.path.join(cdir, IVFPQ_INDEX_DIR)
+    _recover_interrupted_overwrite(root)
+    return _committed_index_dir(
+        os.path.join(root, "centroids")
+    ) and _committed_index_dir(os.path.join(root, "codebooks"))
+
+
+def _load_index(engine: Engine, coll: Collection, index: str):
+    """The persisted artifact of `index` — centroids for "ivf",
+    codebooks for "pq", (centroids, codebooks) for "ivfpq" — or None
+    unless every table it needs is committed."""
+    cdir = engine.collection_dir(coll.id)
+    if index == "ivf":
+        return _read_centroids(engine.spark, os.path.join(cdir, IVF_INDEX_DIR))
+    if index == "pq":
+        return _read_codebooks(engine.spark, os.path.join(cdir, PQ_INDEX_DIR))
+    if not _ivfpq_index_committed(cdir):
+        return None
+    root = os.path.join(cdir, IVFPQ_INDEX_DIR)
+    return (
+        _read_centroids(engine.spark, os.path.join(root, "centroids")),
+        _read_codebooks(engine.spark, os.path.join(root, "codebooks")),
+    )
+
+
+def _load_codes(
+    engine: Engine, coll: Collection, index: str, expected_m: int | None = None
+) -> DataFrame | None:
+    """The materialized codes table of `index`, or None unless
+    committed."""
+    codes_dir, schema = _CODES[index]
+    path = os.path.join(engine.collection_dir(coll.id), codes_dir)
+    if not _committed_index_dir(path):
+        return None
+    codes = engine.spark.read.schema(schema).parquet(path)
+    if expected_m is not None:
+        # defense-in-depth against codes encoded under different
+        # codebooks (the index builds also delete the dir on rebuild):
+        # rows whose code length disagrees with the loaded codebooks' m
+        # read as ABSENT, so the query path's left_anti union re-encodes
+        # them on the fly instead of crashing or ranking garbage.
+        codes = codes.filter(F.size("codes") == F.lit(int(expected_m)))
+    return codes
+
+
+def _invalidate_codes(engine: Engine, coll: Collection, index: str) -> None:
+    """Delete the materialized codes of `index` before a rebuild swaps
+    in new codebooks. Codes encode against the PREVIOUS artifact: with
+    a larger new m they would crash ADC (codes[:, mi] out of range),
+    with a smaller (or same!) m they would silently rank garbage
+    candidates. Deleting BEFORE the new index swaps in means a crash
+    anywhere in the build leaves codes absent (queries re-encode on
+    the fly, correct under whichever generation survives). The
+    parked/tmp remnants go too: _recover_interrupted_overwrite would
+    otherwise resurrect a prior-generation codes dir."""
+    path = os.path.join(engine.collection_dir(coll.id), _CODES[index][0])
+    for stale in (path, path + ".__old", path + ".__tmp"):
+        shutil.rmtree(stale, ignore_errors=True)
+        if os.path.exists(stale):
+            # this deletion is the ONLY guard against same-m stale codes
+            # silently ranking garbage — a failed rmtree must be loud
+            raise EngineError(
+                f"build_{index}_index: could not invalidate stale codes {stale}"
+            )
+
+
+def _metric(coll: Collection, index: str | None = None) -> str:
+    """The collection's `hnsw:space`, checked against what `index`
+    supports: the ivf/ivfpq coarse quantizer is the cosine assignment,
+    pq's ADC ranks l2 (cosine as l2 on unit vectors)."""
+    metric = (coll.metadata or {}).get("hnsw:space", "l2")
+    allowed = ("l2", "cosine") if index == "pq" else ("cosine",)
+    if index is not None and metric not in allowed:
+        raise EngineError(
+            f"index={index!r} supports {'/'.join(allowed)} collections "
+            f"only; this collection's hnsw:space is {metric!r}"
+        )
+    return metric
+
+
+def _candidate_domain(df: DataFrame, metric: str) -> DataFrame:
+    """The rows the ADC indexes train on and encode: non-NULL
+    embeddings, unit-normalized double vectors for cosine collections
+    (cosine ranking ≡ L2 on unit vectors; zero-norm vectors are
+    unscorable under cosine and drop, matching the exact path's
+    filter). Candidate-stage only: the final ranking always re-scores
+    exactly on the raw vectors."""
+    src = df.filter(F.col("embedding").isNotNull())
+    if metric != "cosine":
+        return src
+    return (
+        src.select(
+            "id",
+            "embedding",
+            l2_norm("CAST(embedding AS ARRAY<DOUBLE>)").alias("_n"),
+        )
+        .selectExpr(
+            "id",
+            "CASE WHEN _n = 0.0D THEN NULL"
+            " ELSE transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x / _n)"
+            " END AS embedding",
+        )
+        .filter(F.col("embedding").isNotNull())
+    )
+
+
+def _encode(index: str, rows: DataFrame, loaded) -> DataFrame:
+    """Codes of `rows` (a _candidate_domain) under the loaded artifact
+    of `index` — the one encode both materialize and the query path's
+    late-row freshness run."""
+    from chroma_rs_spark.operators.pq import ivfpq_codes_df, pq_encode
+
+    if index == "pq":
+        return pq_encode(
+            rows, loaded, item_id="id", item_emb="embedding", id_type="string"
+        )
+    cents, books = loaded
+    return ivfpq_codes_df(rows, books, cents, item_id="id")
+
+
+def _materialize_codes(engine: Engine, coll: Collection, index: str) -> str:
+    loaded = _load_index(engine, coll, index)
+    if loaded is None:
+        raise EngineError(
+            f"materialize_{index}_codes requires build_{index}_index first"
+        )
+    path = os.path.join(engine.collection_dir(coll.id), _CODES[index][0])
+    rows = _candidate_domain(items_df(engine, coll), _metric(coll))
+    # ivfpq codes are hive-partitioned BY CELL: a query touches n_probe
+    # cells, so the probed-cell filter the query path applies prunes to
+    # n_probe of n_cells directories at file-listing time — at 100 TB
+    # the code scan reads n_probe/k_cells of the 3.2 TB tier before a
+    # byte moves
+    _atomic_index_write(
+        _encode(index, rows, loaded),
+        path,
+        partition_by="cell" if index == "ivfpq" else None,
+    )
+    return path
 
 
 def build_ivf_index(
@@ -724,36 +953,158 @@ def build_ivf_index(
         item_id="id",
         item_emb="embedding",
     )
-    rows = [
-        (int(lab), int(pos), float(v))
-        for lab, vec in cents
-        for pos, v in enumerate(vec)
-    ]
     path = os.path.join(engine.collection_dir(coll.id), IVF_INDEX_DIR)
-    _atomic_index_write(
-        engine.spark.createDataFrame(
-            rows, "label INT, pos INT, centroid DOUBLE"
-        ).coalesce(1),
-        path,
-    )
+    _atomic_index_write(_centroid_table(engine.spark, cents), path)
     return path
 
 
-def _load_ivf_index(
-    engine: Engine, coll: Collection
-) -> list[tuple[int, list[float]]] | None:
-    path = os.path.join(engine.collection_dir(coll.id), IVF_INDEX_DIR)
-    if not _committed_index_dir(path):
-        return None
-    # k x dim rows — tiny by contract (the persisted index artifact)
-    by_label: dict[int, dict[int, float]] = {}
-    for r in engine.spark.read.parquet(path).collect():
-        by_label.setdefault(int(r["label"]), {})[int(r["pos"])] = float(
-            r["centroid"]
+def build_pq_index(
+    engine: Engine,
+    coll: Collection,
+    m: int = 8,
+    k: int = 16,
+    max_iter: int = 10,
+    sample_size: int = 4096,
+) -> str:
+    """Train and PERSIST the collection's product-quantization
+    codebooks (operators/pq.py) as a tiny (m, code, pos, value)
+    parquet next to the collection data — the same index-build-once
+    contract as build_ivf_index. Cosine collections train on
+    unit-normalized vectors (ADC candidates then rank by cosine);
+    l2 collections train on raw vectors. Item codes are NOT persisted:
+    queries encode at search time, so late-added items stay searchable
+    (materialize_pq_codes persists them — the codebook artifact and
+    search plan stay identical)."""
+    from chroma_rs_spark.operators.pq import train_pq_codebooks
+
+    metric = _metric(coll, "pq")
+    books = train_pq_codebooks(
+        _candidate_domain(items_df(engine, coll), metric),
+        m=m,
+        k=k,
+        max_iter=max_iter,
+        sample_size=sample_size,
+        item_id="id",
+        item_emb="embedding",
+    )
+    path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
+    _invalidate_codes(engine, coll, "pq")
+    _atomic_index_write(_codebook_table(engine.spark, books), path)
+    return path
+
+
+def build_ivfpq_index(
+    engine: Engine,
+    coll: Collection,
+    n_centroids: int = 16,
+    max_iter: int = 5,
+    m: int = 8,
+    k: int = 16,
+    pq_max_iter: int = 10,
+    sample_size: int = 4096,
+) -> str:
+    """Train and PERSIST the collection's composite IVF-PQ index
+    (cosine collections only — the coarse quantizer is the cosine
+    assignment): k-means centroids over UNIT-normalized vectors, then
+    PQ codebooks over the RESIDUALS against those centroids (Jégou et
+    al. TPAMI 2011 — residuals concentrate near the origin, so the
+    codebook budget spends its resolution where the data lives).
+    Both artifacts are tiny and land under one directory as two
+    committed parquet tables; `query(index="ivfpq")` reads them
+    instead of training per query. Same non-persistence rule as the
+    other indexes: item cells/codes are derived at search time, so
+    late-added items stay searchable.
+
+    COMPATIBILITY NOTE (round 12): the coarse quantizer now trains on
+    the same deterministic `sample_size` subsample as the PQ codebooks
+    (it previously saw the full corpus). For corpora larger than
+    `sample_size` a default-argument REBUILD of a pre-round-12 index
+    therefore produces different (not worse — see RECALL.md) centroids
+    and cell assignments; pass `sample_size` >= the corpus row count
+    to reproduce the old full-corpus centroids bit-for-bit."""
+    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
+    from chroma_rs_spark.operators.pq import _ivfpq_residuals, train_pq_codebooks
+
+    unit = _candidate_domain(items_df(engine, coll), _metric(coll, "ivfpq"))
+    cents = train_centroids_kmeans(
+        unit,
+        n_centroids=n_centroids,
+        max_iter=max_iter,
+        item_id="id",
+        item_emb="embedding",
+        # coarse quantizer trains on the deterministic sample too —
+        # the round-12 scale proof measured full-corpus Lloyd's at
+        # 637 s for 409.6k x 64 cells vs ~4 s sampled, and a sampled
+        # coarse quantizer is the standard billion-scale build
+        sample_size=sample_size,
+    )
+    # Sample BEFORE the residual computation: train_pq_codebooks takes
+    # the sample_size rows with the smallest (md5(id), id), so taking
+    # the same rows here first selects the IDENTICAL training set
+    # (bit-identical codebooks) while the assign-cells expression — the
+    # encode chain's hottest term — runs on sample_size rows instead of
+    # the whole corpus (the round-12 scale proof measured the
+    # difference at 409.6k rows x 64 cells: ~370 s -> seconds).
+    unit_sample = (
+        unit.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
+        .limit(int(sample_size))
+        .localCheckpoint()
+    )
+    books = train_pq_codebooks(
+        _ivfpq_residuals(unit_sample, cents, "id", "embedding"),
+        m=m,
+        k=k,
+        max_iter=pq_max_iter,
+        sample_size=sample_size,
+        item_id="_vid",
+        item_emb="_r",
+    )
+    root = os.path.join(engine.collection_dir(coll.id), IVFPQ_INDEX_DIR)
+    _invalidate_codes(engine, coll, "ivfpq")
+
+    # Both tables promote in ONE root-level swap: two independent
+    # per-table swaps could crash between them on a REBUILD and leave a
+    # fully-committed mixed-generation index (new codebooks + old
+    # centroids) that _load_index would load — silent recall loss.
+    def write(tmp: str) -> None:
+        _write_table(
+            _codebook_table(engine.spark, books), os.path.join(tmp, "codebooks")
         )
-    return [
-        (lab, [d[p] for p in sorted(d)]) for lab, d in sorted(by_label.items())
-    ]
+        _write_table(
+            _centroid_table(engine.spark, cents), os.path.join(tmp, "centroids")
+        )
+        # root-level commit marker: _recover_interrupted_overwrite
+        # judges a parked tmp complete by _SUCCESS at its top level
+        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+            pass
+
+    _swap_in(root, write)
+    return root
+
+
+def materialize_pq_codes(engine: Engine, coll: Collection) -> str:
+    """Encode every CURRENT item against the persisted PQ codebooks and
+    persist the (id, codes) table — the 100 TB production step the
+    build_pq_index docstring defers: with codes materialized, a query
+    scans |corpus| x m bytes of codes instead of re-encoding raw
+    vectors per query; items added later are encoded on the fly and
+    unioned at query time, and updated embeddings only degrade their
+    own ADC candidate ranks until the next materialize (the exact
+    re-scoring stage always uses current vectors). Requires a
+    persisted index (`build_pq_index` first)."""
+    return _materialize_codes(engine, coll, "pq")
+
+
+def materialize_ivfpq_codes(engine: Engine, coll: Collection) -> str:
+    """Encode every CURRENT item against the persisted composite index
+    and persist the (id, cell, codes) table — the IVF-PQ scan tier
+    (SCALE.md: 3.2 TB of codes standing in for 100 TB of raw vectors),
+    hive-partitioned by cell. Same contract as materialize_pq_codes:
+    late-added items are encoded on the fly and unioned at query time;
+    updated embeddings only degrade their own candidate ranks until
+    the next materialize (the exact re-scoring stage always reads
+    current vectors). Requires build_ivfpq_index first."""
+    return _materialize_codes(engine, coll, "ivfpq")
 
 
 def compact(
@@ -806,98 +1157,6 @@ def compact(
     )
 
 
-PQ_INDEX_DIR = "pq_index"
-
-
-def _unit_vectors(df: DataFrame) -> DataFrame:
-    """(id, embedding) with unit-normalized double vectors — the ADC
-    candidate domain for cosine collections (cosine ranking ≡ L2 on
-    unit vectors). Zero-norm vectors become NULL (unscorable under
-    cosine; pq_encode drops NULLs, matching the exact path's filter).
-    Candidate-stage only: the final ranking always re-scores exactly
-    on the raw vectors."""
-    from chroma_rs_spark.functions.vector import l2_norm
-
-    return df.select(
-        "id",
-        "embedding",
-        l2_norm("CAST(embedding AS ARRAY<DOUBLE>)").alias("_n"),
-    ).selectExpr(
-        "id",
-        "CASE WHEN _n = 0.0D THEN NULL"
-        " ELSE transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x / _n)"
-        " END AS embedding",
-    )
-
-
-def build_pq_index(
-    engine: Engine,
-    coll: Collection,
-    m: int = 8,
-    k: int = 16,
-    max_iter: int = 10,
-    sample_size: int = 4096,
-) -> str:
-    """Train and PERSIST the collection's product-quantization
-    codebooks (operators/pq.py) as a tiny (m, code, pos, value)
-    parquet next to the collection data — the same index-build-once
-    contract as build_ivf_index. Cosine collections train on
-    unit-normalized vectors (ADC candidates then rank by cosine);
-    l2 collections train on raw vectors. Item codes are NOT persisted:
-    queries encode at search time, so late-added items stay searchable
-    (at 100 TB you would additionally materialize the codes column —
-    the codebook artifact and search plan stay identical)."""
-    from chroma_rs_spark.operators.pq import train_pq_codebooks
-
-    metric = (coll.metadata or {}).get("hnsw:space", "l2")
-    if metric not in ("l2", "cosine"):
-        raise EngineError(
-            f"index='pq' supports l2/cosine collections; hnsw:space is {metric!r}"
-        )
-    df = items_df(engine, coll).filter(F.col("embedding").isNotNull())
-    src = _unit_vectors(df) if metric == "cosine" else df
-    books = train_pq_codebooks(
-        src,
-        m=m,
-        k=k,
-        max_iter=max_iter,
-        sample_size=sample_size,
-        item_id="id",
-        item_emb="embedding",
-    )
-    rows = [
-        (mi, ci, pos, float(books[mi, ci, pos]))
-        for mi in range(books.shape[0])
-        for ci in range(books.shape[1])
-        for pos in range(books.shape[2])
-    ]
-    path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
-    # a materialized codes table encodes against the PREVIOUS codebooks:
-    # with a larger new m it would crash ADC (codes[:, mi] out of range),
-    # with a smaller (or same!) m it would silently rank garbage
-    # candidates — invalidate BEFORE the new index swaps in, so a crash
-    # anywhere in this window leaves codes absent (queries re-encode on
-    # the fly, correct under whichever codebook generation survives).
-    # The parked/tmp remnants go too: _recover_interrupted_overwrite
-    # would otherwise resurrect a prior-generation codes dir.
-    codes_path = os.path.join(engine.collection_dir(coll.id), PQ_CODES_DIR)
-    for stale in (codes_path, codes_path + ".__old", codes_path + ".__tmp"):
-        shutil.rmtree(stale, ignore_errors=True)
-        if os.path.exists(stale):
-            # this deletion is the ONLY guard against same-m stale codes
-            # silently ranking garbage — a failed rmtree must be loud
-            raise EngineError(
-                f"build_pq_index: could not invalidate stale codes {stale}"
-            )
-    _atomic_index_write(
-        engine.spark.createDataFrame(
-            rows, "m INT, code INT, pos INT, value DOUBLE"
-        ).coalesce(1),
-        path,
-    )
-    return path
-
-
 def stats(engine: Engine, coll: Collection) -> dict:
     """Operational snapshot of a collection: row count, physical bytes
     and file count of the data dir (the compaction signal), registered
@@ -931,333 +1190,221 @@ def stats(engine: Engine, coll: Collection) -> dict:
     }
 
 
-PQ_CODES_DIR = "pq_codes"
+# -- A8 query (KNN) -----------------------------------------------------
+#
+# exact, pq and ivfpq end in one exact ranking (_exact_topk); pq and
+# ivfpq first propose an oversampled candidate pool from codes
+# (_pq_pool / _ivfpq_pool), so approximation affects recall only,
+# never returned distances. ivf scores exactly in its probed cells.
 
 
-def materialize_pq_codes(engine: Engine, coll: Collection) -> str:
-    """Encode every CURRENT item against the persisted PQ codebooks and
-    persist the (id, codes) table — the 100 TB production step the
-    build_pq_index docstring defers: with codes materialized, a query
-    scans |corpus| x m bytes of codes instead of re-encoding raw
-    vectors per query; items added later are encoded on the fly and
-    unioned at query time, and updated embeddings only degrade their
-    own ADC candidate ranks until the next materialize (the exact
-    re-scoring stage always uses current vectors). Requires a
-    persisted index (`build_pq_index` first)."""
-    from chroma_rs_spark.operators.pq import pq_encode
-
-    books = _load_pq_index(engine, coll)
-    if books is None:
-        raise EngineError("materialize_pq_codes requires build_pq_index first")
-    metric = (coll.metadata or {}).get("hnsw:space", "l2")
-    src = items_df(engine, coll).filter(F.col("embedding").isNotNull())
-    enc_src = _unit_vectors(src) if metric == "cosine" else src
-    path = os.path.join(engine.collection_dir(coll.id), PQ_CODES_DIR)
-    _atomic_index_write(
-        pq_encode(enc_src, books, item_id="id", item_emb="embedding",
-                  id_type="string"),
-        path,
+def _probe_df(spark, vectors: Sequence[Sequence[float]]) -> DataFrame:
+    return spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(vectors)],
+        "query_id INT, query_embedding ARRAY<DOUBLE>",
     )
-    return path
 
 
-def _load_pq_codes(
-    engine: Engine, coll: Collection, expected_m: int | None = None
-) -> DataFrame | None:
-    path = os.path.join(engine.collection_dir(coll.id), PQ_CODES_DIR)
-    if not _committed_index_dir(path):
-        return None
-    codes = engine.spark.read.schema("id string, codes array<int>").parquet(path)
-    if expected_m is not None:
-        # defense-in-depth against codes encoded under different
-        # codebooks (build_pq_index also deletes the dir on rebuild):
-        # rows whose code length disagrees with the loaded codebooks' m
-        # read as ABSENT, so the query path's left_anti union re-encodes
-        # them on the fly instead of crashing or ranking garbage.
-        codes = codes.filter(F.size("codes") == F.lit(int(expected_m)))
-    return codes
+def _unit(q: Sequence[float]) -> list[float]:
+    """A probe in the cosine candidate domain (_candidate_domain)."""
+    qv = [float(x) for x in q]
+    n = math.sqrt(sum(x * x for x in qv)) or 1.0
+    return [x / n for x in qv]
 
 
-def _load_pq_index(engine: Engine, coll: Collection):
-    import numpy as np
-
-    path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
-    if not _committed_index_dir(path):
-        return None
-    rows = engine.spark.read.parquet(path).collect()
-    m = max(r["m"] for r in rows) + 1
-    k = max(r["code"] for r in rows) + 1
-    sub = max(r["pos"] for r in rows) + 1
-    books = np.zeros((m, k, sub), dtype=np.float64)
-    for r in rows:
-        books[r["m"], r["code"], r["pos"]] = r["value"]
-    return books
+def _default_m(query_embeddings: Sequence[Sequence[float]]) -> int:
+    """Subspace count of a transient PQ quantizer: the largest m <= 8
+    that divides the collection dim (build_*_index is the place to
+    choose m explicitly)."""
+    dim = len(query_embeddings[0]) if query_embeddings else 1
+    return next(mi for mi in range(min(8, dim), 0, -1) if dim % mi == 0)
 
 
-IVFPQ_INDEX_DIR = "ivfpq_index"
-
-
-def _ivfpq_index_committed(cdir: str) -> bool:
-    """Both composite-index tables committed, after healing a crashed
-    root-level promote (build_ivfpq_index swaps the whole generation in
-    one rename, so centroids/codebooks can never mix generations)."""
-    root = os.path.join(cdir, IVFPQ_INDEX_DIR)
-    _recover_interrupted_overwrite(root)
-    return _committed_index_dir(
-        os.path.join(root, "centroids")
-    ) and _committed_index_dir(os.path.join(root, "codebooks"))
-
-
-def _ivfpq_residuals(
-    unit: DataFrame, cents: list[tuple[int, list[float]]]
+def _fresh_codes(
+    index: str,
+    loaded,
+    persisted: DataFrame,
+    df: DataFrame,
+    rows: DataFrame,
+    keep: Column | None = None,
 ) -> DataFrame:
-    """(id, resid): each unit vector's residual against its assigned
-    cell centroid — the PQ training/encoding domain of the composite
-    index (operators/pq.py:ivfpq_adc_topk_df does the same subtraction
-    inline at search time; training codebooks on the same residual
-    distribution is what makes the codes tight)."""
-    from chroma_rs_spark.operators.ivf import assign_cells
-
-    spark = unit.sparkSession
-    cent_df = spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    assigned = assign_cells(
-        unit.filter(F.col("embedding").isNotNull()), cents
-    )
-    return assigned.join(F.broadcast(cent_df), "cell").select(
-        "id",
-        F.expr(
-            "zip_with(CAST(embedding AS ARRAY<DOUBLE>), cvec,"
-            " (x, y) -> x - y)"
-        ).alias("resid"),
+    """Codes of the filtered items `df` under `index`: the materialized
+    table `persisted` restricted to their ids (optionally pruned by
+    `keep` first), plus the items added since the last materialize,
+    encoded on the fly from `rows` (their _candidate_domain). The
+    current-ids semi keeps where-filtered and deleted rows out of the
+    candidate pool — a selective filter must not starve the pool while
+    matching neighbors exist. Every freshness join runs on BARE id columns:
+    joining through the normalized rows forces the interpreted
+    unit-normalize over the whole corpus per query. The late-id set is
+    bounded by contract (adds since the last materialize), so it
+    broadcasts and only late rows normalize. `keep` runs after the
+    late-id anti-join, so rows it prunes are not re-encoded as late."""
+    cur_ids = df.filter(F.col("embedding").isNotNull()).select("id")
+    late_ids = cur_ids.join(persisted.select("id"), "id", "left_anti")
+    late = rows.join(F.broadcast(late_ids), "id", "left_semi")
+    if keep is not None:
+        persisted = persisted.filter(keep)
+    return persisted.join(cur_ids, "id", "left_semi").unionByName(
+        _encode(index, late, loaded)
     )
 
 
-def build_ivfpq_index(
+def _pq_pool(
     engine: Engine,
     coll: Collection,
-    n_centroids: int = 16,
-    max_iter: int = 5,
-    m: int = 8,
-    k: int = 16,
-    pq_max_iter: int = 10,
-    sample_size: int = 4096,
-) -> str:
-    """Train and PERSIST the collection's composite IVF-PQ index
-    (cosine collections only — the coarse quantizer is the cosine
-    assignment): k-means centroids over UNIT-normalized vectors, then
-    PQ codebooks over the RESIDUALS against those centroids (Jégou et
-    al. TPAMI 2011 — residuals concentrate near the origin, so the
-    codebook budget spends its resolution where the data lives).
-    Both artifacts are tiny and land under one directory as two
-    committed parquet tables; `query(index="ivfpq")` reads them
-    instead of training per query. Same non-persistence rule as the
-    other indexes: item cells/codes are derived at search time, so
-    late-added items stay searchable.
+    df: DataFrame,
+    metric: str,
+    query_embeddings: Sequence[Sequence[float]],
+    k: int,
+) -> DataFrame:
+    """(id): the k ADC-nearest items per probe over PQ codes — the
+    persisted codebooks and materialized codes when present, else
+    transient codebooks trained in memory (reads never write) and
+    every filtered item encoded per query."""
+    from chroma_rs_spark.operators.pq import pq_adc_topk, train_pq_codebooks
 
-    COMPATIBILITY NOTE (round 12): the coarse quantizer now trains on
-    the same deterministic `sample_size` subsample as the PQ codebooks
-    (it previously saw the full corpus). For corpora larger than
-    `sample_size` a default-argument REBUILD of a pre-round-12 index
-    therefore produces different (not worse — see RECALL.md) centroids
-    and cell assignments; pass `sample_size` >= the corpus row count
-    to reproduce the old full-corpus centroids bit-for-bit."""
-    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-    from chroma_rs_spark.operators.pq import train_pq_codebooks
-
-    metric = (coll.metadata or {}).get("hnsw:space", "l2")
-    if metric != "cosine":
-        raise EngineError(
-            f"index='ivfpq' supports cosine collections only; this "
-            f"collection's hnsw:space is {metric!r}"
+    rows = _candidate_domain(df, metric)
+    books = _load_index(engine, coll, "pq")
+    persisted = None
+    if books is None:
+        books = train_pq_codebooks(
+            rows, m=_default_m(query_embeddings), item_id="id", item_emb="embedding"
         )
-    src = items_df(engine, coll).filter(F.col("embedding").isNotNull())
-    unit = _unit_vectors(src).filter(F.col("embedding").isNotNull())
-    cents = train_centroids_kmeans(
+    else:
+        persisted = _load_codes(engine, coll, "pq", expected_m=books.shape[0])
+    if persisted is None:
+        codes = _encode("pq", rows, books)
+    else:
+        codes = _fresh_codes("pq", books, persisted, df, rows)
+    qlist = [
+        (i, _unit(q) if metric == "cosine" else [float(x) for x in q])
+        for i, q in enumerate(query_embeddings)
+    ]
+    return pq_adc_topk(codes, books, qlist, k=k, id_type="string").select("id")
+
+
+def _ivfpq_pool(
+    engine: Engine,
+    coll: Collection,
+    df: DataFrame,
+    query_embeddings: Sequence[Sequence[float]],
+    n_probe: int,
+    k: int,
+) -> DataFrame:
+    """(id): the k ADC-nearest items per probe over residual codes in
+    the probe's `n_probe` nearest cells — the persisted composite index
+    and materialized code tier when present, else a transient index
+    trained in memory (reads never write) and the probed cells encoded
+    in-plan."""
+    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
+    from chroma_rs_spark.operators.pq import (
+        _collect_probe_cells,
+        _ivfpq_residuals,
+        ivfpq_adc_topk_df,
+        train_pq_codebooks,
+    )
+
+    unit = _candidate_domain(df, "cosine")
+    loaded = _load_index(engine, coll, "ivfpq")
+    persisted = None
+    if loaded is None:
+        cents = train_centroids_kmeans(
+            unit, item_id="id", item_emb="embedding", strict=False
+        )
+        books = train_pq_codebooks(
+            _ivfpq_residuals(unit, cents, "id", "embedding"),
+            m=_default_m(query_embeddings),
+            item_id="_vid",
+            item_emb="_r",
+        )
+    else:
+        cents, books = loaded
+        persisted = _load_codes(engine, coll, "ivfpq", expected_m=books.shape[0])
+    probes = _probe_df(engine.spark, [_unit(q) for q in query_embeddings])
+    codes = probed = None
+    if persisted is not None:
+        # the probe assignment is collected once: its cell ids prune
+        # the cell-partitioned code scan to n_probe of n_cells hive
+        # directories before any code bytes move, and the same rows
+        # feed the ADC lookup tables
+        probed, cells = _collect_probe_cells(
+            probes, cents, n_probe=n_probe, dim=books.shape[0] * books.shape[2]
+        )
+        codes = _fresh_codes(
+            "ivfpq", loaded, persisted, df, unit, keep=F.col("cell").isin(cells)
+        )
+    return ivfpq_adc_topk_df(
         unit,
-        n_centroids=n_centroids,
-        max_iter=max_iter,
+        books,
+        cents,
+        n_probe=n_probe,
+        k=k,
+        probes=probes,
         item_id="id",
         item_emb="embedding",
-        # coarse quantizer trains on the deterministic sample too —
-        # the round-12 scale proof measured full-corpus Lloyd's at
-        # 637 s for 409.6k x 64 cells vs ~4 s sampled, and a sampled
-        # coarse quantizer is the standard billion-scale build
-        sample_size=sample_size,
-    )
-    # Sample BEFORE the residual computation: train_pq_codebooks takes
-    # the sample_size rows with the smallest (md5(id), id), so taking
-    # the same rows here first selects the IDENTICAL training set
-    # (bit-identical codebooks) while the assign-cells expression — the
-    # encode chain's hottest term — runs on sample_size rows instead of
-    # the whole corpus (the round-12 scale proof measured the
-    # difference at 409.6k rows x 64 cells: ~370 s -> seconds).
-    unit_sample = (
-        unit.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
-        .limit(int(sample_size))
-        .localCheckpoint()
-    )
-    books = train_pq_codebooks(
-        _ivfpq_residuals(unit_sample, cents),
-        m=m,
+        codes=codes,
+        probed=probed,
+    ).select(F.col("neighbor_id").alias("id"))
+
+
+def _exact_topk(
+    engine: Engine,
+    df: DataFrame,
+    query_embeddings: Sequence[Sequence[float]],
+    k: int,
+    metric: str,
+    pool: DataFrame | None = None,
+) -> DataFrame:
+    """The exact ranking the exact, pq and ivfpq paths end in:
+    knn_exact under the collection metric, on the add-time norm
+    "index" (maintained by update/upsert: one stored norm per item
+    instead of one recompute per (item, query) pair; same doubles,
+    bit-identical results). With a candidate `pool` the items are
+    first restricted to its ids, so a pooled query returns exactly the
+    exact path's distances."""
+    # the probe vectors' length is the collection dim (enforced against
+    # the registry at add time) — unrolled codegen distance instead of
+    # the interpreted HOF fold
+    dim = len(query_embeddings[0]) if query_embeddings else None
+    if pool is not None:
+        # the pool is bounded driver-side (<= n_queries * n_results *
+        # oversample ids) — broadcast it, or the rescore semi-join
+        # shuffles the FULL corpus (embeddings included) against a few
+        # hundred ids (round-12 scale-proof finding)
+        df = df.join(F.broadcast(pool.distinct()), "id", "left_semi")
+        # dim=None ON PURPOSE: the pool is tiny, so the interpreted HOF
+        # fold costs nothing — while the unrolled form, FUSED with the
+        # semi-join candidate chain and the top-k sort into one
+        # whole-stage processNext(), blows janino's method limit and
+        # silently drops the stage to interpreted anyway (measured: 4
+        # codegen failures per pq/ivfpq query at dim=64). Bit-identical
+        # doubles either way (the knn_exact contract).
+        dim = None
+    return knn_exact(
+        df,
+        _probe_df(engine.spark, query_embeddings),
         k=k,
-        max_iter=pq_max_iter,
-        sample_size=sample_size,
+        metric=metric,
         item_id="id",
-        item_emb="resid",
+        item_emb="embedding",
+        item_norm="embedding_norm" if metric == "cosine" else None,
+        dim=dim,
     )
-    root = os.path.join(engine.collection_dir(coll.id), IVFPQ_INDEX_DIR)
-    cent_rows = [
-        (int(lab), int(pos), float(v))
-        for lab, vec in cents
-        for pos, v in enumerate(vec)
-    ]
-    book_rows = [
-        (mi, ci, pos, float(books[mi, ci, pos]))
-        for mi in range(books.shape[0])
-        for ci in range(books.shape[1])
-        for pos in range(books.shape[2])
-    ]
-    # a materialized codes table encodes against the PREVIOUS artifact:
-    # invalidate BEFORE the new index swaps in (the build_pq_index
-    # rationale — same-shape stale codes would silently rank garbage)
-    codes_path = os.path.join(engine.collection_dir(coll.id), IVFPQ_CODES_DIR)
-    for stale in (codes_path, codes_path + ".__old", codes_path + ".__tmp"):
-        shutil.rmtree(stale, ignore_errors=True)
-        if os.path.exists(stale):
-            raise EngineError(
-                f"build_ivfpq_index: could not invalidate stale codes {stale}"
-            )
-    # Both tables promote in ONE root-level rename. Per-table atomic
-    # swaps were only safe on FIRST build (either-absent reads as
-    # absent); on a REBUILD both dirs are already committed, so a crash
-    # between two independent swaps left a fully-committed
-    # mixed-generation index (new codebooks + old centroids) that
-    # _load_ivfpq_index would load — silent recall loss. Writing both
-    # tables under one temp root with a root _SUCCESS marker and
-    # promoting with the same two-rename discipline as _overwrite
-    # makes centroids and codebooks a single generation forever.
-    _recover_interrupted_overwrite(root, cleanup=True)
-    tmp = root + ".__tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    engine.spark.createDataFrame(
-        book_rows, "m INT, code INT, pos INT, value DOUBLE"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(tmp, "codebooks")
-    )
-    engine.spark.createDataFrame(
-        cent_rows, "label INT, pos INT, centroid DOUBLE"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(tmp, "centroids")
-    )
-    for sub in ("codebooks", "centroids"):
-        if not os.path.isfile(os.path.join(tmp, sub, "_SUCCESS")):
-            raise EngineError(f"ivfpq index write did not commit: {tmp}/{sub}")
-    # root-level commit marker: _recover_interrupted_overwrite judges a
-    # parked tmp complete by _SUCCESS at its top level
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    old = root + ".__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(root):
-        os.replace(root, old)
-    try:
-        os.replace(tmp, root)
-    except FileNotFoundError:
-        # Same reader-promotion race as _overwrite: stats() /
-        # _load_ivfpq_index run _recover_interrupted_overwrite as
-        # readers, and one that observed the live dir missing inside
-        # this two-rename window promoted the committed tmp itself.
-        # The disk already holds exactly the intended state.
-        if not (
-            os.path.isdir(root)
-            and os.path.isfile(os.path.join(root, "_SUCCESS"))
-        ):
-            raise
-    shutil.rmtree(old, ignore_errors=True)
-    return root
 
 
-IVFPQ_CODES_DIR = "ivfpq_codes"
-
-
-def materialize_ivfpq_codes(engine: Engine, coll: Collection) -> str:
-    """Encode every CURRENT item against the persisted composite index
-    and persist the (id, cell, codes) table — the IVF-PQ scan tier
-    (SCALE.md: 3.2 TB of codes standing in for 100 TB of raw vectors).
-    Same contract as materialize_pq_codes: late-added items are encoded
-    on the fly and unioned at query time; updated embeddings only
-    degrade their own candidate ranks until the next materialize (the
-    exact re-scoring stage always reads current vectors). Requires
-    build_ivfpq_index first."""
-    from chroma_rs_spark.operators.pq import ivfpq_codes_df
-
-    loaded = _load_ivfpq_index(engine, coll)
-    if loaded is None:
-        raise EngineError(
-            "materialize_ivfpq_codes requires build_ivfpq_index first"
-        )
-    cents, books = loaded
-    src = items_df(engine, coll).filter(F.col("embedding").isNotNull())
-    unit = _unit_vectors(src).filter(F.col("embedding").isNotNull())
-    path = os.path.join(engine.collection_dir(coll.id), IVFPQ_CODES_DIR)
-    # hive-partitioned BY CELL: a query touches n_probe cells, so the
-    # probed-cell filter the query path applies prunes to n_probe of
-    # n_cells directories at file-listing time — at 100 TB the code
-    # scan reads n_probe/k_cells of the 3.2 TB tier before a byte moves
-    _atomic_index_write(
-        ivfpq_codes_df(unit, books, cents, item_id="id"),
-        path,
-        partition_by="cell",
-    )
-    return path
-
-
-def _load_ivfpq_codes(
-    engine: Engine, coll: Collection, expected_m: int | None = None
-) -> DataFrame | None:
-    path = os.path.join(engine.collection_dir(coll.id), IVFPQ_CODES_DIR)
-    if not _committed_index_dir(path):
-        return None
-    codes = engine.spark.read.schema(
-        "id string, cell int, codes array<int>"
-    ).parquet(path)
-    if expected_m is not None:
-        # rows encoded under different codebooks read as ABSENT so the
-        # query path re-encodes them on the fly (the _load_pq_codes
-        # defense; build_ivfpq_index also deletes the dir on rebuild)
-        codes = codes.filter(F.size("codes") == F.lit(int(expected_m)))
-    return codes
-
-
-def _load_ivfpq_index(engine: Engine, coll: Collection):
-    """(centroids, codebooks) or None unless BOTH tables committed."""
-    import numpy as np
-
-    cdir = engine.collection_dir(coll.id)
-    if not _ivfpq_index_committed(cdir):
-        return None
-    root = os.path.join(cdir, IVFPQ_INDEX_DIR)
-    cpath = os.path.join(root, "centroids")
-    bpath = os.path.join(root, "codebooks")
-    by_label: dict[int, dict[int, float]] = {}
-    for r in engine.spark.read.parquet(cpath).collect():
-        by_label.setdefault(int(r["label"]), {})[int(r["pos"])] = float(
-            r["centroid"]
-        )
-    cents = [
-        (lab, [d[p] for p in sorted(d)]) for lab, d in sorted(by_label.items())
-    ]
-    rows = engine.spark.read.parquet(bpath).collect()
-    m = max(r["m"] for r in rows) + 1
-    k = max(r["code"] for r in rows) + 1
-    sub = max(r["pos"] for r in rows) + 1
-    books = np.zeros((m, k, sub), dtype=np.float64)
-    for r in rows:
-        books[r["m"], r["code"], r["pos"]] = r["value"]
-    return cents, books
+def _with_includes(
+    result: DataFrame, df: DataFrame, include: Sequence[str], dist_cols: list[str]
+) -> DataFrame:
+    """Project a ranking onto the caller's `include` columns, ordered by
+    (query_id, rank)."""
+    out_cols = ["query_id", "rank", "id"]
+    if "distances" in include:
+        out_cols += dist_cols
+    extra = [INCLUDE_COLS[i] for i in include if i in INCLUDE_COLS]
+    if extra:
+        result = result.join(df.select("id", *extra), "id", "left")
+    return result.select(*out_cols, *extra).orderBy("query_id", "rank")
 
 
 def query(
@@ -1309,7 +1456,7 @@ def query(
         embed_batch, _dim = emb
         mat = embed_batch(list(query_texts))
         query_embeddings = [[float(x) for x in row] for row in mat]
-    metric = (coll.metadata or {}).get("hnsw:space", "l2")
+    metric = _metric(coll)
     # probe vectors must match the registered collection dim — a wrong
     # length would otherwise score a silent prefix (unrolled distance)
     # or NULL-out every pair, returning plausible-but-wrong or empty
@@ -1322,23 +1469,13 @@ def query(
                 f"query embeddings of dim {sorted(set(bad))} against a "
                 f"dim-{reg_dim} collection"
             )
-    df = items_df(engine, coll, keep_partition_col=True)
-    pred = _predicate(where, where_document, None)
-    if pred is not None:
-        df = df.filter(pred)
-    ppred = _partition_pred(where, _partition_key(engine, coll))
-    if ppred is not None:
-        df = df.filter(ppred)
-    df = df.drop(PARTITION_COL)
+    df = _filtered_items(engine, coll, None, where, where_document)
+    pool_k = int(n_results) * int(oversample)
     if index == "ivf":
-        if metric != "cosine":
-            raise EngineError(
-                f"index='ivf' supports cosine collections only; this "
-                f"collection's hnsw:space is {metric!r}"
-            )
+        _metric(coll, "ivf")
         from chroma_rs_spark.operators.ivf import ivf_topk, train_centroids_kmeans
 
-        cents = _load_ivf_index(engine, coll)
+        cents = _load_index(engine, coll, "ivf")
         if cents is None:
             # genuinely TRANSIENT: train in memory, do NOT write — a
             # read path must not mutate collection storage (concurrent
@@ -1369,280 +1506,21 @@ def query(
             "distance",
         )
     elif index == "pq":
-        if metric not in ("l2", "cosine"):
-            raise EngineError(
-                f"index='pq' supports l2/cosine collections; this "
-                f"collection's hnsw:space is {metric!r}"
-            )
-        import math
-
-        from chroma_rs_spark.operators.pq import (
-            pq_adc_topk,
-            pq_encode,
-            train_pq_codebooks,
+        pool = _pq_pool(
+            engine, coll, df, _metric(coll, "pq"), query_embeddings, pool_k
         )
-
-        src = df.filter(F.col("embedding").isNotNull())
-        enc_src = _unit_vectors(src) if metric == "cosine" else src
-        books = _load_pq_index(engine, coll)
-        if books is None:
-            # transient, like the IVF path: reads never write. Subspace
-            # count adapts to the collection dim (largest m ≤ 8 that
-            # divides it) — build_pq_index is the place to choose m
-            # explicitly.
-            dim = len(query_embeddings[0]) if query_embeddings else 1
-            m_eff = next(mi for mi in range(min(8, dim), 0, -1) if dim % mi == 0)
-            books = train_pq_codebooks(
-                enc_src, m=m_eff, item_id="id", item_emb="embedding"
-            )
-        qlist = []
-        for i, q in enumerate(query_embeddings):
-            qv = [float(x) for x in q]
-            if metric == "cosine":
-                n = math.sqrt(sum(x * x for x in qv)) or 1.0
-                qv = [x / n for x in qv]
-            qlist.append((i, qv))
-        # codes: the persisted codes table when materialized
-        # (materialize_pq_codes) — late-added items are encoded on the
-        # fly and unioned, so a stale codes table degrades nothing but
-        # freshness of the candidate ADC distances for new rows; with
-        # no codes table every current item is encoded per query.
-        codes = _load_pq_codes(engine, coll, expected_m=books.shape[0])
-        if codes is None:
-            codes = pq_encode(
-                enc_src, books, item_id="id", item_emb="embedding",
-                id_type="string",
-            )
-        else:
-            # restrict the persisted (full-corpus) codes to the rows the
-            # caller's where-filter kept, so the ADC candidate top-k runs
-            # over MATCHING docs only — otherwise a selective filter
-            # starves the pool (fewer than n_results returned while
-            # matching neighbors exist). Mirrors the no-codes path,
-            # which only ever encodes the filtered rows. Freshness
-            # joins run on BARE id columns (the round-12 ivfpq-path
-            # lesson: joining through enc_src forces the interpreted
-            # unit-normalize over the whole corpus per query), and the
-            # late-id set — bounded by contract to adds since the last
-            # materialize — broadcasts so only late rows normalize.
-            cur_ids = src.select("id")
-            persisted_ids = codes.select("id")
-            late_ids = cur_ids.join(persisted_ids, "id", "left_anti")
-            codes = codes.join(cur_ids, "id", "left_semi")
-            late = enc_src.join(F.broadcast(late_ids), "id", "left_semi")
-            codes = codes.unionByName(
-                pq_encode(
-                    late, books, item_id="id", item_emb="embedding",
-                    id_type="string",
-                )
-            )
-        # ADC proposes an oversampled candidate pool; the pool is then
-        # re-scored EXACTLY by the same knn_exact plan the exact path
-        # runs (collection metric, stored norms, rounded doubles), so
-        # returned distances are bit-identical to exact-path distances
-        # and approximation affects recall only. Where-filters prune the
-        # codes BEFORE candidate selection (semi-join above), so the
-        # pool always comes from matching docs.
-        cand = pq_adc_topk(
-            codes,
-            books,
-            qlist,
-            k=int(n_results) * int(oversample),
-            id_type="string",
-        )
-        pool = cand.select("id").distinct()
-        # the pool is bounded driver-side (<= n_queries * n_results *
-        # oversample ids) — broadcast it, or the rescore semi-join
-        # shuffles the FULL corpus (embeddings included) against a
-        # few hundred ids (round-12 scale-proof finding)
-        sub = df.join(F.broadcast(pool), "id", "left_semi")
-        queries = engine.spark.createDataFrame(
-            [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
-            "query_id INT, query_embedding ARRAY<DOUBLE>",
-        )
-        result = knn_exact(
-            sub,
-            queries,
-            k=n_results,
-            metric=metric,
-            item_id="id",
-            item_emb="embedding",
-            item_norm="embedding_norm" if metric == "cosine" else None,
-            # dim=None ON PURPOSE (unlike the exact path): the pool is
-            # <= n_results*oversample rows, so the interpreted HOF fold
-            # costs nothing — while the unrolled form, FUSED with the
-            # semi-join candidate chain and the top-k sort into one
-            # whole-stage processNext(), blows janino's method limit
-            # and silently drops the stage to interpreted anyway
-            # (measured: 4 codegen failures per pq/ivfpq query at
-            # dim=64). Bit-identical doubles either way (the knn_exact
-            # contract).
-            dim=None,
-        )
+        result = _exact_topk(engine, df, query_embeddings, n_results, metric, pool)
     elif index == "ivfpq":
-        if metric != "cosine":
-            raise EngineError(
-                f"index='ivfpq' supports cosine collections only; this "
-                f"collection's hnsw:space is {metric!r}"
-            )
-        import math
-
-        from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-        from chroma_rs_spark.operators.pq import (
-            ivfpq_adc_topk_df,
-            train_pq_codebooks,
-        )
-
-        src = df.filter(F.col("embedding").isNotNull())
-        unit = _unit_vectors(src).filter(F.col("embedding").isNotNull())
-        loaded = _load_ivfpq_index(engine, coll)
-        if loaded is None:
-            # transient, like the ivf/pq paths: reads never write
-            cents = train_centroids_kmeans(
-                unit, item_id="id", item_emb="embedding", strict=False
-            )
-            dim = len(query_embeddings[0]) if query_embeddings else 1
-            m_eff = next(
-                mi for mi in range(min(8, dim), 0, -1) if dim % mi == 0
-            )
-            books = train_pq_codebooks(
-                _ivfpq_residuals(unit, cents),
-                m=m_eff,
-                item_id="id",
-                item_emb="resid",
-            )
-        else:
-            cents, books = loaded
-        qrows = []
-        for i, q in enumerate(query_embeddings):
-            qv = [float(x) for x in q]
-            n = math.sqrt(sum(x * x for x in qv)) or 1.0
-            qrows.append((i, [x / n for x in qv]))
-        probes = engine.spark.createDataFrame(
-            qrows, "query_id INT, query_embedding ARRAY<DOUBLE>"
-        )
-        # the materialized scan tier when present (materialize_ivfpq_
-        # codes): restrict to the caller's filtered rows, encode only
-        # late-added items on the fly — the pq-path codes discipline
-        codes = None
-        if loaded is not None:
-            from chroma_rs_spark.operators.pq import (
-                ivfpq_codes_df,
-                ivfpq_probe_cells,
-            )
-
-            persisted = _load_ivfpq_codes(
-                engine, coll, expected_m=books.shape[0]
-            )
-            if persisted is not None:
-                # late-add freshness runs on the FULL id column first;
-                # the probed-cell prune then narrows the persisted scan
-                # to n_probe of n_cells hive directories (the codes
-                # table is partitioned BY cell) before any code bytes
-                # move. Pruning after the anti-join keeps non-probed
-                # items out of the "late" set (they'd be re-encoded for
-                # nothing — their cells carry no LUT rows anyway).
-                # Round-12 restructure (the 100x scale-proof findings):
-                # every freshness join runs on BARE id columns — the
-                # old shape anti/semi-joined through `unit`, whose
-                # zero-norm CASE forced the interpreted l2_norm HOF
-                # over the whole corpus per query batch. The late-id
-                # set is bounded by contract (adds since the last
-                # materialize), so it broadcasts and the normalize
-                # transform runs on late rows only (Spark's
-                # PushDownLeftSemiAntiJoin moves the semi below the
-                # projection).
-                cur_ids = src.select("id")
-                late_ids = cur_ids.join(
-                    persisted.select("id"), "id", "left_anti"
-                )
-                late = unit.join(F.broadcast(late_ids), "id", "left_semi")
-                probed_cells = [
-                    r["cell"]
-                    for r in ivfpq_probe_cells(
-                        probes, cents, n_probe=n_probe
-                    )
-                    .select("cell")
-                    .distinct()
-                    .collect()
-                ]
-                # the current-ids semi keeps where-filtered / deleted
-                # rows out of the candidate pool (pool starvation
-                # guard); ids only — codes carry no embeddings
-                pruned = persisted.filter(
-                    F.col("cell").isin(probed_cells)
-                ).join(cur_ids, "id", "left_semi")
-                codes = pruned.unionByName(
-                    ivfpq_codes_df(late, books, cents, item_id="id")
-                )
-        # ADC over residual codes proposes an oversampled pool from the
-        # probed cells only; the pool is re-scored EXACTLY by the same
-        # knn_exact plan the exact path runs (pq-path discipline), so
-        # approximation affects recall only, never returned distances.
-        cand = ivfpq_adc_topk_df(
-            unit,
-            books,
-            cents,
-            n_probe=n_probe,
-            k=int(n_results) * int(oversample),
-            probes=probes,
-            item_id="id",
-            item_emb="embedding",
-            codes=codes,
-        )
-        pool = cand.select(F.col("neighbor_id").alias("id")).distinct()
-        # bounded pool -> broadcast (same rationale as the pq path)
-        sub = df.join(F.broadcast(pool), "id", "left_semi")
-        queries = engine.spark.createDataFrame(
-            [
-                (i, [float(x) for x in q])
-                for i, q in enumerate(query_embeddings)
-            ],
-            "query_id INT, query_embedding ARRAY<DOUBLE>",
-        )
-        result = knn_exact(
-            sub,
-            queries,
-            k=n_results,
-            metric=metric,
-            item_id="id",
-            item_emb="embedding",
-            item_norm="embedding_norm",
-            # dim=None on purpose — the pq-path rationale above
-            dim=None,
-        )
-    elif index != "exact":
+        _metric(coll, "ivfpq")
+        pool = _ivfpq_pool(engine, coll, df, query_embeddings, n_probe, pool_k)
+        result = _exact_topk(engine, df, query_embeddings, n_results, metric, pool)
+    elif index == "exact":
+        result = _exact_topk(engine, df, query_embeddings, n_results, metric)
+    else:
         raise EngineError(
             f"unknown index {index!r}; use 'exact', 'ivf', 'pq' or 'ivfpq'"
         )
-    else:
-        queries = engine.spark.createDataFrame(
-            [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
-            "query_id INT, query_embedding ARRAY<DOUBLE>",
-        )
-        result = knn_exact(
-            df,
-            queries,
-            k=n_results,
-            metric=metric,
-            item_id="id",
-            item_emb="embedding",
-            # the add-time norm "index" (maintained by update/upsert):
-            # one stored norm per item instead of one recompute per
-            # (item, query) pair; same doubles, bit-identical results
-            item_norm="embedding_norm" if metric == "cosine" else None,
-            # the probe vectors' length is the collection dim (enforced
-            # against the registry at add time) — unrolled codegen
-            # distance instead of the interpreted HOF fold
-            dim=len(query_embeddings[0]) if query_embeddings else None,
-        )
-    out_cols = ["query_id", "rank", "id"]
-    if "distances" in include:
-        out_cols.append("distance")
-    extra = [INCLUDE_COLS[i] for i in include if i in INCLUDE_COLS]
-    if extra:
-        result = result.join(df.select("id", *extra), "id", "left")
-    return result.select(*out_cols, *extra).orderBy("query_id", "rank")
+    return _with_includes(result, df, include, ["distance"])
 
 
 def query_diverse(
@@ -1672,7 +1550,7 @@ def query_diverse(
 
     Returns (query_id, rank, id, distance, mmr_score[, document]
     [, metadata])."""
-    metric = (coll.metadata or {}).get("hnsw:space", "l2")
+    metric = _metric(coll)
     if metric != "cosine":
         raise EngineError(
             f"query_diverse supports cosine collections only; this "
@@ -1688,21 +1566,10 @@ def query_diverse(
             f"MMR greedy stage is bounded by MMR_MAX_POOL candidates)"
         )
 
-    df = items_df(engine, coll, keep_partition_col=True)
-    pred = _predicate(where, where_document, None)
-    if pred is not None:
-        df = df.filter(pred)
-    ppred = _partition_pred(where, _partition_key(engine, coll))
-    if ppred is not None:
-        df = df.filter(ppred)
-    df = df.drop(PARTITION_COL)
-    probes = engine.spark.createDataFrame(
-        [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
+    df = _filtered_items(engine, coll, None, where, where_document)
     result = mmr_topk(
         df,
-        probes,
+        _probe_df(engine.spark, query_embeddings),
         k=int(n_results),
         pool=(
             int(pool)
@@ -1713,13 +1580,7 @@ def query_diverse(
         item_id="id",
         item_emb="embedding",
     )
-    out_cols = ["query_id", "rank", "id"]
-    if "distances" in include:
-        out_cols += ["distance", "mmr_score"]
-    extra = [INCLUDE_COLS[i] for i in include if i in INCLUDE_COLS]
-    if extra:
-        result = result.join(df.select("id", *extra), "id", "left")
-    return result.select(*out_cols, *extra).orderBy("query_id", "rank")
+    return _with_includes(result, df, include, ["distance", "mmr_score"])
 
 
 def find_duplicates(

@@ -20,9 +20,9 @@ Spark shapes (matching the repo's discipline):
   by contract, like the IVF centroid collects in operators/ivf.py).
   numpy Lloyd's with deterministic seeds; bit-reproducible.
 * **encode** — distributed, shuffle-free: one vectorized Arrow pass
-  (mapInPandas) computes all-subspace argmins with numpy matmuls.
-  This is the justified Pandas-UDF case: M*K per-row distance argmins
-  would otherwise be an interpreted HOF tree.
+  computes all-subspace argmins on the shared numpy kernel
+  (operators/kernel.py). This is the justified Pandas-UDF case: M*K
+  per-row distance argmins would otherwise be an interpreted HOF tree.
 * **search (ADC)** — broadcast the per-query LUTs inside the task
   closure, gather + sum per subspace, then the shared numpy kernel's
   local top-k per partition and one tiny window over |partitions| x
@@ -33,9 +33,18 @@ Spark shapes (matching the repo's discipline):
   exactly (distances identical to the exact path's doubles), and the
   final top-k ranks on exact distances. Recall is then a property of
   the oversample factor, not of quantization error alone. The
-  collection's `query(index="pq")` re-scores the `pq_adc_topk` pool
-  through `knn_exact`; `pq_topk_rescored_df` is the SQL-replayable
-  chain the declared `pq_topk` row runs.
+  collection's `query(index="pq")` and `query(index="ivfpq")` send
+  their ADC pools through one exact `knn_exact` rescore;
+  `pq_topk_rescored_df` is the SQL-replayable chain the declared
+  `pq_topk` row runs.
+* **IVF-PQ** — the composite index encodes residuals against a cosine
+  coarse quantizer. `_ivfpq_residuals` is the one assign-and-subtract
+  step, shared by collection codebook training and the SQL encode
+  gear of `ivfpq_codes_df`; above ARROW_ENCODE_THRESHOLD the Arrow
+  gear does the same math on the numpy kernel. `_collect_probe_cells`
+  computes a query batch's probed cells once, for callers that prune
+  a cell-partitioned code tier and reuse the rows as
+  `ivfpq_adc_topk_df(probed=)`.
 
 Verification: tests/test_pq.py pins encode codes and ADC distances
 bit-for-bit against a pure-numpy reference and checks determinism;
@@ -116,12 +125,7 @@ def train_pq_codebooks(
         for _ in range(max_iter):
             # (n, k) squared L2 via the expansion — exact enough for
             # training (codebooks are data, not a checked contract)
-            d = (
-                (x * x).sum(axis=1)[:, None]
-                - 2.0 * (x @ cents.T)
-                + (cents * cents).sum(axis=1)[None, :]
-            )
-            lab = np.argmin(d, axis=1)
+            lab = np.argmin(kernel.distances("l2", x, cents), axis=1)
             new = cents.copy()
             for ci in range(k):
                 mask = lab == ci
@@ -607,11 +611,19 @@ def _collect_codes_array(long: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def _lut_flat(lut: DataFrame, keys: list[str]) -> DataFrame:
-    """Flatten long LUT rows (keys..., mi, code, _d) into ONE
+def _lut_flat(rows: DataFrame, keys: list[str], books) -> DataFrame:
+    """The ADC lookup table of (keys..., mi, sv) probe subspace rows:
+    each subvector's round-6 squared L2 to every codeword of its
+    subspace (the broadcast _codebook_df relation), flattened into ONE
     m*k-double array L per key group, ordered by (mi, code) so
     element_at(L, mi*k + code + 1) is subspace mi's distance for
     `code`. Tiny by contract: |probes| x n_probe groups."""
+    sub = books.shape[2]
+    lut = (
+        rows.join(F.broadcast(_codebook_df(rows.sparkSession, books)), "mi")
+        .withColumn("_d", F.expr(_SUB_DIST_SQL.format(sub=sub, nd=DIST_DECIMALS)))
+        .select(*keys, "mi", F.col("ci").alias("code"), "_d")
+    )
     return lut.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("mi", "code", "_d"))),
@@ -641,7 +653,6 @@ def pq_codes_df(
     codebooks,
     item_id: str = "vec_id",
     item_emb: str = "embedding",
-    bdf: DataFrame | None = None,
 ) -> DataFrame:
     """(_vid, mi, code): the DataFrame-native encode stage of
     `pq_adc_topk_df`, exposed so tests can pin its code assignments
@@ -699,8 +710,6 @@ def pq_adc_topk_df(
     books = np.asarray(codebooks, dtype=np.float64)
     m, kk, sub = books.shape
     dim = m * sub
-    bdf = _codebook_df(items.sparkSession, books)
-    dist_expr = _SUB_DIST_SQL.format(sub=sub, nd=DIST_DECIMALS)
     codes = _collect_codes_array(
         pq_codes_df(items, books, item_id=item_id, item_emb=item_emb),
         ["_vid"],
@@ -708,12 +717,7 @@ def pq_adc_topk_df(
     pr = probes.filter(
         F.col(probe_emb).isNotNull() & (F.size(probe_emb) == dim)
     ).selectExpr(f"`{probe_id}` AS _qid", _subspace_sql(probe_emb, m, sub))
-    lut = (
-        pr.join(F.broadcast(bdf), "mi")
-        .withColumn("_d", F.expr(dist_expr))
-        .select("_qid", "mi", F.col("ci").alias("code"), "_d")
-    )
-    adc = codes.crossJoin(F.broadcast(_lut_flat(lut, ["_qid"]))).selectExpr(
+    adc = codes.crossJoin(F.broadcast(_lut_flat(pr, ["_qid"], books))).selectExpr(
         "_qid",
         "_vid",
         f"{_adc_fold_sql(m, kk, DIST_DECIMALS)} AS adc_dist",
@@ -739,65 +743,94 @@ ARROW_ENCODE_THRESHOLD = 2048
 def _ivfpq_codes_arrow(
     items: DataFrame,
     books,
-    cent_mat,
-    cent_ids,
+    centroids: list[tuple[int, list[float]]],
     item_id: str,
     item_emb: str,
 ) -> DataFrame:
-    """Arrow-batch encode gear: numpy matmul assignment + per-subspace
-    argmin over a broadcast codebook, one mapInPandas pass. Argmins
-    run on UNROUNDED float64 (np.argmin takes the first minimum, and
-    centroid/code columns are ordered by ascending id, so exact ties
-    break low — the SQL gear's convention); the SQL gear argmins over
-    round-6 distances, so assignments may differ within a 1e-6 tie
-    window. Recall-neutral by construction: returned distances always
-    come from the exact rescore, never from codes."""
+    """Arrow-batch encode gear on the shared numpy kernel: cosine cell
+    assignment, residual, then a per-subspace squared-l2 argmin over
+    the codebooks. Argmins run on UNROUNDED float64 (np.argmin takes
+    the first minimum, and centroids are ordered by ascending id, so
+    exact ties break low — the SQL gear's convention); the SQL gear
+    argmins over round-6 distances, so assignments may differ within a
+    1e-6 tie window. Recall-neutral by construction: returned
+    distances always come from the exact rescore, never from codes."""
     import numpy as np
+    import pandas as pd
 
     m, _kk, sub = books.shape
-    dim = m * sub
+    order = sorted(centroids, key=lambda c: c[0])
+    cents = np.asarray([vec for _cid, vec in order], dtype=np.float64)
+    cids = np.asarray([cid for cid, _vec in order], dtype=np.int64)
+    cnorm = kernel.norms(cents)
+
+    def encode(pdf):
+        x = kernel.matrix(pdf[item_emb])
+        xnorm = kernel.norms(x)
+        # zero-norm vectors have no cosine cell: dropped, like the SQL
+        # gear's assign_cells
+        ok = xnorm != 0.0
+        x, xnorm = x[ok], xnorm[ok]
+        if not len(x):
+            return None
+        pick = np.argmin(kernel.distances("cosine", x, cents, xnorm, cnorm), axis=1)
+        resid = x - cents[pick]
+        codes = np.empty((len(x), m), dtype=np.int32)
+        for mi in range(m):
+            r = resid[:, mi * sub : (mi + 1) * sub]
+            codes[:, mi] = np.argmin(kernel.distances("l2", r, books[mi]), axis=1)
+        return pd.DataFrame(
+            {
+                item_id: pdf[item_id].to_numpy()[ok],
+                "cell": cids[pick].astype(np.int32),
+                "codes": list(codes),
+            }
+        )
+
     id_type = dict(items.dtypes)[item_id]
-    b_books = books.copy()
-    b_cents = np.asarray(cent_mat, dtype=np.float64)
-    b_cids = np.asarray(cent_ids, dtype=np.int64)
-    cnorm = np.sqrt((b_cents * b_cents).sum(axis=1))
-
-    def encode(batches: "object") -> "object":
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.asarray(
-                [_np.asarray(e, dtype=_np.float64) for e in pdf[item_emb]]
-            )
-            xnorm = _np.sqrt((x * x).sum(axis=1))
-            ok = xnorm != 0.0
-            x, ids, xnorm = x[ok], pdf[item_id].to_numpy()[ok], xnorm[ok]
-            if not len(x):
-                continue
-            d = 1.0 - (x @ b_cents.T) / (xnorm[:, None] * cnorm[None, :])
-            pick = _np.argmin(d, axis=1)
-            cells = b_cids[pick]
-            resid = x - b_cents[pick]
-            codes = _np.empty((len(x), m), dtype=_np.int32)
-            for mi in range(m):
-                r = resid[:, mi * sub : (mi + 1) * sub]
-                c = b_books[mi]  # (k, sub)
-                dd = ((r[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                codes[:, mi] = _np.argmin(dd, axis=1)
-            yield _pd.DataFrame(
-                {
-                    item_id: ids,
-                    "cell": cells.astype("int32"),
-                    "codes": [row.tolist() for row in codes],
-                }
-            )
-
-    return items.select(item_id, item_emb).mapInPandas(
+    return kernel.map_batches(
+        items.select(item_id, item_emb),
         encode,
-        schema=f"{item_id} {id_type}, cell int, codes array<int>",
+        f"{item_id} {id_type}, cell int, codes array<int>",
+    )
+
+
+def _cells_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """(cell INT, cvec ARRAY<DOUBLE>): the tiny centroid relation the
+    residual and probe stages broadcast-join."""
+    return spark.createDataFrame(
+        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
+        "cell INT, cvec ARRAY<DOUBLE>",
+    )
+
+
+def _ivfpq_residuals(
+    items: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    item_id: str,
+    item_emb: str,
+    cent_df: DataFrame | None = None,
+) -> DataFrame:
+    """(_vid, cell, _r): each vector's cosine cell (map-side
+    least-struct over centroid literals, operators/ivf.py:assign_cells)
+    and its residual against that cell's centroid — the domain the
+    composite index both trains its codebooks on and encodes. The
+    subtraction is a `zip_with` over the broadcast centroid relation
+    (exact binary doubles, replayable by the SQL oracle). Zero-norm
+    vectors have no cosine cell and drop."""
+    from chroma_rs_spark.operators.ivf import assign_cells
+
+    if cent_df is None:
+        cent_df = _cells_df(items.sparkSession, centroids)
+    assigned = assign_cells(items, centroids, item_emb=item_emb).select(
+        F.col(item_id).alias("_vid"),
+        F.col(item_emb).cast("array<double>").alias("_e"),
+        F.col("cell").cast("int").alias("cell"),
+    )
+    return assigned.join(F.broadcast(cent_df), "cell").select(
+        "_vid",
+        "cell",
+        F.expr("zip_with(_e, cvec, (x, y) -> x - y)").alias("_r"),
     )
 
 
@@ -807,14 +840,12 @@ def ivfpq_codes_df(
     centroids: list[tuple[int, list[float]]],
     item_id: str = "vec_id",
     item_emb: str = "embedding",
-    bdf: DataFrame | None = None,
     cent_df: DataFrame | None = None,
 ) -> DataFrame:
     """(item_id, cell, codes ARRAY<INT>): the composite index's encode
-    stage — cosine cell assignment (map-side least-struct over centroid
-    literals), residual subtraction against the broadcast centroid
-    relation, the shuffle-free per-subspace argmin (_codes_long), then
-    one tiny-row exchange packing codes[i] = subspace i's codeword
+    stage — cell assignment and residual (_ivfpq_residuals), the
+    shuffle-free per-subspace argmin (_codes_long), then one tiny-row
+    exchange packing codes[i] = subspace i's codeword
     (_collect_codes_array). This is the materializable scan tier:
     persisted, a query reads m bytes per candidate instead of raw
     vectors. Zero-norm/NULL/wrong-dim vectors are unscorable under the
@@ -823,45 +854,20 @@ def ivfpq_codes_df(
     Two physical gears, one logical op: below ARROW_ENCODE_THRESHOLD
     interpreted flops per row the SQL-expression pipeline runs (fully
     oracle-replayable — every driver row lives here); above it the
-    Arrow gear (_ivfpq_codes_arrow) does the same math as numpy
-    matmuls — the round-12 scale proof measured the HOF expression at
-    17x the Arrow wall on a 409.6k x 64-cell encode."""
+    Arrow gear (_ivfpq_codes_arrow) does the same math on the shared
+    numpy kernel — the round-12 scale proof measured the HOF
+    expression at 17x the Arrow wall on a 409.6k x 64-cell encode."""
     import numpy as np
-
-    from chroma_rs_spark.operators.ivf import assign_cells
 
     books = np.asarray(codebooks, dtype=np.float64)
     m, _kk, sub = books.shape
     dim = m * sub
-    spark = items.sparkSession
     scorable = items.filter(
         F.col(item_emb).isNotNull() & (F.size(item_emb) == dim)
     )
     if len(centroids) * dim > ARROW_ENCODE_THRESHOLD:
-        order = sorted(range(len(centroids)), key=lambda i: centroids[i][0])
-        return _ivfpq_codes_arrow(
-            scorable,
-            books,
-            [centroids[i][1] for i in order],
-            [centroids[i][0] for i in order],
-            item_id,
-            item_emb,
-        )
-    if cent_df is None:
-        cent_df = spark.createDataFrame(
-            [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-            "cell INT, cvec ARRAY<DOUBLE>",
-        )
-    assigned = assign_cells(scorable, centroids, item_emb=item_emb).select(
-        F.col(item_id).alias("_vid"),
-        F.col(item_emb).cast("array<double>").alias("_e"),
-        F.col("cell").cast("int").alias("cell"),
-    )
-    resid = assigned.join(F.broadcast(cent_df), "cell").select(
-        "_vid",
-        "cell",
-        F.expr("zip_with(_e, cvec, (x, y) -> x - y)").alias("_r"),
-    )
+        return _ivfpq_codes_arrow(scorable, books, centroids, item_id, item_emb)
+    resid = _ivfpq_residuals(scorable, centroids, item_id, item_emb, cent_df)
     long = _codes_long(resid, "_r", books, DIST_DECIMALS)
     return _collect_codes_array(long, ["_vid", "cell"]).select(
         F.col("_vid").alias(item_id), "cell", "codes"
@@ -899,10 +905,7 @@ def ivfpq_probe_cells(
         F.col(probe_emb).cast("array<double>").alias("_qe"),
     )
     if cent_df is None:
-        cent_df = pr.sparkSession.createDataFrame(
-            [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-            "cell INT, cvec ARRAY<DOUBLE>",
-        )
+        cent_df = _cells_df(pr.sparkSession, centroids)
     qnorm = pr.withColumn(
         "_qnorm", F.expr(l2_norm_sql("_qe"))
     ).filter(F.col("_qnorm") != F.lit(0.0))
@@ -925,6 +928,28 @@ def ivfpq_probe_cells(
             "cell",
             F.expr("zip_with(_qe, cvec, (x, y) -> x - y)").alias("_qr"),
         )
+    )
+
+
+def _collect_probe_cells(
+    probes: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    n_probe: int,
+    dim: int,
+) -> tuple[DataFrame, list[int]]:
+    """ivfpq_probe_cells run ONCE and collected (n_queries x n_probe
+    driver-tiny rows), for callers holding a cell-partitioned code
+    tier: returns the rows as a DataFrame to pass back as
+    ivfpq_adc_topk_df's `probed=` — so the |queries| x |cells|
+    assignment does not run a second time in-plan — and the sorted
+    probed cell ids for an isin() partition filter on the code scan.
+    Doubles round-trip collect/createDataFrame bit-exactly, so the LUT
+    is identical to the in-plan assignment's."""
+    probed = ivfpq_probe_cells(probes, centroids, n_probe=n_probe, dim=dim)
+    rows = probed.collect()
+    return (
+        probes.sparkSession.createDataFrame(rows, probed.schema),
+        sorted({r["cell"] for r in rows}),
     )
 
 
@@ -994,13 +1019,7 @@ def ivfpq_adc_topk_df(
     books = np.asarray(codebooks, dtype=np.float64)
     m, kk, sub = books.shape
     dim = m * sub
-    spark = items.sparkSession
-    bdf = _codebook_df(spark, books)
-    cent_df = spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-    dist_expr = _SUB_DIST_SQL.format(sub=sub, nd=DIST_DECIMALS)
+    cent_df = _cells_df(items.sparkSession, centroids)
 
     if codes is None:
         codes = ivfpq_codes_df(
@@ -1017,13 +1036,9 @@ def ivfpq_adc_topk_df(
         raise ValueError("ivfpq_adc_topk_df: probes DataFrame required")
     if probed is None:
         # `probed`: optional precomputed ivfpq_probe_cells output
-        # (_qid, cell, _qr). A caller that already collected the probe
-        # assignment to build a partition-pruning isin() over the code
-        # tier (q_ivfpq_topk's shape) passes the same rows back here
-        # instead of paying the |queries| x |cells| assignment branch
-        # a second time in-plan (round 13). Doubles round-trip the
-        # collect/createDataFrame boundary bit-exactly, so the LUT is
-        # identical either way.
+        # (_qid, cell, _qr) — _collect_probe_cells' DataFrame, from a
+        # caller that already collected the assignment to prune a
+        # cell-partitioned code tier
         probed = ivfpq_probe_cells(
             probes,
             centroids,
@@ -1033,20 +1048,17 @@ def ivfpq_adc_topk_df(
             probe_emb=probe_emb,
             cent_df=cent_df,
         )
-    lut = (
-        probed.selectExpr("_qid", "cell", _subspace_sql("_qr", m, sub))
-        .join(F.broadcast(bdf), "mi")
-        .withColumn("_d", F.expr(dist_expr))
-        .select("_qid", "cell", "mi", F.col("ci").alias("code"), "_d")
+    lut = _lut_flat(
+        probed.selectExpr("_qid", "cell", _subspace_sql("_qr", m, sub)),
+        ["_qid", "cell"],
+        books,
     )
     # codes stay PACKED: the broadcast join on cell already restricts
     # the scan to probed-cell candidates, and the ADC distance is an
     # unrolled m-lookup codegen fold per candidate row — no m-way
     # explode of the code tier, no collect_list aggregate behind the
     # distance (same in-order doubles; _adc_fold_sql).
-    adc = codes.join(
-        F.broadcast(_lut_flat(lut, ["_qid", "cell"])), "cell"
-    ).selectExpr(
+    adc = codes.join(F.broadcast(lut), "cell").selectExpr(
         "_qid",
         "_vid",
         "cell",

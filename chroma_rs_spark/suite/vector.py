@@ -1549,35 +1549,21 @@ def _ivfpq_codes_tier(spark: SparkSession, sf_dir: str) -> str:
 
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chroma_rs_spark.operators.pq import (
+        _collect_probe_cells,
         hash_codebooks,
         ivfpq_adc_topk_df,
-        ivfpq_probe_cells,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _small_vectors(spark, sf_dir, IVF_CENTROIDS)
     probes = _probe_queries(emb)
     tier = spark.read.parquet(_ivfpq_codes_tier(spark, sf_dir))
-    # collect the probe assignment ONCE (driver-tiny: n_queries x
-    # n_probe rows of (qid, cell, residual)): the cell ids push an
-    # isin() PARTITION filter into the cell-partitioned code scan —
-    # the plan lists n_probe directories, not n_cells — and the same
-    # rows feed the ADC LUT build via `probed=`, so the
-    # |queries| x |cells| assignment branch runs once per call instead
-    # of twice (round 13; doubles round-trip collect/createDataFrame
-    # bit-exactly)
-    probed = ivfpq_probe_cells(
+    # collect the probe assignment ONCE: the cell ids push an isin()
+    # PARTITION filter into the cell-partitioned code scan — the plan
+    # lists n_probe directories, not n_cells — and the same rows feed
+    # the ADC LUT build via `probed=` (round 13)
+    probed, probed_cells = _collect_probe_cells(
         probes, cents, n_probe=IVF_PROBE, dim=_PQ_M * _PQ_SUB
-    )
-    # _qid's type rides the probe schema (ADVICE r13: a hardcoded LONG
-    # would silently corrupt the LUT join key if a future suite path
-    # casts probe ids to string)
-    qid_type = probed.schema["_qid"].dataType.simpleString()
-    probed_rows = probed.collect()
-    probed_cells = sorted({int(r["cell"]) for r in probed_rows})
-    probed_df = spark.createDataFrame(
-        [(r["_qid"], int(r["cell"]), list(r["_qr"])) for r in probed_rows],
-        f"_qid {qid_type}, cell INT, _qr ARRAY<DOUBLE>",
     )
     return ivfpq_adc_topk_df(
         emb,
@@ -1587,7 +1573,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=TOP_K,
         probes=probes,
         codes=tier.filter(F.col("cell").isin(probed_cells)),
-        probed=probed_df,
+        probed=probed,
     )
 
 

@@ -381,6 +381,67 @@ def test_reader_recovery_leaves_writer_tmp_alone(engine):
     shutil.rmtree(tmp)
 
 
+@pytest.mark.parametrize("write", ["data_overwrite", "index_write", "ivfpq_index"])
+def test_writer_survives_reader_heal_between_renames(engine, monkeypatch, write):
+    """A reader's _recover_interrupted_overwrite can run inside a
+    writer's two-rename window (live dir parked, committed tmp not yet
+    promoted) and promote the tmp itself. The writer's own promote then
+    finds no tmp, but the disk already holds the intended state: the
+    write must succeed, for data overwrites and index writes alike."""
+    import os
+
+    import numpy as np
+
+    from chroma_rs_spark import collection as C
+
+    rng = np.random.default_rng(9)
+    ids = [f"v{i:02d}" for i in range(24)]
+    vecs = rng.normal(0.0, 1.0, size=(24, 4)).tolist()
+    c = engine.create_collection("heal", {"hnsw:space": "cosine"})
+    c.add(ids=ids, embeddings=vecs)
+    build = {
+        "index_write": lambda m: c.build_pq_index(m=m, k=4, sample_size=24),
+        "ivfpq_index": lambda m: c.build_ivfpq_index(
+            n_centroids=2, max_iter=2, m=m, k=4, sample_size=24
+        ),
+    }.get(write)
+    if build is not None:
+        build(2)  # a live index the rebuild parks
+
+    healed = []
+
+    class ReaderHealsFirst:
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        @staticmethod
+        def replace(src, dst):
+            if src.endswith(".__tmp") and not healed:
+                healed.append(dst)
+                assert not os.path.isdir(dst)  # inside the window
+                C._recover_interrupted_overwrite(dst)  # reader mode
+            return os.replace(src, dst)
+
+    monkeypatch.setattr(C, "os", ReaderHealsFirst())
+    if build is None:
+        c.upsert(ids=["new"], embeddings=[[1.0, 2.0, 3.0, 4.0]])
+    else:
+        path = build(4)
+    monkeypatch.undo()
+
+    assert healed, "the reader heal was never injected"
+    for leftover in (healed[0] + ".__tmp", healed[0] + ".__old"):
+        assert not os.path.exists(leftover)
+    if build is None:
+        assert c.count() == 25 and c.get(ids=["new"]).count() == 1
+    else:
+        assert healed[0] == path
+        index = "pq" if write == "index_write" else "ivfpq"
+        loaded = C._load_index(engine, c, index)
+        books = loaded if index == "pq" else loaded[1]
+        assert books.shape[0] == 4  # the rebuild's generation is live
+
+
 def test_partial_index_dir_reads_as_absent(engine):
     """An index dir without Spark's _SUCCESS marker (crashed build)
     must be treated as no-index — the PQ/IVF loaders never reconstruct
@@ -396,9 +457,9 @@ def test_partial_index_dir_reads_as_absent(engine):
     c.add(ids=ids, embeddings=vecs)
     p = c.build_pq_index(m=2, k=4, sample_size=16)
     os.remove(os.path.join(p, "_SUCCESS"))  # simulate a partial build
-    from chroma_rs_spark.collection import _load_pq_index
+    from chroma_rs_spark.collection import _load_index
 
-    assert _load_pq_index(c._engine, c) is None
+    assert _load_index(c._engine, c, "pq") is None
     # query still works (transient retrain), never loads the partial dir
     got = c.query([vecs[0]], n_results=1, index="pq", oversample=8).collect()
     assert got[0]["id"] == ids[0]

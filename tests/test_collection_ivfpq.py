@@ -166,7 +166,7 @@ def test_rebuild_crash_windows_never_mix_generations(ivfpq_coll, engine):
     from one build with centroids from the other."""
     import shutil
 
-    from chroma_rs_spark.collection import IVFPQ_INDEX_DIR, _load_ivfpq_index
+    from chroma_rs_spark.collection import IVFPQ_INDEX_DIR, _load_index
 
     c, ids, vecs = ivfpq_coll
     c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
@@ -190,7 +190,7 @@ def test_rebuild_crash_windows_never_mix_generations(ivfpq_coll, engine):
     # window A: old parked, committed tmp in place, live missing ->
     # the NEW generation wins (its write completed)
     reset(tmp_from=gen2, old_from=gen1)
-    cents, books = _load_ivfpq_index(engine, c)
+    cents, books = _load_index(engine, c, "ivfpq")
     assert books.shape[0] == 4  # m=4 codebooks
     assert len(cents[0][1]) == 4  # 4-dim centroids of the same build
     assert os.path.isdir(root) and not os.path.isdir(root + ".__tmp")
@@ -199,13 +199,13 @@ def test_rebuild_crash_windows_never_mix_generations(ivfpq_coll, engine):
     # missing -> roll back to the complete OLD generation
     reset(tmp_from=gen2, old_from=gen1)
     os.remove(os.path.join(root + ".__tmp", "_SUCCESS"))
-    cents, books = _load_ivfpq_index(engine, c)
+    cents, books = _load_index(engine, c, "ivfpq")
     assert books.shape[0] == 2  # m=2: the parked old build, intact
 
     # window C: swap finished (live present), stale park dirs remain ->
     # live generation is authoritative
     reset(live_from=gen2, old_from=gen1)
-    cents, books = _load_ivfpq_index(engine, c)
+    cents, books = _load_index(engine, c, "ivfpq")
     assert books.shape[0] == 4
     shutil.rmtree(gen1, ignore_errors=True)
     shutil.rmtree(gen2, ignore_errors=True)

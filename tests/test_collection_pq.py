@@ -119,9 +119,9 @@ def test_materialized_codes_serve_queries_and_absorb_late_adds(pq_coll):
     assert got[0]["id"] == "late" and got[0]["distance"] == 0.0
     # a partial codes dir (no _SUCCESS) is treated as absent
     os.remove(os.path.join(path, "_SUCCESS"))
-    from chroma_rs_spark.collection import _load_pq_codes
+    from chroma_rs_spark.collection import _load_codes
 
-    assert _load_pq_codes(c._engine, c) is None
+    assert _load_codes(c._engine, c, "pq") is None
 
 
 def test_materialize_requires_persisted_index(engine):
@@ -159,11 +159,11 @@ def test_load_pq_codes_self_heals_on_m_mismatch(pq_coll):
     c, ids, vecs = pq_coll
     c.build_pq_index(m=2, k=8, sample_size=64)
     c.materialize_pq_codes()
-    from chroma_rs_spark.collection import _load_pq_codes
+    from chroma_rs_spark.collection import _load_codes
 
-    ok = _load_pq_codes(c._engine, c, expected_m=2)
+    ok = _load_codes(c._engine, c, "pq", expected_m=2)
     assert ok.count() == len(ids)
-    mismatched = _load_pq_codes(c._engine, c, expected_m=4)
+    mismatched = _load_codes(c._engine, c, "pq", expected_m=4)
     assert mismatched.count() == 0  # all rows filtered -> re-encode path
 
 

@@ -7,7 +7,9 @@ instead of waiting for a human to diff PLANS.md.
 
 Plan BUILD only (executedPlan on the sf0.001 tables): no query
 executes, so the whole module is seconds. Iterative rows (whose fn()
-runs jobs) are exercised by their correctness gates instead.
+runs jobs) are exercised by their correctness gates instead. The
+collection-query plans at the end are built on a tiny collection;
+only the index build and query()'s own driver-side lookups run jobs.
 """
 
 from __future__ import annotations
@@ -94,3 +96,53 @@ def test_filter_pushdown_reaches_the_scan(spark):
 def test_small_dims_broadcast_in_relational_joins(spark):
     plan = _plan(spark, "top_customers_per_nation")
     assert "BroadcastExchange" in plan, "nation-side dim should broadcast"
+
+
+@pytest.fixture(scope="module")
+def ann_coll(spark, tmp_path_factory):
+    """A cosine collection with a persisted ivfpq index and its
+    materialized, cell-partitioned code tier."""
+    import numpy as np
+
+    from chroma_rs_spark.catalog import Engine
+
+    engine = Engine(spark, str(tmp_path_factory.mktemp("plans") / "wh"))
+    c = engine.create_collection("plans", {"hnsw:space": "cosine"})
+    vecs = np.random.default_rng(3).normal(size=(40, 8)).tolist()
+    c.add(ids=[f"v{i:02d}" for i in range(40)], embeddings=vecs)
+    c.build_ivfpq_index(n_centroids=4, max_iter=2, m=2, k=4, sample_size=40)
+    c.materialize_ivfpq_codes()
+    return c, vecs
+
+
+def _query_plan(ann_coll, index: str) -> str:
+    c, vecs = ann_coll
+    df = c.query(vecs[:2], n_results=3, index=index)
+    return str(df._jdf.queryExecution().executedPlan())
+
+
+@pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
+def test_collection_query_rescore_broadcasts(ann_coll, index):
+    # every index ends in the exact ranking: the probes broadcast into
+    # a nested-loop score, the stored items never shuffle; a candidate
+    # pool reaches the items as a broadcast left-semi join on id
+    plan = _query_plan(ann_coll, index)
+    assert "BroadcastNestedLoopJoin BuildRight" in plan
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    lines = plan.splitlines()
+    items = lines[next(i for i, ln in enumerate(lines) if "AS __iid" in ln) + 1]
+    if index == "exact":
+        assert "Join" not in items, items
+    else:
+        assert re.search(
+            r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], LeftSemi, BuildRight", items
+        ), items
+
+
+def test_collection_ivfpq_prunes_code_cells_once(ann_coll):
+    # the probed cells are computed once on the driver: they prune the
+    # cell-partitioned code scan, and no probe-cell window (ordered by
+    # the centroid distance _cd) runs again inside the plan
+    plan = _query_plan(ann_coll, "ivfpq")
+    assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
+    assert not re.search(r"Window \[.*_cd#", plan), plan
