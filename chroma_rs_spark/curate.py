@@ -30,14 +30,11 @@ input), so the analyzed logical tree of the naive 8-stage composition
 grows ~3^8 copies of the scan — measured on a 36-doc corpus, analysis
 alone took 220 s and `collect()` died with a JVM heap OOM before
 touching data. `persist()` does NOT help (the cache is substituted
-after analysis, on the already-exponential tree). With `cache=True`
-(default) each stage is `localCheckpoint()`ed — materialized once,
-plan truncated to a LogicalRDD — which is both the lineage cut and
-the persist. On a real cluster swap local checkpoints for reliable
-ones (`sparkContext.setCheckpointDir` + `.checkpoint()`) or a parquet
-write/read after stage 5 where most bytes are gone; local checkpoints
-don't survive executor loss. `cache=False` skips the cut and is only
-safe when most stages are `skip`ped (the caller owns lineage breaks).
+after analysis, on the already-exponential tree). By default each
+stage is `localCheckpoint()`ed — materialized once, plan truncated to
+a LogicalRDD — which is both the lineage cut and the persist. Local
+checkpoints don't survive executor loss; on a real cluster pass
+`checkpoint_dir` for durable parquet cuts.
 """
 
 from __future__ import annotations
@@ -74,7 +71,6 @@ def curate_corpus(
     text_col: str = "text",
     url_col: str | None = None,
     normalize: bool = False,
-    cache: bool = True,
     checkpoint_dir: str | None = None,
     skip: frozenset[str] | set[str] = frozenset(),
 ) -> tuple[DataFrame, DataFrame]:
@@ -109,9 +105,9 @@ def curate_corpus(
     so the run is restartable after executor (or whole-application)
     loss and every intermediate corpus is independently re-readable —
     the difference at the 100 TB design point between resuming after
-    the expensive near-dup stage and a full re-run. The default
-    (`cache=True`, no dir) keeps `localCheckpoint()`: same lineage
-    cut, single-run lifetime, no disk beyond shuffle space. Parquet
+    the expensive near-dup stage and a full re-run. Without a dir
+    each cut is a `localCheckpoint()`: same lineage cut, single-run
+    lifetime, no disk beyond shuffle space. Parquet
     spill beats `sparkContext.setCheckpointDir`-style reliable
     checkpoints here because the artifacts are typed, compressed, and
     readable by any engine — a checkpoint you can audit. Values are
@@ -146,28 +142,29 @@ def curate_corpus(
     weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     stages: list[tuple[str, DataFrame]] = []
 
-    def _stage(name: str, sdf: DataFrame) -> DataFrame:
+    def _cut(sdf: DataFrame, name: str) -> DataFrame:
         if checkpoint_dir is not None:
             # durable cut: write-then-read truncates the plan to a
             # fresh parquet scan AND leaves a restart point on disk
-            path = f"{checkpoint_dir}/stage_{len(stages):02d}_{name}"
+            path = f"{checkpoint_dir}/{name}"
             sdf.write.mode("overwrite").parquet(path)
-            sdf = sdf.sparkSession.read.parquet(path)
-        elif cache:
-            # truncates the logical plan IMMEDIATELY (the
-            # exponential-tree cut — see module docstring; the plan
-            # becomes a LogicalRDD at call time) while materializing
-            # LAZILY: eager=False lets consecutive narrow stages
-            # compute inside one job instead of one barrier each
-            # (measured at sf0.1: eager 9.8 s -> lazy 8.8 s warmed,
-            # bit-identical). Two earlier measured negative results
-            # stand: spreading each narrow stage checkpoint across the
-            # cores DOUBLES the wall (6.99 s -> 13.4 s — per-stage
-            # repartition shuffles cost more than the single-thread
-            # scans they parallelize), and persist() instead of
-            # checkpointing re-inflates the analyzed tree. Stage
-            # checkpoints keep the input's partitioning.
-            sdf = sdf.localCheckpoint(eager=False)
+            return sdf.sparkSession.read.parquet(path)
+        # truncates the logical plan IMMEDIATELY (the exponential-tree
+        # cut — see module docstring; the plan becomes a LogicalRDD at
+        # call time) while materializing LAZILY: eager=False lets
+        # consecutive narrow stages compute inside one job instead of
+        # one barrier each (measured at sf0.1: eager 9.8 s -> lazy
+        # 8.8 s warmed, bit-identical). Two earlier measured negative
+        # results stand: spreading each narrow stage checkpoint across
+        # the cores DOUBLES the wall (6.99 s -> 13.4 s — per-stage
+        # repartition shuffles cost more than the single-thread scans
+        # they parallelize), and persist() instead of checkpointing
+        # re-inflates the analyzed tree. Checkpoints keep the input's
+        # partitioning.
+        return sdf.localCheckpoint(eager=False)
+
+    def _stage(name: str, sdf: DataFrame) -> DataFrame:
+        sdf = _cut(sdf, f"stage_{len(stages):02d}_{name}")
         stages.append((name, sdf))
         return sdf
 
@@ -307,15 +304,9 @@ def curate_corpus(
     )
     # the pair list feeds BOTH the stage-5 clustering and the stage-7
     # split restriction; without a cut the full minhash-LSH plan
-    # (shingle -> 64 hashes -> band join) executes twice. Same
-    # durable/local treatment as the stages (measured: ~1.5 s of the
-    # sf0.1 report wall was the second minhash pass).
-    if checkpoint_dir is not None:
-        _pairs_path = f"{checkpoint_dir}/pairs_minhash"
-        pairs.write.mode("overwrite").parquet(_pairs_path)
-        pairs = docs.sparkSession.read.parquet(_pairs_path)
-    elif cache:
-        pairs = pairs.localCheckpoint(eager=False)
+    # (shingle -> 64 hashes -> band join) executes twice (measured:
+    # ~1.5 s of the sf0.1 report wall was the second minhash pass).
+    pairs = _cut(pairs, "pairs_minhash")
     s5 = s4
     if "near_dup_clusters" not in skip:
         # Fused form (round 14): dedup_clusters(docs, pairs) joins the

@@ -8,13 +8,12 @@ components turns the pair graph into cluster labels.
 Two execution paths, chosen by edge count (adaptive, the same
 philosophy as Spark's broadcast-join threshold):
 
-- **local union-find** (edges ≤ `local_threshold`): collect the edge
-  list — *only the candidate pairs, never the corpus* — and run
-  path-compressed union-find on the driver. Near-dup pair sets are
-  orders of magnitude smaller than the corpus, so at moderate scale
-  this is a bounded driver collect exactly like the IVF centroid /
-  probe collects (operators/ivf.py), and it costs one job instead of
-  a fixpoint loop.
+- **local union-find** (edges ≤ `local_threshold`): funnel the edge
+  list — *only the candidate pairs, never the corpus* — into one
+  mapInPandas task and run path-compressed union-find there
+  (`_cc_local_lazy`). Near-dup pair sets are orders of magnitude
+  smaller than the corpus, so at moderate scale this is a bounded
+  single-task pass, and it costs one job instead of a fixpoint loop.
 - **alternating large-star / small-star** (Kiveris et al., "Connected
   Components in MapReduce and Beyond", SoCC'14) above the threshold —
   the standard shared-nothing CC formulation (also used by
@@ -43,9 +42,11 @@ _INTEGRAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
-    """The union-find kernels (_cc_local / _cc_local_lazy) emit a
-    fixed `node LONG` schema and run integer path compression — a
-    string id would fail mid-job with an opaque ANSI cast error (or,
+    """The id guard of every kernel that emits LONG ids: the union-find
+    (_cc_local_lazy) labels components by integer path compression, and
+    the numpy pair kernel (similarity.cosine_topk_pairs) emits
+    `id_a long, id_b long` oriented by integer min/max. A string id
+    would miscast or fail mid-job with an opaque ANSI cast error (or,
     pre-guard, silently NULL out an argmax built on unary minus,
     ADVICE r7). Fail loudly at plan-build instead."""
     t = dict(df.dtypes).get(id_col)
@@ -53,7 +54,7 @@ def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
         raise TypeError(
             f"{op}: id column {id_col!r} must be an integral type "
             f"({', '.join(_INTEGRAL_ID_TYPES)}), got {t!r} — the "
-            "union-find kernels label components as LONG min-ids. Map "
+            "kernels emit LONG ids and compare them as integers. Map "
             "string ids to a surrogate integer first (e.g. "
             "monotonically_increasing_id or a dense rank)."
         )
@@ -132,44 +133,6 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return int(row["violations"]) == 0
 
 
-def _cc_local(spark, pdf, with_sizes: bool) -> DataFrame:
-    """Driver-side path-compressed union-find over the collected edge
-    list. Bounded by the local_threshold gate — pairs, not corpus."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    # drop self-loops so both paths agree: _symmetrize erases them on
-    # the distributed side, so a node with ONLY self-loops is treated
-    # as isolated everywhere
-    pdf = pdf[pdf["u"] != pdf["v"]]
-    for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            # union by min keeps labels = component minimum directly
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    nodes = set(pdf["u"].tolist()) | set(pdf["v"].tolist())
-    labels = {int(n): find(int(n)) for n in nodes}
-    if not with_sizes:
-        return spark.createDataFrame(
-            list(labels.items()), "node LONG, component LONG"
-        )
-    from collections import Counter
-
-    sz = Counter(labels.values())
-    rows = [(n, c, sz[c]) for n, c in labels.items()]
-    return spark.createDataFrame(
-        rows, "node LONG, component LONG, component_size LONG"
-    )
-
-
 def _cc_distributed(cur: DataFrame, max_iter: int, with_sizes: bool) -> DataFrame:
     for _ in range(max_iter):
         # localCheckpoint truncates lineage each round; without it the
@@ -198,11 +161,11 @@ def _cc_distributed(cur: DataFrame, max_iter: int, with_sizes: bool) -> DataFram
 
 def _cc_local_lazy(edges: DataFrame, with_sizes: bool) -> DataFrame:
     """LAZY bounded-graph path: path-compressed union-find inside a
-    single mapInPandas task. Same labels as _cc_local (component = min
-    node id), but expressed as a DataFrame transformation — no driver
-    action, no collect — so a caller's plan stays fully lazy (and a
-    bench/driver can time plan-build and execution separately instead
-    of charging a fixpoint loop).
+    single mapInPandas task (component = min node id), expressed as a
+    DataFrame transformation — no driver action, no collect — so a
+    caller's plan stays fully lazy (and a bench/driver can time
+    plan-build and execution separately instead of charging a fixpoint
+    loop).
 
     The repartition(1) keeps the upstream pair-mining stages parallel
     and funnels only the (u, v) pair rows into one task; the caller
@@ -272,16 +235,8 @@ def connected_components(
     ``local_threshold=0`` to force the distributed path.
     """
     cur = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if local_threshold > 0:
-        # persist the narrow pair projection so the size gate and the
-        # collect share one execution (a `limit` would instead force a
-        # serializing single-partition exchange)
-        cur.persist()
-        try:
-            if cur.count() <= local_threshold:
-                return _cc_local(edges.sparkSession, cur.toPandas(), with_sizes)
-        finally:
-            cur.unpersist()
+    if local_threshold > 0 and cur.count() <= local_threshold:
+        return _cc_local_lazy(cur, with_sizes)
     return _cc_distributed(cur, max_iter, with_sizes)
 
 
@@ -306,7 +261,7 @@ def dedup_clusters(
     and uses the lazy single-task union-find (_cc_local_lazy) — the
     whole result stays one unexecuted DataFrame, no driver actions.
     Default False keeps the adaptive count-gated choice between the
-    driver union-find and the distributed star fixpoint.
+    single-task union-find and the distributed star fixpoint.
 
     Precondition: every id in `pairs` must exist in `docs` (true by
     construction when pairs are mined from the same relation, as every

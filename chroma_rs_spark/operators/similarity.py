@@ -22,10 +22,8 @@ from pyspark.sql import functions as F
 
 from chroma_rs_spark.functions.vector import cosine_distance, dot_product, l2_norm
 from chroma_rs_spark.operators import kernel
+from chroma_rs_spark.operators.graph import _require_integral_id
 from chroma_rs_spark.plans import fan_out
-
-_INTEGRAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
-
 
 def _norm_scorable(norm_col: Column) -> Column:
     """norm ∈ (0, inf) — semantic_dedup's unscorable-row exclusion —
@@ -43,22 +41,6 @@ def _norm_scorable(norm_col: Column) -> Column:
         F.nanvl(F.nullif(norm_col, F.lit(float("inf"))), F.lit(0.0))
         > F.lit(0.0)
     )
-
-
-def _require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
-    """The numpy pair kernel emits a fixed `id_a long, id_b long`
-    schema and orients pairs with integer min/max — a string id would
-    miscast or crash at runtime, on either side of the size gate
-    (ADVICE r6). Fail loudly at plan-build instead."""
-    t = dict(df.dtypes).get(id_col)
-    if t not in _INTEGRAL_ID_TYPES:
-        raise TypeError(
-            f"{op}: id column {id_col!r} must be an integral type "
-            f"({', '.join(_INTEGRAL_ID_TYPES)}), got {t!r} — the tile "
-            "kernels emit 'id_a long, id_b long' and orient pairs by "
-            "integer id. Map string ids to a surrogate integer first "
-            "(e.g. monotonically_increasing_id or a dense rank)."
-        )
 
 
 # Above this optimizer-estimated input size (or when the estimate is

@@ -286,7 +286,9 @@ def read_cms(spark, sketch_dir: str) -> DataFrame:
     """Merge all persisted sketch segments: (row, bucket, cnt)."""
     from pyspark.sql import functions as _F
 
-    recover_sketch_dir(sketch_dir)
+    from chroma_rs_spark.collection import _recover_interrupted_overwrite
+
+    _recover_interrupted_overwrite(sketch_dir.rstrip("/"))
     return (
         spark.read.schema("row int, bucket long, cnt long")
         .parquet(sketch_dir)
@@ -349,7 +351,9 @@ def stream_bloom_ingest(
 
 def read_bloom(spark, bloom_dir: str) -> DataFrame:
     """Merge all persisted filter segments: (pos) distinct set bits."""
-    recover_sketch_dir(bloom_dir)
+    from chroma_rs_spark.collection import _recover_interrupted_overwrite
+
+    _recover_interrupted_overwrite(bloom_dir.rstrip("/"))
     return (
         spark.read.schema("pos long").parquet(bloom_dir).distinct()
     )
@@ -418,18 +422,14 @@ def compact_sketch_dir(spark, sketch_dir: str, kind: str = "cms") -> int:
     maintenance op the stream_cms_ingest/stream_bloom_ingest docstrings
     defer (each micro-batch appends a segment; hundreds of segments
     make readers re-merge hundreds of files). `kind` is "cms" (merge =
-    groupBy-sum) or "bloom" (merge = distinct). Crash-safe two-rename
-    swap with the collection-store recovery discipline: the merged
-    table lands in a temp dir first, and `recover_sketch_dir` (run
-    here on entry, and by `read_cms`/`read_bloom` on every read)
-    finishes or rolls back a swap interrupted between the two renames
-    — so the dir always reads as either the original segments or the
+    groupBy-sum) or "bloom" (merge = distinct). The merged table is
+    swapped in by the collection store's crash-safe `_swap_in`, and
+    `read_cms`/`read_bloom` heal an interrupted swap on every read — so
+    the dir always reads as either the original segments or the
     complete compacted table, never absent and never a partial mix.
     Returns the merged row count."""
-    import os as _os
-    import shutil as _shutil
+    from chroma_rs_spark.collection import _swap_in
 
-    recover_sketch_dir(sketch_dir)
     if kind == "cms":
         merged = read_cms(spark, sketch_dir)
     elif kind == "bloom":
@@ -437,58 +437,5 @@ def compact_sketch_dir(spark, sketch_dir: str, kind: str = "cms") -> int:
     else:
         raise ValueError(f"unknown sketch kind {kind!r}")
     base = sketch_dir.rstrip("/")
-    tmp, old = base + ".__tmp", base + ".__old"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    _shutil.rmtree(old, ignore_errors=True)
-    merged.coalesce(1).write.parquet(tmp)
-    if not _os.path.isfile(_os.path.join(tmp, "_SUCCESS")):
-        raise RuntimeError(f"sketch compaction did not commit: {tmp}")
-    n = spark.read.parquet(tmp).count()
-    _os.rename(base, old)
-    try:
-        _os.rename(tmp, base)
-    except FileNotFoundError:
-        # Reader-promotion race (the collection-store _overwrite
-        # pattern): read_cms/read_bloom call recover_sketch_dir, and a
-        # reader that observed the live dir missing inside this
-        # two-rename window promoted the committed tmp itself. The
-        # disk already holds exactly the compacted state.
-        if not (
-            _os.path.isdir(base)
-            and _os.path.isfile(_os.path.join(base, "_SUCCESS"))
-        ):
-            raise
-    _shutil.rmtree(old, ignore_errors=True)
-    return n
-
-
-def recover_sketch_dir(sketch_dir: str) -> None:
-    """Heal a `compact_sketch_dir` swap interrupted between its two
-    renames. With the live dir missing: a _SUCCESS-committed tmp wins
-    (the compaction completed its write — promote it); otherwise the
-    parked original (`.__old`) is restored. With the live dir present
-    the swap finished and stale park dirs are leftovers; they are left
-    for the next compaction's cleanup (readers must not delete a
-    concurrent writer's in-flight tmp)."""
-    import os as _os
-    import shutil as _shutil
-
-    base = sketch_dir.rstrip("/")
-    tmp, old = base + ".__tmp", base + ".__old"
-    if _os.path.isdir(base):
-        return
-    if _os.path.isdir(tmp) and _os.path.isfile(_os.path.join(tmp, "_SUCCESS")):
-        try:
-            _os.replace(tmp, base)
-        except OSError:
-            if not _os.path.isdir(base):
-                raise
-    elif _os.path.isdir(old):
-        try:
-            _os.replace(old, base)
-        except OSError:
-            if not _os.path.isdir(base):
-                raise
-    if _os.path.isdir(base):
-        _shutil.rmtree(tmp, ignore_errors=True)
-        _shutil.rmtree(old, ignore_errors=True)
+    _swap_in(base, lambda tmp: merged.coalesce(1).write.parquet(tmp))
+    return spark.read.parquet(base).count()

@@ -1091,23 +1091,12 @@ QUERIES = {
         q_order_window_frames, _ORDER_WINDOW_FRAMES_ORACLE
     ),
     "lineitem_stats": QueryDef(q_lineitem_stats, _LINEITEM_STATS_ORACLE),
-    # round-5 rotation in: set ops were driver-checked only in r2
     "set_ops_tagged": QueryDef(q_set_ops_tagged, _SET_OPS_ORACLE),
-    # round-4 rotation in: the scalar-subquery pattern (broadcast 1-row
-    # aggregate filtering the fact table map-side) + the scalar
-    # date/string function surface were previously EXTRA-only
+    # the scalar-subquery pattern (broadcast 1-row aggregate filtering
+    # the fact table map-side) + the scalar date/string function surface
     "orders_above_avg": QueryDef(q_orders_above_avg, _ORDERS_ABOVE_AVG_ORACLE),
 }
 
-# Verified locally (tools/check.py --extra, pytest) but rotated out of
-# the driver's 50-row correctness window in round 3 to make room for
-# the round-2 LLM-pipeline components (VERDICT r02 next-round #1).
-# Family coverage in the declared 50 survives: joins via
-# shipping_priority / local_supplier_volume / top_customers_per_nation
-# and the temporal as-of/range rows, subquery-aggregation via
-# high_revenue_parts, multi-grouping via orders_grouping_sets (the
-# richer grouping-sets superset of events_cube), pivot/conditional
-# aggregation via events_json_stats, percentiles via lineitem_stats.
 FUNNEL_WINDOW_US = 30 * 60 * 1_000_000  # 30 minutes, microseconds
 
 
@@ -1388,90 +1377,38 @@ FROM lineitem WHERE l_returnflag IS NOT NULL GROUP BY l_returnflag
 """
 
 
-EXTRA_QUERIES = {
-    # round-6 rotation out after 5 driver-green rounds (still
-    # bit-checked locally): the HLL partial-agg plan shape stays
-    # exercised; pricing_summary/orders_grouping_sets keep the
-    # aggregation family's declared rows
-    "approx_distinct_parts": QueryDef(
-        q_approx_distinct_parts, _APPROX_DISTINCT_ORACLE
-    ),
-    # round-7 rotation out (driver-green r2-r6): the scalar-subquery +
-    # decimal-agg shape stays declared via orders_above_avg and
-    # pricing_summary
-    "high_revenue_parts": QueryDef(
-        q_high_revenue_parts, _HIGH_REVENUE_PARTS_ORACLE
-    ),
-    # round-4 rotation: gap/sessionization coverage stays declared via
-    # events_session_windows (streaming family, same lag/gap plan)
-    "sessionize_events": QueryDef(q_sessionize_events, _SESSIONIZE_ORACLE),
-    # the scale-path percentile formulation, oracle-checked against the
-    # same quantile_cont ground truth the declared window form matches
-    "lineitem_percentiles_hist": QueryDef(
-        q_lineitem_percentiles_hist, _LINEITEM_PCT_HIST_ORACLE
-    ),
-    "sql_revenue_by_nation": QueryDef(
-        q_sql_revenue_by_nation, _REVENUE_BY_NATION_SQL
-    ),
-    "event_funnel": QueryDef(q_event_funnel, _EVENT_FUNNEL_ORACLE),
-    "cohort_retention": QueryDef(q_cohort_retention, _COHORT_ORACLE),
-    "price_outliers": QueryDef(q_price_outliers, _PRICE_OUTLIERS_ORACLE),
-    "order_price_histogram": QueryDef(
-        q_order_price_histogram, _PRICE_HISTOGRAM_ORACLE
-    ),
-    "events_cube": QueryDef(q_events_cube, _EVENTS_CUBE_ORACLE),
-    "customers_without_orders": QueryDef(
-        q_customers_without_orders, _CUSTOMERS_WITHOUT_ORDERS_ORACLE
-    ),
-    "suppliers_with_returns": QueryDef(
-        q_suppliers_with_returns, _SUPPLIERS_WITH_RETURNS_ORACLE
-    ),
-    "user_event_pivot": QueryDef(q_user_event_pivot, _USER_EVENT_PIVOT_ORACLE),
-    # round-5 rotation out after four driver-green rounds (JSON parsing
-    # coverage stays declared via get_json_object paths in the events
-    # family; still bit-checked locally)
-    "events_json_stats": QueryDef(q_events_json_stats, _EVENTS_JSON_ORACLE),
-}
+QUERIES.update(
+    {
+        "approx_distinct_parts": QueryDef(
+            q_approx_distinct_parts, _APPROX_DISTINCT_ORACLE
+        ),
+        "high_revenue_parts": QueryDef(
+            q_high_revenue_parts, _HIGH_REVENUE_PARTS_ORACLE
+        ),
+        "sessionize_events": QueryDef(q_sessionize_events, _SESSIONIZE_ORACLE),
+        # the scale-path percentile formulation, oracle-checked against the
+        # same quantile_cont ground truth the declared window form matches
+        "lineitem_percentiles_hist": QueryDef(
+            q_lineitem_percentiles_hist, _LINEITEM_PCT_HIST_ORACLE
+        ),
+        "sql_revenue_by_nation": QueryDef(
+            q_sql_revenue_by_nation, _REVENUE_BY_NATION_SQL
+        ),
+        "event_funnel": QueryDef(q_event_funnel, _EVENT_FUNNEL_ORACLE),
+        "cohort_retention": QueryDef(q_cohort_retention, _COHORT_ORACLE),
+        "price_outliers": QueryDef(q_price_outliers, _PRICE_OUTLIERS_ORACLE),
+        "order_price_histogram": QueryDef(
+            q_order_price_histogram, _PRICE_HISTOGRAM_ORACLE
+        ),
+        "events_cube": QueryDef(q_events_cube, _EVENTS_CUBE_ORACLE),
+        "customers_without_orders": QueryDef(
+            q_customers_without_orders, _CUSTOMERS_WITHOUT_ORDERS_ORACLE
+        ),
+        "suppliers_with_returns": QueryDef(
+            q_suppliers_with_returns, _SUPPLIERS_WITH_RETURNS_ORACLE
+        ),
+        "user_event_pivot": QueryDef(q_user_event_pivot, _USER_EVENT_PIVOT_ORACLE),
+        "events_json_stats": QueryDef(q_events_json_stats, _EVENTS_JSON_ORACLE),
+    }
+)
 
-
-# round-8 rotation out (driver-green r1-r7 minus r3, still bit-checked
-# locally): the scalar-subquery broadcast shape stays declared via
-# orders_grouping_sets' agg family; slot funds a round-7 promotion.
-EXTRA_QUERIES["orders_above_avg"] = QUERIES.pop("orders_above_avg")
-
-
-# round-9 rotation out (driver-green r1-r8, still bit-checked locally):
-# union/intersect/except plan shapes have no scale risk; slot funds the
-# round-8 EXTRA promotions in text/pipeline.
-EXTRA_QUERIES["set_ops_tagged"] = QUERIES.pop("set_ops_tagged")
-
-
-# round-10 rotation out (each driver-green r1-r9, still bit-checked
-# locally): shipping_priority's broadcast-join+agg+topk shape stays
-# declared via local_supplier_volume, top_customers_per_nation's
-# window-over-join shape via order_window_frames, pricing_summary's
-# wide-agg shape via orders_grouping_sets, and lineitem_stats'
-# narrow-sort percentiles keep their local bit-gate via
-# lineitem_percentiles_hist. Slots fund the round-9 EXTRA promotions
-# (training sinks, JSONL ingest, collection dedup bridge, multimodal).
-for _name in (
-    "shipping_priority",
-    "top_customers_per_nation",
-    "pricing_summary",
-    "lineitem_stats",
-):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-
-
-# ---------------------------------------------------------------------------
-# Round-11 rotation: local_supplier_volume (green r4-r10) and
-# orders_grouping_sets (green r5-r10) rotate out — both floor-priced
-# walls against tiny oracles (0.32/0.05 s and 0.17/0.03 s at sf0.1).
-# The broadcast-join shape stays declared via asof_purchase_attribution
-# (range/as-of joins) and every curation row's dim joins; the
-# grouping-sets/rollup shape keeps events_cube bit-checked locally and
-# order_window_frames holds the relational family's declared seat.
-# ---------------------------------------------------------------------------
-
-for _name in ("local_supplier_volume", "orders_grouping_sets"):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)

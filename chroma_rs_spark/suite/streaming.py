@@ -15,7 +15,7 @@ from chroma_rs_spark.streaming.events import (
     sliding_window_counts,
     tumbling_window_counts,
 )
-from chroma_rs_spark.suite import QueryDef
+from chroma_rs_spark.suite import QueryDef, fixture, fixture_dir
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,28 +184,22 @@ FROM embeddings
 """
 
 
-EXTRA_QUERIES = {
-    # round-6 rotation out after 5 driver-green rounds (still
-    # bit-checked locally): the tumbling window shares its
-    # window()-agg plan with events_sliding
-    "events_tumbling": QueryDef(q_events_tumbling, _TUMBLING_ORACLE),
-    # round-6: the foreachBatch ingest path oracle-pinned end-to-end
-    # (micro-batched file stream + replayed batch -> collection content
-    # == distinct union == source table). Stays EXTRA by measurement:
-    # its 4 micro-batch triggers carry ~2.7 s of Structured Streaming
-    # fixed cost against a 3 ms oracle, which would spend a third of
-    # the declared-50 bench budget on stream-startup floors rather
-    # than data-plane throughput. Locally bit-checked every round +
-    # pytest (tests/test_streaming.py) — five of the round-6 operators
-    # rotated into the driver window instead (VERDICT r6 missing #1).
-    "stream_ingest": QueryDef(
-        q_stream_ingest, _STREAM_INGEST_ORACLE, iterative=True
-    ),
-}
+QUERIES.update(
+    {
+        "events_tumbling": QueryDef(q_events_tumbling, _TUMBLING_ORACLE),
+        # the foreachBatch ingest path oracle-pinned end-to-end
+        # (micro-batched file stream + replayed batch -> collection
+        # content == distinct union == source table). Its 4 micro-batch
+        # triggers carry ~2.7 s of Structured Streaming fixed cost
+        # against a 3 ms oracle.
+        "stream_ingest": QueryDef(
+            q_stream_ingest, _STREAM_INGEST_ORACLE, iterative=True
+        ),
+    }
+)
 
 
-# -- trending top-k (promoted into the declared 50 in round 3 so the
-# -- driver's correctness gate sees it) --------------------------------
+# -- trending top-k ----------------------------------------------------
 
 
 def q_trending_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,12 +240,6 @@ QUERIES["trending_event_types"] = QueryDef(
 )
 
 
-# round-8 rotation out (driver-green r2-r7, still bit-checked locally):
-# the sliding window()-agg plan shape stays exercised by
-# events_tumbling's local gate and the session/trending declared rows.
-EXTRA_QUERIES["events_sliding"] = QUERIES.pop("events_sliding")
-
-
 # ---------------------------------------------------------------------------
 # round 8: streaming near-dup ingest (streaming/ingest.py:
 # stream_dedup_ingest) — the daily-crawl shape: batch 0 (even doc_ids)
@@ -259,31 +247,20 @@ EXTRA_QUERIES["events_sliding"] = QUERIES.pop("events_sliding")
 # pipeline with a persisted band index; the oracle replays the SAME
 # sequential fold in one DuckDB statement (round-0 within-batch CC,
 # then round-1 corpus-wins + within-batch CC), reusing the minhash
-# band skeleton the dedup oracles share. Promoted to the declared 50
-# in round 9 (VERDICT r8 next-round #1): the ~2-3 s stream-startup
-# floor it charges the bench is the cost of gating REAL micro-batch
-# execution, accepted deliberately (SCALE.md round-9). The READ-ONLY
+# band skeleton the dedup oracles share. The READ-ONLY
 # inbox fixture is built once per (session, sf_dir) — identical files
 # every rep; the stream's own state dirs stay fresh per call.
 # ---------------------------------------------------------------------------
 
-_INGEST_INBOX: dict[tuple[str, str], str] = {}
 
-
+@fixture
 def _ingest_inbox(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
     import os
-    import shutil
     import time
 
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INGEST_INBOX.get(key)
-    if hit is not None:
-        return hit
-    root = mkscratch("dedup_ingest_inbox_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = fixture_dir("dedup_ingest_inbox_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     inbox = f"{root}/inbox"
     now = time.time()
@@ -294,7 +271,6 @@ def _ingest_inbox(spark: SparkSession, sf_dir: str) -> str:
         )
         for f in os.listdir(path):
             os.utime(f"{path}/{f}", (now - 100 + b, now - 100 + b))
-    _INGEST_INBOX[key] = inbox
     return inbox
 
 
@@ -454,21 +430,9 @@ SELECT doc_id, text FROM s1
 """
 
 
-EXTRA_QUERIES["dedup_ingest"] = QueryDef(
+QUERIES["dedup_ingest"] = QueryDef(
     q_dedup_ingest, _dedup_ingest_oracle(), iterative=True
 )
-
-
-# ---------------------------------------------------------------------------
-# Round-9 rotation: streaming near-dup ingest (the daily-crawl shape —
-# foreachBatch fold against a persisted band index) enters the driver
-# window; trending_event_types rotates out after r2-r8 driver-green
-# (sliding-window agg shape stays declared via events_session_windows,
-# and the row keeps its local bit-gate).
-# ---------------------------------------------------------------------------
-
-QUERIES["dedup_ingest"] = EXTRA_QUERIES.pop("dedup_ingest")
-EXTRA_QUERIES["trending_event_types"] = QUERIES.pop("trending_event_types")
 
 
 # ---------------------------------------------------------------------------
@@ -538,7 +502,7 @@ GROUP BY 1, 2
 """
 
 
-EXTRA_QUERIES["stream_cms_ingest"] = QueryDef(
+QUERIES["stream_cms_ingest"] = QueryDef(
     q_stream_cms_ingest, _stream_cms_oracle(), iterative=True
 )
 
@@ -602,7 +566,7 @@ WHERE d.text IS NOT NULL
 """
 
 
-EXTRA_QUERIES["stream_bloom_ingest"] = QueryDef(
+QUERIES["stream_bloom_ingest"] = QueryDef(
     q_stream_bloom_ingest, _stream_bloom_oracle(), iterative=True
 )
 
@@ -661,25 +625,18 @@ def _state_partitions() -> str:
     return os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
 
 
-_WM_INBOX: dict[tuple[str, str], str] = {}
 _WM_DELAY = "2 hours"
 _WM_WIDTH = "10 minutes"
 
 
+@fixture
 def _watermark_inbox(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
     import os
-    import shutil
     import time
 
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _WM_INBOX.get(key)
-    if hit is not None:
-        return hit
-    root = mkscratch("wm_counts_inbox_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = fixture_dir("wm_counts_inbox_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -707,7 +664,6 @@ def _watermark_inbox(spark: SparkSession, sf_dir: str) -> str:
         ev.filter(flt).coalesce(1).write.parquet(path, mode="overwrite")
         for f in os.listdir(path):
             os.utime(f"{path}/{f}", (now - 100 + i * 10, now - 100 + i * 10))
-    _WM_INBOX[key] = inbox
     return inbox
 
 
@@ -790,27 +746,9 @@ WHERE agg.window_start + INTERVAL '10 minutes' <= wmf.wm
 """
 
 
-EXTRA_QUERIES["stream_watermark_counts"] = QueryDef(
+QUERIES["stream_watermark_counts"] = QueryDef(
     q_stream_watermark_counts, _WM_COUNTS_ORACLE, iterative=True
 )
-
-
-# ---------------------------------------------------------------------------
-# Round-11 rotation (VERDICT r10 missing #1 / next-round #4): true
-# watermark semantics enter the driver window — stream_watermark_counts
-# executes a real 4-micro-batch drained stream whose planted late data
-# is genuinely dropped, with the full rule set replayed by its oracle.
-# dedup_ingest rotates out after r9-r10 green: it was the suite's
-# largest structural wall (5.5 s of stream start/stop against a 0.85 s
-# oracle, documented in SCALE.md), real micro-batch execution stays
-# declared via stream_watermark_counts, and the foreachBatch band-index
-# fold stays bit-checked locally (stream_ingest EXTRA + pytest).
-# ---------------------------------------------------------------------------
-
-QUERIES["stream_watermark_counts"] = EXTRA_QUERIES.pop(
-    "stream_watermark_counts"
-)
-EXTRA_QUERIES["dedup_ingest"] = QUERIES.pop("dedup_ingest")
 
 
 # ---------------------------------------------------------------------------
@@ -846,23 +784,15 @@ EXTRA_QUERIES["dedup_ingest"] = QUERIES.pop("dedup_ingest")
 # EMISSION COUNTS — deterministic — not payloads.
 # ---------------------------------------------------------------------------
 
-_DDW_INBOX: dict[tuple[str, str], str] = {}
 
-
+@fixture
 def _ddw_inbox(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
     import os
-    import shutil
     import time
 
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DDW_INBOX.get(key)
-    if hit is not None:
-        return hit
-    root = mkscratch("ddw_inbox_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = fixture_dir("ddw_inbox_")
     ev = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -906,7 +836,6 @@ def _ddw_inbox(spark: SparkSession, sf_dir: str) -> str:
         b.coalesce(1).write.parquet(path, mode="overwrite")
         for f in os.listdir(path):
             os.utime(f"{path}/{f}", (now - 100 + i * 10, now - 100 + i * 10))
-    _DDW_INBOX[key] = inbox
     return inbox
 
 
@@ -988,21 +917,9 @@ SELECT k, CAST(count(*) AS BIGINT) AS n_emitted FROM em GROUP BY k
 """
 
 
-EXTRA_QUERIES["stream_dedup_within_wm"] = QueryDef(
+QUERIES["stream_dedup_within_wm"] = QueryDef(
     q_stream_dedup_within_wm, _DDW_ORACLE, iterative=True
 )
-
-# ---------------------------------------------------------------------------
-# Round-12 rotation (VERDICT r11 next-round #1): events_session_windows
-# (green r2-r11) and dedup_events (r4-r11) rotate out — both
-# floor-priced walls whose shapes stay covered (session windows by the
-# events EXTRA gates, first-arrival semantics by the declared
-# stream_watermark_counts / EXTRA stream_dedup_within_wm pair, which
-# exercise the same semantics WITH real micro-batch execution).
-# ---------------------------------------------------------------------------
-
-EXTRA_QUERIES["events_session_windows"] = QUERIES.pop("events_session_windows")
-EXTRA_QUERIES["dedup_events"] = QUERIES.pop("dedup_events")
 
 # ---------------------------------------------------------------------------
 # stream_interval_join (round 12, VERDICT r11 missing #2 / next-round
@@ -1038,25 +955,17 @@ EXTRA_QUERIES["dedup_events"] = QUERIES.pop("dedup_events")
 # class) x (all purchases) — the rule the stream must converge to.
 # ---------------------------------------------------------------------------
 
-_IJ_INBOX: dict[tuple[str, str], tuple[str, str]] = {}
 
-
+@fixture
 def _interval_join_inboxes(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
-    import atexit
     import os
-    import shutil
     import time
 
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IJ_INBOX.get(key)
-    if hit is not None:
-        return hit
-    root = mkscratch("ij_inbox_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = fixture_dir("ij_inbox_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1096,8 +1005,7 @@ def _interval_join_inboxes(
                     (now - 100 + i * 10, now - 100 + i * 10),
                 )
         paths.append(inbox)
-    _IJ_INBOX[key] = (paths[0], paths[1])
-    return _IJ_INBOX[key]
+    return paths[0], paths[1]
 
 
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1178,12 +1086,6 @@ FROM c JOIN p
 """
 
 
-EXTRA_QUERIES["stream_interval_join"] = QueryDef(
+QUERIES["stream_interval_join"] = QueryDef(
     q_stream_interval_join, _INTERVAL_JOIN_ORACLE, iterative=True
 )
-
-# ---------------------------------------------------------------------------
-# The round-13 rotation (stream_interval_join to a declared seat) was
-# REVERTED for the round-13 optimization phase: the declared set must
-# stay identical to r12's certified 50. The row stays oracle-gated EXTRA.
-# ---------------------------------------------------------------------------

@@ -113,8 +113,7 @@ QUERIES = {
 }
 
 
-# -- round-3 direction variants (EXTRA: locally verified via
-# -- tools/check.py --extra; declared suite stays at exactly 50) -------
+# -- direction variants --------------------------------------------------
 
 
 def q_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,16 +178,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-EXTRA_QUERIES = {
-    "asof_next_purchase": QueryDef(q_asof_next_purchase, _ASOF_FORWARD_ORACLE),
-}
-
-
-# ---------------------------------------------------------------------------
-# Round-9 rotation out: error_prior_clicks after r1-r8 driver-green (the
-# as-of/range-join family stays declared via asof_purchase_attribution;
-# the backward-looking variant keeps its local bit-gate). Slot funds a
-# round-8 EXTRA promotion elsewhere.
-# ---------------------------------------------------------------------------
-
-EXTRA_QUERIES["error_prior_clicks"] = QUERIES.pop("error_prior_clicks")
+QUERIES["asof_next_purchase"] = QueryDef(
+    q_asof_next_purchase, _ASOF_FORWARD_ORACLE
+)

@@ -282,8 +282,7 @@ QUERIES.update(
 )
 
 
-# -- round-3 curation additions (EXTRA: locally verified via
-# -- tools/check.py --extra; the declared suite stays at exactly 50) ---
+# -- curation additions ------------------------------------------------
 
 
 def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,8 +405,6 @@ WHERE rank <= 3
 """
 
 
-# round-4 rotation: repetition_signals and tfidf_topk promoted into
-# the declared driver window (VERDICT r3 top-next #6)
 QUERIES.update(
     {
         "repetition_signals": QueryDef(q_repetition_signals, _REPETITION_ORACLE),
@@ -454,10 +451,6 @@ FROM documents WHERE length(coalesce(text, '')) = 0
 """
 
 
-# round-5 rotation: pii_scrub enters the driver window (never
-# driver-checked before); chunk_documents rotates out after four
-# consecutive driver-green rounds (still bit-checked locally — the
-# chunking plan shape stays covered by pack_sequences' token windows).
 QUERIES.update({"pii_scrub": QueryDef(q_pii_scrub, _pii_oracle())})
 
 def q_duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,12 +625,6 @@ FROM base b LEFT JOIN agg a USING (doc_id)
 """
 
 
-# round-6 rotation IN (VERDICT r5 #2): the four round-5 text operators
-# get their first pass through the driver's window — the substring-dedup
-# pair (detect stats + cut), the CCNet perplexity filter (now with the
-# skew-safe vocabulary plan), and char_entropy, whose zero-shuffle
-# per-row fold rewrite dropped it from 1.96 s to 0.14 s at sf0.1
-# (Spark-faster than the 0.36 s oracle — no longer a bench liability).
 QUERIES.update(
     {
         "remove_duplicate_spans": QueryDef(
@@ -714,22 +701,17 @@ FROM m
 """
 
 
-# round-7 rotation in (VERDICT r6 missing #1): the Gopher pre-filter
-# rules (Rae et al. 2021 A1.1) get their first driver-window pass
+# the Gopher pre-filter rules (Rae et al. 2021 A1.1)
 QUERIES["gopher_quality"] = QueryDef(q_gopher_quality, _gopher_oracle())
 
-EXTRA_QUERIES = {
-    # round-4 rotation: the corpus token ranking is subsumed in the
-    # driver window by tfidf_topk (same explode/count core + idf join)
-    "top_tokens": QueryDef(q_top_tokens, _TOP_TOKENS_ORACLE),
-    "chunk_documents": QueryDef(q_chunk_documents, _CHUNK_ORACLE),
-    # round-6 rotation out after 5 driver-green rounds each (still
-    # bit-checked locally): token_stats' explode/count core stays
-    # gated via tfidf_topk/pack_sequences, doc_fingerprint's rolling
-    # hash via dedup_exact's md5 family
-    "token_stats": QueryDef(q_token_stats, _TOKEN_STATS_ORACLE),
-    "doc_fingerprint": QueryDef(q_doc_fingerprint, _FINGERPRINT_ORACLE),
-}
+QUERIES.update(
+    {
+        "top_tokens": QueryDef(q_top_tokens, _TOP_TOKENS_ORACLE),
+        "chunk_documents": QueryDef(q_chunk_documents, _CHUNK_ORACLE),
+        "token_stats": QueryDef(q_token_stats, _TOKEN_STATS_ORACLE),
+        "doc_fingerprint": QueryDef(q_doc_fingerprint, _FINGERPRINT_ORACLE),
+    }
+)
 
 
 # ---------------------------------------------------------------------------
@@ -854,7 +836,7 @@ _C4_FILTERS_ORACLE = (
     "FROM s"
 )
 
-# round-7 rotation in (VERDICT r6 missing #1): C4 line/page cleaning
+# C4 line/page cleaning
 QUERIES["c4_filters"] = QueryDef(q_c4_filters, _C4_FILTERS_ORACLE)
 
 
@@ -1024,16 +1006,9 @@ FROM base b
     )
 
 
-EXTRA_QUERIES["gopher_repetition"] = QueryDef(
+QUERIES["gopher_repetition"] = QueryDef(
     q_gopher_repetition, _gopher_repetition_oracle()
 )
-
-
-# round-8 rotation in (VERDICT r7 next-step #1): the single-pass
-# vectorized Gopher repetition signals (Rae et al. '21 §A1.1) get their
-# first driver-window pass; the family's other rows (gopher_quality,
-# repetition_signals) stay declared alongside.
-QUERIES["gopher_repetition"] = EXTRA_QUERIES.pop("gopher_repetition")
 
 
 # ---------------------------------------------------------------------------
@@ -1177,7 +1152,7 @@ SELECT c.doc_id, c.url, c.canonical_url,
 FROM canon c LEFT JOIN keeper k USING (canonical_url)
 """
 
-EXTRA_QUERIES["url_dedup"] = QueryDef(q_url_dedup, _URL_DEDUP_ORACLE)
+QUERIES["url_dedup"] = QueryDef(q_url_dedup, _URL_DEDUP_ORACLE)
 
 
 def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1251,7 +1226,7 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per p USING (doc_id)
 """
 
-EXTRA_QUERIES["bigram_perplexity"] = QueryDef(
+QUERIES["bigram_perplexity"] = QueryDef(
     q_bigram_perplexity, _BIGRAM_PERPLEXITY_ORACLE
 )
 
@@ -1375,7 +1350,7 @@ def _html_extract_oracle() -> str:
     return _HTML_EXTRACT_ORACLE.replace("__BLOCKS__", _HTML_BLOCK_CLOSE)
 
 
-EXTRA_QUERIES["html_extract_text"] = QueryDef(
+QUERIES["html_extract_text"] = QueryDef(
     q_html_extract_text, _html_extract_oracle()
 )
 
@@ -1450,7 +1425,7 @@ v{k} AS (
     return "".join(parts)
 
 
-EXTRA_QUERIES["bpe_merges"] = QueryDef(
+QUERIES["bpe_merges"] = QueryDef(
     q_bpe_merges, _bpe_oracle(), iterative=True
 )
 
@@ -1464,7 +1439,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARRAY<STRING>: the driver's canonicalizer sorts raw pandas columns
     and dies on unhashable list cells (CORRECTNESS_r09 err), so every
     DECLARED row must keep scalar columns. The array-shaped variant
-    stays gated as EXTRA `bpe_tokenize_array`."""
+    stays gated as the extra row `bpe_tokenize_array`."""
     from chroma_rs_spark.operators.bpe import apply_bpe, train_bpe
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1523,14 +1498,14 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-EXTRA_QUERIES["bpe_tokenize"] = QueryDef(
+QUERIES["bpe_tokenize"] = QueryDef(
     q_bpe_tokenize, _bpe_tokenize_oracle(), iterative=True
 )
 
 
 def q_bpe_tokenize_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The natural ARRAY<STRING> shape of `bpe_tokenize` — what a
-    pipeline consumer actually reads downstream. Kept EXTRA-only:
+    pipeline consumer actually reads downstream. Kept undeclared:
     list columns are not driver-canonicalizable (see q_bpe_tokenize),
     and the local gate's stringify path covers them."""
     from chroma_rs_spark.operators.bpe import apply_bpe, train_bpe
@@ -1554,7 +1529,7 @@ def _bpe_tokenize_array_oracle(n: int = _BPE_MERGES) -> str:
     return out
 
 
-EXTRA_QUERIES["bpe_tokenize_array"] = QueryDef(
+QUERIES["bpe_tokenize_array"] = QueryDef(
     q_bpe_tokenize_array, _bpe_tokenize_array_oracle(), iterative=True
 )
 
@@ -1616,60 +1591,9 @@ FROM src
 """
 
 
-EXTRA_QUERIES["script_profile"] = QueryDef(
+QUERIES["script_profile"] = QueryDef(
     q_script_profile, _script_profile_oracle()
 )
-
-
-# ---------------------------------------------------------------------------
-# Round-9 rotation (VERDICT r8 missing #1 / next-round #1): promote the
-# round-8 text additions through the driver's 50-row window — a pipeline
-# user's first calls (HTML extract -> quality model inputs) plus the
-# distributed BPE pair. Rotate out five long-green rows (all driver-green
-# r1-r8; each keeps a local bit-gate via tools/check.py --extra and a
-# declared sibling covering its plan shape: quality_score -> gopher_quality/
-# c4_filters, bm25_scores -> tfidf_topk's two-phase token counts,
-# pack_sequences -> the token-window family in lm_perplexity,
-# pii_scrub -> c4_filters' regex codegen pass, char_entropy ->
-# gopher_repetition's per-doc distribution aggs).
-# ---------------------------------------------------------------------------
-
-for _name in (
-    "url_dedup",
-    "bigram_perplexity",
-    "html_extract_text",
-    "bpe_merges",
-    "bpe_tokenize",
-):
-    QUERIES[_name] = EXTRA_QUERIES.pop(_name)
-
-for _name in (
-    "quality_score",
-    "bm25_scores",
-    "pack_sequences",
-    "pii_scrub",
-    "char_entropy",
-):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-
-
-# ---------------------------------------------------------------------------
-# Round-10 rotation out (still bit-checked locally via --extra):
-# tfidf_topk (driver-green r4-r9; its two-phase map-side token-count
-# shape stays declared via lm_perplexity/bigram_perplexity, and
-# bm25_scores keeps the relevance-scoring family locally gated). Slot
-# funds the round-9 EXTRA promotions in vector/pipeline. The demotion
-# set was chosen ratio-aware as well as streak-aware: the incoming
-# lifecycle rows (shard_manifest/zorder/collection bridge) carry real
-# Spark write/build wall against near-zero-cost DuckDB twins, so the
-# outgoing slots must come from long-green rows whose Spark wall is
-# floor-priced against tiny oracles — rotating out oracle-heavy rows
-# instead (the first r10 draft dropped dedup_clusters et al.) pushed
-# the measured suite ratio from 1.78 to 2.13 with zero code change.
-# ---------------------------------------------------------------------------
-
-for _name in ("tfidf_topk",):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
 
 
 # ---------------------------------------------------------------------------
@@ -1731,7 +1655,7 @@ SELECT doc_id, nfc_text, folded_text,
 FROM f
 """
 
-EXTRA_QUERIES["text_normalize"] = QueryDef(
+QUERIES["text_normalize"] = QueryDef(
     q_text_normalize, _TEXT_NORMALIZE_ORACLE
 )
 
@@ -1795,40 +1719,6 @@ SELECT h.doc_id, h.text_sha, g.n_copies,
 FROM hashed h JOIN grp g USING (text_sha)
 """
 
-EXTRA_QUERIES["dedup_unicode_normalized"] = QueryDef(
+QUERIES["dedup_unicode_normalized"] = QueryDef(
     q_dedup_unicode_normalized, _DEDUP_UNICODE_ORACLE
 )
-
-
-# ---------------------------------------------------------------------------
-# Round-11 rotation: text_normalize (the r10 unicode-normalization
-# addition) takes its declared seat — the oracle does real utf8proc
-# work, so the row is ratio-friendly. bigram_perplexity rotates out
-# after r7-r10 green; the n-gram LM family keeps lm_perplexity
-# declared (same two-phase count/score plan shape) and the row stays
-# bit-checked locally.
-# ---------------------------------------------------------------------------
-
-QUERIES["text_normalize"] = EXTRA_QUERIES.pop("text_normalize")
-EXTRA_QUERIES["bigram_perplexity"] = QUERIES.pop("bigram_perplexity")
-
-# ---------------------------------------------------------------------------
-# Round-12 rotation (VERDICT r11 next-round #1): repetition_signals
-# (green r5-r11) and remove_duplicate_spans (r6-r11) rotate out —
-# floor-priced walls; duplicate_span_stats keeps the span family's
-# declared seat and gopher_repetition the repetition family's. lang_id
-# was the pre-plan's demotion candidate but STAYS DECLARED: the
-# standing r10/r11 lesson is "demote floor-priced walls, never the
-# oracle-heavy rows", and lang_id is the suite's best ratio row
-# (0.107 s Spark vs 0.762 s oracle at sf0.1 — a 7x Spark win).
-# ---------------------------------------------------------------------------
-
-EXTRA_QUERIES["repetition_signals"] = QUERIES.pop("repetition_signals")
-EXTRA_QUERIES["remove_duplicate_spans"] = QUERIES.pop("remove_duplicate_spans")
-
-# ---------------------------------------------------------------------------
-# The round-13 rotation (dedup_unicode_normalized in, duplicate_span_stats
-# out) was REVERTED for the round-13 optimization phase: the declared set
-# must stay identical to r12's certified 50. Both rows stay oracle-gated
-# (duplicate_span_stats declared, dedup_unicode_normalized EXTRA).
-# ---------------------------------------------------------------------------

@@ -78,11 +78,9 @@ def test_fused_assign_bit_identical_to_two_step(spark):
 
 @pytest.mark.parametrize("qname", ["label_centroids", "centroid_assign"])
 def test_centroid_suite_queries_match_oracle(spark, qname):
-    from chroma_rs_spark.suite.pipeline import EXTRA_QUERIES, QUERIES
+    from chroma_rs_spark.suite.pipeline import QUERIES
 
-    # centroid_assign rotated to EXTRA in round 8; the row's gate here
-    # is window-placement-independent
-    qd = {**QUERIES, **EXTRA_QUERIES}[qname]
+    qd = QUERIES[qname]
     got = sorted(tuple(r) for r in qd.fn(spark, SF001_DIR).collect())
     con = duckdb.connect()
     con.sql(

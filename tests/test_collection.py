@@ -381,18 +381,24 @@ def test_reader_recovery_leaves_writer_tmp_alone(engine):
     shutil.rmtree(tmp)
 
 
-@pytest.mark.parametrize("write", ["data_overwrite", "index_write", "ivfpq_index"])
-def test_writer_survives_reader_heal_between_renames(engine, monkeypatch, write):
+@pytest.mark.parametrize(
+    "write", ["data_overwrite", "index_write", "ivfpq_index", "sketch_compact"]
+)
+def test_writer_survives_reader_heal_between_renames(
+    engine, monkeypatch, tmp_path, write
+):
     """A reader's _recover_interrupted_overwrite can run inside a
     writer's two-rename window (live dir parked, committed tmp not yet
     promoted) and promote the tmp itself. The writer's own promote then
     finds no tmp, but the disk already holds the intended state: the
-    write must succeed, for data overwrites and index writes alike."""
+    write must succeed, for data overwrites, index writes and sketch
+    compactions alike."""
     import os
 
     import numpy as np
 
     from chroma_rs_spark import collection as C
+    from chroma_rs_spark.streaming.ingest import compact_sketch_dir, read_cms
 
     rng = np.random.default_rng(9)
     ids = [f"v{i:02d}" for i in range(24)]
@@ -407,6 +413,13 @@ def test_writer_survives_reader_heal_between_renames(engine, monkeypatch, write)
     }.get(write)
     if build is not None:
         build(2)  # a live index the rebuild parks
+    sketch = str(tmp_path / "cms_segments")
+    if write == "sketch_compact":
+        seg = engine.spark.createDataFrame(
+            [(0, 11, 3), (0, 11, 4), (1, 5, 2)], "row int, bucket long, cnt long"
+        )
+        for _ in range(2):  # two segments, as two micro-batches append
+            seg.write.mode("append").parquet(sketch)
 
     healed = []
 
@@ -423,7 +436,9 @@ def test_writer_survives_reader_heal_between_renames(engine, monkeypatch, write)
             return os.replace(src, dst)
 
     monkeypatch.setattr(C, "os", ReaderHealsFirst())
-    if build is None:
+    if write == "sketch_compact":
+        n = compact_sketch_dir(engine.spark, sketch, kind="cms")
+    elif build is None:
         c.upsert(ids=["new"], embeddings=[[1.0, 2.0, 3.0, 4.0]])
     else:
         path = build(4)
@@ -432,7 +447,11 @@ def test_writer_survives_reader_heal_between_renames(engine, monkeypatch, write)
     assert healed, "the reader heal was never injected"
     for leftover in (healed[0] + ".__tmp", healed[0] + ".__old"):
         assert not os.path.exists(leftover)
-    if build is None:
+    if write == "sketch_compact":
+        assert healed[0] == sketch and n == 2
+        rows = sorted(tuple(r) for r in read_cms(engine.spark, sketch).collect())
+        assert rows == [(0, 11, 14), (1, 5, 4)]
+    elif build is None:
         assert c.count() == 25 and c.get(ids=["new"]).count() == 1
     else:
         assert healed[0] == path

@@ -144,7 +144,7 @@ def test_cc_self_loop_only_node_consistent_across_paths(spark):
 
 def test_lazy_local_cc_matches_adaptive(spark):
     """_cc_local_lazy (lazy single-task union-find) produces the same
-    labels and sizes as the count-gated adaptive path."""
+    labels and sizes as the distributed star fixpoint."""
     import random
 
     from pyspark.sql import functions as F
@@ -157,9 +157,11 @@ def test_lazy_local_cc_matches_adaptive(spark):
     rng = random.Random(7)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    adaptive = {
+    distributed = {
         (r["node"], r["component"], r["component_size"])
-        for r in connected_components(df, with_sizes=True).collect()
+        for r in connected_components(
+            df, local_threshold=0, with_sizes=True
+        ).collect()
     }
     lazy = {
         (r["node"], r["component"], r["component_size"])
@@ -168,7 +170,7 @@ def test_lazy_local_cc_matches_adaptive(spark):
             with_sizes=True,
         ).collect()
     }
-    assert lazy == adaptive and len(lazy) > 0
+    assert lazy == distributed and len(lazy) > 0
 
 
 def test_dedup_keep_best_picks_highest_score(spark):
@@ -225,7 +227,11 @@ def test_dedup_clusters_string_ids_fail_loudly(spark):
     unary-minus tie-break."""
     import pytest
 
-    from chroma_rs_spark.operators.graph import dedup_clusters, dedup_keep_best
+    from chroma_rs_spark.operators.graph import (
+        dedup_clusters,
+        dedup_keep_best,
+        pair_graph_components,
+    )
 
     docs = spark.createDataFrame(
         [("a", 10), ("b", 90)], "doc_id string, n_chars long"
@@ -237,3 +243,5 @@ def test_dedup_clusters_string_ids_fail_loudly(spark):
         dedup_clusters(docs, pairs, lazy_local=True)
     with pytest.raises(TypeError, match="integral"):
         dedup_keep_best(docs, pairs, score_col="n_chars", lazy_local=True)
+    with pytest.raises(TypeError, match="integral"):
+        pair_graph_components(pairs, threshold=0.5)

@@ -288,11 +288,9 @@ def test_split_contamination_finds_known_leak(spark):
 def test_split_contamination_suite_matches_oracle(spark):
     import duckdb
 
-    from chroma_rs_spark.suite.pipeline import EXTRA_QUERIES, QUERIES
+    from chroma_rs_spark.suite.pipeline import QUERIES
 
-    # split_contamination rotated to EXTRA in round 8; the row's gate
-    # here is window-placement-independent
-    qd = {**QUERIES, **EXTRA_QUERIES}["split_contamination"]
+    qd = QUERIES["split_contamination"]
     got = sorted(tuple(r) for r in qd.fn(spark, SF001_DIR).collect())
     con = duckdb.connect()
     con.sql(
@@ -354,10 +352,9 @@ def test_temperature_mixture_flattens_sources(spark):
 def test_temperature_mixture_suite_matches_oracle(spark):
     import duckdb
 
-    from chroma_rs_spark.suite.pipeline import EXTRA_QUERIES
+    from chroma_rs_spark.suite.pipeline import QUERIES
 
-    # rotated out of the declared window in round 6; still oracle-gated
-    qd = EXTRA_QUERIES["temperature_mixture"]
+    qd = QUERIES["temperature_mixture"]
     got = sorted(tuple(r) for r in qd.fn(spark, SF001_DIR).collect())
     con = duckdb.connect()
     con.sql(

@@ -155,11 +155,10 @@ def test_compact_sketch_dir_crash_recovery(spark, tmp_path):
     import os
     import shutil
 
-    from chroma_rs_spark.streaming.ingest import (
-        compact_sketch_dir,
-        read_cms,
-        recover_sketch_dir,
+    from chroma_rs_spark.collection import (
+        _recover_interrupted_overwrite as recover_sketch_dir,
     )
+    from chroma_rs_spark.streaming.ingest import compact_sketch_dir, read_cms
 
     base = str(tmp_path / "cms_segments")
     rows = [(0, 11, 3), (0, 11, 4), (1, 5, 2)]

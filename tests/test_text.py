@@ -80,11 +80,9 @@ def test_chunk_documents_windows_and_overlap(spark):
 def test_bm25_scores_match_oracle_sf0001(spark):
     import duckdb
 
-    from chroma_rs_spark.suite.text import EXTRA_QUERIES, QUERIES
+    from chroma_rs_spark.suite.text import QUERIES
 
-    # rotated between the declared window and EXTRA by round (r9 moved
-    # it out of the 50); the row itself is gated either way
-    qd = {**QUERIES, **EXTRA_QUERIES}["bm25_scores"]
+    qd = QUERIES["bm25_scores"]
     got = sorted((r["doc_id"], r["bm25"]) for r in qd.fn(spark, SF001_DIR).collect())
     con = duckdb.connect()
     con.sql(
@@ -133,10 +131,9 @@ def test_pack_sequences_basic(spark):
 def test_pack_sequences_matches_oracle(spark):
     import duckdb
 
-    from chroma_rs_spark.suite.text import EXTRA_QUERIES, QUERIES
+    from chroma_rs_spark.suite.text import QUERIES
 
-    # rotated to EXTRA in r9; gated either way
-    qd = {**QUERIES, **EXTRA_QUERIES}["pack_sequences"]
+    qd = QUERIES["pack_sequences"]
     got = sorted(tuple(r) for r in qd.fn(spark, SF001_DIR).collect())
     con = duckdb.connect()
     con.sql(

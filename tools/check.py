@@ -175,8 +175,8 @@ def main() -> int:
     qs, oracles = se.queries(), se.oracle_sql()
     declared = set(qs)
     if include_extra or (only and not only <= qs.keys()):
-        # EXTRA_QUERIES live outside the driver's 50-row window but get
-        # the same side-by-side treatment locally.
+        # Rows outside suite.DECLARED get the same side-by-side
+        # treatment locally.
         from chroma_rs_spark.suite import all_queries
 
         extra = {

@@ -79,7 +79,7 @@ def main() -> int:
     if extras:
         lines += [
             "",
-            "EXTRA_QUERIES (outside the driver's 50-row window, same audit):",
+            "Extra rows (outside suite.DECLARED, same audit):",
             "",
             "| query | shuffles | fan-out | bcast | pushed | codegen | python | cartesian |",
             "|---|---|---|---|---|---|---|---|",
