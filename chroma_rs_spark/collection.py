@@ -1022,6 +1022,7 @@ def build_ivfpq_index(
     therefore produces different (not worse — see RECALL.md) centroids
     and cell assignments; pass `sample_size` >= the corpus row count
     to reproduce the old full-corpus centroids bit-for-bit."""
+    from chroma_rs_spark.operators.centroids import _md5_sample
     from chroma_rs_spark.operators.ivf import train_centroids_kmeans
     from chroma_rs_spark.operators.pq import _ivfpq_residuals, train_pq_codebooks
 
@@ -1045,11 +1046,7 @@ def build_ivfpq_index(
     # encode chain's hottest term — runs on sample_size rows instead of
     # the whole corpus (the round-12 scale proof measured the
     # difference at 409.6k rows x 64 cells: ~370 s -> seconds).
-    unit_sample = (
-        unit.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
-        .limit(int(sample_size))
-        .localCheckpoint()
-    )
+    unit_sample = _md5_sample(unit, "id", sample_size).localCheckpoint()
     books = train_pq_codebooks(
         _ivfpq_residuals(unit_sample, cents, "id", "embedding"),
         m=m,

@@ -1,8 +1,12 @@
-"""Per-label embedding centroids + nearest-centroid assignment.
+"""Per-label embedding centroids, nearest-centroid assignment, and the
+engine's one Lloyd's k-means loop.
 
-The two primitives behind cluster-based corpus curation (and the
-E/M steps of a DataFrame-native k-means): average an embedding column
-per group, then re-assign rows to their nearest centroid.
+`label_centroids` averages an embedding column per group and
+`assign_nearest_centroid` re-assigns rows to their nearest centroid.
+`_lloyd` is the fused fixed-point iteration behind every trained index:
+`kmeans` (IVF centroids, SemDeDup clusters) runs it over one group and
+`operators/pq.py:train_pq_codebooks_df` runs it grouped by subspace.
+`_md5_sample` is the one training-sample and seed rule.
 
 Cross-engine determinism: float averages are partition-order-dependent
 in any parallel engine, so the accumulation here is fixed-point —
@@ -17,16 +21,54 @@ Scale: posexplode keeps rows narrow (label, pos, micro) and the
 aggregate is map-side combinable; shuffle volume is
 |labels| × dim × |partitions| partial sums, independent of row count.
 Assignment broadcasts the (tiny) centroid matrix and is a map-side
-HOF dot product — no shuffle at all.
+dot product — no shuffle at all.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 MICRO = 1_000_000.0
+
+
+def _md5_order(id_col: str) -> list:
+    """(md5(id), id): the engine's one deterministic uniform row order
+    — data-independent, and any SQL engine reproduces it."""
+    return [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+
+
+def _md5_sample(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The `n` rows of `df` with the smallest (md5(id), id): the one
+    training-sample and seed rule of k-means, IVF and PQ."""
+    return df.orderBy(*_md5_order(id_col)).limit(int(n))
+
+
+def _sq_dist(vec_col: str, dim: int | None):
+    """Squared L2 between `vec_col` and the broadcast `cvec`, rounded
+    to 6 decimals with -0.0 folded — rounding before the argmin makes
+    ties (and the lower-label tie-break) identical across engines.
+
+    With `dim` known the fold is unrolled into whole-stage codegen
+    (HOF lambdas evaluate interpreted); both forms multiply
+    (a-b)*(a-b) and add left to right, so the doubles are bit-identical.
+    """
+    v = F.col(vec_col).cast("array<double>")
+    if dim is not None:
+        def term(i: int):
+            d = F.element_at(v, i) - F.element_at(F.col("cvec"), i)
+            return d * d
+
+        sq = term(1)
+        for i in range(2, dim + 1):
+            sq = sq + term(i)
+    else:
+        sq = F.aggregate(
+            F.zip_with(v, F.col("cvec"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    return F.round(sq, 6) + F.lit(0.0)
 
 
 def label_centroids(
@@ -97,9 +139,7 @@ def assign_nearest_centroid(
     pivoted to one array per label and broadcast — rows never shuffle.
 
     Pass `dim` to unroll the squared distance into whole-stage codegen
-    (HOF lambdas evaluate interpreted); the unrolled fold multiplies
-    (a-b)*(a-b) in the same left-to-right order, so the double is
-    bit-identical to the HOF form.
+    (see _sq_dist).
     """
     mats = (
         centroids.groupBy("label")
@@ -113,100 +153,16 @@ def assign_nearest_centroid(
             F.transform("_pc", lambda x: x["centroid"]).alias("cvec"),
         )
     )
-    v = F.col(vec_col).cast("array<double>")
-    if dim is not None:
-        def term(i: int):
-            d = F.element_at(v, i) - F.element_at(F.col("cvec"), i)
-            return d * d
-
-        sq = term(1)
-        for i in range(2, dim + 1):
-            sq = sq + term(i)
-    else:
-        sq = F.aggregate(
-            F.zip_with(
-                v,
-                F.col("cvec"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    # round before the argmin so ties (and the label tie-break) are
-    # identical across engines; + 0.0 canonicalizes -0.0
-    sqr = F.round(sq, 6) + F.lit(0.0)
     scored = (
         emb.select(id_col, vec_col)
         .crossJoin(F.broadcast(mats))
-        .select(id_col, F.col("label").alias("assigned_label"), sqr.alias("sq_dist"))
+        .select(
+            id_col,
+            F.col("label").alias("assigned_label"),
+            _sq_dist(vec_col, dim).alias("sq_dist"),
+        )
     )
     best = scored.groupBy(id_col).agg(F.min(F.struct("sq_dist", "assigned_label")).alias("_b"))
-    return best.select(
-        id_col,
-        F.col("_b.assigned_label").alias("assigned_label"),
-        F.col("_b.sq_dist").alias("sq_dist"),
-    )
-
-
-def assign_nearest_label_centroid(
-    emb: DataFrame,
-    dim: int,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Fused label_centroids → assign_nearest_centroid when `dim` is
-    known (a vector collection always records it): per-dimension
-    fixed-point sums aggregate in ONE label-keyed shuffle of k×dim
-    partials — no posexplode of |rows|×dim narrow rows and no second
-    pivot shuffle — then the same broadcast argmin as
-    `assign_nearest_centroid`. Bit-identical to the two-step path
-    (same micro-unit decimal sums per (label, pos), same round-6 + 0.0
-    centroids, same rounded sq-dist tie-break); pinned by
-    tests/test_centroids.py.
-
-    Measured tradeoff (local[32], dim=64, sf0.1): SLOWER than the
-    two-step path (0.75 s vs 0.55 s) — the dim-wide aggregate carries
-    2×dim+1 buffer fields, past spark.sql.codegen.maxFields (100), so
-    the aggregation stage falls back to interpreted evaluation. Use it
-    when dim is small (≤ ~45 keeps codegen) or when the posexplode'd
-    |rows|×dim intermediate is the binding constraint (very wide
-    corpora on spill-limited executors); otherwise prefer
-    label_centroids → assign_nearest_centroid, whose narrow long-form
-    rows stay fully codegen'd."""
-    micro = [
-        f"sum(CAST(round(CAST(element_at(`{vec_col}`, {i}) AS DOUBLE)"
-        f" * 1000000.0) AS DECIMAL(38,0))) AS _s{i}"
-        for i in range(1, dim + 1)
-    ]
-    g = emb.groupBy(F.col(label_col).alias("label")).agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        *[F.expr(s) for s in micro],
-    )
-    # same integer-exact micro-unit mean as label_centroids (see its
-    # in-code rationale) so the fused path stays bit-identical
-    cvec = "array(" + ", ".join(
-        f"CAST((CASE WHEN _s{i} < 0 THEN -1 ELSE 1 END)"
-        f" * ((2 * abs(_s{i}) + n_vectors) div (2 * n_vectors))"
-        f" AS DOUBLE) / 1000000.0D + 0.0D"
-        for i in range(1, dim + 1)
-    ) + ")"
-    mats = g.selectExpr("label", f"{cvec} AS cvec")
-    v = F.col(vec_col).cast("array<double>")
-    sq = F.aggregate(
-        F.zip_with(v, F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sqr = F.round(sq, 6) + F.lit(0.0)
-    scored = (
-        emb.select(id_col, vec_col)
-        .crossJoin(F.broadcast(mats))
-        .select(id_col, F.col("label").alias("assigned_label"), sqr.alias("sq_dist"))
-    )
-    best = scored.groupBy(id_col).agg(
-        F.min(F.struct("sq_dist", "assigned_label")).alias("_b")
-    )
     return best.select(
         id_col,
         F.col("_b.assigned_label").alias("assigned_label"),
@@ -222,26 +178,21 @@ def kmeans(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """DataFrame-native Lloyd's k-means built from the two primitives
-    above: E-step = assign_nearest_centroid (broadcast, shuffle-free),
-    M-step = label_centroids (map-side-combinable fixed-point mean).
-
-    Deterministic: seeds are the k rows with the smallest
-    md5(id) — a uniform, data-independent draw that any engine can
-    reproduce — and every later step is deterministic by construction.
-    Stops early when an iteration reassigns no vector (one count per
-    round, the same bounded-action pattern as connected_components).
+    """DataFrame-native Lloyd's k-means: _lloyd over the whole corpus
+    as one group, seeded with the k rows of smallest (md5(id), id).
 
     Returns (assignment, centroids): (vec_id, assigned_label, sq_dist)
-    and the long-form (label, pos, centroid, n_vectors).
+    and the long-form (label, pos, centroid, n_vectors). `assignment`
+    is the E-step of the LAST EXECUTED iteration (against the
+    centroids that produced the final assignment — on max_iter
+    exhaustion that is the second-to-last centroid state), rebuilt
+    lazily through assign_nearest_centroid; `centroids` is the final
+    M-step in label_centroids long form.
 
     At 100 TB: per iteration the E-step broadcasts k×dim doubles and
-    never shuffles the corpus; the M-step pays one id-keyed corpus
-    join (co-locatable via bucketing on id) plus the
-    |labels|×dim×partitions partial-sum shuffle.
+    never shuffles the corpus; the M-step shuffles only the
+    |labels|×dim×partitions partial sums.
     """
-    if max_iter < 1:
-        raise ValueError("kmeans: max_iter must be >= 1")
     # Spread a narrow input across the cores ONCE for the whole loop:
     # the E-step does k x dim interpreted work PER ROW, so a
     # single-file corpus (1 scan partition) would serialize the loop's
@@ -252,167 +203,153 @@ def kmeans(
     from chroma_rs_spark.plans.partitioning import spread_compute
 
     emb = spread_compute(emb)
-    seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
+    rows = emb.select(id_col, vec_col)
+    state, assign_state = _lloyd(
+        rows, _md5_sample(rows, id_col, k), k, max_iter, dim=dim
     )
-    # label seeds 0..k-1 in seed order WITHOUT a window: one global
-    # aggregate over the ≤ k seed rows builds the (md5, id, vec)
-    # structs, array_sort orders them exactly like
-    # ORDER BY md5(id), id (struct comparison is field-order
-    # lexicographic), and posexplode's position is the label. Bounded
-    # single-partition work by construction, and no WindowExec — a
-    # constant partitionBy(lit(0)) spec gets constant-folded out of
-    # this plan shape and would re-emit the single-partition warning
-    # every kmeans action.
-    seeded = (
-        seeds.groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.md5(F.col(id_col).cast("string")).alias("h"),
-                        F.col(id_col).alias("i"),
-                        F.col(vec_col).alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-        .select(F.posexplode("xs").alias("label", "_x"))
-        .select("label", F.col("_x.v").alias(vec_col))
-    )
-    # ------------------------------------------------------------------
-    # Fused Lloyd's loop: ONE Spark job per iteration (round-9, VERDICT
-    # r8 wrong #2 — the old E-checkpoint + sig-count + M-checkpoint
-    # shape paid 3 jobs x the host dispatch floor per iteration, and the
-    # floor IS the wall on these rows at bench scale). Each iteration
-    # runs E-step scoring, the M-step micro-unit sums, AND the
-    # convergence signature in a single aggregation and collects the
-    # k x dim result rows; the centroid UPDATE arithmetic
-    # (q = sign * ((2|S| + n) div 2n), then one IEEE divide by 1e6) is
-    # pure integer math on the exact decimal sums Spark returns, so it
-    # is replayed on the driver bit-for-bit — every ROUNDING decision
-    # (micro-unit F.round, sq-dist F.round) still happens in Spark with
-    # the exact expressions label_centroids/assign_nearest_centroid use,
-    # which is what keeps the loop engine-exact against the unrolled
-    # SQL oracles. Driver state is k x dim doubles — the same matrix
-    # the old loop broadcast every E-step (and the artifact IVF
-    # persists anyway).
-    # ------------------------------------------------------------------
     spark = emb.sparkSession
-    cent_schema = "label int, pos long, centroid double, n_vectors long"
+    schema = "label int, pos long, centroid double, n_vectors long"
+    assign = assign_nearest_centroid(
+        emb,
+        spark.createDataFrame(assign_state, schema),
+        id_col=id_col,
+        vec_col=vec_col,
+        dim=dim,
+    )
+    return assign, spark.createDataFrame(state, schema)
 
-    # seed centroids: same label_centroids expressions (micro rounding
-    # in Spark), collected once (k x dim rows, one job)
-    state = [
-        (int(r["label"]), int(r["pos"]), float(r["centroid"]), int(r["n_vectors"]))
-        for r in label_centroids(
-            seeded, label_col="label", vec_col=vec_col
-        ).collect()
-    ]
 
-    def _mats_local(st):
-        by_label: dict[int, list[tuple[int, float]]] = {}
-        for lbl, pos, c, _n in st:
-            by_label.setdefault(lbl, []).append((pos, c))
-        return spark.createDataFrame(
-            [
-                (lbl, [c for _p, c in sorted(pcs)])
-                for lbl, pcs in sorted(by_label.items())
-            ],
-            "label int, cvec array<double>",
-        )
+def _lloyd(
+    rows: DataFrame,
+    seeds: DataFrame,
+    k: int,
+    max_iter: int,
+    group: tuple[str, ...] = (),
+    dim: int | None = None,
+) -> tuple[list[tuple], list[tuple]]:
+    """Fixed-point Lloyd's iteration over pinned `(id, *group, vec)`
+    rows; every `group` value clusters independently, all of them in
+    the same Spark job (kmeans runs one group, PQ one per subspace).
 
-    v = F.col(vec_col).cast("array<double>")
-    if dim is not None:
-        def _term(i: int):
-            d = F.element_at(v, i) - F.element_at(F.col("cvec"), i)
-            return d * d
+    `seeds` has the same columns and holds, per group, the k rows of
+    smallest (md5(id), id); they are labelled 0..k-1 in that order.
 
-        sq = _term(1)
-        for i in range(2, dim + 1):
-            sq = sq + _term(i)
-    else:
-        sq = F.aggregate(
-            F.zip_with(v, F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    # same round-then-argmin + -0.0 canonicalization as
-    # assign_nearest_centroid, so assignments (incl. tie-breaks) match
-    sqr = F.round(sq, 6) + F.lit(0.0)
+    ONE Spark job per iteration: E-step scoring against the broadcast
+    centroid matrices, the M-step micro-unit sums per
+    (*group, label, pos) and the convergence signature
+    bit_xor(xxhash64(id, *group, label)) run as one aggregation, whose
+    k x dim result rows are collected. Every ROUNDING decision happens
+    in Spark with the exact expressions label_centroids and
+    assign_nearest_centroid use; the centroid update on the driver is
+    the label_centroids integer mean, q = sign * ((2|S| + n) div 2n),
+    then one IEEE divide by 1e6 — pure integer math on the exact
+    decimal sums, so SQL oracles that unroll the loop replay it
+    bit-for-bit. Stops when an iteration reassigns no row (the
+    fixpoint an unrolled replay always equals).
+
+    Returns (state, assign_state): sorted driver tuples
+    (*group, label, pos, centroid, n_vectors) after the last M-step,
+    and at the start of the last executed iteration (what its E-step
+    scored against). A cluster that empties drops out of the state.
+    """
+    if k < 1:
+        raise ValueError(f"k-means: k must be >= 1, got {k}")
+    if max_iter < 1:
+        raise ValueError(f"k-means: max_iter must be >= 1, got {max_iter}")
+    spark = rows.sparkSession
+    id_col, vec_col = rows.columns[0], rows.columns[-1]
+    g = list(group)
     micro = F.round(F.col("_val").cast("double") * F.lit(MICRO)).cast(
         "decimal(38,0)"
     )
 
-    assign_state = state
-    prev_sig = None
-    for _ in range(max_iter):
-        # the E-step of this iteration scores against the state at its
-        # START — that is what the returned `assign` must reflect
-        assign_state = state
-        scored = (
-            emb.select(id_col, vec_col)
-            .crossJoin(F.broadcast(_mats_local(state)))
-            .select(
-                id_col,
-                vec_col,
-                F.col("label").alias("assigned_label"),
-                sqr.alias("sq_dist"),
+    def m_step(labelled: DataFrame, *sig) -> list:
+        # (*group, label, [sig cols,] vec) -> exact per-(label, pos)
+        # micro-unit sums, collected
+        return (
+            labelled.select(
+                *labelled.columns[:-1],
+                F.posexplode(labelled.columns[-1]).alias("pos", "_val"),
             )
-        )
-        best = scored.groupBy(id_col).agg(
-            F.min(F.struct("sq_dist", "assigned_label")).alias("_b"),
-            # every one of an id's k scored copies carries the same
-            # vector, so first() is deterministic here
-            F.first(vec_col).alias("_v"),
-        )
-        rows = (
-            best.select(
-                F.col("_b.assigned_label").alias("label"),
-                F.xxhash64(F.col(id_col), F.col("_b.assigned_label")).alias(
-                    "_hh"
-                ),
-                F.posexplode("_v").alias("pos", "_val"),
-            )
-            .groupBy("label", "pos")
-            .agg(
-                F.sum(micro).alias("_s"),
-                F.count(F.lit(1)).alias("n_vectors"),
-                F.bit_xor("_hh").alias("_x"),
-            )
+            .groupBy(*g, "label", "pos")
+            .agg(F.sum(micro).alias("_s"), F.count(F.lit(1)).alias("n"), *sig)
             .collect()
         )
-        # per-(label, pos=0) partial xors fold to the same global
-        # bit_xor(xxhash64(id, label)) the unfused loop computed
+
+    def update(sums: list) -> list[tuple]:
+        st = []
+        for r in sums:
+            s, n = int(r["_s"]), int(r["n"])
+            q = (2 * abs(s) + n) // (2 * n)
+            mean = float(-q if s < 0 else q) / MICRO + 0.0
+            key = tuple(int(r[col]) for col in (*g, "label", "pos"))
+            st.append((*key, mean, n))
+        return sorted(st)
+
+    def matrices(st: list[tuple]) -> DataFrame:
+        # the state is sorted, so each label's components arrive in pos order
+        cvecs: dict[tuple, list[float]] = {}
+        for *key, _pos, mean, _n in st:
+            cvecs.setdefault(tuple(key), []).append(mean)
+        return spark.createDataFrame(
+            [(*key, cvec) for key, cvec in cvecs.items()],
+            "".join(f"{col} int, " for col in g) + "label int, cvec array<double>",
+        )
+
+    # seeds labelled in (md5(id), id) order WITHOUT a window: one
+    # aggregate per group over its <= k seed rows, array_sort on the
+    # (md5, id, vec) structs (struct comparison is field-order
+    # lexicographic), posexplode's position is the label. No
+    # WindowExec — an unpartitioned window would re-emit the
+    # single-partition warning every call. The seed centroid is the
+    # M-step over n = 1 rows: the micro-rounded seed components.
+    seeded = (
+        seeds.groupBy(*g)
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(*_md5_order(id_col), F.col(vec_col).alias("_v"))
+                )
+            ).alias("_xs")
+        )
+        .select(*g, F.posexplode("_xs").alias("label", "_x"))
+        .select(*g, "label", F.col("_x._v").alias(vec_col))
+    )
+    state = update(m_step(seeded))
+
+    assign_state, prev_sig = state, None
+    for _ in range(max_iter):
+        assign_state = state
+        best = (
+            rows.join(F.broadcast(matrices(state)), g or None)
+            .select(
+                id_col, *g, vec_col, "label", _sq_dist(vec_col, dim).alias("_d")
+            )
+            .groupBy(id_col, *g)
+            .agg(
+                F.min(F.struct("_d", "label")).alias("_b"),
+                # every one of an id's k scored copies carries the same
+                # vector, so first() is deterministic here
+                F.first(vec_col).alias(vec_col),
+            )
+        )
+        sums = m_step(
+            best.select(
+                *g,
+                F.col("_b.label").alias("label"),
+                F.xxhash64(id_col, *g, "_b.label").alias("_hh"),
+                vec_col,
+            ),
+            F.bit_xor("_hh").alias("_x"),
+        )
+        # per-(group, label, pos=0) partial xors fold to the global
+        # bit_xor(xxhash64(id, *group, label)) over every row
         sig = 0
-        for r in rows:
+        for r in sums:
             if int(r["pos"]) == 0:
                 sig ^= int(r["_x"]) & ((1 << 64) - 1)
         if sig == prev_sig:
             break
         prev_sig = sig
-        new_state = []
-        for r in rows:
-            s_int, n = int(r["_s"]), int(r["n_vectors"])
-            q = (2 * abs(s_int) + n) // (2 * n)
-            c = float(-q if s_int < 0 else q) / MICRO + 0.0
-            new_state.append((int(r["label"]), int(r["pos"]), c, n))
-        state = sorted(new_state)
-
-    # the returned pair keeps the unfused loop's exact contract:
-    # `assign` is the E-step of the LAST EXECUTED iteration (i.e.
-    # against the centroids that produced the final assignment — on
-    # max_iter exhaustion that is the second-to-last centroid state),
-    # lazily reconstructed through assign_nearest_centroid so its plan
-    # and values are the historical ones; `cents` is the final M-step
-    # output in label_centroids long form.
-    assign = assign_nearest_centroid(
-        emb,
-        spark.createDataFrame(assign_state, cent_schema),
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-    )
-    return assign, spark.createDataFrame(state, cent_schema)
+        state = update(sums)
+    return state, assign_state

@@ -220,17 +220,14 @@ def train_centroids_kmeans(
     default) keeps the full-corpus fixed point — the oracle-replayed
     suite rows (knn_ivf_trained) depend on it.
     """
-    from chroma_rs_spark.operators.centroids import kmeans
+    from chroma_rs_spark.operators.centroids import _md5_sample, kmeans
 
     if sample_size is not None:
-        items = (
-            items.filter(F.col(item_emb).isNotNull())
-            .orderBy(F.md5(F.col(item_id).cast("string")), F.col(item_id))
-            .limit(int(sample_size))
-            # the loop re-reads its input max_iter times; pin the
-            # sample so the sort-limit isn't re-run per iteration
-            .localCheckpoint()
-        )
+        # the loop re-reads its input max_iter times; pin the sample
+        # so the sort-limit isn't re-run per iteration
+        items = _md5_sample(
+            items.filter(F.col(item_emb).isNotNull()), item_id, sample_size
+        ).localCheckpoint()
     _, cents = kmeans(
         items.select(item_id, item_emb),
         k=n_centroids,

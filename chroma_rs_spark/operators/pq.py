@@ -54,13 +54,14 @@ oracle-checked (round 11 retired the last rows-only row):
 `pq_adc_topk` runs `pq_adc_topk_df` over `hash_codebooks`
 (data-independent md5-derived literals a DuckDB oracle embeds
 verbatim), and `pq_topk` runs the TRAINED chain end to end —
-`train_pq_codebooks_df` uses the knn_ivf_trained fixed-point
-discipline (micro-unit HUGEINT means, in-order round-6 folds), so
-the DuckDB twin unrolls the full training and replays
-encode + LUT + ADC + exact rescore on the trained tables. The numpy
-`train_pq_codebooks` trainer remains the vectorized production
-alternative the collection index builds use, recall-banded rather
-than hash-gated (BLAS pairwise summation is not SQL-replayable).
+`train_pq_codebooks_df` is kmeans' fixed-point Lloyd's loop
+(operators/centroids.py:_lloyd — micro-unit HUGEINT means, in-order
+round-6 folds) run grouped by subspace, so the DuckDB twin unrolls
+the full training and replays encode + LUT + ADC + exact rescore on
+the trained tables. The numpy `train_pq_codebooks` trainer remains
+the vectorized production alternative the collection index builds
+use, recall-banded rather than hash-gated (BLAS pairwise summation
+is not SQL-replayable).
 """
 
 from __future__ import annotations
@@ -71,6 +72,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from chroma_rs_spark.operators import kernel
+from chroma_rs_spark.operators.centroids import _lloyd, _md5_sample
 from chroma_rs_spark.operators.kernel import DIST_DECIMALS
 
 
@@ -97,17 +99,14 @@ def train_pq_codebooks(
     """
     import numpy as np
 
-    rows = (
-        items.filter(F.col(item_emb).isNotNull())
-        .select(
+    rows = _md5_sample(
+        items.filter(F.col(item_emb).isNotNull()).select(
             F.col(item_id).alias("id"),
             F.col(item_emb).cast("array<double>").alias("emb"),
-        )
-        .withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(int(sample_size))
-        .collect()
-    )
+        ),
+        "id",
+        sample_size,
+    ).collect()
     if not rows:
         raise ValueError("train_pq_codebooks: no vectors to train on")
     sample = np.asarray([r["emb"] for r in rows], dtype=np.float64)
@@ -227,13 +226,11 @@ def train_pq_codebooks_df(
     item_emb: str = "embedding",
     dim: int | None = None,
 ):
-    """Oracle-REPLAYABLE PQ training: Lloyd's per subspace as ONE fused
-    grouped loop — the knn_ivf_trained discipline (micro-unit
-    fixed-point centroid sums, in-order round-6 fold distances,
-    lower-label tie-breaks, fixpoint early stop that an unrolled
-    replay always equals) applied with (mi, label) compound keys, so
-    all m subspaces train together in one Spark job per iteration
-    instead of m independent loops.
+    """Oracle-REPLAYABLE PQ training: PQ is independent k-means per
+    subspace, so this is kmeans' own loop (centroids.py:_lloyd) run
+    grouped by subspace `mi` — all m subspaces train together in one
+    Spark job per iteration, and codebook `mi` is bit-equal to
+    `kmeans` on subspace `mi` of the same sample.
 
     Numeric contract (every rounding decision happens in Spark with
     the exact expressions the SQL oracle mirrors):
@@ -256,9 +253,6 @@ def train_pq_codebooks_df(
     """
     import numpy as np
 
-    from chroma_rs_spark.operators.centroids import MICRO
-
-    spark = items.sparkSession
     if dim is None:
         probe = (
             items.filter(F.col(item_emb).isNotNull())
@@ -271,139 +265,33 @@ def train_pq_codebooks_df(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    sample = (
+    sample = _md5_sample(
         items.filter(
             F.col(item_emb).isNotNull() & (F.size(item_emb) == dim)
-        )
-        .select(
+        ).select(
             F.col(item_id).alias("_id"),
             F.col(item_emb).cast("array<double>").alias("_e"),
-        )
-        .orderBy(F.md5(F.col("_id").cast("string")), "_id")
-        .limit(int(sample_size))
+        ),
+        "_id",
+        sample_size,
     )
     # the (row, subspace) training relation, materialized once for the
-    # whole loop (<= sample_size * m small rows)
-    subr = sample.selectExpr(
-        "_id", _subspace_sql("_e", m, sub)
-    ).localCheckpoint()
+    # whole loop (<= sample_size * m small rows); the first k sample
+    # rows, split the same way, seed every subspace
+    subr = sample.selectExpr("_id", _subspace_sql("_e", m, sub)).localCheckpoint()
+    seeds = sample.limit(k).selectExpr("_id", _subspace_sql("_e", m, sub))
+    state, _ = _lloyd(subr, seeds, k, max_iter, group=("mi",), dim=sub)
 
-    # seeds: label = rank in (md5, id) order (array_sort trick — no
-    # window); initial centroids = micro-rounded seed components via
-    # the SAME M-step aggregation with n = 1 per group
-    seeded = (
-        sample.limit(k)
-        .groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.md5(F.col("_id").cast("string")).alias("h"),
-                        F.col("_id").alias("i"),
-                        F.col("_e").alias("v"),
-                    )
-                )
-            ).alias("xs")
-        )
-        .select(F.posexplode("xs").alias("label", "_x"))
-        .select("label", F.col("_x.v").alias("_v"))
-        .selectExpr("label", _subspace_sql("_v", m, sub))
-    )
-    micro = F.round(F.col("_val").cast("double") * F.lit(MICRO)).cast(
-        "decimal(38,0)"
-    )
-
-    def _mstep_rows(assigned):
-        return (
-            assigned.select(
-                "mi", "label", F.posexplode("sv").alias("pos", "_val")
-            )
-            .groupBy("mi", "label", "pos")
-            .agg(F.sum(micro).alias("_s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-
-    def _update(rows):
-        st = []
-        for r in rows:
-            s_int, n = int(r["_s"]), int(r["n"])
-            q = (2 * abs(s_int) + n) // (2 * n)
-            c = float(-q if s_int < 0 else q) / MICRO + 0.0
-            st.append((int(r["mi"]), int(r["label"]), int(r["pos"]), c))
-        return sorted(st)
-
-    state = _update(_mstep_rows(seeded))
-
-    def _mats(st):
-        by_key: dict[tuple[int, int], list[tuple[int, float]]] = {}
-        for mi, lbl, pos, c in st:
-            by_key.setdefault((mi, lbl), []).append((pos, c))
-        return spark.createDataFrame(
-            [
-                (mi, lbl, [c for _p, c in sorted(pcs)])
-                for (mi, lbl), pcs in sorted(by_key.items())
-            ],
-            "mi int, label int, cvec array<double>",
-        )
-
-    def _term(i):
-        d = F.element_at(F.col("sv"), i) - F.element_at(F.col("cvec"), i)
-        return d * d
-
-    sq = _term(1)
-    for i in range(2, sub + 1):
-        sq = sq + _term(i)
-    sqr = F.round(sq, 6) + F.lit(0.0)
-
-    prev_assign = None
-    for _ in range(max_iter):
-        scored = subr.join(F.broadcast(_mats(state)), "mi").select(
-            "_id", "mi", "sv", "label", sqr.alias("_d")
-        )
-        best = scored.groupBy("_id", "mi").agg(
-            F.min(F.struct("_d", "label")).alias("_b"),
-            F.first("sv").alias("sv"),
-        )
-        rows = (
-            best.select(
-                "mi",
-                F.col("_b.label").alias("label"),
-                F.xxhash64("_id", "mi", F.col("_b.label")).alias("_hh"),
-                "sv",
-            )
-            .select(
-                "mi", "label", "_hh",
-                F.posexplode("sv").alias("pos", "_val"),
-            )
-            .groupBy("mi", "label", "pos")
-            .agg(
-                F.sum(micro).alias("_s"),
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor("_hh").alias("_x"),
-            )
-            .collect()
-        )
-        sig = 0
-        for r in rows:
-            if int(r["pos"]) == 0:
-                sig ^= int(r["_x"]) & ((1 << 64) - 1)
-        if sig == prev_assign:
-            break
-        prev_assign = sig
-        state = _update(rows)
-
-    import numpy as _np
-
-    books = _np.full((m, k, sub), _np.nan, dtype=_np.float64)
-    for mi, lbl, pos, c in state:
+    books = np.full((m, k, sub), np.nan, dtype=np.float64)
+    for mi, lbl, pos, c, _n in state:
         books[mi, lbl, pos] = c
-    if _np.isnan(books).any():
+    if np.isnan(books).any():
         missing = sorted(
             {
                 (mi, lbl)
                 for mi in range(m)
                 for lbl in range(k)
-                if _np.isnan(books[mi, lbl]).any()
+                if np.isnan(books[mi, lbl]).any()
             }
         )
         raise ValueError(

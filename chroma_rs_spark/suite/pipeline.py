@@ -600,12 +600,10 @@ FROM g
 
 
 def q_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # two-step path on purpose: the one-shuffle fused variant
-    # (assign_nearest_label_centroid) measured SLOWER at sf0.1 (0.75 s
-    # vs 0.55 s) — its dim-wide aggregate exceeds the whole-stage-
-    # codegen field limit (spark.sql.codegen.maxFields=100) and the
-    # stage falls back to interpreted aggregation. See the fused op's
-    # docstring for when it wins.
+    # the two-step path: a fused dim-wide aggregate measured slower at
+    # sf0.1 (0.75 s vs 0.55 s) — it exceeds the whole-stage-codegen
+    # field limit (spark.sql.codegen.maxFields=100) and falls back to
+    # interpreted aggregation
     from chroma_rs_spark.operators.centroids import (
         assign_nearest_centroid,
         label_centroids,

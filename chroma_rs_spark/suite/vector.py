@@ -555,9 +555,9 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED product-quantized ANN with exact re-scoring, end-to-end
     oracle-replayable (round 11 — the last rows-only seat retired):
-    codebooks come from the fused grouped Lloyd's loop
-    (operators/pq.py:train_pq_codebooks_df — the knn_ivf_trained
-    micro-unit fixed-point discipline applied per subspace), ADC over
+    codebooks come from kmeans' fixed-point Lloyd's loop run grouped
+    by subspace (operators/pq.py:train_pq_codebooks_df over
+    operators/centroids.py:_lloyd), ADC over
     the trained books retrieves 4x-oversampled candidates, the
     raw-vector join re-scores them with exact round-6 squared L2,
     top-10 per probe. The DuckDB twin unrolls the full training

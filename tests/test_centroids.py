@@ -49,33 +49,6 @@ def test_assign_nearest_centroid_roundtrip(spark):
     assert got == {0: 0, 1: 0, 2: 1, 3: 1}
 
 
-def test_fused_assign_bit_identical_to_two_step(spark):
-    """assign_nearest_label_centroid (one-shuffle fused path) must
-    reproduce the label_centroids -> assign_nearest_centroid result
-    bit-for-bit on real embeddings."""
-    import numpy as np
-
-    from chroma_rs_spark.operators.centroids import assign_nearest_label_centroid
-
-    emb = spark.read.parquet(f"{SF001_DIR}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    two = {
-        r["vec_id"]: (r["assigned_label"], r["sq_dist"])
-        for r in assign_nearest_centroid(emb, label_centroids(emb)).collect()
-    }
-    fused = {
-        r["vec_id"]: (r["assigned_label"], r["sq_dist"])
-        for r in assign_nearest_label_centroid(emb, dim=dim).collect()
-    }
-    assert two.keys() == fused.keys()
-    for k in two:
-        assert two[k][0] == fused[k][0]
-        assert (
-            np.float64(two[k][1]).view(np.int64)
-            == np.float64(fused[k][1]).view(np.int64)
-        )
-
-
 @pytest.mark.parametrize("qname", ["label_centroids", "centroid_assign"])
 def test_centroid_suite_queries_match_oracle(spark, qname):
     from chroma_rs_spark.suite.pipeline import QUERIES
@@ -220,3 +193,30 @@ def test_kmeans_converged_pair_is_self_consistent(spark):
     a2, c2 = kmeans(emb, k=2, max_iter=25)
     assert sorted(map(tuple, a2.collect())) == got_assign
     assert sorted(map(tuple, c2.collect())) == want_cents
+
+
+@pytest.mark.parametrize(
+    "entry", ["kmeans", "train_centroids_kmeans", "train_pq_codebooks_df"]
+)
+def test_k_below_one_is_rejected(spark, entry):
+    """k < 1 is a precondition error of the shared Lloyd's loop, not an
+    empty index: every entry point that trains through it raises."""
+    from chroma_rs_spark.operators.centroids import kmeans
+    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
+    from chroma_rs_spark.operators.pq import train_pq_codebooks_df
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, -float(i), 0.5]) for i in range(8)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    train = {
+        "kmeans": lambda: kmeans(emb, k=0, max_iter=2),
+        "train_centroids_kmeans": lambda: train_centroids_kmeans(
+            emb, n_centroids=0, max_iter=2
+        ),
+        "train_pq_codebooks_df": lambda: train_pq_codebooks_df(
+            emb, m=2, k=0, max_iter=2, sample_size=8
+        ),
+    }[entry]
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        train()

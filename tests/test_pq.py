@@ -254,3 +254,45 @@ def test_ivfpq_adc_topk_precollected_probed_parity(spark):
         map(tuple, reused), key=lambda t: (t[0], t[1])
     )
     assert len(base) == 15
+
+
+@pytest.mark.parametrize("max_iter", [3, 10])
+def test_train_pq_codebooks_df_is_kmeans_per_subspace(spark, max_iter):
+    """PQ training is independent k-means per subspace: codebook `mi`
+    is bit-equal to `kmeans` on subspace `mi` of the same md5 sample.
+    The corpus has a shifted blob in the first subspace and noise
+    elsewhere, so the subspaces reach their fixpoints at different
+    iterations (9, 10 and past 11): at max_iter=10 some subspaces have
+    converged while the grouped loop keeps iterating the others."""
+    import hashlib
+
+    from chroma_rs_spark.operators.centroids import kmeans
+    from chroma_rs_spark.operators.pq import train_pq_codebooks_df
+
+    n, dim, m, k, n_sample = 300, 16, 4, 4, 200
+    sub = dim // m
+    rng = np.random.default_rng(11)
+    x = rng.normal(0.0, 1.0, (n, dim))
+    x[: n // 2, :sub] += 3.0
+    vecs = [[float(v) for v in row] for row in x]
+    items = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    # the sample rule, modelled independently: smallest (md5(id), id)
+    sample = sorted(
+        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:n_sample]
+
+    books = train_pq_codebooks_df(
+        items, m=m, k=k, max_iter=max_iter, sample_size=n_sample
+    )
+    for mi in range(m):
+        part = spark.createDataFrame(
+            [(i, vecs[i][mi * sub : (mi + 1) * sub]) for i in sample],
+            "vec_id long, embedding array<double>",
+        )
+        _, cents = kmeans(part, k=k, max_iter=max_iter, dim=sub)
+        want = np.full((k, sub), np.nan)
+        for r in cents.collect():
+            want[r["label"], r["pos"]] = r["centroid"]
+        assert np.array_equal(books[mi], want), mi
