@@ -157,10 +157,7 @@ def ivf_topk(
     # driver-side probe selection (queries and centroids are tiny): the
     # n_probe nearest cells per query by (rounded distance, cell id)
     d_cq = kernel.rounded(kernel.distances("cosine", cmat, qmat, cnorm, qnorm))
-    probe_cells = {
-        qid: cids[np.lexsort((cids, d_cq[:, j]))[:n_probe]]
-        for j, qid in enumerate(qids)
-    }
+    probe_cells = dict(zip(qids, kernel.probe_cells(cids, d_cq, n_probe)))
 
     def score(pdf):
         emb = kernel.matrix(pdf[item_emb])

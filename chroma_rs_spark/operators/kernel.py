@@ -12,7 +12,11 @@ of that arithmetic, so the paths agree bit-for-bit by construction:
 
 * `matrix` — Arrow list column to a float64 (n, dim) matrix;
 * `cosine_sim` / `distances` — cosine, squared-l2 and ip matrices;
+* `fold_dot` / `fold_norms` / `fold_l2` — the same sums in a SQL
+  fold's order, for numpy forms that replay a SQL form bit for bit;
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
+* `probe_cells` — the IVF probe selection of `ivf_topk` and of the
+  collection's IVF-PQ search (`pq.ivfpq_probes`);
 * `topk_per_query` — per-query `lexsort((ids, d))[:k]` over finite
   entries, string ids lexsorted as numpy U-strings;
 * `pair_topk` — the tie-inclusive threshold select of the pair tiles;
@@ -80,12 +84,56 @@ def distances(metric: str, a, b, a_norm=None, b_norm=None) -> np.ndarray:
     raise ValueError(f"unknown metric {metric!r}")
 
 
+def fold_dot(a, b) -> np.ndarray:
+    """(len(a), len(b)) dot products accumulated position by position
+    from 0.0 — the order a SQL fold (`aggregate`, an unrolled `+`
+    chain) evaluates, so the doubles replay in SQL bit for bit. The
+    BLAS matmul behind `cosine_sim` sums in blocks instead."""
+    acc = np.zeros((len(a), len(b)), dtype=np.float64)
+    for p in range(a.shape[1]):
+        acc = acc + a[:, p, None] * b[None, :, p]
+    return acc
+
+
+def fold_norms(a) -> np.ndarray:
+    """Row L2 norms, squares summed in `fold_dot`'s order (the SQL
+    `l2_norm` fold, `ivf._seq_norm`)."""
+    acc = np.zeros(len(a), dtype=np.float64)
+    for p in range(a.shape[1]):
+        acc = acc + a[:, p] * a[:, p]
+    return np.sqrt(acc)
+
+
+def fold_l2(a, b) -> np.ndarray:
+    """(len(a), len(b)) squared L2 distances in `fold_dot`'s order:
+    (a[p] - b[p])^2 accumulated from 0.0, position by position."""
+    acc = np.zeros((len(a), len(b)), dtype=np.float64)
+    for p in range(a.shape[1]):
+        diff = a[:, p, None] - b[None, :, p]
+        acc = acc + diff * diff
+    return acc
+
+
 def rounded(x: np.ndarray, fold_zero: bool = True) -> np.ndarray:
     """Round to DIST_DECIMALS (numpy half-even). `+ 0.0` folds -0.0 to
     +0.0 — the `ROUND(...) + 0.0` every distance oracle applies; pair
     similarities keep the sign of zero, like their oracle."""
     r = np.round(x, DIST_DECIMALS)
     return r + 0.0 if fold_zero else r
+
+
+def probe_cells(cids: np.ndarray, d: np.ndarray, n_probe: int) -> list[np.ndarray]:
+    """Each query's `n_probe` nearest cells from the (n_cells, n_queries)
+    rounded cosine distances `d`: `lexsort((cids, d))[:n_probe]` per
+    query column — ties to the lower cell id, the oracle's ROW_NUMBER
+    contract. Non-finite distances are skipped, so an unscorable query
+    (zero norm, NaN components) probes no cell."""
+    out = []
+    for j in range(d.shape[1]):
+        fin = np.isfinite(d[:, j])
+        ids, dj = cids[fin], d[fin, j]
+        out.append(ids[np.lexsort((ids, dj))[:n_probe]])
+    return out
 
 
 def _sortable(ids: np.ndarray) -> np.ndarray:

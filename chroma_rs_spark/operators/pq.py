@@ -38,13 +38,21 @@ Spark shapes (matching the repo's discipline):
   `pq_topk_rescored_df` is the SQL-replayable chain the declared
   `pq_topk` row runs.
 * **IVF-PQ** — the composite index encodes residuals against a cosine
-  coarse quantizer. `_ivfpq_residuals` is the one assign-and-subtract
-  step, shared by collection codebook training and the SQL encode
-  gear of `ivfpq_codes_df`; above ARROW_ENCODE_THRESHOLD the Arrow
-  gear does the same math on the numpy kernel. `_collect_probe_cells`
-  computes a query batch's probed cells once, for callers that prune
-  a cell-partitioned code tier and reuse the rows as
-  `ivfpq_adc_topk_df(probed=)`.
+  coarse quantizer. Each op has two forms with one contract. The
+  collection's `query(index="ivfpq")` runs the numpy forms:
+  `_ivfpq_codes_arrow` encodes (materialized tier and late rows),
+  `ivfpq_probes` picks the probed cells on the driver, and
+  `pq_adc_topk(cells=)` scores them — the plain PQ search with one
+  LUT per (query, probed cell). The oracle-replayed rows
+  (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`) run the SQL
+  forms: `ivfpq_codes_df`, `ivfpq_probe_cells` (collected once by
+  `_collect_probe_cells` to prune a cell-partitioned code tier) and
+  `ivfpq_adc_topk_df`. `_ivfpq_residuals` is the one SQL
+  assign-and-subtract step, shared by collection codebook training
+  and the SQL encode. The numpy forms replay the SQL forms'
+  arithmetic (in-order folds, round-6, ties low), so the Arrow encode
+  assigns the same codes and the numpy ADC returns the same rows on
+  the same codes and probes (tests/test_ivfpq.py).
 
 Verification: tests/test_pq.py pins encode codes and ADC distances
 bit-for-bit against a pure-numpy reference and checks determinism;
@@ -167,24 +175,81 @@ def pq_encode(
     return kernel.map_batches(out, encode, f"id {id_type}, codes array<int>")
 
 
+def ivfpq_probes(
+    centroids: list[tuple[int, list[float]]],
+    queries: Sequence[tuple],
+    n_probe: int,
+) -> list[np.ndarray]:
+    """The numpy form of `ivfpq_probe_cells` for a driver-side query
+    list: per query, the cell ids of its `n_probe` nearest cells
+    (kernel.probe_cells — ties to the lower cell id; unscorable
+    queries probe no cell). The cosine distances replay the SQL form's
+    `round(1 - dot / (|q| |c|), 6) + 0.0` with dot and norms folded in
+    position order, so both forms probe the same cells. Pass the
+    result, with the same `centroids`, as `pq_adc_topk(cells=...)`."""
+    import numpy as np
+
+    cids = np.asarray([c for c, _ in centroids], dtype=np.int64)
+    cmat = np.asarray([v for _, v in centroids], dtype=np.float64)
+    qmat = np.asarray([q[1] for q in queries], dtype=np.float64)
+    qmat = qmat.reshape(len(queries), cmat.shape[1])
+    norms = kernel.fold_norms(cmat)[:, None] * kernel.fold_norms(qmat)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        d = kernel.rounded(1.0 - kernel.fold_dot(cmat, qmat) / norms)
+    return kernel.probe_cells(cids, d, n_probe)
+
+
+def _fold_luts(books, resid):
+    """(m, k, n) LUTs of `resid` (n, m*sub), in `pq_adc_topk_df`'s
+    SQL-replayable arithmetic (_SUB_DIST_SQL): each subspace distance
+    is kernel.fold_l2's in-order fold, rounded to DIST_DECIMALS."""
+    import numpy as np
+
+    m, _kk, sub = books.shape
+    return np.stack([
+        kernel.rounded(
+            kernel.fold_l2(books[mi], resid[:, mi * sub : (mi + 1) * sub]),
+            fold_zero=False,
+        )
+        for mi in range(m)
+    ])
+
+
 def pq_adc_topk(
     codes: DataFrame,
     codebooks,
     queries: Sequence[tuple],
     k: int = 10,
     id_type: str = "long",
+    cells: tuple | None = None,
 ) -> DataFrame:
     """(query_id, rank, id, adc_dist): approximate top-k by ADC over
-    PQ codes. `queries` is a driver-side list of (qid, vector) — small
-    by contract, like every probe set in the engine.
+    PQ codes (id, codes[, cell]). `queries` is a driver-side list of
+    (qid, vector) — small by contract, like every probe set in the
+    engine.
 
-    Per task: LUT[m][j] = exact squared L2 between the query's m-th
-    subvector and codebook[m][j]; candidate distance = sum of M
-    lookups (vectorized, folded in subspace order). Local top-k per
-    Arrow batch and the window merge are the shared numpy kernel's
+    The LUTs are built once on the driver and shipped in the task
+    closure; a candidate's distance is the sum of its m lookups,
+    accumulated in subspace order from 0.0. Local top-k per Arrow
+    batch and the window merge are the shared numpy kernel's
     (operators/kernel.py): distances rounded to DIST_DECIMALS with
     -0.0 folded, ranks tie-break on id — the engine-wide determinism
     contract.
+
+    Plain PQ (`cells=None`) is the one-cell case: each query has one
+    LUT, of its own vector, LUT[m][j] = unrounded squared L2 between
+    the query's m-th subvector and codebook[m][j], and every code row
+    is a candidate.
+
+    IVF-PQ (`cells=(centroids, probed)`, `probed` from `ivfpq_probes`):
+    the codes carry a `cell` column and encode residuals against that
+    cell's centroid (`_ivfpq_codes_arrow`). Each (query, probed cell)
+    pair has its own LUT of the query's residual against the cell,
+    in `ivfpq_adc_topk_df`'s arithmetic (_fold_luts), so the ADC
+    distances equal that SQL form's bit for bit on the same codes and
+    probes. Code rows outside a query's probed cells are no candidates
+    of it. This is the search the collection's `query(index="ivfpq")`
+    runs; `ivfpq_adc_topk_df` serves the oracle-replayed rows.
     """
     import numpy as np
 
@@ -192,22 +257,50 @@ def pq_adc_topk(
     m, _k, sub = books.shape
     qids = [q[0] for q in queries]
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64).reshape(-1, m * sub)
-    # (m, k, nq) LUTs, built once on the driver (tiny) and shipped in
-    # the task closure like the IVF centroid matrices
-    luts = np.stack([
-        ((books[mi][:, None, :] - qmat[None, :, mi * sub : (mi + 1) * sub]) ** 2).sum(2)
-        for mi in range(m)
-    ])
+    if cells is None:
+        # (m, k, nq) LUTs; query j reads slot j from every code row
+        luts = np.stack([
+            ((books[mi][:, None, :] - qmat[None, :, mi * sub : (mi + 1) * sub]) ** 2).sum(2)
+            for mi in range(m)
+        ])
+        cids = None
+        slots = np.arange(len(qids))[None, :]
+    else:
+        centroids, probed = cells
+        cvec = dict(centroids)
+        cids = np.asarray(sorted(cvec), dtype=np.int64)
+        # slots[c, j]: the LUT slot of (cell cids[c], query j), -1 when
+        # query j does not probe that cell
+        slots = np.full((len(cids), len(qids)), -1, dtype=np.int64)
+        pairs = [(j, int(c)) for j, cs in enumerate(probed) for c in cs]
+        for s, (j, c) in enumerate(pairs):
+            slots[np.searchsorted(cids, c), j] = s
+        resid = np.asarray(
+            [qmat[j] - np.asarray(cvec[c], dtype=np.float64) for j, c in pairs],
+            dtype=np.float64,
+        ).reshape(len(pairs), m * sub)
+        luts = _fold_luts(books, resid)
 
     def score(pdf):
         codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-        # d[i, j] = sum_m LUT[m, codes[i, m], j], accumulated in m order
-        d = np.zeros((len(codes), len(qids)), dtype=np.float64)
+        if cids is None:
+            slot = np.broadcast_to(slots, (len(codes), len(qids)))
+        else:
+            cell = pdf["cell"].to_numpy()
+            at = np.minimum(np.searchsorted(cids, cell), len(cids) - 1)
+            # a cell the centroids do not know is probed by no query
+            slot = np.where((cids[at] == cell)[:, None], slots[at], -1)
+        probed_pair = slot >= 0
+        if not probed_pair.any():
+            return None
+        slot = np.where(probed_pair, slot, 0)
+        # d[i, j] = sum_m LUT[m, codes[i, m], slot[i, j]], in m order
+        d = np.zeros(slot.shape, dtype=np.float64)
         for mi in range(m):
-            d += luts[mi][codes[:, mi]]
+            d += luts[mi][codes[:, mi][:, None], slot]
         return kernel.topk_per_query(
             qids, pdf["id"].to_numpy(), kernel.rounded(d), k,
-            ("query_id", "id", "adc_dist"),
+            ("query_id", "id", "adc_dist"), mask=probed_pair,
         )
 
     cands = kernel.map_batches(
@@ -618,55 +711,52 @@ def pq_adc_topk_df(
     )
 
 
-# Above this many interpreted flops per row (|cells| x dim for the
-# assignment's HOF dot products), the SQL-expression encode gear is
-# dominated by lambda-interpretation overhead and the Arrow gear takes
-# over. 16 cells x 64 dims = 1024 (every oracle-checked config) stays
-# SQL; the 64-cell scale configs (4096) go Arrow. Round-12 scale-proof
-# measurement behind the constant: materializing 409.6k codes took
-# 136 s through the HOF expression vs ~8 s through numpy.
-ARROW_ENCODE_THRESHOLD = 2048
-
-
 def _ivfpq_codes_arrow(
     items: DataFrame,
-    books,
+    codebooks,
     centroids: list[tuple[int, list[float]]],
     item_id: str,
     item_emb: str,
 ) -> DataFrame:
-    """Arrow-batch encode gear on the shared numpy kernel: cosine cell
-    assignment, residual, then a per-subspace squared-l2 argmin over
-    the codebooks. Argmins run on UNROUNDED float64 (np.argmin takes
-    the first minimum, and centroids are ordered by ascending id, so
-    exact ties break low — the SQL gear's convention); the SQL gear
-    argmins over round-6 distances, so assignments may differ within a
-    1e-6 tie window. Recall-neutral by construction: returned
-    distances always come from the exact rescore, never from codes."""
+    """(item_id, cell, codes ARRAY<INT>): the composite index's encode
+    as one shuffle-free Arrow pass on the shared numpy kernel — the
+    collection's one encode form: it builds the materialized code
+    tier and encodes late rows at query time. `ivfpq_codes_df` is the
+    SQL form of the same op, for the oracle-replayed rows.
+
+    It replays the SQL form's arithmetic: the cosine cell is the argmin
+    of round-6 `1 - dot / (|x| |c|)` with dot and norms folded in
+    position order (assign_cells), the residual is an exact subtract,
+    and each subspace code is the argmin of the round-6 in-order
+    squared-L2 fold (_code_least_sql); argmin's first minimum breaks
+    ties to the lower cell id and code, like the SQL `least(struct)`.
+    So both forms assign the same (cell, codes). Zero-norm/NULL/
+    wrong-dim vectors have no cosine cell and drop, as in the SQL
+    form."""
     import numpy as np
     import pandas as pd
 
+    books = np.asarray(codebooks, dtype=np.float64)
     m, _kk, sub = books.shape
     order = sorted(centroids, key=lambda c: c[0])
     cents = np.asarray([vec for _cid, vec in order], dtype=np.float64)
     cids = np.asarray([cid for cid, _vec in order], dtype=np.int64)
-    cnorm = kernel.norms(cents)
+    cnorm = kernel.fold_norms(cents)
 
     def encode(pdf):
         x = kernel.matrix(pdf[item_emb])
-        xnorm = kernel.norms(x)
-        # zero-norm vectors have no cosine cell: dropped, like the SQL
-        # gear's assign_cells
+        xnorm = kernel.fold_norms(x)
         ok = xnorm != 0.0
         x, xnorm = x[ok], xnorm[ok]
         if not len(x):
             return None
-        pick = np.argmin(kernel.distances("cosine", x, cents, xnorm, cnorm), axis=1)
+        cos = 1.0 - kernel.fold_dot(x, cents) / (xnorm[:, None] * cnorm[None, :])
+        pick = np.argmin(kernel.rounded(cos, fold_zero=False), axis=1)
         resid = x - cents[pick]
         codes = np.empty((len(x), m), dtype=np.int32)
         for mi in range(m):
-            r = resid[:, mi * sub : (mi + 1) * sub]
-            codes[:, mi] = np.argmin(kernel.distances("l2", r, books[mi]), axis=1)
+            d = kernel.fold_l2(resid[:, mi * sub : (mi + 1) * sub], books[mi])
+            codes[:, mi] = np.argmin(kernel.rounded(d, fold_zero=False), axis=1)
         return pd.DataFrame(
             {
                 item_id: pdf[item_id].to_numpy()[ok],
@@ -675,11 +765,12 @@ def _ivfpq_codes_arrow(
             }
         )
 
+    scorable = items.filter(
+        F.col(item_emb).isNotNull() & (F.size(item_emb) == m * sub)
+    ).select(item_id, item_emb)
     id_type = dict(items.dtypes)[item_id]
     return kernel.map_batches(
-        items.select(item_id, item_emb),
-        encode,
-        f"{item_id} {id_type}, cell int, codes array<int>",
+        scorable, encode, f"{item_id} {id_type}, cell int, codes array<int>"
     )
 
 
@@ -739,22 +830,19 @@ def ivfpq_codes_df(
     vectors. Zero-norm/NULL/wrong-dim vectors are unscorable under the
     cosine quantizer and are dropped.
 
-    Two physical gears, one logical op: below ARROW_ENCODE_THRESHOLD
-    interpreted flops per row the SQL-expression pipeline runs (fully
-    oracle-replayable — every driver row lives here); above it the
-    Arrow gear (_ivfpq_codes_arrow) does the same math on the shared
-    numpy kernel — the round-12 scale proof measured the HOF
-    expression at 17x the Arrow wall on a 409.6k x 64-cell encode."""
+    This is the SQL form, fully oracle-replayable: the declared and
+    extra rows (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`)
+    encode here. The collection encodes with the Arrow form of the
+    same op (`_ivfpq_codes_arrow`), which assigns the same codes — the
+    round-12 scale proof measured this HOF expression at 17x the Arrow
+    wall on a 409.6k x 64-cell encode."""
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
     m, _kk, sub = books.shape
-    dim = m * sub
     scorable = items.filter(
-        F.col(item_emb).isNotNull() & (F.size(item_emb) == dim)
+        F.col(item_emb).isNotNull() & (F.size(item_emb) == m * sub)
     )
-    if len(centroids) * dim > ARROW_ENCODE_THRESHOLD:
-        return _ivfpq_codes_arrow(scorable, books, centroids, item_id, item_emb)
     resid = _ivfpq_residuals(scorable, centroids, item_id, item_emb, cent_df)
     long = _codes_long(resid, "_r", books, DIST_DECIMALS)
     return _collect_codes_array(long, ["_vid", "cell"]).select(
@@ -826,8 +914,10 @@ def _collect_probe_cells(
     dim: int,
 ) -> tuple[DataFrame, list[int]]:
     """ivfpq_probe_cells run ONCE and collected (n_queries x n_probe
-    driver-tiny rows), for callers holding a cell-partitioned code
-    tier: returns the rows as a DataFrame to pass back as
+    driver-tiny rows), for the oracle-replayed `ivfpq_topk` row, which
+    holds a cell-partitioned code tier (the collection picks its
+    probed cells with the numpy `ivfpq_probes` and runs no job):
+    returns the rows as a DataFrame to pass back as
     ivfpq_adc_topk_df's `probed=` — so the |queries| x |cells|
     assignment does not run a second time in-plan — and the sorted
     probed cell ids for an isin() partition filter on the code scan.
@@ -871,6 +961,14 @@ def ivfpq_adc_topk_df(
     the probed cells (256 B/vector at dim=64 float32); PQ alone scans
     every code. IVF-PQ reads codes only (m bytes/vector), only in the
     probed cells — |corpus| × n_probe/n_cells × m bytes per query.
+
+    This is the SQL form, the one the oracle-replayed rows run
+    (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`). The
+    collection's `query(index="ivfpq")` runs the numpy form of the same
+    search — `ivfpq_probes` + `pq_adc_topk(cells=)` over
+    `_ivfpq_codes_arrow` codes — with no driver round trip; on the same
+    codes and probes its (query_id, id, adc_dist) rows equal this
+    form's (tests/test_ivfpq.py).
 
     Physical shape (all DataFrame, oracle-replayable):
     * cell assignment: one map-side `least(struct(...))` expression

@@ -1394,18 +1394,8 @@ def _ivfpq_codes_tier(spark: SparkSession, sf_dir: str) -> str:
 
     out = os.path.join(fixture_dir("ivfpq_tier_"), "codes")
     emb = load_table(spark, sf_dir, "embeddings")
-    # The "bit-identical to the inline chain" claim above requires
-    # the SQL encode gear: the Arrow gear argmins on unrounded
-    # float64 while the SQL gear argmins on round-6 distances, so
-    # codes may diverge inside a 1e-6 tie window. Guard against a
-    # future ARROW_ENCODE_THRESHOLD drop silently flipping this
-    # oracle-gated build onto the Arrow gear (ADVICE r12).
-    from chroma_rs_spark.operators.pq import ARROW_ENCODE_THRESHOLD
-
-    assert IVF_CENTROIDS * _PQ_M * _PQ_SUB <= ARROW_ENCODE_THRESHOLD, (
-        "ivfpq codes tier must stay on the SQL (round-6 argmin) "
-        "encode gear; the oracle replays round-6 ties"
-    )
+    # ivfpq_codes_df is the SQL (round-6 argmin) encode the oracle
+    # replays, so the tier is bit-identical to the inline chain
     ivfpq_codes_df(
         emb,
         hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),

@@ -209,3 +209,67 @@ def test_rebuild_crash_windows_never_mix_generations(ivfpq_coll, engine):
     assert books.shape[0] == 4
     shutil.rmtree(gen1, ignore_errors=True)
     shutil.rmtree(gen2, ignore_errors=True)
+
+
+def test_rebuild_between_queries_serves_the_new_generation(ivfpq_coll, engine):
+    """The loaded index is memoized per committed generation: a warm
+    load reads nothing, and a rebuild with a different m and
+    n_centroids in the same session is served at the next query."""
+    from chroma_rs_spark.collection import IVFPQ_INDEX_DIR, _INDEX_MEMO, _load_index
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    c, ids, vecs = ivfpq_coll
+    root = os.path.join(engine.collection_dir(c.id), IVFPQ_INDEX_DIR)
+    by_id = dict(zip(ids, vecs))
+
+    def query_and_check():
+        res = c.query(
+            [vecs[5]], n_results=5, index="ivfpq", n_probe=2, oversample=6
+        ).collect()
+        assert res[0]["id"] == ids[5]
+        for r in res:
+            assert r["distance"] == _cosine_dist(vecs[5], by_id[r["id"]])
+        return _INDEX_MEMO[root][1]
+
+    c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
+    cents, books = query_and_check()
+    assert (len(cents), books.shape[0]) == (4, 2)
+    jobs, _, warm = count_jobs_stages(
+        engine.spark, lambda: _load_index(engine, c, "ivfpq")
+    )
+    assert jobs == 0 and warm[1] is books
+
+    c.build_ivfpq_index(n_centroids=3, max_iter=3, m=4, k=8, sample_size=64)
+    cents, books = query_and_check()
+    assert (len(cents), books.shape[0]) == (3, 4)
+
+
+def test_removed_index_takes_the_transient_path(ivfpq_coll, engine, monkeypatch):
+    """A memo entry never outlives its index dir: once the dir is gone
+    the query trains a transient index, as if none had been built."""
+    import shutil
+
+    from chroma_rs_spark.collection import IVFPQ_INDEX_DIR, _INDEX_MEMO, _load_index
+    from chroma_rs_spark.operators import ivf
+
+    c, ids, vecs = ivfpq_coll
+    c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
+    c.query([vecs[0]], n_results=3, index="ivfpq", n_probe=2).collect()
+    root = os.path.join(engine.collection_dir(c.id), IVFPQ_INDEX_DIR)
+    assert root in _INDEX_MEMO
+    shutil.rmtree(root)
+
+    trained = []
+    train = ivf.train_centroids_kmeans
+
+    def spy(*args, **kwargs):
+        trained.append(kwargs)
+        return train(*args, **kwargs)
+
+    monkeypatch.setattr(ivf, "train_centroids_kmeans", spy)
+    res = c.query(
+        [vecs[0]], n_results=3, index="ivfpq", n_probe=2, oversample=6
+    ).collect()
+    assert len(trained) == 1 and trained[0]["strict"] is False
+    assert len(res) == 3 and res[0]["id"] == ids[0]
+    assert _load_index(engine, c, "ivfpq") is None and root not in _INDEX_MEMO

@@ -88,16 +88,10 @@ def test_ranks_contiguous_and_monotone(spark):
         assert len(rs) == 10
 
 
-def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
-    """The encode op's two physical gears (SQL expression pipeline vs
-    Arrow numpy batch) produce identical (cell, codes) on a seeded
-    corpus with no rounding ties. 33 cells x 64 dims = 2112 flops/row
-    crosses ARROW_ENCODE_THRESHOLD so the default call takes the Arrow
-    gear; the SQL gear is forced by raising the threshold."""
-    import numpy as np
-
-    from chroma_rs_spark.operators import pq as pqmod
-    from chroma_rs_spark.operators.pq import hash_codebooks, ivfpq_codes_df
+def _hash_fixture(spark):
+    """200 seeded uniform 64-dim vectors, the 33 lowest-id vectors as
+    cells and 8 x 16 x 8 hash codebooks: no rounding ties."""
+    from chroma_rs_spark.operators.pq import hash_codebooks
 
     rng = np.random.RandomState(42)
     vecs = rng.uniform(-1, 1, size=(200, 64))
@@ -106,7 +100,16 @@ def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [(int(i), vecs[i].tolist()) for i in range(33)]
-    books = hash_codebooks(8, 16, 8)
+    return vecs, items, cents, hash_codebooks(8, 16, 8)
+
+
+def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
+    """The encode op's two physical forms (SQL expression pipeline
+    `ivfpq_codes_df` vs Arrow numpy batch `_ivfpq_codes_arrow`) produce
+    identical (cell, codes) on a seeded corpus with no rounding ties."""
+    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, ivfpq_codes_df
+
+    _vecs, items, cents, books = _hash_fixture(spark)
 
     def rows(df):
         return sorted(
@@ -114,12 +117,54 @@ def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
             for r in df.collect()
         )
 
-    arrow = rows(ivfpq_codes_df(items, books, cents))
-    old = pqmod.ARROW_ENCODE_THRESHOLD
-    try:
-        pqmod.ARROW_ENCODE_THRESHOLD = 10**9
-        sql = rows(ivfpq_codes_df(items, books, cents))
-    finally:
-        pqmod.ARROW_ENCODE_THRESHOLD = old
+    arrow = rows(_ivfpq_codes_arrow(items, books, cents, "vec_id", "embedding"))
+    sql = rows(ivfpq_codes_df(items, books, cents))
     assert len(arrow) == 200
     assert arrow == sql
+
+
+def test_numpy_adc_matches_sql_adc(spark):
+    """The collection's IVF-PQ search (`ivfpq_probes` +
+    `pq_adc_topk(cells=)`) returns the same (query_id, rank, id,
+    adc_dist) rows as the SQL form `ivfpq_adc_topk_df` on the same
+    codes and probes: same probed cells, LUTs folded in position order
+    and rounded like _SUB_DIST_SQL, ADC summed in subspace order from
+    0.0 and rounded like _adc_fold_sql. The zero probe is unscorable
+    under the cosine quantizer and drops on both sides."""
+    from chroma_rs_spark.operators.pq import (
+        ivfpq_adc_topk_df,
+        ivfpq_codes_df,
+        ivfpq_probes,
+        pq_adc_topk,
+    )
+
+    vecs, items, cents, books = _hash_fixture(spark)
+    queries = [(q, vecs[i].tolist()) for q, i in enumerate((3, 50, 117, 199))]
+    queries.append((4, (0.5 * vecs[7] - 0.25 * vecs[90]).tolist()))
+    queries.append((5, [0.0] * 64))
+    probes = spark.createDataFrame(
+        queries, "query_id long, query_embedding array<double>"
+    )
+    codes = ivfpq_codes_df(items, books, cents).cache()
+    try:
+        sql = sorted(
+            (r["query_id"], r["rank"], r["neighbor_id"], r["adc_dist"])
+            for r in ivfpq_adc_topk_df(
+                items, books, cents, n_probe=4, k=10, probes=probes,
+                codes=codes,
+            ).collect()
+        )
+        got = sorted(
+            tuple(r)
+            for r in pq_adc_topk(
+                codes.withColumnRenamed("vec_id", "id"),
+                books,
+                queries,
+                k=10,
+                cells=(cents, ivfpq_probes(cents, queries, 4)),
+            ).collect()
+        )
+    finally:
+        codes.unpersist()
+    assert len(sql) == 50
+    assert got == sql

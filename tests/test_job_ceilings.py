@@ -52,3 +52,44 @@ def test_knn_ivf_trained_job_ceiling(spark):
     cold, warm = _jobs(spark, "knn_ivf_trained")
     assert warm <= 4, f"knn_ivf_trained warm de-fused: {warm} jobs (was 2)"
     assert cold <= 24, f"knn_ivf_trained cold de-fused: {cold} jobs (was 17)"
+
+
+def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
+    """A warm `query(index="ivfpq")` on a built, materialized index
+    after an upsert: the loaded index is memoized and the probe cells
+    are picked on the driver, so building the query runs no job, and
+    plan plus collect stays a handful of jobs even with late rows to
+    encode: measured 0 plan + 11 collect jobs. Before the numpy IVF-PQ
+    search this fixture took 7 plan jobs (two index-table schema
+    reads, two index collects, the SQL probe-cell collect) and 18
+    collect jobs (the SQL LUT/ADC chain and the pool distinct), 25 in
+    all. The ceiling sits two jobs above today's 11, so a re-split of
+    the candidate pool into driver round trips fails here."""
+    import numpy as np
+
+    from chroma_rs_spark.catalog import Engine
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    engine = Engine(spark, str(tmp_path / "wh"))
+    c = engine.create_collection("ceiling", {"hnsw:space": "cosine"})
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(120, 16)).tolist()
+    c.add(ids=[f"v{i:03d}" for i in range(120)], embeddings=vecs)
+    c.build_ivfpq_index(n_centroids=4, max_iter=2, m=4, k=8, sample_size=120)
+    c.materialize_ivfpq_codes()
+    c.upsert(
+        ids=[f"u{i}" for i in range(8)],
+        embeddings=rng.normal(size=(8, 16)).tolist(),
+    )
+
+    def query():
+        return c.query(vecs[:4], n_results=5, index="ivfpq")
+
+    query().collect()  # warm: the index memo and the JVM
+    plan, _, df = count_jobs_stages(spark, query)
+    total, _, rows = count_jobs_stages(spark, df.collect)
+    assert len(rows) == 20
+    assert plan == 0, f"warm ivfpq query planning ran {plan} jobs (was 0)"
+    assert plan + total <= 13, (
+        f"warm ivfpq query de-fused: {plan + total} jobs (was 11)"
+    )
