@@ -1052,46 +1052,18 @@ def build_ivfpq_index(
     other indexes: item cells/codes are derived at search time, so
     late-added items stay searchable.
 
-    COMPATIBILITY NOTE (round 12): the coarse quantizer now trains on
-    the same deterministic `sample_size` subsample as the PQ codebooks
-    (it previously saw the full corpus). For corpora larger than
-    `sample_size` a default-argument REBUILD of a pre-round-12 index
-    therefore produces different (not worse — see RECALL.md) centroids
-    and cell assignments; pass `sample_size` >= the corpus row count
-    to reproduce the old full-corpus centroids bit-for-bit."""
-    from chroma_rs_spark.operators.centroids import _md5_sample
-    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-    from chroma_rs_spark.operators.pq import _ivfpq_residuals, train_pq_codebooks
+    Both train on one md5 sample with numpy Lloyd's (pq.train_ivfpq);
+    a cell left with no sample row raises ValueError. COMPATIBILITY
+    NOTE: a REBUILD moves the coarse centroids (float64 means, not the
+    SQL loop's micro-unit means; recall in RECALL.md); a persisted
+    index loads and serves unchanged."""
+    from chroma_rs_spark.operators.pq import train_ivfpq
 
-    unit = _candidate_domain(items_df(engine, coll), _metric(coll, "ivfpq"))
-    cents = train_centroids_kmeans(
-        unit,
-        n_centroids=n_centroids,
-        max_iter=max_iter,
-        item_id="id",
-        item_emb="embedding",
-        # coarse quantizer trains on the deterministic sample too —
-        # the round-12 scale proof measured full-corpus Lloyd's at
-        # 637 s for 409.6k x 64 cells vs ~4 s sampled, and a sampled
-        # coarse quantizer is the standard billion-scale build
-        sample_size=sample_size,
-    )
-    # Sample BEFORE the residual computation: train_pq_codebooks takes
-    # the sample_size rows with the smallest (md5(id), id), so taking
-    # the same rows here first selects the IDENTICAL training set
-    # (bit-identical codebooks) while the assign-cells expression — the
-    # encode chain's hottest term — runs on sample_size rows instead of
-    # the whole corpus (the round-12 scale proof measured the
-    # difference at 409.6k rows x 64 cells: ~370 s -> seconds).
-    unit_sample = _md5_sample(unit, "id", sample_size).localCheckpoint()
-    books = train_pq_codebooks(
-        _ivfpq_residuals(unit_sample, cents, "id", "embedding"),
-        m=m,
-        k=k,
-        max_iter=pq_max_iter,
-        sample_size=sample_size,
-        item_id="_vid",
-        item_emb="_r",
+    cents, books = train_ivfpq(
+        _candidate_domain(items_df(engine, coll), _metric(coll, "ivfpq")),
+        n_centroids=n_centroids, max_iter=max_iter, m=m, k=k,
+        pq_max_iter=pq_max_iter, sample_size=sample_size,
+        item_id="id", item_emb="embedding",
     )
     root = os.path.join(engine.collection_dir(coll.id), IVFPQ_INDEX_DIR)
     _invalidate_codes(engine, coll, "ivfpq")
@@ -1340,28 +1312,16 @@ def _ivfpq_pool(
     job. The SQL forms (`ivfpq_adc_topk_df` and friends) serve the
     oracle-replayed rows; on the same codes and probes both return the
     same ADC rows."""
-    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-    from chroma_rs_spark.operators.pq import (
-        _ivfpq_residuals,
-        ivfpq_probes,
-        pq_adc_topk,
-        train_pq_codebooks,
-    )
+    from chroma_rs_spark.operators.pq import ivfpq_probes, pq_adc_topk, train_ivfpq
 
     unit = _candidate_domain(df, "cosine")
     loaded = _load_index(engine, coll, "ivfpq")
     persisted = None
     if loaded is None:
-        cents = train_centroids_kmeans(
-            unit, item_id="id", item_emb="embedding", strict=False
+        loaded = cents, books = train_ivfpq(
+            unit, m=_default_m(query_embeddings), item_id="id",
+            item_emb="embedding", strict=False,
         )
-        books = train_pq_codebooks(
-            _ivfpq_residuals(unit, cents, "id", "embedding"),
-            m=_default_m(query_embeddings),
-            item_id="_vid",
-            item_emb="_r",
-        )
-        loaded = (cents, books)
     else:
         cents, books = loaded
         persisted = _load_codes(engine, coll, "ivfpq", expected_m=books.shape[0])

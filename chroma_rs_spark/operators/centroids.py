@@ -3,9 +3,12 @@ engine's one Lloyd's k-means loop.
 
 `label_centroids` averages an embedding column per group and
 `assign_nearest_centroid` re-assigns rows to their nearest centroid.
-`_lloyd` is the fused fixed-point iteration behind every trained index:
-`kmeans` (IVF centroids, SemDeDup clusters) runs it over one group and
+`_lloyd` is the fused fixed-point iteration behind every
+SQL-replayable trained index: `kmeans` (IVF centroids, SemDeDup
+clusters) runs it over one group and
 `operators/pq.py:train_pq_codebooks_df` runs it grouped by subspace.
+The collection's PQ and IVF-PQ builds train on a collected sample with
+the numpy loop instead (operators/kernel.py:lloyd).
 `_md5_sample` is the one training-sample and seed rule.
 
 Cross-engine determinism: float averages are partition-order-dependent

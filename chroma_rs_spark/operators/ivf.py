@@ -192,7 +192,6 @@ def train_centroids_kmeans(
     item_emb: str = "embedding",
     strict: bool = True,
     dim: int | None = None,
-    sample_size: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """k-means-trained IVF centroids — the real index-build step the
     lowest-id placeholder stands in for (see module docstring).
@@ -203,28 +202,11 @@ def train_centroids_kmeans(
     assignment/probe/search plan is unchanged: pass the result as
     `ivf_topk(..., precollected=(trained, queries))`. At 100 TB this
     runs once at index-build time and the matrix persists next to the
-    collection.
-
-    `sample_size`: when set, Lloyd's runs on the `sample_size` rows
-    with the smallest (md5(id), id) — the SAME deterministic uniform
-    draw the PQ codebook trainer and the k-means seeder use. At 100 TB
-    a coarse quantizer trained on the full corpus pays max_iter full
-    scans with a k x dim expression per row for centroids that a
-    ~10^4-row sample estimates to within quantization noise (the Faiss
-    convention: train on a sample, assign the corpus once at encode
-    time). The round-12 scale proof measured the difference at 409.6k
-    rows x 64 cells: 637 s full-corpus vs ~4 s sampled. None (the
-    default) keeps the full-corpus fixed point — the oracle-replayed
-    suite rows (knn_ivf_trained) depend on it.
+    collection. It trains on every row of `items`, with the
+    SQL-replayable loop the oracle rows (knn_ivf_trained) replay.
     """
-    from chroma_rs_spark.operators.centroids import _md5_sample, kmeans
+    from chroma_rs_spark.operators.centroids import kmeans
 
-    if sample_size is not None:
-        # the loop re-reads its input max_iter times; pin the sample
-        # so the sort-limit isn't re-run per iteration
-        items = _md5_sample(
-            items.filter(F.col(item_emb).isNotNull()), item_id, sample_size
-        ).localCheckpoint()
     _, cents = kmeans(
         items.select(item_id, item_emb),
         k=n_centroids,

@@ -15,8 +15,10 @@ of that arithmetic, so the paths agree bit-for-bit by construction:
 * `fold_dot` / `fold_norms` / `fold_l2` — the same sums in a SQL
   fold's order, for numpy forms that replay a SQL form bit for bit;
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
+* `assign_residuals` — the IVF-PQ cell-and-residual step;
 * `probe_cells` — the IVF probe selection of `ivf_topk` and of the
   collection's IVF-PQ search (`pq.ivfpq_probes`);
+* `lloyd` — the float64 Lloyd's k-means of the PQ/IVF-PQ trainers;
 * `topk_per_query` — per-query `lexsort((ids, d))[:k]` over finite
   entries, string ids lexsorted as numpy U-strings;
 * `pair_topk` — the tie-inclusive threshold select of the pair tiles;
@@ -122,6 +124,18 @@ def rounded(x: np.ndarray, fold_zero: bool = True) -> np.ndarray:
     return r + 0.0 if fold_zero else r
 
 
+def assign_residuals(x: np.ndarray, cents: np.ndarray):
+    """(ok, pick, resid): the numpy `pq._ivfpq_residuals`, bit for bit.
+    `ok` masks the non-zero-norm rows of `x`, `pick` is their cosine
+    cell (a row of `cents`, ties low), `resid` is x[ok] - cents[pick]."""
+    xnorm = fold_norms(x)
+    ok = xnorm != 0.0
+    x, xnorm = x[ok], xnorm[ok]
+    cos = 1.0 - fold_dot(x, cents) / (xnorm[:, None] * fold_norms(cents)[None, :])
+    pick = np.argmin(rounded(cos, fold_zero=False), axis=1)
+    return ok, pick, x - cents[pick]
+
+
 def probe_cells(cids: np.ndarray, d: np.ndarray, n_probe: int) -> list[np.ndarray]:
     """Each query's `n_probe` nearest cells from the (n_cells, n_queries)
     rounded cosine distances `d`: `lexsort((cids, d))[:n_probe]` per
@@ -134,6 +148,26 @@ def probe_cells(cids: np.ndarray, d: np.ndarray, n_probe: int) -> list[np.ndarra
         ids, dj = cids[fin], d[fin, j]
         out.append(ids[np.lexsort((ids, dj))[:n_probe]])
     return out
+
+
+def lloyd(x: np.ndarray, k: int, max_iter: int) -> np.ndarray:
+    """(k, dim) Lloyd's k-means of the rows of `x` (k <= len(x)) seeded
+    with its first k rows: squared-L2 argmin (ties low), float64 means,
+    an empty cluster keeps its centroid; stops at a fixed point."""
+    if k < 1 or max_iter < 1:
+        raise ValueError(f"k-means: k must be >= 1, max_iter too; got {k}, {max_iter}")
+    cents = x[:k].copy()
+    for _ in range(max_iter):
+        lab = np.argmin(distances("l2", x, cents), axis=1)
+        new = cents.copy()
+        for ci in range(k):
+            mask = lab == ci
+            if mask.any():
+                new[ci] = x[mask].mean(axis=0)
+        if np.array_equal(new, cents):
+            break
+        cents = new
+    return cents
 
 
 def _sortable(ids: np.ndarray) -> np.ndarray:

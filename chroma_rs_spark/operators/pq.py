@@ -14,11 +14,10 @@ approximate distance is M table lookups + adds.
 
 Spark shapes (matching the repo's discipline):
 
-* **train** — on a bounded, md5-deterministic SAMPLE collected to the
-  driver (the universal PQ practice: Faiss trains codebooks on a
-  sample, not the corpus; the artifact is M*K*(dim/M) doubles — tiny
-  by contract, like the IVF centroid collects in operators/ivf.py).
-  numpy Lloyd's with deterministic seeds; bit-reproducible.
+* **train** — kernel.lloyd on a bounded, md5-deterministic SAMPLE
+  collected to the driver in one job (the universal PQ practice: Faiss
+  trains on a sample; the artifact is M*K*(dim/M) doubles), for the
+  IVF-PQ cells too (`train_ivfpq`); deterministic seeds, bit-reproducible.
 * **encode** — distributed, shuffle-free: one vectorized Arrow pass
   computes all-subspace argmins on the shared numpy kernel
   (operators/kernel.py). This is the justified Pandas-UDF case: M*K
@@ -47,12 +46,11 @@ Spark shapes (matching the repo's discipline):
   (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`) run the SQL
   forms: `ivfpq_codes_df`, `ivfpq_probe_cells` (collected once by
   `_collect_probe_cells` to prune a cell-partitioned code tier) and
-  `ivfpq_adc_topk_df`. `_ivfpq_residuals` is the one SQL
-  assign-and-subtract step, shared by collection codebook training
-  and the SQL encode. The numpy forms replay the SQL forms'
-  arithmetic (in-order folds, round-6, ties low), so the Arrow encode
-  assigns the same codes and the numpy ADC returns the same rows on
-  the same codes and probes (tests/test_ivfpq.py).
+  `ivfpq_adc_topk_df`; `_ivfpq_residuals` is the SQL form of
+  `kernel.assign_residuals`. The numpy forms replay the SQL forms'
+  arithmetic (in-order folds, round-6, ties low), so they assign the
+  same cells, residuals and codes, and the numpy ADC returns the same
+  rows on the same codes and probes (tests/test_ivfpq.py).
 
 Verification: tests/test_pq.py pins encode codes and ADC distances
 bit-for-bit against a pure-numpy reference and checks determinism;
@@ -66,10 +64,9 @@ verbatim), and `pq_topk` runs the TRAINED chain end to end —
 (operators/centroids.py:_lloyd — micro-unit HUGEINT means, in-order
 round-6 folds) run grouped by subspace, so the DuckDB twin unrolls
 the full training and replays encode + LUT + ADC + exact rescore on
-the trained tables. The numpy `train_pq_codebooks` trainer remains
-the vectorized production alternative the collection index builds
-use, recall-banded rather than hash-gated (BLAS pairwise summation
-is not SQL-replayable).
+the trained tables. The collection builds use the numpy trainers
+(`train_pq_codebooks`, `train_ivfpq`): recall-banded rather than
+hash-gated, since float64 means are not SQL-replayable.
 """
 
 from __future__ import annotations
@@ -82,6 +79,31 @@ from pyspark.sql import functions as F
 from chroma_rs_spark.operators import kernel
 from chroma_rs_spark.operators.centroids import _lloyd, _md5_sample
 from chroma_rs_spark.operators.kernel import DIST_DECIMALS
+
+
+def _md5_matrix(items: DataFrame, item_id: str, item_emb: str, n: int) -> np.ndarray:
+    """The `n` non-NULL vectors of smallest (md5(id), id), collected in
+    that order (one Spark job): the numpy trainers' one sample."""
+    import numpy as np
+
+    vecs = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
+    rows = _md5_sample(vecs, item_id, n).collect()
+    return np.asarray([r[item_emb] for r in rows], dtype=np.float64)
+
+
+def _train_codebooks(x: np.ndarray, m: int, k: int, max_iter: int) -> np.ndarray:
+    """(m, k, dim//m) codebooks: kernel.lloyd per subspace of `x`."""
+    import numpy as np
+
+    if not len(x):
+        raise ValueError("train_pq_codebooks: no vectors to train on")
+    sub, rem = divmod(x.shape[1], m)
+    if rem:
+        raise ValueError(f"dim {x.shape[1]} not divisible by m={m}")
+    # tiny corpora: fewer centroids than asked-for is the only sound
+    # choice (deterministic — seeds are then ALL sample rows in order)
+    subs = (x[:, mi * sub : (mi + 1) * sub] for mi in range(m))
+    return np.stack([kernel.lloyd(s, min(k, len(x)), max_iter) for s in subs])
 
 
 def train_pq_codebooks(
@@ -99,50 +121,43 @@ def train_pq_codebooks(
     index artifact (M*K*(dim/M) doubles; 8 KiB at m=8, k=16, dim=64).
 
     The sample is the `sample_size` ids with the smallest
-    (md5(id), id) — uniform, engine-independent, reproducible. Seeds
-    per subspace are the first k sample rows in that order. Lloyd's
-    runs in float64 numpy; empty clusters keep their previous centroid
-    (deterministic, matches the DataFrame kmeans' fixed-point
-    convention of never inventing centroids).
+    (md5(id), id) — uniform, engine-independent, reproducible. Each
+    subspace runs kernel.lloyd, seeded with the first k sample rows.
     """
+    sample = _md5_matrix(items, item_id, item_emb, sample_size)
+    return _train_codebooks(sample, m, k, max_iter)
+
+
+def train_ivfpq(
+    items: DataFrame,
+    n_centroids: int = 16,
+    max_iter: int = 5,
+    m: int = 8,
+    k: int = 16,
+    pq_max_iter: int = 10,
+    sample_size: int = 4096,
+    item_id: str = "vec_id",
+    item_emb: str = "embedding",
+    strict: bool = True,
+) -> tuple[list[tuple[int, list[float]]], np.ndarray]:
+    """(centroids, codebooks) from one collected md5 sample of unit
+    vectors (Jégou et al., TPAMI 2011): kernel.lloyd cells labelled in
+    seed order, kernel.assign_residuals, kernel.lloyd codebooks. A
+    cell with no sample row raises when `strict`, else it is dropped."""
     import numpy as np
 
-    rows = _md5_sample(
-        items.filter(F.col(item_emb).isNotNull()).select(
-            F.col(item_id).alias("id"),
-            F.col(item_emb).cast("array<double>").alias("emb"),
-        ),
-        "id",
-        sample_size,
-    ).collect()
-    if not rows:
-        raise ValueError("train_pq_codebooks: no vectors to train on")
-    sample = np.asarray([r["emb"] for r in rows], dtype=np.float64)
-    dim = sample.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    # tiny corpora: fewer centroids than asked-for is the only sound
-    # choice (deterministic — seeds are then ALL sample rows in order)
-    k = min(k, len(sample))
-    books = np.empty((m, k, sub), dtype=np.float64)
-    for mi in range(m):
-        x = sample[:, mi * sub : (mi + 1) * sub]
-        cents = x[:k].copy()
-        for _ in range(max_iter):
-            # (n, k) squared L2 via the expansion — exact enough for
-            # training (codebooks are data, not a checked contract)
-            lab = np.argmin(kernel.distances("l2", x, cents), axis=1)
-            new = cents.copy()
-            for ci in range(k):
-                mask = lab == ci
-                if mask.any():
-                    new[ci] = x[mask].mean(axis=0)
-            if np.array_equal(new, cents):
-                break
-            cents = new
-        books[mi] = cents
-    return books
+    x = _md5_matrix(items, item_id, item_emb, sample_size)
+    need = n_centroids if strict else 1
+    live = np.arange(min(len(x), n_centroids))
+    if len(live) >= need:
+        cents = kernel.lloyd(x, len(live), max_iter)
+        _, pick, resid = kernel.assign_residuals(x, cents)
+        live = np.unique(pick)
+    if len(live) < need:
+        msg = f"only {len(live)} of {n_centroids} clusters survived training"
+        raise ValueError(f"train_ivfpq: {msg}; lower n_centroids or deduplicate")
+    books = _train_codebooks(resid, m, k, pq_max_iter)
+    return [(int(c), cents[c].tolist()) for c in live], books
 
 
 def pq_encode(
@@ -724,15 +739,11 @@ def _ivfpq_codes_arrow(
     tier and encodes late rows at query time. `ivfpq_codes_df` is the
     SQL form of the same op, for the oracle-replayed rows.
 
-    It replays the SQL form's arithmetic: the cosine cell is the argmin
-    of round-6 `1 - dot / (|x| |c|)` with dot and norms folded in
-    position order (assign_cells), the residual is an exact subtract,
-    and each subspace code is the argmin of the round-6 in-order
-    squared-L2 fold (_code_least_sql); argmin's first minimum breaks
-    ties to the lower cell id and code, like the SQL `least(struct)`.
-    So both forms assign the same (cell, codes). Zero-norm/NULL/
-    wrong-dim vectors have no cosine cell and drop, as in the SQL
-    form."""
+    It replays the SQL form's arithmetic: cells and residuals come
+    from kernel.assign_residuals, and each subspace code is the argmin
+    of the round-6 in-order squared-L2 fold (_code_least_sql, ties to
+    the lower code). So both forms assign the same (cell, codes).
+    Zero-norm/NULL/wrong-dim vectors drop, as in the SQL form."""
     import numpy as np
     import pandas as pd
 
@@ -741,19 +752,13 @@ def _ivfpq_codes_arrow(
     order = sorted(centroids, key=lambda c: c[0])
     cents = np.asarray([vec for _cid, vec in order], dtype=np.float64)
     cids = np.asarray([cid for cid, _vec in order], dtype=np.int64)
-    cnorm = kernel.fold_norms(cents)
 
     def encode(pdf):
         x = kernel.matrix(pdf[item_emb])
-        xnorm = kernel.fold_norms(x)
-        ok = xnorm != 0.0
-        x, xnorm = x[ok], xnorm[ok]
-        if not len(x):
+        ok, pick, resid = kernel.assign_residuals(x, cents)
+        if not len(resid):
             return None
-        cos = 1.0 - kernel.fold_dot(x, cents) / (xnorm[:, None] * cnorm[None, :])
-        pick = np.argmin(kernel.rounded(cos, fold_zero=False), axis=1)
-        resid = x - cents[pick]
-        codes = np.empty((len(x), m), dtype=np.int32)
+        codes = np.empty((len(resid), m), dtype=np.int32)
         for mi in range(m):
             d = kernel.fold_l2(resid[:, mi * sub : (mi + 1) * sub], books[mi])
             codes[:, mi] = np.argmin(kernel.rounded(d, fold_zero=False), axis=1)
@@ -793,10 +798,10 @@ def _ivfpq_residuals(
     """(_vid, cell, _r): each vector's cosine cell (map-side
     least-struct over centroid literals, operators/ivf.py:assign_cells)
     and its residual against that cell's centroid — the domain the
-    composite index both trains its codebooks on and encodes. The
-    subtraction is a `zip_with` over the broadcast centroid relation
-    (exact binary doubles, replayable by the SQL oracle). Zero-norm
-    vectors have no cosine cell and drop."""
+    SQL encode (`ivfpq_codes_df`) quantizes; kernel.assign_residuals
+    is its numpy form. The subtraction is a `zip_with` over the
+    broadcast centroid relation (exact binary doubles, replayable by
+    the SQL oracle). Zero-norm vectors have no cosine cell and drop."""
     from chroma_rs_spark.operators.ivf import assign_cells
 
     if cent_df is None:

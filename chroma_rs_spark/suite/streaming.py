@@ -607,7 +607,7 @@ def _state_partitions() -> str:
     a keyspace sizing knob, not a parallelism knob. Every micro-batch
     commits (writes + fsyncs) one state-store delta PER PARTITION, so
     partition count multiplies the stream's fsync count. Round-14
-    counter evidence (tools/r14_stream_probe.py, StreamingQueryProgress
+    counter evidence (StreamingQueryProgress
     stateOperators.commitTimeMs): at sf0.1 the commit time dominates
     the whole drain — with 8 stores the per-run commit sum ranged
     3.6-23.9 s as the host's I/O waves came and went (the r13 "8-CPU

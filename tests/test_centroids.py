@@ -196,14 +196,26 @@ def test_kmeans_converged_pair_is_self_consistent(spark):
 
 
 @pytest.mark.parametrize(
-    "entry", ["kmeans", "train_centroids_kmeans", "train_pq_codebooks_df"]
+    "entry",
+    [
+        "kmeans",
+        "train_centroids_kmeans",
+        "train_pq_codebooks_df",
+        "train_pq_codebooks",
+        "train_ivfpq",
+    ],
 )
 def test_k_below_one_is_rejected(spark, entry):
-    """k < 1 is a precondition error of the shared Lloyd's loop, not an
-    empty index: every entry point that trains through it raises."""
+    """k < 1 is a precondition error of both Lloyd's loops (the SQL
+    `_lloyd` and the numpy `kernel.lloyd`), not an empty index: every
+    entry point that trains through them raises."""
     from chroma_rs_spark.operators.centroids import kmeans
     from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-    from chroma_rs_spark.operators.pq import train_pq_codebooks_df
+    from chroma_rs_spark.operators.pq import (
+        train_ivfpq,
+        train_pq_codebooks,
+        train_pq_codebooks_df,
+    )
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, -float(i), 0.5]) for i in range(8)],
@@ -217,6 +229,10 @@ def test_k_below_one_is_rejected(spark, entry):
         "train_pq_codebooks_df": lambda: train_pq_codebooks_df(
             emb, m=2, k=0, max_iter=2, sample_size=8
         ),
+        "train_pq_codebooks": lambda: train_pq_codebooks(
+            emb, m=2, k=0, max_iter=2, sample_size=8
+        ),
+        "train_ivfpq": lambda: train_ivfpq(emb, n_centroids=0, m=2),
     }[entry]
     with pytest.raises(ValueError, match="k must be >= 1"):
         train()

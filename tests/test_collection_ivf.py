@@ -113,7 +113,23 @@ def test_ivf_requires_cosine_and_known_index(engine):
         c.query([[1.0, 0.0]], index="hnsw")
 
 
-def test_build_ivf_index_empty_collection_raises_loudly(engine):
+@pytest.mark.parametrize("build", ["build_ivf_index", "build_ivfpq_index"])
+def test_build_ivf_index_empty_collection_raises_loudly(engine, build):
     c = engine.create_collection("ivf_empty", {"hnsw:space": "cosine"})
     with pytest.raises(ValueError, match="survived"):
-        c.build_ivf_index(n_centroids=4)
+        getattr(c, build)(n_centroids=4)
+
+
+@pytest.mark.parametrize("index", ["ivf", "ivfpq"])
+def test_duplicated_corpus_build_raises_and_transient_query_answers(engine, index):
+    """Twelve copies of one vector: every cell but the first ends with
+    no row, so the build refuses to hand back a smaller index, while a
+    transient query on the same corpus keeps the surviving cell."""
+    c = engine.create_collection("ivf_dup", {"hnsw:space": "cosine"})
+    vec = [0.6, 0.8, 0.0, 0.0]
+    c.add(ids=[f"d{i:02d}" for i in range(12)], embeddings=[vec] * 12)
+    with pytest.raises(ValueError, match="survived"):
+        getattr(c, f"build_{index}_index")(n_centroids=4)
+    res = c.query([vec], n_results=3, index=index).collect()
+    assert [r["id"] for r in res] == ["d00", "d01", "d02"]
+    assert all(r["distance"] == 0.0 for r in res)

@@ -250,7 +250,7 @@ def test_removed_index_takes_the_transient_path(ivfpq_coll, engine, monkeypatch)
     import shutil
 
     from chroma_rs_spark.collection import IVFPQ_INDEX_DIR, _INDEX_MEMO, _load_index
-    from chroma_rs_spark.operators import ivf
+    from chroma_rs_spark.operators import pq
 
     c, ids, vecs = ivfpq_coll
     c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
@@ -260,16 +260,39 @@ def test_removed_index_takes_the_transient_path(ivfpq_coll, engine, monkeypatch)
     shutil.rmtree(root)
 
     trained = []
-    train = ivf.train_centroids_kmeans
+    train = pq.train_ivfpq
 
     def spy(*args, **kwargs):
         trained.append(kwargs)
         return train(*args, **kwargs)
 
-    monkeypatch.setattr(ivf, "train_centroids_kmeans", spy)
+    monkeypatch.setattr(pq, "train_ivfpq", spy)
     res = c.query(
         [vecs[0]], n_results=3, index="ivfpq", n_probe=2, oversample=6
     ).collect()
     assert len(trained) == 1 and trained[0]["strict"] is False
     assert len(res) == 3 and res[0]["id"] == ids[0]
     assert _load_index(engine, c, "ivfpq") is None and root not in _INDEX_MEMO
+
+
+def test_rebuild_writes_identical_tables(ivfpq_coll, engine):
+    """Training is a function of the collection: the md5 sample, its
+    seeds and numpy Lloyd's are deterministic, so two builds of one
+    collection write the same centroid and codebook tables."""
+    from chroma_rs_spark.collection import IVFPQ_INDEX_DIR
+
+    c, _ids, _vecs = ivfpq_coll
+    root = os.path.join(engine.collection_dir(c.id), IVFPQ_INDEX_DIR)
+
+    def tables():
+        c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=40)
+        return [
+            sorted(tuple(r) for r in engine.spark.read.parquet(
+                os.path.join(root, name)
+            ).collect())
+            for name in ("centroids", "codebooks")
+        ]
+
+    first = tables()
+    assert len(first[0]) == 4 * 4 and len(first[1]) == 2 * 8 * 2
+    assert tables() == first

@@ -161,29 +161,3 @@ def test_ivf_recall_beats_probe_fraction_on_clustered_corpus(spark):
     # on the clustered corpus recall must be far above that fraction
     assert len(trained) >= 3
     assert avg >= 0.9, avg
-
-
-def test_train_centroids_kmeans_sampled_is_deterministic(spark):
-    """sample_size (round 12): the sampled trainer picks the
-    md5-ordered draw, trains on it, and is run-to-run deterministic;
-    full-corpus default is unchanged."""
-    from chroma_rs_spark.operators.ivf import train_centroids_kmeans
-
-    rows = [
-        (i, [float((i * 37 + d * 11) % 13) - 6.0 for d in range(8)])
-        for i in range(200)
-    ]
-    items = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    a = train_centroids_kmeans(
-        items, n_centroids=4, max_iter=3, sample_size=64, strict=False
-    )
-    b = train_centroids_kmeans(
-        items, n_centroids=4, max_iter=3, sample_size=64, strict=False
-    )
-    assert a == b and len(a) >= 1
-    full = train_centroids_kmeans(
-        items, n_centroids=4, max_iter=3, strict=False
-    )
-    assert len(full) >= 1  # default path still trains on the corpus

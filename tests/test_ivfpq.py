@@ -168,3 +168,49 @@ def test_numpy_adc_matches_sql_adc(spark):
         codes.unpersist()
     assert len(sql) == 50
     assert got == sql
+
+
+def test_numpy_residuals_match_sql_residuals(spark):
+    """`kernel.assign_residuals`, the cell-and-residual step of the
+    trainer and of the Arrow encode, returns the same (id, cell,
+    residual) rows as the SQL `_ivfpq_residuals` on the same centroids,
+    every double compared by float.hex. Row 900 lies exactly between cells 3 and 5
+    (both sides pick the lower cell id); row 901 has zero norm and has
+    no cosine cell on either side."""
+    from chroma_rs_spark.operators.kernel import assign_residuals
+    from chroma_rs_spark.operators.pq import _ivfpq_residuals
+
+    rng = np.random.RandomState(7)
+    vecs = {i: rng.normal(size=4).tolist() for i in range(60)}
+    vecs[900] = [2.0, 2.0, 0.0, 0.0]
+    vecs[901] = [0.0, 0.0, 0.0, 0.0]
+    cents = [
+        (5, [0.0, 1.0, 0.0, 0.0]),
+        (3, [1.0, 0.0, 0.0, 0.0]),
+        (8, [0.0, 0.0, 0.6, 0.8]),
+        (11, [-0.5, 0.25, -0.5, 0.25]),
+    ]
+    items = spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<double>"
+    )
+
+    def hexed(v):
+        return tuple(float(x).hex() for x in v)
+
+    sql = sorted(
+        (r["_vid"], r["cell"], hexed(r["_r"]))
+        for r in _ivfpq_residuals(items, cents, "vec_id", "embedding").collect()
+    )
+    order = sorted(cents)
+    cids = [cid for cid, _ in order]
+    ids = np.asarray(list(vecs))
+    ok, pick, resid = assign_residuals(
+        np.asarray(list(vecs.values())), np.asarray([v for _, v in order])
+    )
+    got = sorted(
+        (int(i), cids[p], hexed(r)) for i, p, r in zip(ids[ok], pick, resid)
+    )
+    assert len(got) == 61
+    assert (900, 3, hexed([1.0, 2.0, 0.0, 0.0])) in got
+    assert 901 not in {row[0] for row in got}
+    assert got == sql

@@ -54,6 +54,42 @@ def test_knn_ivf_trained_job_ceiling(spark):
     assert cold <= 24, f"knn_ivf_trained cold de-fused: {cold} jobs (was 17)"
 
 
+def _ceiling_collection(spark, tmp_path):
+    """120 seeded 16-dim vectors in a cosine collection."""
+    import numpy as np
+
+    from chroma_rs_spark.catalog import Engine
+
+    engine = Engine(spark, str(tmp_path / "wh"))
+    c = engine.create_collection("ceiling", {"hnsw:space": "cosine"})
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(120, 16)).tolist()
+    c.add(ids=[f"v{i:03d}" for i in range(120)], embeddings=vecs)
+    return c, vecs, rng
+
+
+def _build_ceiling_index(c):
+    c.build_ivfpq_index(n_centroids=4, max_iter=2, m=4, k=8, sample_size=120)
+
+
+def test_collection_ivfpq_build_job_ceiling(spark, tmp_path):
+    """The IVF-PQ build trains from one collected md5 sample with numpy
+    Lloyd's, so it runs the sample collect and the two table writes;
+    materializing the codes is one Arrow encode write. Before the
+    numpy trainer the build ran one SQL job per Lloyd's iteration, two
+    sample checkpoints and two sample collects (12 jobs on the
+    perfbench vector_batch build)."""
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    c, _vecs, _rng = _ceiling_collection(spark, tmp_path)
+    build, _, _ = count_jobs_stages(spark, lambda: _build_ceiling_index(c))
+    materialize, _, _ = count_jobs_stages(spark, c.materialize_ivfpq_codes)
+    assert build <= 4, f"build_ivfpq_index ran {build} jobs (ceiling 4)"
+    assert materialize <= 3, (
+        f"materialize_ivfpq_codes ran {materialize} jobs (ceiling 3)"
+    )
+
+
 def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
     """A warm `query(index="ivfpq")` on a built, materialized index
     after an upsert: the loaded index is memoized and the probe cells
@@ -65,17 +101,10 @@ def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
     collect jobs (the SQL LUT/ADC chain and the pool distinct), 25 in
     all. The ceiling sits two jobs above today's 11, so a re-split of
     the candidate pool into driver round trips fails here."""
-    import numpy as np
-
-    from chroma_rs_spark.catalog import Engine
     from chroma_rs_spark.jobcount import count_jobs_stages
 
-    engine = Engine(spark, str(tmp_path / "wh"))
-    c = engine.create_collection("ceiling", {"hnsw:space": "cosine"})
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(120, 16)).tolist()
-    c.add(ids=[f"v{i:03d}" for i in range(120)], embeddings=vecs)
-    c.build_ivfpq_index(n_centroids=4, max_iter=2, m=4, k=8, sample_size=120)
+    c, vecs, rng = _ceiling_collection(spark, tmp_path)
+    _build_ceiling_index(c)
     c.materialize_ivfpq_codes()
     c.upsert(
         ids=[f"u{i}" for i in range(8)],
