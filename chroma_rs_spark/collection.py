@@ -42,7 +42,7 @@ from chroma_rs_spark.errors import (
 )
 from chroma_rs_spark.filters import compile_where, compile_where_document
 from chroma_rs_spark.functions.vector import l2_norm
-from chroma_rs_spark.operators.knn import knn_exact
+from chroma_rs_spark.operators.knn import knn_exact_local_topk
 
 ITEM_SCHEMA = T.StructType(
     [
@@ -281,25 +281,25 @@ def _check_batch_ids_unique(ids: Sequence[str], op: str) -> None:
         raise DuplicateIDError(f"duplicate ids within {op}() batch")
 
 
-def _check_dim(engine: Engine, coll: Collection, df: DataFrame) -> None:
-    row = engine._registry_row(coll.id)
-    dims = [
-        r[0]
-        for r in df.select(F.size("embedding").alias("d"))
-        .where(F.col("d") >= 0)
-        .distinct()
-        .collect()
-    ]
+def _list_dims(embeddings: Sequence | None) -> set[int]:
+    """The dims of a driver-side embedding list (add / upsert /
+    update): checked on the driver, with no Spark job."""
+    return {len(e) for e in embeddings or () if e is not None}
+
+
+def _check_dim(engine: Engine, coll: Collection, dims: set[int]) -> None:
+    """Register or check the collection dim against the embedding
+    `dims` of one batch."""
     if not dims:
         return
+    row = engine._registry_row(coll.id)
     if len(dims) > 1:
         raise DimensionMismatchError(f"mixed embedding dims in add: {sorted(dims)}")
+    (dim,) = dims
     if row.get("dim") is None:
-        engine._update_registry_row(coll.id, dim=int(dims[0]))
-    elif int(dims[0]) != int(row["dim"]):
-        raise DimensionMismatchError(
-            f"expected dim {row['dim']}, got {dims[0]}"
-        )
+        engine._update_registry_row(coll.id, dim=int(dim))
+    elif int(dim) != int(row["dim"]):
+        raise DimensionMismatchError(f"expected dim {row['dim']}, got {dim}")
 
 
 def _recover_interrupted_overwrite(path: str, cleanup: bool = False) -> None:
@@ -501,7 +501,7 @@ def add(
     dup = new.join(existing.select("id"), "id", "left_semi").count()
     if dup:
         raise DuplicateIDError(f"{dup} ids already exist in collection")
-    _check_dim(engine, coll, new)
+    _check_dim(engine, coll, _list_dims(embeddings))
     _write(engine, coll, new, engine.data_path(coll.id), "append")
     return len(ids)
 
@@ -526,7 +526,8 @@ def add_df(engine: Engine, coll: Collection, df: DataFrame) -> None:
             else F.lit(None).cast("map<string,string>")
         ).alias("metadata"),
     )
-    _check_dim(engine, coll, out)
+    dims = out.select(F.size("embedding").alias("d")).where(F.col("d") >= 0)
+    _check_dim(engine, coll, {r[0] for r in dims.distinct().collect()})
     _write(engine, coll, out, engine.data_path(coll.id), "append")
 
 
@@ -544,7 +545,7 @@ def upsert(
     _check_batch_ids_unique(ids, "upsert")
     embeddings = _auto_embed(coll, embeddings, documents)
     new = _items_from_args(engine, ids, embeddings, documents, metadatas)
-    _check_dim(engine, coll, new)
+    _check_dim(engine, coll, _list_dims(embeddings))
     existing = items_df(engine, coll)
     kept = existing.join(F.broadcast(new.select("id")), "id", "left_anti")
     _overwrite(engine, coll, kept.unionByName(new))
@@ -570,7 +571,7 @@ def update(
     patch = _items_from_args(engine, ids, embeddings, documents, metadatas)
     if embeddings is not None:
         # a patch may replace embeddings — same dim discipline as add
-        _check_dim(engine, coll, patch)
+        _check_dim(engine, coll, _list_dims(embeddings))
     existing = items_df(engine, coll)
     missing = [
         r["id"]
@@ -898,42 +899,35 @@ def _metric(coll: Collection, index: str | None = None) -> str:
 
 def _candidate_domain(df: DataFrame, metric: str) -> DataFrame:
     """The rows the ADC indexes train on and encode: non-NULL
-    embeddings, unit-normalized double vectors for cosine collections
-    (cosine ranking ≡ L2 on unit vectors; zero-norm vectors are
-    unscorable under cosine and drop, matching the exact path's
-    filter). Candidate-stage only: the final ranking always re-scores
-    exactly on the raw vectors."""
+    embeddings, and for cosine collections only the rows with a
+    nonzero stored norm (zero-norm vectors are unscorable under
+    cosine, matching the exact path's rule). The rows stay raw: for
+    cosine, the numpy trainers and the Arrow encodes take `unit=True`
+    and unit-normalize them themselves (cosine ranking ≡ L2 on unit
+    vectors, kernel.unit_rows), so no interpreted SQL lambda runs per
+    row and the filter is a plain predicate that sits below any id
+    join.
+    Candidate-stage only: the final ranking always re-scores exactly
+    on the raw vectors."""
     src = df.filter(F.col("embedding").isNotNull())
-    if metric != "cosine":
-        return src
-    return (
-        src.select(
-            "id",
-            "embedding",
-            l2_norm("CAST(embedding AS ARRAY<DOUBLE>)").alias("_n"),
-        )
-        .selectExpr(
-            "id",
-            "CASE WHEN _n = 0.0D THEN NULL"
-            " ELSE transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x / _n)"
-            " END AS embedding",
-        )
-        .filter(F.col("embedding").isNotNull())
-    )
+    if metric == "cosine":
+        src = src.filter(F.col("embedding_norm") != 0.0)
+    return src
 
 
-def _encode(index: str, rows: DataFrame, loaded) -> DataFrame:
+def _encode(index: str, rows: DataFrame, loaded, unit: bool) -> DataFrame:
     """Codes of `rows` (a _candidate_domain) under the loaded artifact
     of `index` — the one encode both materialize and the query path's
-    late-row freshness run."""
+    late-row freshness run; `unit` for cosine rows."""
     from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, pq_encode
 
     if index == "pq":
         return pq_encode(
-            rows, loaded, item_id="id", item_emb="embedding", id_type="string"
+            rows, loaded, item_id="id", item_emb="embedding", id_type="string",
+            unit=unit,
         )
     cents, books = loaded
-    return _ivfpq_codes_arrow(rows, books, cents, "id", "embedding")
+    return _ivfpq_codes_arrow(rows, books, cents, "id", "embedding", unit=unit)
 
 
 def _materialize_codes(engine: Engine, coll: Collection, index: str) -> str:
@@ -943,14 +937,15 @@ def _materialize_codes(engine: Engine, coll: Collection, index: str) -> str:
             f"materialize_{index}_codes requires build_{index}_index first"
         )
     path = os.path.join(engine.collection_dir(coll.id), _CODES[index][0])
-    rows = _candidate_domain(items_df(engine, coll), _metric(coll))
+    metric = _metric(coll)
+    rows = _candidate_domain(items_df(engine, coll), metric)
     # ivfpq codes are hive-partitioned BY CELL: a query touches n_probe
     # cells, so the probed-cell filter the query path applies prunes to
     # n_probe of n_cells directories at file-listing time — at 100 TB
     # the code scan reads n_probe/k_cells of the 3.2 TB tier before a
     # byte moves
     _atomic_index_write(
-        _encode(index, rows, loaded),
+        _encode(index, rows, loaded, unit=metric == "cosine"),
         path,
         partition_by="cell" if index == "ivfpq" else None,
     )
@@ -1023,6 +1018,7 @@ def build_pq_index(
         sample_size=sample_size,
         item_id="id",
         item_emb="embedding",
+        unit=metric == "cosine",
     )
     path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
     _invalidate_codes(engine, coll, "pq")
@@ -1063,7 +1059,7 @@ def build_ivfpq_index(
         _candidate_domain(items_df(engine, coll), _metric(coll, "ivfpq")),
         n_centroids=n_centroids, max_iter=max_iter, m=m, k=k,
         pq_max_iter=pq_max_iter, sample_size=sample_size,
-        item_id="id", item_emb="embedding",
+        item_id="id", item_emb="embedding", unit=True,
     )
     root = os.path.join(engine.collection_dir(coll.id), IVFPQ_INDEX_DIR)
     _invalidate_codes(engine, coll, "ivfpq")
@@ -1232,6 +1228,7 @@ def _fresh_codes(
     persisted: DataFrame,
     df: DataFrame,
     rows: DataFrame,
+    unit: bool,
     keep: Column | None = None,
 ) -> DataFrame:
     """Codes of the filtered items `df` under `index`: the materialized
@@ -1240,19 +1237,20 @@ def _fresh_codes(
     encoded on the fly from `rows` (their _candidate_domain). The
     current-ids semi keeps where-filtered and deleted rows out of the
     candidate pool — a selective filter must not starve the pool while
-    matching neighbors exist. Every freshness join runs on BARE id columns:
-    joining through the normalized rows forces the interpreted
-    unit-normalize over the whole corpus per query. The late-id set is
-    bounded by contract (adds since the last materialize), so it
-    broadcasts and only late rows normalize. `keep` runs after the
-    late-id anti-join, so rows it prunes are not re-encoded as late."""
+    matching neighbors exist. The freshness joins run on bare id
+    columns, and the late-id set is bounded by contract (adds since
+    the last materialize), so it broadcasts into a left-semi on the
+    raw rows. Only the late rows then reach the Arrow encode, which
+    unit-normalizes them itself (`unit`): no per-row SQL lambda runs
+    below or above the join. `keep` runs after the late-id
+    anti-join, so rows it prunes are not re-encoded as late."""
     cur_ids = df.filter(F.col("embedding").isNotNull()).select("id")
     late_ids = cur_ids.join(persisted.select("id"), "id", "left_anti")
     late = rows.join(F.broadcast(late_ids), "id", "left_semi")
     if keep is not None:
         persisted = persisted.filter(keep)
     return persisted.join(cur_ids, "id", "left_semi").unionByName(
-        _encode(index, late, loaded)
+        _encode(index, late, loaded, unit)
     )
 
 
@@ -1271,18 +1269,20 @@ def _pq_pool(
     from chroma_rs_spark.operators.pq import pq_adc_topk, train_pq_codebooks
 
     rows = _candidate_domain(df, metric)
+    unit = metric == "cosine"
     books = _load_index(engine, coll, "pq")
     persisted = None
     if books is None:
         books = train_pq_codebooks(
-            rows, m=_default_m(query_embeddings), item_id="id", item_emb="embedding"
+            rows, m=_default_m(query_embeddings), item_id="id",
+            item_emb="embedding", unit=unit,
         )
     else:
         persisted = _load_codes(engine, coll, "pq", expected_m=books.shape[0])
     if persisted is None:
-        codes = _encode("pq", rows, books)
+        codes = _encode("pq", rows, books, unit)
     else:
-        codes = _fresh_codes("pq", books, persisted, df, rows)
+        codes = _fresh_codes("pq", books, persisted, df, rows, unit)
     qlist = [
         (i, _unit(q) if metric == "cosine" else [float(x) for x in q])
         for i, q in enumerate(query_embeddings)
@@ -1314,13 +1314,13 @@ def _ivfpq_pool(
     same ADC rows."""
     from chroma_rs_spark.operators.pq import ivfpq_probes, pq_adc_topk, train_ivfpq
 
-    unit = _candidate_domain(df, "cosine")
+    rows = _candidate_domain(df, "cosine")
     loaded = _load_index(engine, coll, "ivfpq")
     persisted = None
     if loaded is None:
         loaded = cents, books = train_ivfpq(
-            unit, m=_default_m(query_embeddings), item_id="id",
-            item_emb="embedding", strict=False,
+            rows, m=_default_m(query_embeddings), item_id="id",
+            item_emb="embedding", strict=False, unit=True,
         )
     else:
         cents, books = loaded
@@ -1328,13 +1328,14 @@ def _ivfpq_pool(
     qlist = [(i, _unit(q)) for i, q in enumerate(query_embeddings)]
     probed = ivfpq_probes(cents, qlist, n_probe)
     if persisted is None:
-        codes = _encode("ivfpq", unit, loaded)
+        codes = _encode("ivfpq", rows, loaded, unit=True)
     else:
         # the probed cell ids prune the cell-partitioned code scan to
         # n_probe of n_cells hive directories before any code bytes move
         cells = sorted({int(c) for cs in probed for c in cs})
         codes = _fresh_codes(
-            "ivfpq", loaded, persisted, df, unit, keep=F.col("cell").isin(cells)
+            "ivfpq", loaded, persisted, df, rows, unit=True,
+            keep=F.col("cell").isin(cells),
         )
     return pq_adc_topk(
         codes, books, qlist, k=k, id_type="string", cells=(cents, probed)
@@ -1342,7 +1343,6 @@ def _ivfpq_pool(
 
 
 def _exact_topk(
-    engine: Engine,
     df: DataFrame,
     query_embeddings: Sequence[Sequence[float]],
     k: int,
@@ -1350,16 +1350,14 @@ def _exact_topk(
     pool: DataFrame | None = None,
 ) -> DataFrame:
     """The exact ranking the exact, pq and ivfpq paths end in:
-    knn_exact under the collection metric, on the add-time norm
+    knn_exact_local_topk under the collection metric — knn_exact's
+    arithmetic in the numpy kernel, bit for bit — on the add-time norm
     "index" (maintained by update/upsert: one stored norm per item
-    instead of one recompute per (item, query) pair; same doubles,
-    bit-identical results). With a candidate `pool` the items are
-    first restricted to its ids, so a pooled query returns exactly the
-    exact path's distances."""
-    # the probe vectors' length is the collection dim (enforced against
-    # the registry at add time) — unrolled codegen distance instead of
-    # the interpreted HOF fold
-    dim = len(query_embeddings[0]) if query_embeddings else None
+    instead of one recompute per (item, query) pair). Each partition
+    scores its rows in one Arrow pass and keeps k per query; only
+    those candidates shuffle into the final window. With a candidate
+    `pool` the items are first restricted to its ids, so a pooled
+    query returns exactly the exact path's distances."""
     if pool is not None:
         # the pool is bounded driver-side (<= n_queries * n_results *
         # oversample ids) — broadcast it, or the rescore semi-join
@@ -1368,23 +1366,17 @@ def _exact_topk(
         # (a left semi emits each item once, however often its id
         # repeats in the pool: no distinct, no shuffle)
         df = df.join(F.broadcast(pool), "id", "left_semi")
-        # dim=None ON PURPOSE: the pool is tiny, so the interpreted HOF
-        # fold costs nothing — while the unrolled form, FUSED with the
-        # semi-join candidate chain and the top-k sort into one
-        # whole-stage processNext(), blows janino's method limit and
-        # silently drops the stage to interpreted anyway (measured: 4
-        # codegen failures per pq/ivfpq query at dim=64). Bit-identical
-        # doubles either way (the knn_exact contract).
-        dim = None
-    return knn_exact(
+    ranked = knn_exact_local_topk(
         df,
-        _probe_df(engine.spark, query_embeddings),
+        [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
         k=k,
         metric=metric,
         item_id="id",
-        item_emb="embedding",
+        id_type="string",
         item_norm="embedding_norm" if metric == "cosine" else None,
-        dim=dim,
+    )
+    return ranked.select(
+        F.col("query_id").cast("int").alias("query_id"), "rank", "id", "distance"
     )
 
 
@@ -1398,7 +1390,10 @@ def _with_includes(
         out_cols += dist_cols
     extra = [INCLUDE_COLS[i] for i in include if i in INCLUDE_COLS]
     if extra:
-        result = result.join(df.select("id", *extra), "id", "left")
+        # the ranking is bounded (<= n_queries * n_results rows), the
+        # corpus is not: broadcast the ranking. An inner join equals the
+        # left join here: every ranked id is one unique id of this `df`
+        result = df.select("id", *extra).join(F.broadcast(result), "id")
     return result.select(*out_cols, *extra).orderBy("query_id", "rank")
 
 
@@ -1427,12 +1422,12 @@ def query(
     `index="ivfpq"` (cosine only) generates that pool from residual
     codes in the `n_probe` nearest cells (build_ivfpq_index persists
     the composite artifact) — both re-score exactly, so approximation
-    affects recall only. ivf, pq and ivfpq all search with the numpy
-    forms of their operators (driver-side index and probe cells, one
-    Arrow scorer); the SQL forms of the same operators serve the
-    oracle-replayed suite rows. All paths share the filter pushdown
-    (where / where_document / partition pruning run before the
-    distance work).
+    affects recall only. Every index searches with the numpy forms of
+    its operators (driver-side index and probe cells, one Arrow scorer;
+    the exact ranking is knn_exact's arithmetic, bit for bit); the SQL
+    forms of the same operators serve the oracle-replayed suite rows.
+    All paths share the filter pushdown (where / where_document /
+    partition pruning run before the distance work).
 
     Returns (query_id, rank, id, distance[, document][, metadata]).
 
@@ -1508,13 +1503,13 @@ def query(
         pool = _pq_pool(
             engine, coll, df, _metric(coll, "pq"), query_embeddings, pool_k
         )
-        result = _exact_topk(engine, df, query_embeddings, n_results, metric, pool)
+        result = _exact_topk(df, query_embeddings, n_results, metric, pool)
     elif index == "ivfpq":
         _metric(coll, "ivfpq")
         pool = _ivfpq_pool(engine, coll, df, query_embeddings, n_probe, pool_k)
-        result = _exact_topk(engine, df, query_embeddings, n_results, metric, pool)
+        result = _exact_topk(df, query_embeddings, n_results, metric, pool)
     elif index == "exact":
-        result = _exact_topk(engine, df, query_embeddings, n_results, metric)
+        result = _exact_topk(df, query_embeddings, n_results, metric)
     else:
         raise EngineError(
             f"unknown index {index!r}; use 'exact', 'ivf', 'pq' or 'ivfpq'"

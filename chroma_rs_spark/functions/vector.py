@@ -30,7 +30,8 @@ pays off when partitions are large (millions of pairs per action —
 the collection-API / cluster regime, where per-row interpretation
 dominates), while small interactive queries are faster with the HOF
 form. The suite queries (2k-row embeddings at sf0.1) therefore keep
-dim=None; `collection.query()` passes the registered dim.
+dim=None. `collection.query()` runs neither: it scores in the numpy
+kernel (operators/kernel.py:exact_distances), the same in-order fold.
 """
 
 from __future__ import annotations

@@ -14,7 +14,11 @@ of that arithmetic, so the paths agree bit-for-bit by construction:
 * `cosine_sim` / `distances` — cosine, squared-l2 and ip matrices;
 * `fold_dot` / `fold_norms` / `fold_l2` — the same sums in a SQL
   fold's order, for numpy forms that replay a SQL form bit for bit;
+* `exact_distances` — `knn_exact`'s distances in that arithmetic;
+* `unit_rows` — the cosine candidate domain's unit normalization;
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
+* `rounded_half_up` — the same rounding as Spark's ROUND, for numpy
+  forms that replay `knn_exact` bit for bit;
 * `assign_residuals` — the IVF-PQ cell-and-residual step;
 * `probe_cells` — the IVF probe selection of `ivf_topk` and of the
   collection's IVF-PQ search (`pq.ivfpq_probes`);
@@ -86,15 +90,40 @@ def distances(metric: str, a, b, a_norm=None, b_norm=None) -> np.ndarray:
     raise ValueError(f"unknown metric {metric!r}")
 
 
+# (rows, columns) cells of one fold block: the running sums and the
+# per-position temporaries stay in cache (about 3x faster than
+# whole-matrix passes at 10k x 256; the same operations, the same bits)
+_FOLD_BLOCK = 1 << 15
+
+
+def _fold(a, b, term: Callable) -> np.ndarray:
+    """(len(a), len(b)) sums of `term(a[:, p], b[:, p])` accumulated
+    from 0.0, position by position, one row block at a time."""
+    out = np.zeros((len(a), len(b)), dtype=np.float64)
+    at, bt = np.ascontiguousarray(a.T), np.ascontiguousarray(b.T)
+    step = max(1, _FOLD_BLOCK // max(len(b), 1))
+    for s in range(0, len(a), step):
+        acc = out[s : s + step]
+        for p in range(len(at)):
+            acc += term(at[p, s : s + step, None], bt[p])
+    return out
+
+
+def _product(x, y):
+    return x * y
+
+
+def _squared_diff(x, y):
+    diff = x - y
+    return diff * diff
+
+
 def fold_dot(a, b) -> np.ndarray:
     """(len(a), len(b)) dot products accumulated position by position
     from 0.0 — the order a SQL fold (`aggregate`, an unrolled `+`
     chain) evaluates, so the doubles replay in SQL bit for bit. The
     BLAS matmul behind `cosine_sim` sums in blocks instead."""
-    acc = np.zeros((len(a), len(b)), dtype=np.float64)
-    for p in range(a.shape[1]):
-        acc = acc + a[:, p, None] * b[None, :, p]
-    return acc
+    return _fold(a, b, _product)
 
 
 def fold_norms(a) -> np.ndarray:
@@ -109,11 +138,36 @@ def fold_norms(a) -> np.ndarray:
 def fold_l2(a, b) -> np.ndarray:
     """(len(a), len(b)) squared L2 distances in `fold_dot`'s order:
     (a[p] - b[p])^2 accumulated from 0.0, position by position."""
-    acc = np.zeros((len(a), len(b)), dtype=np.float64)
-    for p in range(a.shape[1]):
-        diff = a[:, p, None] - b[None, :, p]
-        acc = acc + diff * diff
-    return acc
+    return _fold(a, b, _squared_diff)
+
+
+def exact_distances(metric: str, a, b, a_norm=None) -> np.ndarray:
+    """(len(a), len(b)) unrounded distances in `knn_exact`'s SQL
+    arithmetic, bit for bit: cosine `1 - dot / (|a| |b|)` with NaN
+    where `|a| |b| == 0` (the SQL CASE's NULL), l2 the squared-L2 fold,
+    ip `1 - dot`; every sum folded in position order. `a_norm` is a
+    stored norm of the rows of `a` (the collection's add-time norm)."""
+    with np.errstate(all="ignore"):
+        if metric == "cosine":
+            a_norm = fold_norms(a) if a_norm is None else a_norm
+            den = a_norm[:, None] * fold_norms(b)[None, :]
+            return np.where(den == 0.0, np.nan, 1.0 - fold_dot(a, b) / den)
+        if metric == "l2":
+            return fold_l2(a, b)
+        if metric == "ip":
+            return 1.0 - fold_dot(a, b)
+    raise ValueError(f"unknown metric {metric!r}")
+
+
+def unit_rows(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ok, x[ok] / |x[ok]|): the rows of `x` divided by their
+    `fold_norms` norm, zero-norm rows dropped (`ok` masks the kept
+    rows) — the SQL `CASE WHEN n = 0 THEN NULL ELSE transform(x, v ->
+    v / n)` bit for bit; a NaN norm is kept, as there."""
+    n = fold_norms(x)
+    ok = n != 0.0
+    with np.errstate(invalid="ignore"):
+        return ok, x[ok] / n[ok, None]
 
 
 def rounded(x: np.ndarray, fold_zero: bool = True) -> np.ndarray:
@@ -122,6 +176,28 @@ def rounded(x: np.ndarray, fold_zero: bool = True) -> np.ndarray:
     similarities keep the sign of zero, like their oracle."""
     r = np.round(x, DIST_DECIMALS)
     return r + 0.0 if fold_zero else r
+
+
+def rounded_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark's `ROUND(x, DIST_DECIMALS) + 0.0`, bit for bit: HALF_UP on
+    the shortest decimal form of each double (`BigDecimal.valueOf`),
+    where `rounded` is half-even on the binary `x * 1e6` — they differ
+    on a half such as 1/128 = 0.0078125 (0.007813 here, 0.007812
+    there). The two agree unless `x * 1e6` sits within its rounding
+    error of a half (or is too large to hold a fraction); those few
+    entries are redone in decimal from `repr`, Python's shortest form."""
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    r = rounded(x)
+    y = np.abs(x) * 10.0**DIST_DECIMALS
+    with np.errstate(invalid="ignore"):
+        near = np.abs(y - np.floor(y) - 0.5) <= y * 2.0**-50
+    step = Decimal(1).scaleb(-DIST_DECIMALS)
+    wide = Context(prec=400)  # room for every finite double's digits
+    for i in zip(*np.nonzero(near & np.isfinite(y))):
+        v = Decimal(repr(float(x[i]))).quantize(step, ROUND_HALF_UP, wide)
+        r[i] = float(v) + 0.0
+    return r
 
 
 def assign_residuals(x: np.ndarray, cents: np.ndarray):
@@ -183,12 +259,14 @@ def topk_per_query(
     k: int,
     cols: tuple[str, str, str],
     mask: np.ndarray | None = None,
+    keep_inf: bool = False,
 ) -> pd.DataFrame | None:
     """Local top-k per query column of the (n_items, n_queries)
     rounded distance matrix `d`: the k smallest finite (distance, id)
     rows, optionally restricted by a same-shape boolean `mask`.
     Non-finite distances are unscorable pairs (zero-norm under cosine,
-    NaN components) and never become candidates. lexsort rather than
+    NaN components) and never become candidates; `keep_inf` drops
+    only NaN, as `knn_exact`'s NULL/NaN filter does. lexsort rather than
     argpartition: ties at the k-th boundary (rounding manufactures
     exact ties) must break on id like the global window, or a tied
     lowest-id candidate could be dropped locally. `cols` names the
@@ -196,7 +274,9 @@ def topk_per_query(
     import pandas as pd
 
     ids = _sortable(ids)
-    keep = np.isfinite(d) if mask is None else mask & np.isfinite(d)
+    keep = ~np.isnan(d) if keep_inf else np.isfinite(d)
+    if mask is not None:
+        keep &= mask
     q_col, id_col, d_col = cols
     frames = []
     for j, qid in enumerate(qids):

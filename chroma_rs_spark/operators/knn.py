@@ -18,14 +18,18 @@ Two physical strategies, same logical semantics:
 
 * `knn_exact_local_topk` — the scale path: per-partition top-k in a
   vectorized Arrow batch, scored by the shared numpy kernel
-  (operators/kernel.py — the same arithmetic as the pair, IVF and PQ
-  paths), so only |partitions| x |queries| x k candidate rows ever
-  shuffle; the final window runs on that tiny set. At 1000 executors
-  this turns an all-to-all shuffle of the cross product into a
-  near-map-only plan.
+  (operators/kernel.py: `exact_distances`, knn_exact's arithmetic
+  folded in the same position order, rounded by `rounded_half_up`,
+  Spark ROUND's HALF_UP rule, so distances, ranks and id tie-breaks
+  are bit-identical), so only |partitions| x |queries| x k
+  candidate rows ever shuffle; the final window runs on that tiny
+  set. At 1000 executors this turns an all-to-all shuffle of the
+  cross product into a map-only plan. The collection's `query()`
+  ranks with it: the exact index and the pq/ivfpq pool rescore.
 
-`knn_exact` stays the SQL-HOF form because the declared knn oracles
-replay its arithmetic, and the collection's exact query path runs it.
+`knn_exact` stays the SQL-HOF form only where an oracle row replays
+its SQL: the declared `knn_cosine|l2|ip` rows and the evaluation
+operators of operators/similarity.py.
 
 Determinism: ranks order by (distance rounded to 6 dp, item id) so
 top-k sets and orderings are reproducible and engine-independent
@@ -198,6 +202,7 @@ def knn_exact_local_topk(
     item_emb: str = "embedding",
     query_id: str = "query_id",
     id_type: str = "long",
+    item_norm: str | None = None,
 ) -> DataFrame:
     """Scale-path exact KNN: per-partition vectorized top-k, then a
     tiny global top-k. `id_type` is the Spark type of the id column
@@ -205,12 +210,14 @@ def knn_exact_local_topk(
 
     `queries` is a driver-side list of (qid, vector) — the query set is
     small by contract (A8 batches a handful of probe vectors). Each
-    Arrow batch computes all-pairs distances with one numpy matmul and
-    keeps only k candidates per query (operators/kernel.py), so the
+    Arrow batch scores all pairs with `kernel.exact_distances`, rounds
+    them with `kernel.rounded_half_up` and keeps only k candidates per
+    query (operators/kernel.py), so the
     shuffle after mapInPandas carries at most |batches| * |queries| * k
-    rows. Unscorable pairs (NaN distance: zero-norm under cosine) are
-    excluded, mirroring knn_exact's NULL-distance filter.
-    """
+    rows. For cosine, pass `item_norm` (the stored add-time norm, as
+    for knn_exact). Results equal knn_exact's bit for bit: NULL
+    embeddings and NULL/NaN distances (zero-norm under cosine, NaN
+    components) are excluded, ±inf distances rank like any other."""
     import numpy as np
 
     if metric not in METRICS:
@@ -220,15 +227,18 @@ def knn_exact_local_topk(
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64)  # (nq, dim)
 
     def score(pdf):
-        d = kernel.rounded(kernel.distances(metric, kernel.matrix(pdf[item_emb]), qmat))
+        if not qids:
+            return None
+        norm = None if item_norm is None else pdf[item_norm].to_numpy(np.float64)
+        d = kernel.exact_distances(metric, kernel.matrix(pdf[item_emb]), qmat, norm)
         return kernel.topk_per_query(
-            qids, pdf[item_id].to_numpy(), d, k, (query_id, item_id, "distance")
+            qids, pdf[item_id].to_numpy(), kernel.rounded_half_up(d), k,
+            (query_id, item_id, "distance"), keep_inf=True,
         )
 
-    # null embeddings are unscorable — see knn_exact
-    src = fan_out(
-        items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
-    )
+    cols = [item_id, item_emb] + ([item_norm] if item_norm is not None else [])
+    # null embeddings are unscorable — see knn_exact; fan_out as there
+    src = fan_out(items.filter(F.col(item_emb).isNotNull()).select(*cols))
     candidates = kernel.map_batches(
         src, score, f"{query_id} long, {item_id} {id_type}, distance double"
     )

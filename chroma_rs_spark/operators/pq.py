@@ -33,7 +33,7 @@ Spark shapes (matching the repo's discipline):
   final top-k ranks on exact distances. Recall is then a property of
   the oversample factor, not of quantization error alone. The
   collection's `query(index="pq")` and `query(index="ivfpq")` send
-  their ADC pools through one exact `knn_exact` rescore;
+  their ADC pools through one exact `knn_exact_local_topk` rescore;
   `pq_topk_rescored_df` is the SQL-replayable chain the declared
   `pq_topk` row runs.
 * **IVF-PQ** — the composite index encodes residuals against a cosine
@@ -88,7 +88,8 @@ def _md5_matrix(items: DataFrame, item_id: str, item_emb: str, n: int) -> np.nda
 
     vecs = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
     rows = _md5_sample(vecs, item_id, n).collect()
-    return np.asarray([r[item_emb] for r in rows], dtype=np.float64)
+    mat = np.asarray([r[item_emb] for r in rows], dtype=np.float64)
+    return mat if rows else mat.reshape(0, 0)
 
 
 def _train_codebooks(x: np.ndarray, m: int, k: int, max_iter: int) -> np.ndarray:
@@ -114,6 +115,7 @@ def train_pq_codebooks(
     sample_size: int = 4096,
     item_id: str = "vec_id",
     item_emb: str = "embedding",
+    unit: bool = False,
 ):
     """Train M codebooks of K centroids each on a deterministic sample.
 
@@ -123,8 +125,14 @@ def train_pq_codebooks(
     The sample is the `sample_size` ids with the smallest
     (md5(id), id) — uniform, engine-independent, reproducible. Each
     subspace runs kernel.lloyd, seeded with the first k sample rows.
+    `unit=True` trains on the sample's unit vectors (kernel.unit_rows),
+    a cosine collection's domain; the caller excludes zero-norm rows
+    before sampling. The same flag is on `train_ivfpq`, `pq_encode`
+    and `_ivfpq_codes_arrow`.
     """
     sample = _md5_matrix(items, item_id, item_emb, sample_size)
+    if unit:
+        sample = kernel.unit_rows(sample)[1]
     return _train_codebooks(sample, m, k, max_iter)
 
 
@@ -139,14 +147,18 @@ def train_ivfpq(
     item_id: str = "vec_id",
     item_emb: str = "embedding",
     strict: bool = True,
+    unit: bool = False,
 ) -> tuple[list[tuple[int, list[float]]], np.ndarray]:
-    """(centroids, codebooks) from one collected md5 sample of unit
-    vectors (Jégou et al., TPAMI 2011): kernel.lloyd cells labelled in
-    seed order, kernel.assign_residuals, kernel.lloyd codebooks. A
-    cell with no sample row raises when `strict`, else it is dropped."""
+    """(centroids, codebooks) from one collected md5 sample (Jégou et
+    al., TPAMI 2011): kernel.lloyd cells labelled in seed order,
+    kernel.assign_residuals, kernel.lloyd codebooks. A cell with no
+    sample row raises when `strict`, else it is dropped. `unit` as in
+    `train_pq_codebooks`."""
     import numpy as np
 
     x = _md5_matrix(items, item_id, item_emb, sample_size)
+    if unit:
+        x = kernel.unit_rows(x)[1]
     need = n_centroids if strict else 1
     live = np.arange(min(len(x), n_centroids))
     if len(live) >= need:
@@ -166,11 +178,14 @@ def pq_encode(
     item_id: str = "vec_id",
     item_emb: str = "embedding",
     id_type: str = "long",
+    unit: bool = False,
 ) -> DataFrame:
     """(id, codes ARRAY<INT>): nearest-centroid code per subspace.
 
     One shuffle-free Arrow pass; ties break to the lower code index
     (numpy argmin's first-occurrence rule — the repo convention).
+    `unit=True` encodes the unit vectors (kernel.unit_rows; zero-norm
+    rows drop), as in `train_pq_codebooks`.
     """
     import numpy as np
     import pandas as pd
@@ -180,11 +195,15 @@ def pq_encode(
 
     def encode(pdf):
         emb = kernel.matrix(pdf[item_emb])
+        ids = pdf[item_id].to_numpy()
+        if unit:
+            ok, emb = kernel.unit_rows(emb)
+            ids = ids[ok]
         codes = np.empty((emb.shape[0], m), dtype=np.int32)
         for mi in range(m):
             x = emb[:, mi * sub : (mi + 1) * sub]
             codes[:, mi] = np.argmin(kernel.distances("l2", x, books[mi]), axis=1)
-        return pd.DataFrame({"id": pdf[item_id], "codes": list(codes)})
+        return pd.DataFrame({"id": ids, "codes": list(codes)})
 
     out = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
     return kernel.map_batches(out, encode, f"id {id_type}, codes array<int>")
@@ -732,6 +751,7 @@ def _ivfpq_codes_arrow(
     centroids: list[tuple[int, list[float]]],
     item_id: str,
     item_emb: str,
+    unit: bool = False,
 ) -> DataFrame:
     """(item_id, cell, codes ARRAY<INT>): the composite index's encode
     as one shuffle-free Arrow pass on the shared numpy kernel — the
@@ -743,7 +763,10 @@ def _ivfpq_codes_arrow(
     from kernel.assign_residuals, and each subspace code is the argmin
     of the round-6 in-order squared-L2 fold (_code_least_sql, ties to
     the lower code). So both forms assign the same (cell, codes).
-    Zero-norm/NULL/wrong-dim vectors drop, as in the SQL form."""
+    Zero-norm/NULL/wrong-dim vectors drop, as in the SQL form.
+    `unit=True` encodes the unit vectors (kernel.unit_rows), as in
+    `pq_encode`: the collection passes its raw rows, so no SQL
+    higher-order function normalizes them in its plans."""
     import numpy as np
     import pandas as pd
 
@@ -755,6 +778,10 @@ def _ivfpq_codes_arrow(
 
     def encode(pdf):
         x = kernel.matrix(pdf[item_emb])
+        ids = pdf[item_id].to_numpy()
+        if unit:
+            kept, x = kernel.unit_rows(x)
+            ids = ids[kept]
         ok, pick, resid = kernel.assign_residuals(x, cents)
         if not len(resid):
             return None
@@ -764,7 +791,7 @@ def _ivfpq_codes_arrow(
             codes[:, mi] = np.argmin(kernel.rounded(d, fold_zero=False), axis=1)
         return pd.DataFrame(
             {
-                item_id: pdf[item_id].to_numpy()[ok],
+                item_id: ids[ok],
                 "cell": cids[pick].astype(np.int32),
                 "codes": list(codes),
             }

@@ -8,7 +8,10 @@ suite/vector.py). This test pins the contract: for adversarial vector
 sets (exact duplicates -> rank-1 distance == 0, scaled copies ->
 cosine 0, negatives), every rounded distance from knn_exact and
 knn_exact_local_topk is BIT-identical to DuckDB evaluating the same
-math — compared via IEEE-754 bit patterns, not ==.
+math — compared via IEEE-754 bit patterns, not ==. The collection's
+`query()` ranks with the numpy form, so it is pinned to knn_exact on
+the same set extended with zero, NaN, ±inf and NULL rows and k-th
+distance ties.
 """
 
 from __future__ import annotations
@@ -109,3 +112,133 @@ def test_scale_path_bit_matches_exact_path(spark):
         ).collect()
     }
     assert exact == local
+
+
+# id -> (item, probe, distance): float32-exact pairs whose distance is
+# exactly 1/128 or 3/128 = 0.0078125 / 0.0234375 under one metric, a
+# half at the 7th decimal. Spark's ROUND takes it up; numpy's
+# half-even round would take 1/128 down to 0.007812.
+_E1 = [1.0] + [0.0] * (DIM - 1)
+_C1 = [1.0, 15.0, 5.0, 2.0, 1.0, 0.0, 0.0, 0.0]
+_C3 = [1.0, 1.0, 1.0, 13.0, 9.0, 1.0, 1.0, 1.0]
+HALVES = {
+    # l2 against the zero probe: 2 * 0.0625^2, 0.125^2 + 2 * 0.0625^2
+    "h1": ([0.0625, 0.0625] + [0.0] * (DIM - 2), [0.0] * DIM, 0.007813),
+    "h3": ([0.125, 0.0625, 0.0625] + [0.0] * (DIM - 3), [0.0] * DIM, 0.023438),
+    # ip against e1: 1 - 127/128, 1 - 125/128
+    "i1": ([0.9921875] + [0.0] * (DIM - 1), _E1, 0.007813),
+    "i3": ([0.9765625] + [0.0] * (DIM - 1), _E1, 0.023438),
+    # cosine, both norms 16: 1 - 254/256, 1 - 250/256
+    "c1": ([-1.0] + _C1[1:], _C1, 0.007813),
+    "c3": ([-1.0, -1.0, -1.0] + _C3[3:], _C3, 0.023438),
+}
+HALF_METRIC = {"h": "l2", "i": "ip", "c": "cosine"}
+
+
+def _collection_vectors():
+    """The adversarial set as stored FLOATs, plus the rows a collection
+    query must rank exactly like knn_exact: a zero vector, a NaN and a
+    ±inf component, a NULL embedding, three exact copies of one vector
+    whose ids run against insertion order (a tie at the k-th distance
+    must break on id), and the HALVES items."""
+    vecs = [np.float32(v).astype(float).tolist() for v in _vectors()]
+    extra = {
+        "zero": [0.0] * DIM,
+        "nan": [float("nan")] + vecs[5][1:],
+        "pinf": vecs[6][:3] + [float("inf")] + vecs[6][4:],
+        "ninf": vecs[8][:2] + [float("-inf")] + vecs[8][3:],
+        "null": None,
+        "t9": vecs[4],
+        "t1": vecs[4],
+        "t5": vecs[4],
+    }
+    extra.update({i: v for i, (v, _p, _d) in HALVES.items()})
+    ids = [f"v{i:02d}" for i in range(len(vecs))] + list(extra)
+    return ids, vecs + list(extra.values())
+
+
+def _probe_df(spark, probes):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(probes)],
+        "query_id INT, query_embedding ARRAY<DOUBLE>",
+    )
+
+
+@pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
+def test_collection_query_bit_matches_knn_exact(engine, metric):
+    """Collection `query` (the numpy exact ranking) returns knn_exact's
+    rows: same ids, ranks and distance bits (compared by float.hex),
+    ±inf distances kept and NULL/NaN ones dropped, as knn_exact does."""
+    from chroma_rs_spark.collection import items_df
+
+    ids, vecs = _collection_vectors()
+    c = engine.create_collection(f"parity_{metric}", {"hnsw:space": metric})
+    c.add(ids=ids, embeddings=vecs)
+    probes = [vecs[0], vecs[4], [0.0] * DIM, [float("nan")] * DIM,
+              [1.0, -2.0, 0.5, 0.0, 3.0, -1.0, 0.25, 2.0], _E1, _C1, _C3]
+    queries = _probe_df(engine.spark, probes)
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["id"], float(r["distance"]).hex())
+            for r in df.collect()
+        )
+
+    for k in (1, 2, 3, 4, len(ids)):
+        ref = knn_exact(
+            items_df(engine, c), queries, k=k, metric=metric, item_id="id",
+            item_norm="embedding_norm" if metric == "cosine" else None,
+        )
+        got = c.query(probes, n_results=k, include=["distances"])
+        assert rows(got) == rows(ref), (metric, k)
+        assert [f.dataType.simpleString() for f in got.schema.fields[:2]] == [
+            "int", "bigint"
+        ]
+    # the fixture really exercises the edges it names
+    every = rows(c.query(probes, n_results=len(ids), include=["distances"]))
+    hexes = {d for _q, _r, _i, d in every}
+    if metric == "cosine":
+        assert not {"zero", "nan", "pinf", "ninf", "null"} & {i for *_, i, _d in every}
+    else:
+        assert {"inf", "-inf"} & hexes if metric == "ip" else "inf" in hexes
+    tied = [i for q, _r, i, _d in every if q == 1 and i in ("t1", "t5", "t9", "v04")]
+    assert tied == ["t1", "t5", "t9", "v04"]
+    halves = {
+        i: float(want).hex()
+        for i, (_v, probe, want) in HALVES.items()
+        if HALF_METRIC[i[0]] == metric
+    }
+    got_halves = {
+        i: d for q, _r, i, d in every if i in halves and probes[q] == HALVES[i][1]
+    }
+    assert got_halves == halves
+
+
+def test_rounded_half_up_bit_matches_spark_round(spark):
+    """kernel.rounded_half_up equals Spark's `ROUND(x, 6) + 0.0` bit for
+    bit: exact binary halves (odd multiples of 1/128, where numpy's
+    half-even round differs), doubles whose shortest form ends in a 5
+    at the 7th decimal, values too large for `x * 1e6` to keep a
+    fraction, signed zeros and non-finite values."""
+    from pyspark.sql import functions as F
+
+    from chroma_rs_spark.operators import kernel
+
+    halves = [k / 128 for k in range(-9, 10, 2)]
+    decimal_fives = [0.1234565, 2.5e-7, 5e-7, 1.0000005, 0.0000015, 7.9999995]
+    large = [12345678901.2345675, 2.0**33 + 2.0**-19, 9.87654321e15, 1e300]
+    edge = [0.0, -0.0, -1e-9, 4e-7, float("inf"), float("-inf"), float("nan")]
+    rng = np.random.default_rng(7)
+    rand = rng.normal(0.0, 2.0, 200).tolist()
+    xs = halves + decimal_fives + large + edge + rand
+    xs += [-x for x in decimal_fives + large]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i INT, x DOUBLE")
+    want = [
+        r["r"] for r in df.select("i", (F.round("x", 6) + F.lit(0.0)).alias("r"))
+        .orderBy("i").collect()
+    ]
+    got = kernel.rounded_half_up(np.asarray(xs, dtype=np.float64)).tolist()
+    assert [float(v).hex() for v in got] == [float(v).hex() for v in want]
+    # the halves really separate the two rules
+    assert kernel.rounded(np.asarray([1 / 128]))[0] == 0.007812
+    assert got[halves.index(1 / 128)] == 0.007813

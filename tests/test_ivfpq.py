@@ -106,7 +106,12 @@ def _hash_fixture(spark):
 def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
     """The encode op's two physical forms (SQL expression pipeline
     `ivfpq_codes_df` vs Arrow numpy batch `_ivfpq_codes_arrow`) produce
-    identical (cell, codes) on a seeded corpus with no rounding ties."""
+    identical (cell, codes) on a seeded corpus with no rounding ties.
+    With `unit=True` the Arrow form normalizes its rows in numpy
+    (kernel.unit_rows); fed the same rows normalized by the SQL
+    `transform` over the folded `l2_norm`, the SQL form must agree, so
+    the two normalizations are pinned too."""
+    from chroma_rs_spark.functions.vector import l2_norm
     from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, ivfpq_codes_df
 
     _vecs, items, cents, books = _hash_fixture(spark)
@@ -121,6 +126,16 @@ def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
     sql = rows(ivfpq_codes_df(items, books, cents))
     assert len(arrow) == 200
     assert arrow == sql
+
+    raw = items.selectExpr("vec_id", "transform(embedding, x -> x * 3.0) AS embedding")
+    unit = raw.withColumn("_n", l2_norm("embedding")).selectExpr(
+        "vec_id", "transform(embedding, x -> x / _n) AS embedding"
+    )
+    arrow_unit = rows(
+        _ivfpq_codes_arrow(raw, books, cents, "vec_id", "embedding", unit=True)
+    )
+    assert len(arrow_unit) == 200
+    assert arrow_unit == rows(ivfpq_codes_df(unit, books, cents))
 
 
 def test_numpy_adc_matches_sql_adc(spark):

@@ -95,11 +95,12 @@ def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
     after an upsert: the loaded index is memoized and the probe cells
     are picked on the driver, so building the query runs no job, and
     plan plus collect stays a handful of jobs even with late rows to
-    encode: measured 0 plan + 11 collect jobs. Before the numpy IVF-PQ
+    encode: measured 0 plan + 10 collect jobs (11 before the exact
+    ranking moved into the numpy kernel). Before the numpy IVF-PQ
     search this fixture took 7 plan jobs (two index-table schema
     reads, two index collects, the SQL probe-cell collect) and 18
     collect jobs (the SQL LUT/ADC chain and the pool distinct), 25 in
-    all. The ceiling sits two jobs above today's 11, so a re-split of
+    all. The ceiling sits three jobs above today's 10, so a re-split of
     the candidate pool into driver round trips fails here."""
     from chroma_rs_spark.jobcount import count_jobs_stages
 
@@ -120,5 +121,34 @@ def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
     assert len(rows) == 20
     assert plan == 0, f"warm ivfpq query planning ran {plan} jobs (was 0)"
     assert plan + total <= 13, (
-        f"warm ivfpq query de-fused: {plan + total} jobs (was 11)"
+        f"warm ivfpq query de-fused: {plan + total} jobs (was 10)"
     )
+
+
+def test_collection_upsert_and_exact_query_job_ceilings(spark, tmp_path):
+    """A 64-row list upsert checks the embedding dim on the driver, so
+    it runs only the overwrite: measured 2 jobs (4 when the dim check
+    ran a Spark distinct and collect). The exact query scores each
+    partition in one Arrow pass and broadcasts the ranking into the
+    include join: plan plus collect measured 0 + 5 jobs; the ceiling
+    is the 6 the broadcast cross-join ranking ran."""
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    c, vecs, rng = _ceiling_collection(spark, tmp_path)
+    upsert, _, _ = count_jobs_stages(
+        spark,
+        lambda: c.upsert(
+            ids=[f"u{i:02d}" for i in range(32)] + [f"v{i:03d}" for i in range(32)],
+            embeddings=rng.normal(size=(64, 16)).tolist(),
+        ),
+    )
+    assert upsert <= 2, f"64-row upsert ran {upsert} jobs (ceiling 2)"
+
+    def query():
+        return c.query(vecs[:4], n_results=5)
+
+    query().collect()  # warm the JVM
+    plan, _, df = count_jobs_stages(spark, query)
+    total, _, rows = count_jobs_stages(spark, df.collect)
+    assert len(rows) == 20
+    assert plan + total <= 6, f"exact query ran {plan + total} jobs (ceiling 6)"

@@ -123,20 +123,72 @@ def _query_plan(ann_coll, index: str) -> str:
 
 @pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
 def test_collection_query_rescore_broadcasts(ann_coll, index):
-    # every index ends in the exact ranking: the probes broadcast into
-    # a nested-loop score, the stored items never shuffle; a candidate
-    # pool reaches the items as a broadcast left-semi join on id
+    # every index ends in the exact ranking: the numpy scorer runs
+    # map-side on the stored items, which never shuffle before it (the
+    # probes ride in its closure); a candidate pool reaches the items
+    # as a broadcast left-semi join on id
     plan = _query_plan(ann_coll, index)
-    assert "BroadcastNestedLoopJoin BuildRight" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     lines = plan.splitlines()
-    items = lines[next(i for i, ln in enumerate(lines) if "AS __iid" in ln) + 1]
+    # the topmost MapInPandas, the one emitting `distance`, is the scorer
+    at = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    assert "distance#" in lines[at], lines[at]
+    scan = next(i for i in range(at, len(lines)) if "FileScan" in lines[i])
+    assert "embedding" in lines[scan], lines[scan]
+    assert not any("Exchange" in ln for ln in lines[at:scan]), lines[at:scan]
     if index == "exact":
-        assert "Join" not in items, items
+        assert "Join" not in "".join(lines[at:scan]), lines[at:scan]
     else:
         assert re.search(
-            r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], LeftSemi, BuildRight", items
-        ), items
+            r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], LeftSemi, BuildRight",
+            lines[at + 1],
+        ), lines[at + 1]
+
+
+@pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
+def test_collection_query_broadcasts_the_ranking_into_includes(ann_coll, index):
+    # the include columns join the bounded ranking to the corpus: the
+    # ranking (its window) is the broadcast build side, the corpus
+    # streams — broadcasting the corpus would become a sort-merge join
+    # that shuffles every document at scale
+    lines = _query_plan(ann_coll, index).splitlines()
+    join = next(
+        i for i, ln in enumerate(lines)
+        if re.search(r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], Inner, BuildRight", ln)
+    )
+    build = next(i for i in range(join, len(lines)) if "BroadcastExchange" in lines[i])
+    window = next(i for i, ln in enumerate(lines) if "Window [row_number()" in ln)
+    assert join < build < window, lines[join : window + 1]
+    assert not any("LeftOuter" in ln for ln in lines)
+
+
+@pytest.fixture(scope="module")
+def upserted_coll(spark, tmp_path_factory):
+    """A cosine collection with persisted pq and ivfpq indexes and
+    their materialized codes, then an upsert: queries encode late rows."""
+    import numpy as np
+
+    from chroma_rs_spark.catalog import Engine
+
+    engine = Engine(spark, str(tmp_path_factory.mktemp("plans") / "wh"))
+    c = engine.create_collection("late", {"hnsw:space": "cosine"})
+    vecs = np.random.default_rng(5).normal(size=(40, 8)).tolist()
+    c.add(ids=[f"v{i:02d}" for i in range(40)], embeddings=vecs)
+    c.build_pq_index(m=2, k=4, sample_size=40)
+    c.materialize_pq_codes()
+    c.build_ivfpq_index(n_centroids=4, max_iter=2, m=2, k=4, sample_size=40)
+    c.materialize_ivfpq_codes()
+    c.upsert(ids=["v03", "n00", "n01"], embeddings=vecs[10:13])
+    return c, vecs
+
+
+@pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
+def test_collection_query_plans_run_no_sql_lambda(upserted_coll, index):
+    # the exact ranking and the late-row unit normalization run in the
+    # numpy kernel: no interpreted higher-order-function lambda
+    # evaluates per row anywhere in the plan
+    plan = _query_plan(upserted_coll, index)
+    assert "lambdafunction" not in plan, plan
 
 
 def test_collection_ivfpq_prunes_code_cells_once(ann_coll):
