@@ -12,6 +12,8 @@ schema  id STRING, embedding ARRAY<FLOAT>, embedding_norm DOUBLE,
 document STRING, metadata MAP<STRING,STRING>.  The `embedding_norm`
 column is precomputed at add-time — the batch "vector index build"
 (BASELINE.md north star) that makes cosine queries cheap at scale.
+Two hidden columns, `_pq` and `_ivfpq`, hold each row's materialized
+PQ / IVF-PQ code (materialize_*_codes); no public read shows them.
 
 Mutation model (SURVEY.md §7 hard-part (a)): Parquet has no row-level
 update, so upsert/update/delete are read-modify-overwrite with a
@@ -23,7 +25,6 @@ this API identical; the logical plans below don't change.
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 from collections.abc import Callable, Sequence
@@ -65,6 +66,23 @@ INCLUDE_COLS = {
 # callers — read paths drop it after the pruning filter is applied.
 PARTITION_COL = "_part"
 
+# Hidden code columns of the stored rows (never shown to callers): each
+# row's materialized code under the pq / ivfpq index, tagged with the
+# generation id of the index build it encodes against. A NULL or
+# other-generation code means "encode on the fly" (pq_pooled_topk).
+CODE_COLS = {"pq": "_pq", "ivfpq": "_ivfpq"}
+_CODE_FIELDS = [
+    T.StructField(
+        col,
+        T.StructType(
+            [T.StructField("gen", T.LongType())]
+            + ([T.StructField("cell", T.IntegerType())] if index == "ivfpq" else [])
+            + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
+        ),
+    )
+    for index, col in CODE_COLS.items()
+]
+
 
 # -- helpers ------------------------------------------------------------
 
@@ -75,10 +93,9 @@ def _partition_key(engine: Engine, coll: Collection) -> str | None:
 
 def _has_parquet(path: str) -> bool:
     """Any parquet file at the top level or inside one level of hive
-    partition directories (the only two layouts we write: `_part=` for
-    partitioned collections, `cell=` for the IVF-PQ code tier) —
-    bounded depth, so the driver-side check stays O(directories), not
-    O(files in the whole tree)."""
+    partition directories (the `_part=` layout of partitioned
+    collections) — bounded depth, so the driver-side check stays
+    O(directories), not O(files in the whole tree)."""
     with os.scandir(path) as it:
         subdirs = []
         for e in it:
@@ -94,18 +111,21 @@ def _has_parquet(path: str) -> bool:
 
 
 def items_df(
-    engine: Engine, coll: Collection, keep_partition_col: bool = False
+    engine: Engine,
+    coll: Collection,
+    keep_partition_col: bool = False,
+    keep_codes: bool = False,
 ) -> DataFrame:
-    """The collection's items as a DataFrame (empty if nothing added)."""
+    """The collection's items as a DataFrame (empty if nothing added).
+    `keep_codes` keeps the hidden code columns (CODE_COLS): mutations
+    carry them, the ANN query reads them. Files written before they
+    existed, or by add/add_df, read them as NULL."""
     partitioned = _partition_key(engine, coll) is not None
     # NB StructType.add mutates in place — build a fresh StructType
-    schema = (
-        T.StructType(
-            ITEM_SCHEMA.fields + [T.StructField(PARTITION_COL, T.StringType(), True)]
-        )
-        if partitioned
-        else ITEM_SCHEMA
-    )
+    fields = ITEM_SCHEMA.fields + _CODE_FIELDS
+    if partitioned:
+        fields = fields + [T.StructField(PARTITION_COL, T.StringType(), True)]
+    schema = T.StructType(fields)
     path = engine.data_path(coll.id)
     _recover_interrupted_overwrite(path)
     if os.path.isdir(path) and _has_parquet(path):
@@ -114,6 +134,8 @@ def items_df(
         df = engine.spark.createDataFrame([], schema)
     if partitioned and not keep_partition_col:
         df = df.drop(PARTITION_COL)
+    if not keep_codes:
+        df = df.drop(*CODE_COLS.values())
     return df
 
 
@@ -415,12 +437,13 @@ def _filtered_items(
     ids: Sequence[str] | None,
     where: dict | None,
     where_document: dict | None,
+    keep_codes: bool = False,
 ) -> DataFrame:
     """The items the read paths (get / query / query_diverse) work on:
     the ids / where / where_document predicate plus the partition-
     pruning conjunct of `where`, applied before any projection or
     distance work so Catalyst prunes columns and directories."""
-    df = items_df(engine, coll, keep_partition_col=True)
+    df = items_df(engine, coll, keep_partition_col=True, keep_codes=keep_codes)
     pred = _predicate(where, where_document, ids)
     if pred is not None:
         df = df.filter(pred)
@@ -546,9 +569,10 @@ def upsert(
     embeddings = _auto_embed(coll, embeddings, documents)
     new = _items_from_args(engine, ids, embeddings, documents, metadatas)
     _check_dim(engine, coll, _list_dims(embeddings))
-    existing = items_df(engine, coll)
+    existing = items_df(engine, coll, keep_codes=True)
     kept = existing.join(F.broadcast(new.select("id")), "id", "left_anti")
-    _overwrite(engine, coll, kept.unionByName(new))
+    # kept rows carry their codes; the new rows have none yet
+    _overwrite(engine, coll, kept.unionByName(new, allowMissingColumns=True))
     return len(ids)
 
 
@@ -572,7 +596,7 @@ def update(
     if embeddings is not None:
         # a patch may replace embeddings — same dim discipline as add
         _check_dim(engine, coll, _list_dims(embeddings))
-    existing = items_df(engine, coll)
+    existing = items_df(engine, coll, keep_codes=True)
     missing = [
         r["id"]
         for r in patch.select("id")
@@ -599,6 +623,12 @@ def update(
             F.coalesce("_en", "embedding_norm").alias("embedding_norm"),
             F.coalesce("_d", "document").alias("document"),
             F.coalesce("_m", "metadata").alias("metadata"),
+            # a new embedding voids the row's codes: it re-encodes on
+            # the fly until the next materialize
+            *(
+                F.when(F.col("_e").isNull(), F.col(c)).alias(c)
+                for c in CODE_COLS.values()
+            ),
         )
     )
     _overwrite(engine, coll, merged)
@@ -618,7 +648,7 @@ def delete(
     pred = _predicate(where, where_document, ids)
     if pred is None:
         raise InvalidFilterError("delete() requires ids and/or where/where_document")
-    existing = items_df(engine, coll)
+    existing = items_df(engine, coll, keep_codes=True)
     # NB delete keeps the complement, so the partition-pruning conjunct
     # of `where` does NOT apply (~pred must scan every partition).
     # coalesce: a NULL predicate (metadata NULL / key absent / document
@@ -673,41 +703,51 @@ def peek(engine: Engine, coll: Collection, limit: int = 10) -> DataFrame:
 # exist, each written and parsed in one place: centroids
 # (label, pos, centroid) — the ivf index and the ivfpq coarse
 # quantizer — and codebooks (m, code, pos, value) — the pq index and
-# the ivfpq residual quantizer. Materialized codes tables hold the
-# encoded items of one index ("pq" or "ivfpq", `_CODES`). Every write
-# goes through _swap_in.
+# the ivfpq residual quantizer. Every build also writes a generation
+# id (_GENERATION_FILE) that the rows' materialized codes are tagged
+# with (CODE_COLS). Every write goes through _swap_in.
 
 IVF_INDEX_DIR = "ivf_index"
 PQ_INDEX_DIR = "pq_index"
-PQ_CODES_DIR = "pq_codes"
 IVFPQ_INDEX_DIR = "ivfpq_index"
-IVFPQ_CODES_DIR = "ivfpq_codes"
+_GENERATION_FILE = "_GENERATION"
 
-# index -> (codes dir, codes schema) of its materialized scan tier
-_CODES = {
-    "pq": (PQ_CODES_DIR, "id string, codes array<int>"),
-    "ivfpq": (IVFPQ_CODES_DIR, "id string, cell int, codes array<int>"),
-}
+# Code tables written beside the data before codes moved into the rows:
+# no read uses them; the next build or materialize deletes them
+_LEGACY_CODES_DIRS = ("pq_codes", "ivfpq_codes")
 
 
-def _write_table(
-    df: DataFrame, path: str, partition_by: str | None = None
-) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(path)
+def _write_table(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
         raise EngineError(f"index write did not commit: {path}")
 
 
-def _atomic_index_write(
-    df: DataFrame, path: str, partition_by: str | None = None
-) -> None:
-    """Persist one index table through _swap_in: a crash mid-build
-    leaves the OLD index intact instead of a deleted-or-partial
-    directory that a later load would silently zero-fill."""
-    _swap_in(path, lambda tmp: _write_table(df, tmp, partition_by))
+def _write_generation(path: str) -> None:
+    """A fresh 63-bit generation id for the index being written at
+    `path` (Spark's readers skip `_`-prefixed files)."""
+    with open(os.path.join(path, _GENERATION_FILE), "w") as f:
+        f.write(str(int.from_bytes(os.urandom(8), "big") >> 1))
+
+
+def _atomic_index_write(df: DataFrame, path: str) -> None:
+    """Persist one index table and its generation id through _swap_in:
+    a crash mid-build leaves the OLD index intact instead of a
+    deleted-or-partial directory that a later load would silently
+    zero-fill."""
+
+    def write(tmp: str) -> None:
+        _write_table(df, tmp)
+        _write_generation(tmp)
+
+    _swap_in(path, write)
+
+
+def _drop_legacy_codes(engine: Engine, coll: Collection) -> None:
+    cdir = engine.collection_dir(coll.id)
+    for name in _LEGACY_CODES_DIRS:
+        for suffix in ("", ".__tmp", ".__old"):
+            shutil.rmtree(os.path.join(cdir, name + suffix), ignore_errors=True)
 
 
 def _committed_index_dir(path: str) -> bool:
@@ -792,16 +832,25 @@ def _ivfpq_index_committed(cdir: str) -> bool:
     ) and _committed_index_dir(os.path.join(root, "codebooks"))
 
 
-# index dir -> (generation, loaded artifact): one entry per dir,
-# replaced when a new generation commits (see _load_index)
-_INDEX_MEMO: dict[str, tuple[tuple[int, int], object]] = {}
+# index dir -> (marker stat, loaded artifact, generation id): one entry
+# per dir, replaced when a new generation commits (see _load_generation)
+_INDEX_MEMO: dict[str, tuple[tuple[int, int], object, int]] = {}
 
 
 def _load_index(engine: Engine, coll: Collection, index: str):
-    """The persisted artifact of `index` — centroids for "ivf",
-    codebooks for "pq", (centroids, codebooks) for "ivfpq" — or None
-    unless every table it needs is committed. Callers must not mutate
-    it.
+    """The persisted artifact of `index` (_load_generation without its
+    generation id)."""
+    got = _load_generation(engine, coll, index)
+    return None if got is None else got[0]
+
+
+def _load_generation(engine: Engine, coll: Collection, index: str):
+    """(artifact, generation id) of `index` — the artifact is centroids
+    for "ivf", codebooks for "pq", (centroids, codebooks) for "ivfpq" —
+    or None unless every table it needs is committed. Callers must not
+    mutate it. The generation id is the build's _GENERATION_FILE; an
+    index built before builds wrote one reads the mtime_ns of its
+    marker instead.
 
     Memoized per committed generation: after the usual recovery and
     commit checks, the key is the index dir plus (st_ino, st_mtime_ns)
@@ -825,10 +874,10 @@ def _load_index(engine: Engine, coll: Collection, index: str):
         _INDEX_MEMO.pop(path, None)
         return None
     st = os.stat(marker)
-    gen = (st.st_ino, st.st_mtime_ns)
+    key = (st.st_ino, st.st_mtime_ns)
     hit = _INDEX_MEMO.get(path)
-    if hit is not None and hit[0] == gen:
-        return hit[1]
+    if hit is not None and hit[0] == key:
+        return hit[1], hit[2]
     if index == "ivf":
         loaded = _read_centroids(engine.spark, path)
     elif index == "pq":
@@ -838,49 +887,13 @@ def _load_index(engine: Engine, coll: Collection, index: str):
             _read_centroids(engine.spark, os.path.join(path, "centroids")),
             _read_codebooks(engine.spark, os.path.join(path, "codebooks")),
         )
-    _INDEX_MEMO[path] = (gen, loaded)
-    return loaded
-
-
-def _load_codes(
-    engine: Engine, coll: Collection, index: str, expected_m: int | None = None
-) -> DataFrame | None:
-    """The materialized codes table of `index`, or None unless
-    committed."""
-    codes_dir, schema = _CODES[index]
-    path = os.path.join(engine.collection_dir(coll.id), codes_dir)
-    if not _committed_index_dir(path):
-        return None
-    codes = engine.spark.read.schema(schema).parquet(path)
-    if expected_m is not None:
-        # defense-in-depth against codes encoded under different
-        # codebooks (the index builds also delete the dir on rebuild):
-        # rows whose code length disagrees with the loaded codebooks' m
-        # read as ABSENT, so the query path's left_anti union re-encodes
-        # them on the fly instead of crashing or ranking garbage.
-        codes = codes.filter(F.size("codes") == F.lit(int(expected_m)))
-    return codes
-
-
-def _invalidate_codes(engine: Engine, coll: Collection, index: str) -> None:
-    """Delete the materialized codes of `index` before a rebuild swaps
-    in new codebooks. Codes encode against the PREVIOUS artifact: with
-    a larger new m they would crash ADC (codes[:, mi] out of range),
-    with a smaller (or same!) m they would silently rank garbage
-    candidates. Deleting BEFORE the new index swaps in means a crash
-    anywhere in the build leaves codes absent (queries re-encode on
-    the fly, correct under whichever generation survives). The
-    parked/tmp remnants go too: _recover_interrupted_overwrite would
-    otherwise resurrect a prior-generation codes dir."""
-    path = os.path.join(engine.collection_dir(coll.id), _CODES[index][0])
-    for stale in (path, path + ".__old", path + ".__tmp"):
-        shutil.rmtree(stale, ignore_errors=True)
-        if os.path.exists(stale):
-            # this deletion is the ONLY guard against same-m stale codes
-            # silently ranking garbage — a failed rmtree must be loud
-            raise EngineError(
-                f"build_{index}_index: could not invalidate stale codes {stale}"
-            )
+    try:
+        with open(os.path.join(path, _GENERATION_FILE)) as f:
+            gen = int(f.read())
+    except FileNotFoundError:
+        gen = st.st_mtime_ns
+    _INDEX_MEMO[path] = (key, loaded, gen)
+    return loaded, gen
 
 
 def _metric(coll: Collection, index: str | None = None) -> str:
@@ -915,41 +928,31 @@ def _candidate_domain(df: DataFrame, metric: str) -> DataFrame:
     return src
 
 
-def _encode(index: str, rows: DataFrame, loaded, unit: bool) -> DataFrame:
-    """Codes of `rows` (a _candidate_domain) under the loaded artifact
-    of `index` — the one encode both materialize and the query path's
-    late-row freshness run; `unit` for cosine rows."""
-    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, pq_encode
-
-    if index == "pq":
-        return pq_encode(
-            rows, loaded, item_id="id", item_emb="embedding", id_type="string",
-            unit=unit,
-        )
-    cents, books = loaded
-    return _ivfpq_codes_arrow(rows, books, cents, "id", "embedding", unit=unit)
-
-
 def _materialize_codes(engine: Engine, coll: Collection, index: str) -> str:
-    loaded = _load_index(engine, coll, index)
-    if loaded is None:
+    from chroma_rs_spark.operators.pq import stored_codes
+
+    got = _load_generation(engine, coll, index)
+    if got is None:
         raise EngineError(
             f"materialize_{index}_codes requires build_{index}_index first"
         )
-    path = os.path.join(engine.collection_dir(coll.id), _CODES[index][0])
+    loaded, gen = got
+    cents, books = loaded if index == "ivfpq" else (None, loaded)
     metric = _metric(coll)
-    rows = _candidate_domain(items_df(engine, coll), metric)
-    # ivfpq codes are hive-partitioned BY CELL: a query touches n_probe
-    # cells, so the probed-cell filter the query path applies prunes to
-    # n_probe of n_cells directories at file-listing time — at 100 TB
-    # the code scan reads n_probe/k_cells of the 3.2 TB tier before a
-    # byte moves
-    _atomic_index_write(
-        _encode(index, rows, loaded, unit=metric == "cosine"),
-        path,
-        partition_by="cell" if index == "ivfpq" else None,
+    _drop_legacy_codes(engine, coll)
+    df = items_df(engine, coll, keep_codes=True)
+    col = CODE_COLS[index]
+    _overwrite(
+        engine,
+        coll,
+        df.withColumn(
+            col,
+            stored_codes(
+                "embedding", books, gen, centroids=cents, unit=metric == "cosine"
+            ),
+        ),
     )
-    return path
+    return engine.data_path(coll.id)
 
 
 def build_ivf_index(
@@ -1003,10 +1006,10 @@ def build_pq_index(
     parquet next to the collection data — the same index-build-once
     contract as build_ivf_index. Cosine collections train on
     unit-normalized vectors (ADC candidates then rank by cosine);
-    l2 collections train on raw vectors. Item codes are NOT persisted:
-    queries encode at search time, so late-added items stay searchable
-    (materialize_pq_codes persists them — the codebook artifact and
-    search plan stay identical)."""
+    l2 collections train on raw vectors. Each build writes a new
+    generation id: codes materialized under an earlier build read as
+    stale, and queries encode those rows at search time, like rows
+    added since the last materialize_pq_codes."""
     from chroma_rs_spark.operators.pq import train_pq_codebooks
 
     metric = _metric(coll, "pq")
@@ -1019,9 +1022,10 @@ def build_pq_index(
         item_id="id",
         item_emb="embedding",
         unit=metric == "cosine",
+        item_norm="embedding_norm",
     )
     path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
-    _invalidate_codes(engine, coll, "pq")
+    _drop_legacy_codes(engine, coll)
     _atomic_index_write(_codebook_table(engine.spark, books), path)
     return path
 
@@ -1044,9 +1048,9 @@ def build_ivfpq_index(
     codebook budget spends its resolution where the data lives).
     Both artifacts are tiny and land under one directory as two
     committed parquet tables; `query(index="ivfpq")` reads them
-    instead of training per query. Same non-persistence rule as the
-    other indexes: item cells/codes are derived at search time, so
-    late-added items stay searchable.
+    instead of training per query. As for build_pq_index, the build
+    writes a new generation id, and rows without a code of it
+    (materialize_ivfpq_codes) are encoded at search time.
 
     Both train on one md5 sample with numpy Lloyd's (pq.train_ivfpq);
     a cell left with no sample row raises ValueError. COMPATIBILITY
@@ -1059,10 +1063,10 @@ def build_ivfpq_index(
         _candidate_domain(items_df(engine, coll), _metric(coll, "ivfpq")),
         n_centroids=n_centroids, max_iter=max_iter, m=m, k=k,
         pq_max_iter=pq_max_iter, sample_size=sample_size,
-        item_id="id", item_emb="embedding", unit=True,
+        item_id="id", item_emb="embedding", unit=True, item_norm="embedding_norm",
     )
     root = os.path.join(engine.collection_dir(coll.id), IVFPQ_INDEX_DIR)
-    _invalidate_codes(engine, coll, "ivfpq")
+    _drop_legacy_codes(engine, coll)
 
     # Both tables promote in ONE root-level swap: two independent
     # per-table swaps could crash between them on a REBUILD and leave a
@@ -1075,6 +1079,7 @@ def build_ivfpq_index(
         _write_table(
             _centroid_table(engine.spark, cents), os.path.join(tmp, "centroids")
         )
+        _write_generation(tmp)
         # root-level commit marker: _recover_interrupted_overwrite
         # judges a parked tmp complete by _SUCCESS at its top level
         with open(os.path.join(tmp, "_SUCCESS"), "w"):
@@ -1086,26 +1091,30 @@ def build_ivfpq_index(
 
 def materialize_pq_codes(engine: Engine, coll: Collection) -> str:
     """Encode every CURRENT item against the persisted PQ codebooks and
-    persist the (id, codes) table — the 100 TB production step the
-    build_pq_index docstring defers: with codes materialized, a query
-    scans |corpus| x m bytes of codes instead of re-encoding raw
-    vectors per query; items added later are encoded on the fly and
-    unioned at query time, and updated embeddings only degrade their
-    own ADC candidate ranks until the next materialize (the exact
-    re-scoring stage always uses current vectors). Requires a
-    persisted index (`build_pq_index` first)."""
+    store each code in its own row (the hidden `_pq` column, tagged
+    with the index's generation id), rewriting the data through the
+    crash-safe swap; returns the data path. With codes stored, a query
+    reads m ints per row instead of re-encoding every vector. Rows
+    without a code of the live generation — added or upserted since,
+    updated embeddings, codes of an earlier build — are encoded on the
+    fly at query time (IVFADC keeps each code with the item it
+    encodes, Jégou et al. TPAMI 2011). Requires a persisted index
+    (`build_pq_index` first)."""
     return _materialize_codes(engine, coll, "pq")
 
 
 def materialize_ivfpq_codes(engine: Engine, coll: Collection) -> str:
     """Encode every CURRENT item against the persisted composite index
-    and persist the (id, cell, codes) table — the IVF-PQ scan tier
-    (SCALE.md: 3.2 TB of codes standing in for 100 TB of raw vectors),
-    hive-partitioned by cell. Same contract as materialize_pq_codes:
-    late-added items are encoded on the fly and unioned at query time;
-    updated embeddings only degrade their own candidate ranks until
-    the next materialize (the exact re-scoring stage always reads
-    current vectors). Requires build_ivfpq_index first."""
+    and store its (cell, codes) in its own row (the hidden `_ivfpq`
+    column) — the IVF-PQ scan tier of SCALE.md. Same contract as
+    materialize_pq_codes: returns the data path, and rows without a
+    code of the live generation are encoded at query time. Requires
+    build_ivfpq_index first.
+
+    COMPATIBILITY NOTE: the `pq_codes/` and `ivfpq_codes/` tables
+    earlier versions wrote beside the data are ignored (their rows are
+    encoded on the fly until the next materialize); the next build or
+    materialize deletes them."""
     return _materialize_codes(engine, coll, "ivfpq")
 
 
@@ -1138,7 +1147,7 @@ def compact(
                 if fn.endswith(".parquet"):
                     total += os.path.getsize(os.path.join(root, fn))
     n_files = max(1, -(-total // (target_file_mb << 20)))  # ceil div
-    df = items_df(engine, coll)
+    df = items_df(engine, coll, keep_codes=True)
     if _partition_key(engine, coll) is not None:
         # partitioned layout: repartition BY the partition value so each
         # value's rows land in few tasks — a round-robin repartition
@@ -1162,8 +1171,9 @@ def compact(
 def stats(engine: Engine, coll: Collection) -> dict:
     """Operational snapshot of a collection: row count, physical bytes
     and file count of the data dir (the compaction signal), registered
-    dim/partition key, and which index artifacts are present and
-    committed — the numbers an operator needs before deciding to
+    dim/partition key, which index artifacts are present and
+    committed, and whether any row holds a code of the live pq / ivfpq
+    generation — the numbers an operator needs before deciding to
     compact(), build_*_index() or materialize_pq_codes()."""
     path = engine.data_path(coll.id)
     n_files = 0
@@ -1184,20 +1194,28 @@ def stats(engine: Engine, coll: Collection) -> dict:
         "partition_by": row.get("partition_by"),
         "ivf_index": _committed_index_dir(os.path.join(cdir, IVF_INDEX_DIR)),
         "pq_index": _committed_index_dir(os.path.join(cdir, PQ_INDEX_DIR)),
-        "pq_codes": _committed_index_dir(os.path.join(cdir, PQ_CODES_DIR)),
+        "pq_codes": _has_codes(engine, coll, "pq"),
         "ivfpq_index": _ivfpq_index_committed(cdir),
-        "ivfpq_codes": _committed_index_dir(
-            os.path.join(cdir, IVFPQ_CODES_DIR)
-        ),
+        "ivfpq_codes": _has_codes(engine, coll, "ivfpq"),
     }
+
+
+def _has_codes(engine: Engine, coll: Collection, index: str) -> bool:
+    """Whether any row holds a code of the live `index` generation."""
+    got = _load_generation(engine, coll, index)
+    if got is None:
+        return False
+    gen = F.col(f"{CODE_COLS[index]}.gen") == F.lit(got[1])
+    return bool(items_df(engine, coll, keep_codes=True).filter(gen).limit(1).count())
 
 
 # -- A8 query (KNN) -----------------------------------------------------
 #
-# exact, pq and ivfpq end in one exact ranking (_exact_topk); pq and
-# ivfpq first propose an oversampled candidate pool from codes
-# (_pq_pool / _ivfpq_pool), so approximation affects recall only,
-# never returned distances. ivf scores exactly in its probed cells.
+# exact, pq and ivfpq end in one exact ranking: _exact_topk scans
+# every item; pq and ivfpq (_pooled_topk) rank an oversampled ADC
+# candidate pool with the same arithmetic, so approximation affects
+# recall only, never returned distances. ivf scores exactly in its
+# probed cells.
 
 
 def _probe_df(spark, vectors: Sequence[Sequence[float]]) -> DataFrame:
@@ -1205,13 +1223,6 @@ def _probe_df(spark, vectors: Sequence[Sequence[float]]) -> DataFrame:
         [(i, [float(x) for x in q]) for i, q in enumerate(vectors)],
         "query_id INT, query_embedding ARRAY<DOUBLE>",
     )
-
-
-def _unit(q: Sequence[float]) -> list[float]:
-    """A probe in the cosine candidate domain (_candidate_domain)."""
-    qv = [float(x) for x in q]
-    n = math.sqrt(sum(x * x for x in qv)) or 1.0
-    return [x / n for x in qv]
 
 
 def _default_m(query_embeddings: Sequence[Sequence[float]]) -> int:
@@ -1222,124 +1233,63 @@ def _default_m(query_embeddings: Sequence[Sequence[float]]) -> int:
     return next(mi for mi in range(min(8, dim), 0, -1) if dim % mi == 0)
 
 
-def _fresh_codes(
-    index: str,
-    loaded,
-    persisted: DataFrame,
+def _pooled_topk(
+    engine: Engine,
+    coll: Collection,
     df: DataFrame,
-    rows: DataFrame,
-    unit: bool,
-    keep: Column | None = None,
+    index: str,
+    query_embeddings: Sequence[Sequence[float]],
+    k: int,
+    pool_k: int,
+    n_probe: int,
 ) -> DataFrame:
-    """Codes of the filtered items `df` under `index`: the materialized
-    table `persisted` restricted to their ids (optionally pruned by
-    `keep` first), plus the items added since the last materialize,
-    encoded on the fly from `rows` (their _candidate_domain). The
-    current-ids semi keeps where-filtered and deleted rows out of the
-    candidate pool — a selective filter must not starve the pool while
-    matching neighbors exist. The freshness joins run on bare id
-    columns, and the late-id set is bounded by contract (adds since
-    the last materialize), so it broadcasts into a left-semi on the
-    raw rows. Only the late rows then reach the Arrow encode, which
-    unit-normalizes them itself (`unit`): no per-row SQL lambda runs
-    below or above the join. `keep` runs after the late-id
-    anti-join, so rows it prunes are not re-encoded as late."""
-    cur_ids = df.filter(F.col("embedding").isNotNull()).select("id")
-    late_ids = cur_ids.join(persisted.select("id"), "id", "left_anti")
-    late = rows.join(F.broadcast(late_ids), "id", "left_semi")
-    if keep is not None:
-        persisted = persisted.filter(keep)
-    return persisted.join(cur_ids, "id", "left_semi").unionByName(
-        _encode(index, late, loaded, unit)
+    """(query_id, rank, id, distance): the exact top-k among the
+    `pool_k` ADC-nearest items per probe under `index` ("pq" or
+    "ivfpq", the latter in each probe's `n_probe` nearest cells) — one
+    scan of the filtered items `df` (pq.pq_pooled_topk). The persisted
+    index and the codes its rows store (CODE_COLS) serve when present;
+    rows without a code of its generation are encoded on the fly.
+    Without a persisted index, a transient one is trained in memory
+    (reads never write) and every row is encoded per query. A warm
+    query plans with no job. The SQL forms (`ivfpq_adc_topk_df` and
+    friends) serve the oracle-replayed rows."""
+    from chroma_rs_spark.operators.pq import (
+        pq_pooled_topk,
+        train_ivfpq,
+        train_pq_codebooks,
     )
 
-
-def _pq_pool(
-    engine: Engine,
-    coll: Collection,
-    df: DataFrame,
-    metric: str,
-    query_embeddings: Sequence[Sequence[float]],
-    k: int,
-) -> DataFrame:
-    """(id): the k ADC-nearest items per probe over PQ codes — the
-    persisted codebooks and materialized codes when present, else
-    transient codebooks trained in memory (reads never write) and
-    every filtered item encoded per query."""
-    from chroma_rs_spark.operators.pq import pq_adc_topk, train_pq_codebooks
-
-    rows = _candidate_domain(df, metric)
+    metric = _metric(coll, index)
     unit = metric == "cosine"
-    books = _load_index(engine, coll, "pq")
-    persisted = None
-    if books is None:
-        books = train_pq_codebooks(
-            rows, m=_default_m(query_embeddings), item_id="id",
-            item_emb="embedding", unit=unit,
+    rows = _candidate_domain(df, metric)
+    loaded, gen = _load_generation(engine, coll, index) or (None, None)
+    m = _default_m(query_embeddings)
+    if loaded is None and index == "pq":
+        loaded = train_pq_codebooks(
+            rows, m=m, item_id="id", item_emb="embedding", unit=unit,
+            item_norm="embedding_norm",
         )
-    else:
-        persisted = _load_codes(engine, coll, "pq", expected_m=books.shape[0])
-    if persisted is None:
-        codes = _encode("pq", rows, books, unit)
-    else:
-        codes = _fresh_codes("pq", books, persisted, df, rows, unit)
-    qlist = [
-        (i, _unit(q) if metric == "cosine" else [float(x) for x in q])
-        for i, q in enumerate(query_embeddings)
-    ]
-    return pq_adc_topk(codes, books, qlist, k=k, id_type="string").select("id")
-
-
-def _ivfpq_pool(
-    engine: Engine,
-    coll: Collection,
-    df: DataFrame,
-    query_embeddings: Sequence[Sequence[float]],
-    n_probe: int,
-    k: int,
-) -> DataFrame:
-    """(id): the k ADC-nearest items per probe over residual codes in
-    the probe's `n_probe` nearest cells — the persisted composite index
-    and materialized code tier when present, else a transient index
-    trained in memory (reads never write) and every filtered item
-    encoded per query.
-
-    The numpy forms serve this path, the same driver-side shape as the
-    pq path (`pq_adc_topk`) and the ivf path (`ivf_topk`): the memoized
-    index, probed cells picked on the driver (`ivfpq_probes`), codes
-    from the Arrow encode (`_ivfpq_codes_arrow`) and one `mapInPandas`
-    ADC scorer (`pq_adc_topk(cells=)`). A warm query plans with no
-    job. The SQL forms (`ivfpq_adc_topk_df` and friends) serve the
-    oracle-replayed rows; on the same codes and probes both return the
-    same ADC rows."""
-    from chroma_rs_spark.operators.pq import ivfpq_probes, pq_adc_topk, train_ivfpq
-
-    rows = _candidate_domain(df, "cosine")
-    loaded = _load_index(engine, coll, "ivfpq")
-    persisted = None
-    if loaded is None:
-        loaded = cents, books = train_ivfpq(
-            rows, m=_default_m(query_embeddings), item_id="id",
-            item_emb="embedding", strict=False, unit=True,
+    elif loaded is None:
+        loaded = train_ivfpq(
+            rows, m=m, item_id="id", item_emb="embedding", strict=False,
+            unit=True, item_norm="embedding_norm",
         )
-    else:
-        cents, books = loaded
-        persisted = _load_codes(engine, coll, "ivfpq", expected_m=books.shape[0])
-    qlist = [(i, _unit(q)) for i, q in enumerate(query_embeddings)]
-    probed = ivfpq_probes(cents, qlist, n_probe)
-    if persisted is None:
-        codes = _encode("ivfpq", rows, loaded, unit=True)
-    else:
-        # the probed cell ids prune the cell-partitioned code scan to
-        # n_probe of n_cells hive directories before any code bytes move
-        cells = sorted({int(c) for cs in probed for c in cs})
-        codes = _fresh_codes(
-            "ivfpq", loaded, persisted, df, rows, unit=True,
-            keep=F.col("cell").isin(cells),
-        )
-    return pq_adc_topk(
-        codes, books, qlist, k=k, id_type="string", cells=(cents, probed)
-    ).select("id")
+    cents, books = loaded if index == "ivfpq" else (None, loaded)
+    ranked = pq_pooled_topk(
+        rows,
+        books,
+        [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
+        k=k,
+        pool_k=pool_k,
+        metric=metric,
+        unit=unit,
+        centroids=cents,
+        n_probe=n_probe,
+        stored=None if gen is None else (CODE_COLS[index], gen),
+    )
+    return ranked.select(
+        F.col("query_id").cast("int").alias("query_id"), "rank", "id", "distance"
+    )
 
 
 def _exact_topk(
@@ -1347,25 +1297,15 @@ def _exact_topk(
     query_embeddings: Sequence[Sequence[float]],
     k: int,
     metric: str,
-    pool: DataFrame | None = None,
 ) -> DataFrame:
-    """The exact ranking the exact, pq and ivfpq paths end in:
-    knn_exact_local_topk under the collection metric — knn_exact's
-    arithmetic in the numpy kernel, bit for bit — on the add-time norm
-    "index" (maintained by update/upsert: one stored norm per item
-    instead of one recompute per (item, query) pair). Each partition
-    scores its rows in one Arrow pass and keeps k per query; only
-    those candidates shuffle into the final window. With a candidate
-    `pool` the items are first restricted to its ids, so a pooled
-    query returns exactly the exact path's distances."""
-    if pool is not None:
-        # the pool is bounded driver-side (<= n_queries * n_results *
-        # oversample ids) — broadcast it, or the rescore semi-join
-        # shuffles the FULL corpus (embeddings included) against a few
-        # hundred ids (round-12 scale-proof finding)
-        # (a left semi emits each item once, however often its id
-        # repeats in the pool: no distinct, no shuffle)
-        df = df.join(F.broadcast(pool), "id", "left_semi")
+    """The exact ranking: knn_exact_local_topk under the collection
+    metric — knn_exact's arithmetic in the numpy kernel, bit for bit —
+    on the add-time norm "index" (maintained by update/upsert: one
+    stored norm per item instead of one recompute per (item, query)
+    pair). Each partition scores its rows in one Arrow pass and keeps
+    k per query; only those candidates shuffle into the final window.
+    The pq/ivfpq pool rescore (pq_pooled_topk) runs the same
+    arithmetic."""
     ranked = knn_exact_local_topk(
         df,
         [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
@@ -1394,7 +1334,13 @@ def _with_includes(
         # corpus is not: broadcast the ranking. An inner join equals the
         # left join here: every ranked id is one unique id of this `df`
         result = df.select("id", *extra).join(F.broadcast(result), "id")
-    return result.select(*out_cols, *extra).orderBy("query_id", "rank")
+    # the ranking is bounded too: sort it in one partition, which spares
+    # the range-partitioned orderBy its sampling job
+    return (
+        result.select(*out_cols, *extra)
+        .repartition(1)
+        .sortWithinPartitions("query_id", "rank")
+    )
 
 
 def query(
@@ -1422,10 +1368,14 @@ def query(
     `index="ivfpq"` (cosine only) generates that pool from residual
     codes in the `n_probe` nearest cells (build_ivfpq_index persists
     the composite artifact) — both re-score exactly, so approximation
-    affects recall only. Every index searches with the numpy forms of
-    its operators (driver-side index and probe cells, one Arrow scorer;
-    the exact ranking is knn_exact's arithmetic, bit for bit); the SQL
-    forms of the same operators serve the oracle-replayed suite rows.
+    affects recall only. A batch ranks every probe over the union of
+    the batch's pools. Both read each item once: the codes stored in
+    the rows (materialize_*_codes), or the item encoded on the fly when
+    it has no code of the live index. Every index searches with the
+    numpy forms of its operators (driver-side index and probe cells,
+    Arrow scorers; the exact ranking is knn_exact's arithmetic, bit for
+    bit); the SQL forms of the same operators serve the
+    oracle-replayed suite rows.
     All paths share the filter pushdown (where / where_document /
     partition pruning run before the distance work).
 
@@ -1463,7 +1413,7 @@ def query(
                 f"query embeddings of dim {sorted(set(bad))} against a "
                 f"dim-{reg_dim} collection"
             )
-    df = _filtered_items(engine, coll, None, where, where_document)
+    df = _filtered_items(engine, coll, None, where, where_document, keep_codes=True)
     pool_k = int(n_results) * int(oversample)
     if index == "ivf":
         _metric(coll, "ivf")
@@ -1499,15 +1449,10 @@ def query(
             F.col("neighbor_id").alias("id"),
             "distance",
         )
-    elif index == "pq":
-        pool = _pq_pool(
-            engine, coll, df, _metric(coll, "pq"), query_embeddings, pool_k
+    elif index in ("pq", "ivfpq"):
+        result = _pooled_topk(
+            engine, coll, df, index, query_embeddings, n_results, pool_k, n_probe
         )
-        result = _exact_topk(df, query_embeddings, n_results, metric, pool)
-    elif index == "ivfpq":
-        _metric(coll, "ivfpq")
-        pool = _ivfpq_pool(engine, coll, df, query_embeddings, n_probe, pool_k)
-        result = _exact_topk(df, query_embeddings, n_results, metric, pool)
     elif index == "exact":
         result = _exact_topk(df, query_embeddings, n_results, metric)
     else:

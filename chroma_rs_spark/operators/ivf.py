@@ -156,7 +156,9 @@ def ivf_topk(
     qnorm = kernel.norms(qmat)
     # driver-side probe selection (queries and centroids are tiny): the
     # n_probe nearest cells per query by (rounded distance, cell id)
-    d_cq = kernel.rounded(kernel.distances("cosine", cmat, qmat, cnorm, qnorm))
+    d_cq = kernel.rounded_half_up(
+        kernel.distances("cosine", cmat, qmat, cnorm, qnorm)
+    )
     probe_cells = dict(zip(qids, kernel.probe_cells(cids, d_cq, n_probe)))
 
     def score(pdf):
@@ -166,9 +168,13 @@ def ivf_topk(
         # rows are ordered by ascending cid, so argmin's first-occurrence
         # tie rule IS the lower-id tie-break. Zero-norm rows score NaN
         # everywhere and are dropped by the kernel's finite mask.
-        d_cell = kernel.rounded(kernel.distances("cosine", emb, cmat, inorm, cnorm))
+        d_cell = kernel.rounded_half_up(
+            kernel.distances("cosine", emb, cmat, inorm, cnorm)
+        )
         cell = cids[np.argmin(d_cell, axis=1)]
-        d_q = kernel.rounded(kernel.distances("cosine", emb, qmat, inorm, qnorm))
+        d_q = kernel.rounded_half_up(
+            kernel.distances("cosine", emb, qmat, inorm, qnorm)
+        )
         probed = np.stack([np.isin(cell, probe_cells[q]) for q in qids], axis=1)
         return kernel.topk_per_query(
             qids, pdf[item_id].to_numpy(), d_q, k,

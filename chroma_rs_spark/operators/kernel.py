@@ -3,12 +3,13 @@
 The exact cosine-pair operator (operators/similarity.py), the
 scale-path exact KNN (`knn_exact_local_topk`), IVF search (`ivf_topk`:
 cell assignment, probe selection and probed-cell scoring) and PQ ADC
-(`pq_adc_topk`) share one shape: score a block of rows locally with a
-float64 matmul inside an Arrow batch or group, keep a local top-k,
-then merge the bounded candidate set with one window or
-TakeOrderedAndProject (the per-partition-top-k-then-merge shape of
-REPOSE, PAPERS.md). This module holds the single copy of each piece
-of that arithmetic, so the paths agree bit-for-bit by construction:
+(`pq_adc_topk`, `pq_pooled_topk`) share one shape: score a block of
+rows locally with a float64 matmul inside an Arrow batch or group,
+keep a local top-k, then merge the bounded candidate set with one
+window or TakeOrderedAndProject (the per-partition-top-k-then-merge
+shape of REPOSE, PAPERS.md). This module holds the single copy of
+each piece of that arithmetic, so the paths agree bit-for-bit by
+construction:
 
 * `matrix` — Arrow list column to a float64 (n, dim) matrix;
 * `cosine_sim` / `distances` — cosine, squared-l2 and ip matrices;
@@ -18,13 +19,17 @@ of that arithmetic, so the paths agree bit-for-bit by construction:
 * `unit_rows` — the cosine candidate domain's unit normalization;
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
 * `rounded_half_up` — the same rounding as Spark's ROUND, for numpy
-  forms that replay `knn_exact` bit for bit;
+  forms that replay a SQL form bit for bit (the exact ranking, IVF,
+  the IVF-PQ cells and codes, the ADC tables and sums);
 * `assign_residuals` — the IVF-PQ cell-and-residual step;
+* `encode_rows` — the PQ and IVF-PQ encodes (`pq_codes`,
+  `residual_codes`);
+* `adc` — the ADC distances of code rows from per-query lookup tables;
 * `probe_cells` — the IVF probe selection of `ivf_topk` and of the
   collection's IVF-PQ search (`pq.ivfpq_probes`);
 * `lloyd` — the float64 Lloyd's k-means of the PQ/IVF-PQ trainers;
-* `topk_per_query` — per-query `lexsort((ids, d))[:k]` over finite
-  entries, string ids lexsorted as numpy U-strings;
+* `topk_rows` / `topk_per_query` — per-query `lexsort((ids, d))[:k]`
+  over finite entries, string ids lexsorted as numpy U-strings;
 * `pair_topk` — the tie-inclusive threshold select of the pair tiles;
 * `map_batches` / `merge_topk` — the Spark glue on either side.
 
@@ -208,8 +213,70 @@ def assign_residuals(x: np.ndarray, cents: np.ndarray):
     ok = xnorm != 0.0
     x, xnorm = x[ok], xnorm[ok]
     cos = 1.0 - fold_dot(x, cents) / (xnorm[:, None] * fold_norms(cents)[None, :])
-    pick = np.argmin(rounded(cos, fold_zero=False), axis=1)
+    pick = np.argmin(rounded_half_up(cos), axis=1)
     return ok, pick, x - cents[pick]
+
+
+def pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 PQ codes of the rows of `x`: per subspace, the
+    argmin of the `distances` squared L2 to its codebook (ties low)."""
+    m, _k, sub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for mi in range(m):
+        d = distances("l2", x[:, mi * sub : (mi + 1) * sub], books[mi])
+        codes[:, mi] = np.argmin(d, axis=1)
+    return codes
+
+
+def residual_codes(resid: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 IVF-PQ codes of `assign_residuals`' residuals: per
+    subspace, the argmin of the rounded in-order squared-L2 fold (the
+    SQL encode's `_code_least_sql`, ties low)."""
+    m, _k, sub = books.shape
+    codes = np.empty((len(resid), m), dtype=np.int32)
+    for mi in range(m):
+        d = fold_l2(resid[:, mi * sub : (mi + 1) * sub], books[mi])
+        codes[:, mi] = np.argmin(rounded_half_up(d), axis=1)
+    return codes
+
+
+def encode_rows(x: np.ndarray, books: np.ndarray, cents=None, unit: bool = False):
+    """(rows, pick, codes): the rows of `x` that encode, the cell of
+    each (a row of `cents`; None for plain PQ) and their codes — PQ
+    codes (`pq_codes`) without `cents`, else IVF-PQ residual codes
+    (`assign_residuals`, `residual_codes`). `unit` encodes the unit
+    vectors (`unit_rows`); zero-norm rows do not encode under `unit`
+    or `cents`."""
+    rows = np.arange(len(x))
+    if unit:
+        ok, x = unit_rows(x)
+        rows = rows[ok]
+    if cents is None:
+        return rows, None, pq_codes(x, books)
+    ok, pick, resid = assign_residuals(x, cents)
+    return rows[ok], pick, residual_codes(resid, books)
+
+
+def adc(luts, cids, slots, codes: np.ndarray, cell: np.ndarray | None):
+    """(d, probed): the (n, n_queries) ADC distances of `codes` rows,
+    rounded like Spark's ROUND (`rounded_half_up`), and the mask of the
+    (row, query) pairs that are candidates. `luts` is (m, k, n_slots);
+    `slots[c, j]` is query j's LUT slot for cell `cids[c]` (-1: not
+    probed), or, with `cids` None, one row of slots every code row
+    uses. Each distance sums its m lookups in subspace order from 0.0,
+    like the SQL form's unrolled fold."""
+    if cids is None:
+        slot = np.broadcast_to(slots, (len(codes), slots.shape[1]))
+    else:
+        at = np.minimum(np.searchsorted(cids, cell), len(cids) - 1)
+        # a cell the centroids do not know is probed by no query
+        slot = np.where((cids[at] == cell)[:, None], slots[at], -1)
+    probed = slot >= 0
+    slot = np.where(probed, slot, 0)
+    d = np.zeros(slot.shape, dtype=np.float64)
+    for mi in range(codes.shape[1]):
+        d += luts[mi][codes[:, mi][:, None], slot]
+    return rounded_half_up(d), probed
 
 
 def probe_cells(cids: np.ndarray, d: np.ndarray, n_probe: int) -> list[np.ndarray]:
@@ -252,6 +319,34 @@ def _sortable(ids: np.ndarray) -> np.ndarray:
     return ids.astype(str) if ids.dtype == object else ids
 
 
+def topk_rows(
+    ids: np.ndarray,
+    d: np.ndarray,
+    k: int,
+    mask: np.ndarray | None = None,
+    keep_inf: bool = False,
+) -> list[np.ndarray]:
+    """Per query column of the (n_items, n_queries) rounded distance
+    matrix `d`, the row positions of its k smallest finite (distance,
+    id) entries in that order, optionally restricted by a same-shape
+    boolean `mask`. Non-finite distances are unscorable pairs
+    (zero-norm under cosine, NaN components) and never become
+    candidates; `keep_inf` drops only NaN, as `knn_exact`'s NULL/NaN
+    filter does. lexsort rather than argpartition: ties at the k-th
+    boundary (rounding manufactures exact ties) must break on id like
+    the global window, or a tied lowest-id candidate could be dropped
+    locally."""
+    ids = _sortable(ids)
+    keep = ~np.isnan(d) if keep_inf else np.isfinite(d)
+    if mask is not None:
+        keep &= mask
+    out = []
+    for j in range(d.shape[1]):
+        rows = np.nonzero(keep[:, j])[0]
+        out.append(rows[np.lexsort((ids[rows], d[rows, j]))[:k]])
+    return out
+
+
 def topk_per_query(
     qids: Sequence,
     ids: np.ndarray,
@@ -261,31 +356,18 @@ def topk_per_query(
     mask: np.ndarray | None = None,
     keep_inf: bool = False,
 ) -> pd.DataFrame | None:
-    """Local top-k per query column of the (n_items, n_queries)
-    rounded distance matrix `d`: the k smallest finite (distance, id)
-    rows, optionally restricted by a same-shape boolean `mask`.
-    Non-finite distances are unscorable pairs (zero-norm under cosine,
-    NaN components) and never become candidates; `keep_inf` drops
-    only NaN, as `knn_exact`'s NULL/NaN filter does. lexsort rather than
-    argpartition: ties at the k-th boundary (rounding manufactures
-    exact ties) must break on id like the global window, or a tied
-    lowest-id candidate could be dropped locally. `cols` names the
-    (query, id, distance) output columns."""
+    """Local top-k per query (`topk_rows`) as (query, id, distance)
+    rows, named by `cols`, in (query, distance, id) order."""
     import pandas as pd
 
     ids = _sortable(ids)
-    keep = ~np.isnan(d) if keep_inf else np.isfinite(d)
-    if mask is not None:
-        keep &= mask
     q_col, id_col, d_col = cols
-    frames = []
-    for j, qid in enumerate(qids):
-        sel = keep[:, j]
-        mids, md = ids[sel], d[sel, j]
-        if md.size == 0:
-            continue
-        top = np.lexsort((mids, md))[:k]
-        frames.append(pd.DataFrame({q_col: qid, id_col: mids[top], d_col: md[top]}))
+    tops = topk_rows(ids, d, k, mask, keep_inf)
+    frames = [
+        pd.DataFrame({q_col: qid, id_col: ids[top], d_col: d[top, j]})
+        for j, (qid, top) in enumerate(zip(qids, tops))
+        if top.size
+    ]
     return pd.concat(frames, ignore_index=True) if frames else None
 
 

@@ -24,8 +24,9 @@ Two physical strategies, same logical semantics:
   are bit-identical), so only |partitions| x |queries| x k
   candidate rows ever shuffle; the final window runs on that tiny
   set. At 1000 executors this turns an all-to-all shuffle of the
-  cross product into a map-only plan. The collection's `query()`
-  ranks with it: the exact index and the pq/ivfpq pool rescore.
+  cross product into a map-only plan. The collection's exact
+  `query()` ranks with it, and the pq/ivfpq pool rescore
+  (pq.pq_pooled_topk) runs the same arithmetic.
 
 `knn_exact` stays the SQL-HOF form only where an oracle row replays
 its SQL: the declared `knn_cosine|l2|ip` rows and the evaluation

@@ -28,29 +28,33 @@ Spark shapes (matching the repo's discipline):
   |queries| x k candidates (operators/kernel.py — the same
   bounded-shuffle shape and arithmetic as knn_exact_local_topk).
 * **rescore** — the production pattern: PQ retrieves an oversampled
-  candidate set, an id-join against the raw vectors re-scores them
-  exactly (distances identical to the exact path's doubles), and the
-  final top-k ranks on exact distances. Recall is then a property of
-  the oversample factor, not of quantization error alone. The
-  collection's `query(index="pq")` and `query(index="ivfpq")` send
-  their ADC pools through one exact `knn_exact_local_topk` rescore;
+  candidate set, the raw vectors re-score it exactly (distances
+  identical to the exact path's doubles), and the final top-k ranks
+  on exact distances. Recall is then a property of the oversample
+  factor, not of quantization error alone. The collection's
+  `query(index="pq")` and `query(index="ivfpq")` run search and
+  rescore in one scan of the items (`pq_pooled_topk`): each row
+  stores its code (`stored_codes`, written by materialize), rows
+  without a code of the live index generation are encoded on the fly,
+  and the candidates carry their vectors to the rescore.
   `pq_topk_rescored_df` is the SQL-replayable chain the declared
   `pq_topk` row runs.
 * **IVF-PQ** — the composite index encodes residuals against a cosine
   coarse quantizer. Each op has two forms with one contract. The
-  collection's `query(index="ivfpq")` runs the numpy forms:
-  `_ivfpq_codes_arrow` encodes (materialized tier and late rows),
-  `ivfpq_probes` picks the probed cells on the driver, and
-  `pq_adc_topk(cells=)` scores them — the plain PQ search with one
-  LUT per (query, probed cell). The oracle-replayed rows
+  collection runs the numpy forms: `ivfpq_probes` picks the probed
+  cells on the driver, kernel.encode_rows encodes
+  (`_ivfpq_codes_arrow`), and kernel.adc scores with one LUT
+  per (query, probed cell) (`pq_adc_topk(cells=)`, inside
+  `pq_pooled_topk`). The oracle-replayed rows
   (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`) run the SQL
   forms: `ivfpq_codes_df`, `ivfpq_probe_cells` (collected once by
   `_collect_probe_cells` to prune a cell-partitioned code tier) and
   `ivfpq_adc_topk_df`; `_ivfpq_residuals` is the SQL form of
   `kernel.assign_residuals`. The numpy forms replay the SQL forms'
-  arithmetic (in-order folds, round-6, ties low), so they assign the
-  same cells, residuals and codes, and the numpy ADC returns the same
-  rows on the same codes and probes (tests/test_ivfpq.py).
+  arithmetic (in-order folds, Spark ROUND's HALF_UP to 6 places, ties
+  low), so they assign the same cells, residuals and codes, and the
+  numpy ADC returns the same rows on the same codes and probes
+  (tests/test_ivfpq.py).
 
 Verification: tests/test_pq.py pins encode codes and ADC distances
 bit-for-bit against a pure-numpy reference and checks determinism;
@@ -73,7 +77,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from chroma_rs_spark.operators import kernel
@@ -81,12 +85,23 @@ from chroma_rs_spark.operators.centroids import _lloyd, _md5_sample
 from chroma_rs_spark.operators.kernel import DIST_DECIMALS
 
 
-def _md5_matrix(items: DataFrame, item_id: str, item_emb: str, n: int) -> np.ndarray:
+def _md5_matrix(
+    items: DataFrame, item_id: str, item_emb: str, n: int, item_norm: str | None
+) -> np.ndarray:
     """The `n` non-NULL vectors of smallest (md5(id), id), collected in
-    that order (one Spark job): the numpy trainers' one sample."""
+    that order (one Spark job): the numpy trainers' one sample. With a
+    stored norm column `item_norm`, rows whose norm is NaN or inf drop
+    before the sample is cut: a non-finite component makes the norm
+    non-finite (so does a finite row whose norm overflows), and one
+    such row in the sample would make its cell's mean, and every ADC
+    distance built on it, NaN."""
     import numpy as np
 
-    vecs = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
+    vecs = items.filter(F.col(item_emb).isNotNull())
+    if item_norm is not None:
+        norm = F.col(item_norm)
+        vecs = vecs.filter(~F.isnan(norm) & (norm != F.lit(float("inf"))))
+    vecs = vecs.select(item_id, item_emb)
     rows = _md5_sample(vecs, item_id, n).collect()
     mat = np.asarray([r[item_emb] for r in rows], dtype=np.float64)
     return mat if rows else mat.reshape(0, 0)
@@ -116,6 +131,7 @@ def train_pq_codebooks(
     item_id: str = "vec_id",
     item_emb: str = "embedding",
     unit: bool = False,
+    item_norm: str | None = None,
 ):
     """Train M codebooks of K centroids each on a deterministic sample.
 
@@ -128,9 +144,11 @@ def train_pq_codebooks(
     `unit=True` trains on the sample's unit vectors (kernel.unit_rows),
     a cosine collection's domain; the caller excludes zero-norm rows
     before sampling. The same flag is on `train_ivfpq`, `pq_encode`
-    and `_ivfpq_codes_arrow`.
+    and `_ivfpq_codes_arrow`. `item_norm` names a stored norm column:
+    rows with a non-finite norm (a NaN or ±inf component, or an
+    overflowing norm) then stay out of the sample (_md5_matrix).
     """
-    sample = _md5_matrix(items, item_id, item_emb, sample_size)
+    sample = _md5_matrix(items, item_id, item_emb, sample_size, item_norm)
     if unit:
         sample = kernel.unit_rows(sample)[1]
     return _train_codebooks(sample, m, k, max_iter)
@@ -148,15 +166,16 @@ def train_ivfpq(
     item_emb: str = "embedding",
     strict: bool = True,
     unit: bool = False,
+    item_norm: str | None = None,
 ) -> tuple[list[tuple[int, list[float]]], np.ndarray]:
     """(centroids, codebooks) from one collected md5 sample (Jégou et
     al., TPAMI 2011): kernel.lloyd cells labelled in seed order,
     kernel.assign_residuals, kernel.lloyd codebooks. A cell with no
-    sample row raises when `strict`, else it is dropped. `unit` as in
-    `train_pq_codebooks`."""
+    sample row raises when `strict`, else it is dropped. `unit` and
+    `item_norm` as in `train_pq_codebooks`."""
     import numpy as np
 
-    x = _md5_matrix(items, item_id, item_emb, sample_size)
+    x = _md5_matrix(items, item_id, item_emb, sample_size, item_norm)
     if unit:
         x = kernel.unit_rows(x)[1]
     need = n_centroids if strict else 1
@@ -191,19 +210,11 @@ def pq_encode(
     import pandas as pd
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, _k, sub = books.shape
 
     def encode(pdf):
         emb = kernel.matrix(pdf[item_emb])
-        ids = pdf[item_id].to_numpy()
-        if unit:
-            ok, emb = kernel.unit_rows(emb)
-            ids = ids[ok]
-        codes = np.empty((emb.shape[0], m), dtype=np.int32)
-        for mi in range(m):
-            x = emb[:, mi * sub : (mi + 1) * sub]
-            codes[:, mi] = np.argmin(kernel.distances("l2", x, books[mi]), axis=1)
-        return pd.DataFrame({"id": ids, "codes": list(codes)})
+        rows, _, codes = kernel.encode_rows(emb, books, unit=unit)
+        return pd.DataFrame({"id": pdf[item_id].to_numpy()[rows], "codes": list(codes)})
 
     out = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
     return kernel.map_batches(out, encode, f"id {id_type}, codes array<int>")
@@ -229,21 +240,21 @@ def ivfpq_probes(
     qmat = qmat.reshape(len(queries), cmat.shape[1])
     norms = kernel.fold_norms(cmat)[:, None] * kernel.fold_norms(qmat)[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
-        d = kernel.rounded(1.0 - kernel.fold_dot(cmat, qmat) / norms)
+        d = kernel.rounded_half_up(1.0 - kernel.fold_dot(cmat, qmat) / norms)
     return kernel.probe_cells(cids, d, n_probe)
 
 
 def _fold_luts(books, resid):
     """(m, k, n) LUTs of `resid` (n, m*sub), in `pq_adc_topk_df`'s
     SQL-replayable arithmetic (_SUB_DIST_SQL): each subspace distance
-    is kernel.fold_l2's in-order fold, rounded to DIST_DECIMALS."""
+    is kernel.fold_l2's in-order fold, rounded to DIST_DECIMALS with
+    Spark ROUND's HALF_UP (kernel.rounded_half_up)."""
     import numpy as np
 
     m, _kk, sub = books.shape
     return np.stack([
-        kernel.rounded(
-            kernel.fold_l2(books[mi], resid[:, mi * sub : (mi + 1) * sub]),
-            fold_zero=False,
+        kernel.rounded_half_up(
+            kernel.fold_l2(books[mi], resid[:, mi * sub : (mi + 1) * sub])
         )
         for mi in range(m)
     ])
@@ -282,14 +293,44 @@ def pq_adc_topk(
     in `ivfpq_adc_topk_df`'s arithmetic (_fold_luts), so the ADC
     distances equal that SQL form's bit for bit on the same codes and
     probes. Code rows outside a query's probed cells are no candidates
-    of it. This is the search the collection's `query(index="ivfpq")`
-    runs; `ivfpq_adc_topk_df` serves the oracle-replayed rows.
+    of it. The collection's `pq_pooled_topk` scores with the same
+    tables (`_adc_tables`, kernel.adc); `ivfpq_adc_topk_df` serves the
+    oracle-replayed rows.
     """
     import numpy as np
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, _k, sub = books.shape
     qids = [q[0] for q in queries]
+    tables = _adc_tables(books, queries, cells)
+
+    def score(pdf):
+        codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
+        cell = None if cells is None else pdf["cell"].to_numpy()
+        d, probed = kernel.adc(*tables, codes, cell)
+        if not probed.any():
+            return None
+        return kernel.topk_per_query(
+            qids, pdf["id"].to_numpy(), d, k, ("query_id", "id", "adc_dist"),
+            mask=probed,
+        )
+
+    cands = kernel.map_batches(
+        codes, score, f"query_id long, id {id_type}, adc_dist double"
+    )
+    return kernel.merge_topk(cands, k, "query_id", "id", "adc_dist")
+
+
+def _adc_tables(books, queries: Sequence[tuple], cells: tuple | None):
+    """(luts, cids, slots) of `kernel.adc` for the driver-side (qid,
+    vector) `queries`. Plain PQ (`cells` None): one LUT per query of
+    its own vector, LUT[m][j] = unrounded squared L2 between the
+    query's m-th subvector and codebook[m][j]. IVF-PQ (`cells` =
+    (centroids, probed) from `ivfpq_probes`): one LUT per (query,
+    probed cell) of the query's residual against that cell, in
+    `ivfpq_adc_topk_df`'s arithmetic (_fold_luts)."""
+    import numpy as np
+
+    m, _k, sub = books.shape
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64).reshape(-1, m * sub)
     if cells is None:
         # (m, k, nq) LUTs; query j reads slot j from every code row
@@ -297,50 +338,253 @@ def pq_adc_topk(
             ((books[mi][:, None, :] - qmat[None, :, mi * sub : (mi + 1) * sub]) ** 2).sum(2)
             for mi in range(m)
         ])
-        cids = None
-        slots = np.arange(len(qids))[None, :]
-    else:
-        centroids, probed = cells
-        cvec = dict(centroids)
-        cids = np.asarray(sorted(cvec), dtype=np.int64)
-        # slots[c, j]: the LUT slot of (cell cids[c], query j), -1 when
-        # query j does not probe that cell
-        slots = np.full((len(cids), len(qids)), -1, dtype=np.int64)
-        pairs = [(j, int(c)) for j, cs in enumerate(probed) for c in cs]
-        for s, (j, c) in enumerate(pairs):
-            slots[np.searchsorted(cids, c), j] = s
-        resid = np.asarray(
-            [qmat[j] - np.asarray(cvec[c], dtype=np.float64) for j, c in pairs],
-            dtype=np.float64,
-        ).reshape(len(pairs), m * sub)
-        luts = _fold_luts(books, resid)
+        return luts, None, np.arange(len(qmat))[None, :]
+    centroids, probed = cells
+    cvec = dict(centroids)
+    cids = np.asarray(sorted(cvec), dtype=np.int64)
+    # slots[c, j]: the LUT slot of (cell cids[c], query j), -1 when
+    # query j does not probe that cell
+    slots = np.full((len(cids), len(qmat)), -1, dtype=np.int64)
+    pairs = [(j, int(c)) for j, cs in enumerate(probed) for c in cs]
+    for s, (j, c) in enumerate(pairs):
+        slots[np.searchsorted(cids, c), j] = s
+    resid = np.asarray(
+        [qmat[j] - np.asarray(cvec[c], dtype=np.float64) for j, c in pairs],
+        dtype=np.float64,
+    ).reshape(len(pairs), m * sub)
+    return _fold_luts(books, resid), cids, slots
 
-    def score(pdf):
-        codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-        if cids is None:
-            slot = np.broadcast_to(slots, (len(codes), len(qids)))
-        else:
-            cell = pdf["cell"].to_numpy()
-            at = np.minimum(np.searchsorted(cids, cell), len(cids) - 1)
-            # a cell the centroids do not know is probed by no query
-            slot = np.where((cids[at] == cell)[:, None], slots[at], -1)
-        probed_pair = slot >= 0
-        if not probed_pair.any():
-            return None
-        slot = np.where(probed_pair, slot, 0)
-        # d[i, j] = sum_m LUT[m, codes[i, m], slot[i, j]], in m order
-        d = np.zeros(slot.shape, dtype=np.float64)
-        for mi in range(m):
-            d += luts[mi][codes[:, mi][:, None], slot]
-        return kernel.topk_per_query(
-            qids, pdf["id"].to_numpy(), kernel.rounded(d), k,
-            ("query_id", "id", "adc_dist"), mask=probed_pair,
-        )
 
-    cands = kernel.map_batches(
-        codes, score, f"query_id long, id {id_type}, adc_dist double"
+def _cell_matrix(centroids: list[tuple[int, list[float]]]):
+    """(cell ids, (n_cells, dim) float64 centroids) in cell id order."""
+    import numpy as np
+
+    order = sorted(centroids, key=lambda c: c[0])
+    cids = np.asarray([cid for cid, _vec in order], dtype=np.int64)
+    return cids, np.asarray([vec for _cid, vec in order], dtype=np.float64)
+
+
+def _unit_probe(q: Sequence[float]) -> list[float]:
+    """A probe in the cosine candidate domain: divided by its norm (a
+    zero probe stays zero)."""
+    import math
+
+    qv = [float(x) for x in q]
+    n = math.sqrt(sum(x * x for x in qv)) or 1.0
+    return [x / n for x in qv]
+
+
+def stored_codes(
+    emb: str,
+    codebooks,
+    gen: int,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    unit: bool = False,
+) -> Column:
+    """The code a row stores for the index of generation `gen`:
+    struct(gen BIGINT, codes ARRAY<INT>) under PQ `codebooks`, or
+    struct(gen BIGINT, cell INT, codes ARRAY<INT>) under an IVF-PQ
+    index (`centroids` given) — NULL for a NULL, wrong-dim or (with
+    `unit`) zero-norm `emb`. One Arrow projection: only the embedding
+    column travels to Python, and the codes are `pq_encode`'s and
+    `_ivfpq_codes_arrow`'s arithmetic (kernel.encode_rows), so a
+    stored code equals the code `pq_pooled_topk` computes for a row
+    without one."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    books = np.asarray(codebooks, dtype=np.float64)
+    m, _k, sub = books.shape
+    ivf = centroids is not None
+    cids, cents = _cell_matrix(centroids) if ivf else (None, None)
+
+    def encode(col):
+        codes = np.full(len(col), None, dtype=object)
+        cell = np.full(len(col), None, dtype=object)
+        sel = np.nonzero(
+            np.fromiter((-1 if v is None else len(v) for v in col), int, len(col))
+            == m * sub
+        )[0]
+        if sel.size:
+            rows, pick, coded = kernel.encode_rows(
+                kernel.matrix(col.iloc[sel]), books, cents, unit
+            )
+            for j, i in enumerate(sel[rows]):
+                codes[i] = coded[j]
+                if ivf:
+                    cell[i] = int(cids[pick[j]])
+        return pd.DataFrame({"cell": cell, "codes": codes} if ivf else {"codes": codes})
+
+    # a Series -> DataFrame (struct) scalar UDF; the hints are set here
+    # because pandas loads lazily, so string annotations cannot resolve
+    encode.__annotations__ = {"col": pd.Series, "return": pd.DataFrame}
+    udf = pandas_udf(encode, ("cell int, " if ivf else "") + "codes array<int>")
+    enc = udf(F.col(emb))
+    fields = [F.lit(int(gen)).cast("bigint").alias("gen")]
+    if ivf:
+        fields.append(enc["cell"].alias("cell"))
+    fields.append(enc["codes"].alias("codes"))
+    return F.when(enc["codes"].isNotNull(), F.struct(*fields))
+
+
+def pq_pooled_topk(
+    items: DataFrame,
+    codebooks,
+    queries: Sequence[tuple],
+    k: int,
+    pool_k: int,
+    metric: str,
+    unit: bool = False,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    n_probe: int = 4,
+    stored: tuple[str, int] | None = None,
+) -> DataFrame:
+    """(query_id, rank, id, distance): the exact top-k per query among
+    an ADC candidate pool — PQ (or IVF-PQ with `centroids`) search and
+    its exact rescore in one scan of the collection's (id, embedding,
+    embedding_norm[, code column]) rows. `queries` is the driver-side
+    list of (qid, raw vector); with `unit` the ADC side searches their
+    unit vectors (a cosine collection). `stored` is (code column,
+    generation) of the codes the rows hold (`stored_codes`); without
+    it every row is encoded on the fly.
+
+    * A JVM filter keeps the rows that can be candidates: with IVF-PQ,
+      a row whose stored code is of the generation must sit in a
+      probed cell (`ivfpq_probes`, picked on the driver).
+    * One `mapInPandas` per partition takes each row's stored code
+      when it is of the generation, else encodes the row on the fly
+      (the arithmetic of `pq_encode` / `_ivfpq_codes_arrow`), scores
+      ADC (`pq_adc_topk`'s arithmetic, `_adc_tables` + kernel.adc) and
+      keeps each query's `pool_k` best (adc, id) rows across the
+      partition's batches, carrying their vectors.
+    * One `row_number()` window (a single partition: the candidates
+      are at most |partitions| x |queries| x pool_k rows) cuts each
+      query's global pool.
+    * One Arrow step rescores the UNION of the queries' pools against
+      every query with `kernel.exact_distances` +
+      `kernel.rounded_half_up` — `knn_exact_local_topk`'s arithmetic on
+      the stored norm — and ranks by (distance, id), keeping ±inf and
+      dropping NaN like `knn_exact`.
+
+    So the returned rows equal an exact ranking of the pooled ids, and
+    approximation affects recall only. This is the per-partition
+    top-k then merge shape of REPOSE (ICDE 2021, PAPERS.md), with the
+    candidates' vectors riding along so the items are read once."""
+    import numpy as np
+    import pandas as pd
+
+    books = np.asarray(codebooks, dtype=np.float64)
+    m, _k, sub = books.shape
+    cosine = metric == "cosine"
+    qids = [q[0] for q in queries]
+    raw = np.asarray([q[1] for q in queries], dtype=np.float64).reshape(-1, m * sub)
+    probes = [
+        (i, _unit_probe(v) if unit else [float(x) for x in v]) for i, v in queries
+    ]
+    ivf = centroids is not None
+    cells = (centroids, ivfpq_probes(centroids, probes, n_probe)) if ivf else None
+    cids, cents = _cell_matrix(centroids) if ivf else (None, None)
+    tables = _adc_tables(books, probes, cells)
+
+    src = items.filter(
+        F.col("embedding").isNotNull() & (F.size("embedding") == m * sub)
     )
-    return kernel.merge_topk(cands, k, "query_id", "id", "adc_dist")
+    carry = ["id", "embedding"] + (["embedding_norm"] if cosine else [])
+    if stored is None:
+        code_cols = [F.lit(None).cast("array<int>").alias("_codes")]
+        if ivf:
+            code_cols.append(F.lit(None).cast("int").alias("_cell"))
+    else:
+        col, gen = stored
+        fresh = F.coalesce(F.col(f"{col}.gen") == F.lit(int(gen)), F.lit(False))
+        code_cols = [F.when(fresh, F.col(f"{col}.codes")).alias("_codes")]
+        if ivf:
+            code_cols.append(F.when(fresh, F.col(f"{col}.cell")).alias("_cell"))
+            probed = sorted({int(c) for cs in cells[1] for c in cs})
+            src = src.filter(~fresh | F.col(f"{col}.cell").isin(probed))
+    src = src.select(*carry, *code_cols)
+
+    def pool(pdf):
+        have = pdf["_codes"].notna().to_numpy()
+        codes = np.zeros((len(pdf), m), dtype=np.int64)
+        cell = np.zeros(len(pdf), dtype=np.int64)
+        if have.any():
+            codes[have] = np.stack(pdf["_codes"].to_numpy()[have])
+            if ivf:
+                cell[have] = pdf["_cell"].to_numpy()[have]
+        late = np.nonzero(~have)[0]
+        if late.size:
+            rows, pick, coded = kernel.encode_rows(
+                kernel.matrix(pdf["embedding"].iloc[late]), books, cents, unit
+            )
+            late = late[rows]
+            codes[late] = coded
+            if ivf:
+                cell[late] = cids[pick]
+            have[late] = True
+        rows = np.nonzero(have)[0]
+        d, probed = kernel.adc(*tables, codes[rows], cell[rows] if ivf else None)
+        tops = kernel.topk_rows(pdf["id"].to_numpy()[rows], d, pool_k, mask=probed)
+        frames = [
+            pdf.iloc[rows[top]][carry].assign(query_id=qid, adc_dist=d[top, j])
+            for j, (qid, top) in enumerate(zip(qids, tops))
+            if top.size
+        ]
+        return pd.concat(frames, ignore_index=True) if frames else None
+
+    def best(cands):
+        # each query's pool_k best (adc, id) rows
+        ids = kernel._sortable(cands["id"].to_numpy())
+        qid = cands["query_id"].to_numpy()
+        cands = cands.iloc[np.lexsort((ids, cands["adc_dist"].to_numpy(), qid))]
+        return cands[cands.groupby("query_id").cumcount().to_numpy() < pool_k]
+
+    def run_pool(batches):
+        kept = None
+        for pdf in batches:
+            cands = None if pdf.empty else pool(pdf)
+            if cands is not None:
+                kept = cands if kept is None else best(pd.concat([kept, cands]))
+        if kept is not None:
+            yield kept
+
+    def rescore(batches):
+        cands = [pdf for pdf in batches if not pdf.empty]
+        if not cands:
+            return
+        cands = pd.concat(cands, ignore_index=True)
+        # each pooled item once, however many pools hold it
+        _, first = np.unique(
+            kernel._sortable(cands["id"].to_numpy()), return_index=True
+        )
+        union = cands.iloc[first]
+        norm = union["embedding_norm"].to_numpy(np.float64) if cosine else None
+        d = kernel.exact_distances(metric, kernel.matrix(union["embedding"]), raw, norm)
+        top = kernel.topk_per_query(
+            qids, union["id"].to_numpy(), kernel.rounded_half_up(d), k,
+            ("query_id", "id", "distance"), keep_inf=True,
+        )
+        if top is not None:
+            top.insert(1, "rank", top.groupby("query_id").cumcount() + 1)
+            yield top
+
+    carried = ", ".join(f"{c} {t}" for c, t in src.dtypes if c in carry)
+    cands = src.mapInPandas(
+        run_pool, f"{carried}, query_id long, adc_dist double"
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("id").asc()
+    )
+    pooled = (
+        cands.repartition(1)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= pool_k)
+        .select(*carry)
+    )
+    return pooled.mapInPandas(
+        rescore, "query_id long, rank long, id string, distance double"
+    )
 
 
 def train_pq_codebooks_df(
@@ -755,9 +999,10 @@ def _ivfpq_codes_arrow(
 ) -> DataFrame:
     """(item_id, cell, codes ARRAY<INT>): the composite index's encode
     as one shuffle-free Arrow pass on the shared numpy kernel — the
-    collection's one encode form: it builds the materialized code
-    tier and encodes late rows at query time. `ivfpq_codes_df` is the
-    SQL form of the same op, for the oracle-replayed rows.
+    arithmetic the collection stores in its rows (`stored_codes`) and
+    runs on late rows at query time (`pq_pooled_topk`).
+    `ivfpq_codes_df` is the SQL form of the same op, for the
+    oracle-replayed rows.
 
     It replays the SQL form's arithmetic: cells and residuals come
     from kernel.assign_residuals, and each subspace code is the argmin
@@ -772,26 +1017,17 @@ def _ivfpq_codes_arrow(
 
     books = np.asarray(codebooks, dtype=np.float64)
     m, _kk, sub = books.shape
-    order = sorted(centroids, key=lambda c: c[0])
-    cents = np.asarray([vec for _cid, vec in order], dtype=np.float64)
-    cids = np.asarray([cid for cid, _vec in order], dtype=np.int64)
+    cids, cents = _cell_matrix(centroids)
 
     def encode(pdf):
-        x = kernel.matrix(pdf[item_emb])
-        ids = pdf[item_id].to_numpy()
-        if unit:
-            kept, x = kernel.unit_rows(x)
-            ids = ids[kept]
-        ok, pick, resid = kernel.assign_residuals(x, cents)
-        if not len(resid):
+        rows, pick, codes = kernel.encode_rows(
+            kernel.matrix(pdf[item_emb]), books, cents, unit
+        )
+        if not len(rows):
             return None
-        codes = np.empty((len(resid), m), dtype=np.int32)
-        for mi in range(m):
-            d = kernel.fold_l2(resid[:, mi * sub : (mi + 1) * sub], books[mi])
-            codes[:, mi] = np.argmin(kernel.rounded(d, fold_zero=False), axis=1)
         return pd.DataFrame(
             {
-                item_id: ids[ok],
+                item_id: pdf[item_id].to_numpy()[rows],
                 "cell": cids[pick].astype(np.int32),
                 "codes": list(codes),
             }
@@ -995,12 +1231,11 @@ def ivfpq_adc_topk_df(
     probed cells — |corpus| × n_probe/n_cells × m bytes per query.
 
     This is the SQL form, the one the oracle-replayed rows run
-    (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`). The
-    collection's `query(index="ivfpq")` runs the numpy form of the same
-    search — `ivfpq_probes` + `pq_adc_topk(cells=)` over
-    `_ivfpq_codes_arrow` codes — with no driver round trip; on the same
-    codes and probes its (query_id, id, adc_dist) rows equal this
-    form's (tests/test_ivfpq.py).
+    (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`). The numpy
+    form of the same search — `ivfpq_probes` + `pq_adc_topk(cells=)`
+    over `_ivfpq_codes_arrow` codes, the arithmetic of the
+    collection's `pq_pooled_topk` — returns the same (query_id, id,
+    adc_dist) rows on the same codes and probes (tests/test_ivfpq.py).
 
     Physical shape (all DataFrame, oracle-replayable):
     * cell assignment: one map-side `least(struct(...))` expression

@@ -19,6 +19,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """`spark.driver.memory`: SPARK_DRIVER_MEMORY when set, else 16g
+    capped at half the host's physical memory, so sessions running side
+    by side on a small host leave it room instead of each claiming
+    16g."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(16 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "chroma_rs_spark",
     master: str | None = None,
@@ -51,7 +63,7 @@ def get_spark(
         )
         # local[N] runs everything in the driver JVM: size the heap for
         # N concurrent tasks or GC pauses dominate small-query timings
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         # every distinct plan compiles its own codegen classes; a
         # long-lived session running many queries fills the default
         # 256m JIT code cache, after which HotSpot stops compiling and

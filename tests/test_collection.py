@@ -568,3 +568,145 @@ def test_find_duplicates_three_methods(engine):
 
     with _pytest.raises(ValueError):
         coll.find_duplicates(method="nope")
+
+
+def _coded_collection(engine, name="coded"):
+    """24 cosine rows with pq and ivfpq codes materialized into them."""
+    import numpy as np
+
+    c = engine.create_collection(name, {"hnsw:space": "cosine"})
+    vecs = np.random.default_rng(21).normal(size=(24, 4)).tolist()
+    c.add(
+        ids=[f"v{i:02d}" for i in range(24)],
+        embeddings=vecs,
+        documents=[f"doc {i}" for i in range(24)],
+        metadatas=[{"g": str(i % 2)} for i in range(24)],
+    )
+    c.build_pq_index(m=2, k=4, sample_size=24)
+    c.build_ivfpq_index(n_centroids=2, max_iter=2, m=2, k=4, sample_size=24)
+    c.materialize_pq_codes()
+    c.materialize_ivfpq_codes()
+    return c, vecs
+
+
+def test_stored_code_columns_stay_hidden(engine):
+    """The rows' `_pq` / `_ivfpq` codes never reach a public read, and
+    stats() keeps its keys."""
+    from chroma_rs_spark import collection as C
+
+    c, vecs = _coded_collection(engine)
+    hidden = set(C.CODE_COLS.values())
+    everything = ["embeddings", "documents", "metadatas", "distances"]
+    reads = [
+        c.get(include=["embeddings", "documents", "metadatas"]),
+        c.peek(),
+        C.items_df(engine, c),
+        c.query(vecs[:2], n_results=3, include=everything),
+        c.query(vecs[:2], n_results=3, index="pq", include=everything),
+        c.query(vecs[:2], n_results=3, index="ivfpq", include=everything),
+        c.query_diverse(vecs[:2], n_results=3, include=everything),
+    ]
+    for df in reads:
+        assert not hidden & set(df.columns), df.columns
+    assert not hidden & set(c.peek().collect()[0].asDict())
+    assert set(c.stats()) == {
+        "count", "data_files", "data_bytes", "dim", "partition_by",
+        "ivf_index", "pq_index", "pq_codes", "ivfpq_index", "ivfpq_codes",
+    }
+
+
+def test_mutations_carry_stored_codes(engine):
+    """Kept rows carry their codes through upsert, delete and compact;
+    new rows from add/upsert have none yet."""
+    from chroma_rs_spark import collection as C
+
+    c, vecs = _coded_collection(engine, "carried")
+
+    def stored():
+        return {
+            r["id"]: (r["_pq"], r["_ivfpq"])
+            for r in C.items_df(engine, c, keep_codes=True).collect()
+        }
+
+    before = stored()
+    c.upsert(ids=["v00", "new"], embeddings=[vecs[5], vecs[6]])
+    c.add(ids=["added"], embeddings=[vecs[7]])
+    c.delete(ids=["v01"])
+    c.compact()
+    after = stored()
+    assert after["v00"] == (None, None) and after["new"] == (None, None)
+    assert after["added"] == (None, None) and "v01" not in after
+    assert all(after[i] == before[i] for i in before if i not in ("v00", "v01"))
+
+
+@pytest.mark.parametrize("crash", ["mid_write", "between_renames"])
+def test_materialize_crash_windows_keep_one_complete_state(engine, monkeypatch, crash):
+    """materialize_*_codes rewrites the data through _swap_in: a crash
+    inside the write leaves the previous rows (no codes) live, a crash
+    between the two renames promotes the complete rewrite, and either
+    way the next read sees every row once and queries return the same
+    rows."""
+    import os
+
+    from chroma_rs_spark import collection as C
+
+    c, vecs = _coded_collection(engine, f"crash_{crash}")
+    c.build_pq_index(m=2, k=4, sample_size=24)  # a new generation: codes stale
+
+    def ranked():
+        return [tuple(r) for r in c.query(vecs[:3], n_results=4, index="pq").collect()]
+
+    before = ranked()
+    path = engine.data_path(c.id)
+    if crash == "mid_write":
+
+        def dying_write(engine_, coll, df, dest, mode):
+            os.makedirs(dest)  # a partial tmp: no _SUCCESS marker
+            raise RuntimeError("crash inside the write")
+
+        monkeypatch.setattr(C, "_write", dying_write)
+    else:
+
+        class CrashBeforePromote:
+            def __getattr__(self, name):
+                return getattr(os, name)
+
+            @staticmethod
+            def replace(src, dst):
+                if src.endswith(".__tmp"):
+                    raise RuntimeError("crash between the renames")
+                return os.replace(src, dst)
+
+        monkeypatch.setattr(C, "os", CrashBeforePromote())
+    with pytest.raises(RuntimeError, match="crash"):
+        c.materialize_pq_codes()
+    monkeypatch.undo()
+
+    assert c.count() == 24
+    assert c.stats()["pq_codes"] is (crash == "between_renames")
+    assert ranked() == before
+    # a reader leaves a tmp beside a live dir alone (it may be a live
+    # writer's); the next write clears it
+    assert os.path.exists(path + ".__tmp") is (crash == "mid_write")
+    c.materialize_pq_codes()
+    assert c.stats()["pq_codes"] and ranked() == before
+    assert not os.path.exists(path + ".__tmp") and not os.path.exists(path + ".__old")
+
+
+def test_legacy_codes_dirs_are_ignored_then_deleted(engine):
+    """Code tables an earlier version wrote beside the data (pq_codes/,
+    ivfpq_codes/) are never read: their rows are encoded on the fly,
+    and the next build or materialize deletes the dirs."""
+    import os
+
+    c, vecs = _coded_collection(engine, "legacy")
+    cdir = engine.collection_dir(c.id)
+    want = [tuple(r) for r in c.query(vecs[:2], n_results=3, index="pq").collect()]
+    for name in ("pq_codes", "ivfpq_codes"):
+        # a committed table of garbage codes under the old layout
+        engine.spark.createDataFrame([("v00", [9, 9])], "id string, codes array<int>") \
+            .write.parquet(os.path.join(cdir, name))
+    assert [tuple(r) for r in c.query(vecs[:2], n_results=3, index="pq").collect()] == want
+    c.materialize_pq_codes()
+    assert not os.path.exists(os.path.join(cdir, "pq_codes"))
+    assert not os.path.exists(os.path.join(cdir, "ivfpq_codes"))

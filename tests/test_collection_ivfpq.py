@@ -139,17 +139,31 @@ def test_materialized_codes_used_and_results_unchanged(ivfpq_coll, engine):
 
 
 def test_rebuild_invalidates_materialized_codes(ivfpq_coll, engine):
-    from chroma_rs_spark.collection import IVFPQ_CODES_DIR
-
     c, ids, vecs = ivfpq_coll
     c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
-    c.materialize_ivfpq_codes()
-    codes_dir = os.path.join(engine.collection_dir(c.id), IVFPQ_CODES_DIR)
-    assert os.path.isdir(codes_dir)
-    # rebuilding with different m must delete the stale codes table
+    path = c.materialize_ivfpq_codes()
+    assert path == engine.data_path(c.id)
+    assert not os.path.exists(os.path.join(engine.collection_dir(c.id), "ivfpq_codes"))
+    assert c.stats()["ivfpq_codes"] is True
+    # rebuilding with different m writes a new generation: every stored
+    # code is stale, and the rows are encoded on the fly under the new
+    # index — exactly as after materializing them again
     c.build_ivfpq_index(n_centroids=4, max_iter=3, m=4, k=8, sample_size=64)
-    assert not os.path.exists(codes_dir)
     assert c.stats()["ivfpq_codes"] is False
+
+    def run():
+        return [
+            tuple(r)
+            for r in c.query(
+                [vecs[2], vecs[30]], n_results=5, index="ivfpq", n_probe=2,
+                oversample=2,
+            ).collect()
+        ]
+
+    stale = run()
+    c.materialize_ivfpq_codes()
+    assert c.stats()["ivfpq_codes"] is True
+    assert run() == stale
 
 
 def test_materialize_requires_index(engine):

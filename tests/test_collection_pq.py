@@ -99,29 +99,37 @@ def test_pq_rejects_ip_metric(engine):
         c.build_pq_index()
 
 
+def _stored(c, col="_pq"):
+    from chroma_rs_spark.collection import items_df
+
+    return {
+        r["id"]: r[col]
+        for r in items_df(c._engine, c, keep_codes=True).select("id", col).collect()
+    }
+
+
 def test_materialized_codes_serve_queries_and_absorb_late_adds(pq_coll):
     c, ids, vecs = pq_coll
     c.build_pq_index(m=2, k=8, sample_size=64)
-    import os
-
-    from chroma_rs_spark.collection import PQ_CODES_DIR
-
     path = c.materialize_pq_codes()
-    assert os.path.isdir(path) and path.endswith(PQ_CODES_DIR)
+    # the codes live in the rows: the data is rewritten, and no codes
+    # table is written beside it
+    assert path == c._engine.data_path(c.id)
+    cdir = c._engine.collection_dir(c.id)
+    assert not os.path.exists(os.path.join(cdir, "pq_codes"))
     probe = vecs[7]
     res = c.query([probe], n_results=5, index="pq", oversample=8).collect()
     assert res[0]["id"] == ids[7] and res[0]["distance"] == 0.0
-    # late-added item (not in the codes table) is still searchable
+    # late-added item (no stored code) is still searchable
     c.add(ids=["late"], embeddings=[[0.0, 0.0, 0.0, 1.01]])
     got = c.query(
         [[0.0, 0.0, 0.0, 1.01]], n_results=1, index="pq", oversample=8
     ).collect()
     assert got[0]["id"] == "late" and got[0]["distance"] == 0.0
-    # a partial codes dir (no _SUCCESS) is treated as absent
-    os.remove(os.path.join(path, "_SUCCESS"))
-    from chroma_rs_spark.collection import _load_codes
-
-    assert _load_codes(c._engine, c, "pq") is None
+    stored = _stored(c)
+    assert stored["late"] is None
+    assert all(len(stored[i]["codes"]) == 2 for i in ids)
+    assert len({stored[i]["gen"] for i in ids}) == 1
 
 
 def test_materialize_requires_persisted_index(engine):
@@ -133,16 +141,17 @@ def test_materialize_requires_persisted_index(engine):
 
 def test_rebuild_with_different_m_invalidates_stale_codes(pq_coll):
     """ADVICE regression: rebuilding codebooks with a different m must
-    not leave a codes table encoded under the old codebooks — larger m
+    not rank with codes encoded under the old codebooks — larger m
     crashed ADC (codes[:, mi] out of range), smaller m silently ranked
-    garbage candidates."""
+    garbage candidates. The rebuild's new generation id makes every
+    stored code stale."""
     c, ids, vecs = pq_coll
     c.build_pq_index(m=2, k=8, sample_size=64)
-    codes_path = c.materialize_pq_codes()
-    assert os.path.isdir(codes_path)
+    c.materialize_pq_codes()
+    assert c.stats()["pq_codes"]
     # rebuild with LARGER m: stale 2-subspace codes would crash ADC
     c.build_pq_index(m=4, k=8, sample_size=64)
-    assert not os.path.isdir(codes_path), "stale codes must be invalidated"
+    assert c.stats()["pq_codes"] is False, "stale codes must be invalidated"
     probe = vecs[3]
     res = c.query([probe], n_results=3, index="pq", oversample=8).collect()
     assert res[0]["id"] == ids[3] and res[0]["distance"] == 0.0
@@ -153,18 +162,89 @@ def test_rebuild_with_different_m_invalidates_stale_codes(pq_coll):
     assert res[0]["id"] == ids[3] and res[0]["distance"] == 0.0
 
 
-def test_load_pq_codes_self_heals_on_m_mismatch(pq_coll):
-    """Defense-in-depth: codes rows whose length disagrees with the
-    loaded codebooks' m read as absent and are re-encoded on the fly."""
+def test_rebuild_re_encodes_old_generation_rows(pq_coll):
+    """Rows whose stored code is of an earlier build are encoded on
+    the fly under the live codebooks: the query returns exactly what
+    it returns once every row holds a code of the new generation."""
     c, ids, vecs = pq_coll
     c.build_pq_index(m=2, k=8, sample_size=64)
     c.materialize_pq_codes()
-    from chroma_rs_spark.collection import _load_codes
+    old_gen = {v["gen"] for v in _stored(c).values()}
+    c.build_pq_index(m=4, k=4, sample_size=64)
+    probes = [vecs[1], vecs[22], vecs[50]]
 
-    ok = _load_codes(c._engine, c, "pq", expected_m=2)
-    assert ok.count() == len(ids)
-    mismatched = _load_codes(c._engine, c, "pq", expected_m=4)
-    assert mismatched.count() == 0  # all rows filtered -> re-encode path
+    def run():
+        return [
+            tuple(r)
+            for r in c.query(probes, n_results=6, index="pq", oversample=2).collect()
+        ]
+
+    stale = run()
+    c.materialize_pq_codes()
+    stored = _stored(c)
+    assert all(len(v["codes"]) == 4 for v in stored.values())
+    assert not {v["gen"] for v in stored.values()} & old_gen
+    assert run() == stale
+
+
+def test_update_of_an_embedding_re_encodes_its_row(pq_coll):
+    """update() of an embedding voids that row's stored code, so the
+    query encodes the new vector instead of ranking a code of the old
+    one; updates that keep the embedding keep the code."""
+    c, ids, vecs = pq_coll
+    c.build_pq_index(m=2, k=8, sample_size=64)
+    c.materialize_pq_codes()
+    before = _stored(c)
+    far = [0.0, 0.0, 0.0, 1.0]  # cluster 3; ids[0] sits in cluster 0
+    c.update(ids=[ids[0]], embeddings=[far])
+    c.update(ids=[ids[1]], documents=["new text"])
+    after = _stored(c)
+    assert after[ids[0]] is None
+    assert after[ids[1]] == before[ids[1]]
+    res = c.query([far], n_results=1, index="pq", oversample=1).collect()
+    assert res[0]["id"] == ids[0] and res[0]["distance"] == 0.0
+
+
+def test_batched_query_rescores_the_union_of_the_pools(pq_coll):
+    """A batched pq query ranks every probe exactly over the UNION of
+    the probes' ADC pools (the pooled ids of every probe in the
+    batch), not over its own pool: on this batch a per-probe pool
+    would return other rows."""
+    from chroma_rs_spark.collection import _load_index, items_df
+    from chroma_rs_spark.operators.pq import _unit_probe, pq_adc_topk
+
+    c, ids, vecs = pq_coll
+    c.build_pq_index(m=2, k=4, sample_size=64)
+    c.materialize_pq_codes()
+    probes = [vecs[0], vecs[3], vecs[8], vecs[12]]
+    n, pool_k = 3, 3
+    got = [
+        tuple(r)
+        for r in c.query(
+            probes, n_results=n, index="pq", oversample=1, include=["distances"]
+        ).collect()
+    ]
+    # the pools, from the stored codes with the numpy ADC operator
+    codes = items_df(c._engine, c, keep_codes=True).selectExpr("id", "_pq.codes AS codes")
+    books = _load_index(c._engine, c, "pq")
+    pools = {}
+    for r in pq_adc_topk(
+        codes, books, [(i, _unit_probe(p)) for i, p in enumerate(probes)],
+        k=pool_k, id_type="string",
+    ).collect():
+        pools.setdefault(r["query_id"], set()).add(r["id"])
+    union = set().union(*pools.values())
+    exact = c.query(probes, n_results=len(ids), include=["distances"]).collect()
+
+    def ranked(allowed):
+        out = []
+        for q in range(len(probes)):
+            rows = [r for r in exact if r["query_id"] == q and r["id"] in allowed(q)]
+            out += [(q, i + 1, r["id"], r["distance"]) for i, r in enumerate(rows[:n])]
+        return out
+
+    assert got == ranked(lambda q: union)
+    assert got != ranked(lambda q: pools[q])
 
 
 def test_filtered_pq_query_candidates_come_from_matching_docs(pq_coll):
@@ -238,3 +318,23 @@ def test_pq_l2_recall_band_on_near_uniform_embeddings(engine, spark):
                 assert r["distance"] == exact[r["id"]]
     # measured band (>= 0.5 observed with margin)
     assert hits / total >= 0.4, f"recall {hits / total:.2f} below band"
+
+
+def test_non_finite_row_stays_out_of_the_training_sample(engine):
+    """One NaN component in a 200-row cosine collection: its stored
+    norm is NaN, so the row stays out of the md5 training sample. Were
+    it sampled, its cell's mean and every ADC distance built on it
+    would be NaN: the transient pq and ivfpq queries returned no row
+    and the ivfpq build lost all but one cell."""
+    rng = np.random.default_rng(4)
+    vecs = rng.normal(size=(200, 16))
+    vecs[17, 3] = np.nan
+    c = engine.create_collection("nan_row", {"hnsw:space": "cosine"})
+    c.add(ids=[f"r{i:03d}" for i in range(200)], embeddings=vecs.tolist())
+    probes = vecs[[0, 50, 100, 150]].tolist()
+    for index in ("pq", "ivfpq"):
+        res = c.query(probes, n_results=10, index=index).collect()
+        assert len(res) == 40, (index, len(res))
+        assert all(math.isfinite(r["distance"]) for r in res)
+    c.build_ivfpq_index(n_centroids=4)
+    assert len(c.query(probes, n_results=10, index="ivfpq").collect()) == 40

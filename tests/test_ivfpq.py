@@ -229,3 +229,43 @@ def test_numpy_residuals_match_sql_residuals(spark):
     assert (900, 3, hexed([1.0, 2.0, 0.0, 0.0])) in got
     assert 901 not in {row[0] for row in got}
     assert got == sql
+
+
+def test_numpy_adc_rounds_binary_halves_like_spark(spark):
+    """The numpy ADC rounds its lookup tables and sums with Spark
+    ROUND's HALF_UP, like its SQL twin: the probe's residual (1/16,
+    1/16) against the codeword (0, 0) is exactly 1/128 = 0.0078125,
+    which half-even rounding would turn into 0.007812 and Spark into
+    0.007813 (and (15/16)^2 * 2 = 1.7578125 is a half too)."""
+    from chroma_rs_spark.operators.pq import (
+        ivfpq_adc_topk_df,
+        ivfpq_probes,
+        pq_adc_topk,
+    )
+
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    books = np.asarray([[[0.0, 0.0], [1.0, 1.0]]])  # m=1, k=2, sub=2
+    codes = spark.createDataFrame(
+        [("a", 0, [0]), ("b", 0, [1]), ("c", 1, [0])],
+        "id string, cell int, codes array<int>",
+    )
+    queries = [(0, [1.0625, 0.0625])]  # cell 0, residual (1/16, 1/16)
+    probes = spark.createDataFrame(
+        queries, "query_id long, query_embedding array<double>"
+    )
+    sql = sorted(
+        (r["query_id"], r["rank"], r["neighbor_id"], r["adc_dist"])
+        for r in ivfpq_adc_topk_df(
+            codes, books, cents, n_probe=1, k=5, probes=probes, codes=codes,
+            item_id="id",
+        ).collect()
+    )
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(
+            codes, books, queries, k=5, id_type="string",
+            cells=(cents, ivfpq_probes(cents, queries, 1)),
+        ).collect()
+    )
+    assert sql == [(0, 1, "a", 0.007813), (0, 2, "b", 1.757813)]
+    assert got == sql

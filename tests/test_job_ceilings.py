@@ -90,39 +90,56 @@ def test_collection_ivfpq_build_job_ceiling(spark, tmp_path):
     )
 
 
-def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
-    """A warm `query(index="ivfpq")` on a built, materialized index
-    after an upsert: the loaded index is memoized and the probe cells
-    are picked on the driver, so building the query runs no job, and
-    plan plus collect stays a handful of jobs even with late rows to
-    encode: measured 0 plan + 10 collect jobs (11 before the exact
-    ranking moved into the numpy kernel). Before the numpy IVF-PQ
-    search this fixture took 7 plan jobs (two index-table schema
-    reads, two index collects, the SQL probe-cell collect) and 18
-    collect jobs (the SQL LUT/ADC chain and the pool distinct), 25 in
-    all. The ceiling sits three jobs above today's 10, so a re-split of
-    the candidate pool into driver round trips fails here."""
+def _warm_query_jobs(spark, tmp_path, index: str) -> tuple[int, int]:
+    """(plan, plan + collect) jobs of a warm `query(index=...)` on a
+    built, materialized index after an upsert (late rows to encode)."""
     from chroma_rs_spark.jobcount import count_jobs_stages
 
     c, vecs, rng = _ceiling_collection(spark, tmp_path)
-    _build_ceiling_index(c)
-    c.materialize_ivfpq_codes()
+    if index == "ivfpq":
+        _build_ceiling_index(c)
+        c.materialize_ivfpq_codes()
+    else:
+        c.build_pq_index(m=4, k=8, sample_size=120)
+        c.materialize_pq_codes()
     c.upsert(
         ids=[f"u{i}" for i in range(8)],
         embeddings=rng.normal(size=(8, 16)).tolist(),
     )
 
     def query():
-        return c.query(vecs[:4], n_results=5, index="ivfpq")
+        return c.query(vecs[:4], n_results=5, index=index)
 
     query().collect()  # warm: the index memo and the JVM
     plan, _, df = count_jobs_stages(spark, query)
     total, _, rows = count_jobs_stages(spark, df.collect)
     assert len(rows) == 20
+    return plan, plan + total
+
+
+def test_collection_ivfpq_warm_query_job_ceiling(spark, tmp_path):
+    """The loaded index is memoized and the probe cells are picked on
+    the driver, so building a warm ivfpq query runs no job. The rows
+    carry their codes, so one scan feeds the ADC pool and its exact
+    rescore, the late rows encoded on the fly inside it: measured 0
+    plan + 4 collect jobs (the broadcast ranking with its
+    single-partition pool shuffle, the include join and the final
+    sort). Before codes moved into the rows this fixture ran 10
+    collect jobs: a codes-table scan, three freshness id broadcasts,
+    the pool window and its broadcast semi-join, then the exact
+    rescore's own scan of the items; before the numpy IVF-PQ search
+    it ran 7 plan jobs and 18 collect jobs."""
+    plan, total = _warm_query_jobs(spark, tmp_path, "ivfpq")
     assert plan == 0, f"warm ivfpq query planning ran {plan} jobs (was 0)"
-    assert plan + total <= 13, (
-        f"warm ivfpq query de-fused: {plan + total} jobs (was 10)"
-    )
+    assert total <= 4, f"warm ivfpq query de-fused: {total} jobs (ceiling 4)"
+
+
+def test_collection_pq_warm_query_job_ceiling(spark, tmp_path):
+    """The pq query runs the same one-scan pooled plan as ivfpq:
+    measured 0 plan + 4 collect jobs (10 with a separate codes table)."""
+    plan, total = _warm_query_jobs(spark, tmp_path, "pq")
+    assert plan == 0, f"warm pq query planning ran {plan} jobs (was 0)"
+    assert total <= 4, f"warm pq query de-fused: {total} jobs (ceiling 4)"
 
 
 def test_collection_upsert_and_exact_query_job_ceilings(spark, tmp_path):
@@ -130,8 +147,10 @@ def test_collection_upsert_and_exact_query_job_ceilings(spark, tmp_path):
     it runs only the overwrite: measured 2 jobs (4 when the dim check
     ran a Spark distinct and collect). The exact query scores each
     partition in one Arrow pass and broadcasts the ranking into the
-    include join: plan plus collect measured 0 + 5 jobs; the ceiling
-    is the 6 the broadcast cross-join ranking ran."""
+    include join, then sorts the bounded result in one partition (no
+    range-sampling job): plan plus collect measured 0 + 4 jobs (5 with
+    a range-partitioned orderBy, 6 with the broadcast cross-join
+    ranking)."""
     from chroma_rs_spark.jobcount import count_jobs_stages
 
     c, vecs, rng = _ceiling_collection(spark, tmp_path)
@@ -151,4 +170,4 @@ def test_collection_upsert_and_exact_query_job_ceilings(spark, tmp_path):
     plan, _, df = count_jobs_stages(spark, query)
     total, _, rows = count_jobs_stages(spark, df.collect)
     assert len(rows) == 20
-    assert plan + total <= 6, f"exact query ran {plan + total} jobs (ceiling 6)"
+    assert plan + total <= 4, f"exact query ran {plan + total} jobs (ceiling 4)"

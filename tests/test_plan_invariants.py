@@ -100,8 +100,8 @@ def test_small_dims_broadcast_in_relational_joins(spark):
 
 @pytest.fixture(scope="module")
 def ann_coll(spark, tmp_path_factory):
-    """A cosine collection with a persisted ivfpq index and its
-    materialized, cell-partitioned code tier."""
+    """A cosine collection with persisted pq and ivfpq indexes and
+    their codes materialized into the rows."""
     import numpy as np
 
     from chroma_rs_spark.catalog import Engine
@@ -110,6 +110,8 @@ def ann_coll(spark, tmp_path_factory):
     c = engine.create_collection("plans", {"hnsw:space": "cosine"})
     vecs = np.random.default_rng(3).normal(size=(40, 8)).tolist()
     c.add(ids=[f"v{i:02d}" for i in range(40)], embeddings=vecs)
+    c.build_pq_index(m=2, k=4, sample_size=40)
+    c.materialize_pq_codes()
     c.build_ivfpq_index(n_centroids=4, max_iter=2, m=2, k=4, sample_size=40)
     c.materialize_ivfpq_codes()
     return c, vecs
@@ -123,26 +125,33 @@ def _query_plan(ann_coll, index: str) -> str:
 
 @pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
 def test_collection_query_rescore_broadcasts(ann_coll, index):
-    # every index ends in the exact ranking: the numpy scorer runs
-    # map-side on the stored items, which never shuffle before it (the
-    # probes ride in its closure); a candidate pool reaches the items
-    # as a broadcast left-semi join on id
+    # every index ends in the exact ranking, and the items are read
+    # once under it: the numpy scorer (exact) or the ADC pool scorer
+    # (pq/ivfpq) runs map-side on the one items scan, which never
+    # shuffles before it (the probes ride in its closure). The pooled
+    # plans read the codes from the rows: no codes-table scan, no id
+    # join keeping codes fresh, and the pool reaches the rescore through
+    # one single-partition window, not a semi-join back to the items
     plan = _query_plan(ann_coll, index)
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan
     lines = plan.splitlines()
-    # the topmost MapInPandas, the one emitting `distance`, is the scorer
+    # the topmost MapInPandas, the one emitting `distance`, ranks
     at = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
     assert "distance#" in lines[at], lines[at]
-    scan = next(i for i in range(at, len(lines)) if "FileScan" in lines[i])
-    assert "embedding" in lines[scan], lines[scan]
-    assert not any("Exchange" in ln for ln in lines[at:scan]), lines[at:scan]
+    scans = [i for i in range(at, len(lines)) if "FileScan" in lines[i]]
+    assert len(scans) == 1, [lines[i] for i in scans]
+    assert "embedding" in lines[scans[0]], lines[scans[0]]
+    assert "Join" not in "".join(lines[at : scans[0]]), lines[at : scans[0]]
     if index == "exact":
-        assert "Join" not in "".join(lines[at:scan]), lines[at:scan]
+        assert not any("Exchange" in ln for ln in lines[at : scans[0]])
     else:
-        assert re.search(
-            r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], LeftSemi, BuildRight",
-            lines[at + 1],
-        ), lines[at + 1]
+        assert f"_{index}:struct<gen:bigint" in lines[scans[0]], lines[scans[0]]
+        pool = next(i for i in range(at + 1, scans[0]) if "MapInPandas" in lines[i])
+        assert "adc_dist#" in lines[pool], lines[pool]
+        exchanges = [ln for ln in lines[at:pool] if "Exchange" in ln]
+        assert len(exchanges) == 1 and "SinglePartition" in exchanges[0], exchanges
+        assert not any("Exchange" in ln for ln in lines[pool : scans[0]])
 
 
 @pytest.mark.parametrize("index", ["exact", "pq", "ivfpq"])
@@ -192,9 +201,9 @@ def test_collection_query_plans_run_no_sql_lambda(upserted_coll, index):
 
 
 def test_collection_ivfpq_prunes_code_cells_once(ann_coll):
-    # the probed cells are computed once on the driver: they prune the
-    # cell-partitioned code scan, and no probe-cell window (ordered by
-    # the centroid distance _cd) runs again inside the plan
+    # the probed cells are computed once on the driver: they filter the
+    # rows' stored cells in the scan stage, and no probe-cell window
+    # (ordered by the centroid distance _cd) runs again inside the plan
     plan = _query_plan(ann_coll, "ivfpq")
-    assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
+    assert re.search(r"_ivfpq#\d+\.cell IN \(", plan), plan
     assert not re.search(r"Window \[.*_cd#", plan), plan

@@ -5,16 +5,15 @@ index family the same treatment.
 
 Builds the composite IVF-PQ index through the PRODUCTION collection
 path on a ~100x corpus (409,600 clustered 64-dim vectors — 100x the
-recall ladder's 4,096), materializes the hive-partitioned code tier,
-and records what the 100 TB argument actually claims:
+recall ladder's 4,096), materializes the codes into the rows, and
+records:
 
   * build wall (train + encode + persist, the one-time index cost);
-  * probed-byte fraction — bytes of code files LISTED by a
-    partition-pruned probe vs bytes of raw vectors, the scan-cost
-    ratio that makes IVF-PQ the 100 TB design;
-  * the executed plan's PartitionFilters (cell IN (...)) at the full
-    cell count, proving n_probe of n_cells directories are pruned
-    BEFORE any code bytes move;
+  * code bytes — the compressed size of the rows' `_ivfpq` column
+    chunks (parquet footers) against the raw data bytes;
+  * the executed plan's scan-stage filter on the stored cell
+    (`_ivfpq.cell IN (...)`) at the full cell count: rows of
+    unprobed cells never reach the ADC scorer;
   * recall@10 vs the exact cosine path on the same corpus;
   * warm query wall through query(index="ivfpq").
 
@@ -53,6 +52,26 @@ def _dir_bytes(path: str) -> int:
     for r, _d, files in os.walk(path):
         for f in files:
             total += os.path.getsize(os.path.join(r, f))
+    return total
+
+
+def _column_bytes(path: str, column: str) -> int:
+    """Compressed bytes of `column`'s chunks in the parquet files under
+    `path`, from the file footers."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for r, _d, files in os.walk(path):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            meta = pq.ParquetFile(os.path.join(r, f)).metadata
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                for ci in range(group.num_columns):
+                    chunk = group.column(ci)
+                    if chunk.path_in_schema.split(".")[0] == column:
+                        total += chunk.total_compressed_size
     return total
 
 
@@ -117,20 +136,14 @@ def main() -> int:
     )
     train_wall = time.time() - t0
     t0 = time.time()
-    codes_path = c.materialize_ivfpq_codes()
+    data_path = c.materialize_ivfpq_codes()
     mat_wall = time.time() - t0
-    codes_bytes = _dir_bytes(codes_path)
-    cell_dirs = sum(
-        1 for d in os.listdir(codes_path) if d.startswith("cell=")
-    )
+    codes_bytes = _column_bytes(data_path, "_ivfpq")
     print(json.dumps({
         "stage": "build", "train_sec": round(train_wall, 1),
         "materialize_sec": round(mat_wall, 1),
-        "codes_bytes": codes_bytes, "cell_dirs": cell_dirs,
+        "codes_bytes": codes_bytes,
         "codes_vs_raw": round(codes_bytes / raw_bytes, 4),
-        "probed_byte_frac_vs_raw": round(
-            (codes_bytes / max(cell_dirs, 1)) * N_PROBE / raw_bytes, 5
-        ),
     }), flush=True)
 
     # probes: one corpus point per true cluster
@@ -144,19 +157,16 @@ def main() -> int:
     for row in exact:
         truth.setdefault(row["query_id"], set()).add(row["id"])
 
-    # verify partition pruning in the EXECUTED plan at this cell count
+    # the probed cells filter the stored cells in the EXECUTED plan
+    # (Spark prints an INSET for >threshold literals, IN below it)
     qdf = c.query(
         probes, n_results=TOP_K, index="ivfpq", n_probe=N_PROBE,
         oversample=10,
     )
     plan = qdf._jdf.queryExecution().executedPlan().toString()
-    # a pruned codes scan shows a NON-EMPTY PartitionFilters on cell
-    # (Spark prints an INSET for >threshold literals, IN below it)
     import re as _re
-    mfilt = _re.search(r"PartitionFilters: \[cell#\d+ IN", plan) or _re.search(
-        r"PartitionFilters: \[cell#\d+ INSET", plan
-    )
-    pruned = mfilt is not None
+
+    cell_filter = _re.search(r"_ivfpq#\d+\.cell (IN|INSET)", plan) is not None
     qdf.collect()
     for n_probe, oversample in ((N_PROBE, 10), (8, 20)):
         t0 = time.time()
@@ -172,7 +182,7 @@ def main() -> int:
             "oversample": oversample,
             "recall@10": round(recall, 3),
             "warm_query_sec": round(warm_query_wall, 2),
-            "partition_pruned": bool(pruned),
+            "cell_filter": cell_filter,
         }), flush=True)
 
     shutil.rmtree(root, ignore_errors=True)
