@@ -723,24 +723,28 @@ def _write_table(df: DataFrame, path: str) -> None:
         raise EngineError(f"index write did not commit: {path}")
 
 
-def _write_generation(path: str) -> None:
-    """A fresh 63-bit generation id for the index being written at
-    `path` (Spark's readers skip `_`-prefixed files)."""
+def _write_generation(path: str) -> int:
+    """Write and return a fresh 63-bit generation id for the index
+    being written at `path` (Spark's readers skip `_`-prefixed files)."""
+    gen = int.from_bytes(os.urandom(8), "big") >> 1
     with open(os.path.join(path, _GENERATION_FILE), "w") as f:
-        f.write(str(int.from_bytes(os.urandom(8), "big") >> 1))
+        f.write(str(gen))
+    return gen
 
 
-def _atomic_index_write(df: DataFrame, path: str) -> None:
-    """Persist one index table and its generation id through _swap_in:
-    a crash mid-build leaves the OLD index intact instead of a
-    deleted-or-partial directory that a later load would silently
-    zero-fill."""
+def _atomic_index_write(df: DataFrame, path: str) -> int:
+    """Persist one index table and its generation id through _swap_in
+    and return the id: a crash mid-build leaves the OLD index intact
+    instead of a deleted-or-partial directory that a later load would
+    silently zero-fill."""
+    gens = []
 
     def write(tmp: str) -> None:
         _write_table(df, tmp)
-        _write_generation(tmp)
+        gens.append(_write_generation(tmp))
 
     _swap_in(path, write)
+    return gens[0]
 
 
 def _drop_legacy_codes(engine: Engine, coll: Collection) -> None:
@@ -834,7 +838,30 @@ def _ivfpq_index_committed(cdir: str) -> bool:
 
 # index dir -> (marker stat, loaded artifact, generation id): one entry
 # per dir, replaced when a new generation commits (see _load_generation)
+# and seeded by each build with what it wrote (_remember_index)
 _INDEX_MEMO: dict[str, tuple[tuple[int, int], object, int]] = {}
+
+
+def _index_paths(engine: Engine, coll: Collection, index: str) -> tuple[str, str]:
+    """(index dir, the _SUCCESS marker its memo entry is keyed on)."""
+    cdir = engine.collection_dir(coll.id)
+    if index == "ivfpq":
+        path = os.path.join(cdir, IVFPQ_INDEX_DIR)
+        return path, os.path.join(path, "codebooks", "_SUCCESS")
+    path = os.path.join(cdir, IVF_INDEX_DIR if index == "ivf" else PQ_INDEX_DIR)
+    return path, os.path.join(path, "_SUCCESS")
+
+
+def _marker_key(marker: str) -> tuple[int, int]:
+    st = os.stat(marker)
+    return st.st_ino, st.st_mtime_ns
+
+
+def _remember_index(engine: Engine, coll: Collection, index: str, loaded, gen: int) -> None:
+    """Seed the memo with the artifact a build just swapped in, so the
+    next load (a materialize or a query) reads no index table."""
+    path, marker = _index_paths(engine, coll, index)
+    _INDEX_MEMO[path] = (_marker_key(marker), loaded, gen)
 
 
 def _load_index(engine: Engine, coll: Collection, index: str):
@@ -861,20 +888,15 @@ def _load_generation(engine: Engine, coll: Collection, index: str):
     a restored copy or a removed dir is seen at the next call. This is
     session-level reuse of a query's invariant inputs, as in
     incremental top-k similarity search (EDBT 2020, PAPERS.md)."""
-    cdir = engine.collection_dir(coll.id)
+    path, marker = _index_paths(engine, coll, index)
     if index == "ivfpq":
-        path = os.path.join(cdir, IVFPQ_INDEX_DIR)
-        committed = _ivfpq_index_committed(cdir)
-        marker = os.path.join(path, "codebooks", "_SUCCESS")
+        committed = _ivfpq_index_committed(engine.collection_dir(coll.id))
     else:
-        path = os.path.join(cdir, IVF_INDEX_DIR if index == "ivf" else PQ_INDEX_DIR)
         committed = _committed_index_dir(path)
-        marker = os.path.join(path, "_SUCCESS")
     if not committed:
         _INDEX_MEMO.pop(path, None)
         return None
-    st = os.stat(marker)
-    key = (st.st_ino, st.st_mtime_ns)
+    key = _marker_key(marker)
     hit = _INDEX_MEMO.get(path)
     if hit is not None and hit[0] == key:
         return hit[1], hit[2]
@@ -891,7 +913,7 @@ def _load_generation(engine: Engine, coll: Collection, index: str):
         with open(os.path.join(path, _GENERATION_FILE)) as f:
             gen = int(f.read())
     except FileNotFoundError:
-        gen = st.st_mtime_ns
+        gen = key[1]
     _INDEX_MEMO[path] = (key, loaded, gen)
     return loaded, gen
 
@@ -989,7 +1011,8 @@ def build_ivf_index(
         item_emb="embedding",
     )
     path = os.path.join(engine.collection_dir(coll.id), IVF_INDEX_DIR)
-    _atomic_index_write(_centroid_table(engine.spark, cents), path)
+    gen = _atomic_index_write(_centroid_table(engine.spark, cents), path)
+    _remember_index(engine, coll, "ivf", cents, gen)
     return path
 
 
@@ -1026,7 +1049,8 @@ def build_pq_index(
     )
     path = os.path.join(engine.collection_dir(coll.id), PQ_INDEX_DIR)
     _drop_legacy_codes(engine, coll)
-    _atomic_index_write(_codebook_table(engine.spark, books), path)
+    gen = _atomic_index_write(_codebook_table(engine.spark, books), path)
+    _remember_index(engine, coll, "pq", books, gen)
     return path
 
 
@@ -1072,6 +1096,8 @@ def build_ivfpq_index(
     # per-table swaps could crash between them on a REBUILD and leave a
     # fully-committed mixed-generation index (new codebooks + old
     # centroids) that _load_index would load — silent recall loss.
+    gens = []
+
     def write(tmp: str) -> None:
         _write_table(
             _codebook_table(engine.spark, books), os.path.join(tmp, "codebooks")
@@ -1079,13 +1105,14 @@ def build_ivfpq_index(
         _write_table(
             _centroid_table(engine.spark, cents), os.path.join(tmp, "centroids")
         )
-        _write_generation(tmp)
+        gens.append(_write_generation(tmp))
         # root-level commit marker: _recover_interrupted_overwrite
         # judges a parked tmp complete by _SUCCESS at its top level
         with open(os.path.join(tmp, "_SUCCESS"), "w"):
             pass
 
     _swap_in(root, write)
+    _remember_index(engine, coll, "ivfpq", (cents, books), gens[0])
     return root
 
 
@@ -1099,7 +1126,14 @@ def materialize_pq_codes(engine: Engine, coll: Collection) -> str:
     updated embeddings, codes of an earlier build — are encoded on the
     fly at query time (IVFADC keeps each code with the item it
     encodes, Jégou et al. TPAMI 2011). Requires a persisted index
-    (`build_pq_index` first)."""
+    (`build_pq_index` first).
+
+    COMPATIBILITY NOTE: `_pq` codes materialized before PQ took the
+    IVF-PQ code rule (the argmin of the rounded in-order fold,
+    kernel.residual_codes) were chosen by a BLAS-expansion argmin. They
+    can differ from today's encode only where two codewords lie within
+    1e-6 of each other, and they serve until the next materialize;
+    returned distances stay exact."""
     return _materialize_codes(engine, coll, "pq")
 
 
@@ -1251,8 +1285,9 @@ def _pooled_topk(
     rows without a code of its generation are encoded on the fly.
     Without a persisted index, a transient one is trained in memory
     (reads never write) and every row is encoded per query. A warm
-    query plans with no job. The SQL forms (`ivfpq_adc_topk_df` and
-    friends) serve the oracle-replayed rows."""
+    query plans with no job. The encode, probe and ADC arithmetic is
+    the one the pq/ivfpq suite rows run and their DuckDB oracles
+    replay (operators/pq.py)."""
     from chroma_rs_spark.operators.pq import (
         pq_pooled_topk,
         train_ivfpq,
@@ -1373,9 +1408,10 @@ def query(
     the rows (materialize_*_codes), or the item encoded on the fly when
     it has no code of the live index. Every index searches with the
     numpy forms of its operators (driver-side index and probe cells,
-    Arrow scorers; the exact ranking is knn_exact's arithmetic, bit for
-    bit); the SQL forms of the same operators serve the
-    oracle-replayed suite rows.
+    Arrow scorers). pq and ivfpq have no other form: the suite's
+    oracle-checked pq/ivfpq rows run the same encode, probe and ADC
+    code. The exact ranking is knn_exact's arithmetic, bit for bit;
+    knn_exact's SQL form serves the oracle-replayed exact rows.
     All paths share the filter pushdown (where / where_document /
     partition pruning run before the distance work).
 

@@ -20,10 +20,10 @@ construction:
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
 * `rounded_half_up` — the same rounding as Spark's ROUND, for numpy
   forms that replay a SQL form bit for bit (the exact ranking, IVF,
-  the IVF-PQ cells and codes, the ADC tables and sums);
+  the PQ and IVF-PQ cells and codes, the ADC tables and sums);
 * `assign_residuals` — the IVF-PQ cell-and-residual step;
-* `encode_rows` — the PQ and IVF-PQ encodes (`pq_codes`,
-  `residual_codes`);
+* `encode_rows` — the PQ and IVF-PQ encodes, one code rule
+  (`residual_codes`);
 * `adc` — the ADC distances of code rows from per-query lookup tables;
 * `probe_cells` — the IVF probe selection of `ivf_topk` and of the
   collection's IVF-PQ search (`pq.ivfpq_probes`);
@@ -206,9 +206,11 @@ def rounded_half_up(x: np.ndarray) -> np.ndarray:
 
 
 def assign_residuals(x: np.ndarray, cents: np.ndarray):
-    """(ok, pick, resid): the numpy `pq._ivfpq_residuals`, bit for bit.
-    `ok` masks the non-zero-norm rows of `x`, `pick` is their cosine
-    cell (a row of `cents`, ties low), `resid` is x[ok] - cents[pick]."""
+    """(ok, pick, resid): the IVF-PQ cell-and-residual step, in the
+    arithmetic the DuckDB oracles replay. `ok` masks the non-zero-norm
+    rows of `x`, `pick` is their cosine cell (a row of `cents`:
+    in-order folds, Spark ROUND's HALF_UP, ties low), `resid` is
+    x[ok] - cents[pick]."""
     xnorm = fold_norms(x)
     ok = xnorm != 0.0
     x, xnorm = x[ok], xnorm[ok]
@@ -217,21 +219,12 @@ def assign_residuals(x: np.ndarray, cents: np.ndarray):
     return ok, pick, x - cents[pick]
 
 
-def pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """(n, m) int32 PQ codes of the rows of `x`: per subspace, the
-    argmin of the `distances` squared L2 to its codebook (ties low)."""
-    m, _k, sub = books.shape
-    codes = np.empty((len(x), m), dtype=np.int32)
-    for mi in range(m):
-        d = distances("l2", x[:, mi * sub : (mi + 1) * sub], books[mi])
-        codes[:, mi] = np.argmin(d, axis=1)
-    return codes
-
-
 def residual_codes(resid: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """(n, m) int32 IVF-PQ codes of `assign_residuals`' residuals: per
-    subspace, the argmin of the rounded in-order squared-L2 fold (the
-    SQL encode's `_code_least_sql`, ties low)."""
+    """(n, m) int32 codes of the rows of `resid` (plain PQ vectors or
+    `assign_residuals`' IVF-PQ residuals): per subspace, the argmin of
+    the in-order squared-L2 fold (`fold_l2`) rounded like Spark's ROUND
+    (`rounded_half_up`), ties to the lower code — the arithmetic the
+    DuckDB oracles replay (`row_number() OVER (ORDER BY d, ci)`)."""
     m, _k, sub = books.shape
     codes = np.empty((len(resid), m), dtype=np.int32)
     for mi in range(m):
@@ -242,17 +235,17 @@ def residual_codes(resid: np.ndarray, books: np.ndarray) -> np.ndarray:
 
 def encode_rows(x: np.ndarray, books: np.ndarray, cents=None, unit: bool = False):
     """(rows, pick, codes): the rows of `x` that encode, the cell of
-    each (a row of `cents`; None for plain PQ) and their codes — PQ
-    codes (`pq_codes`) without `cents`, else IVF-PQ residual codes
-    (`assign_residuals`, `residual_codes`). `unit` encodes the unit
-    vectors (`unit_rows`); zero-norm rows do not encode under `unit`
-    or `cents`."""
+    each (a row of `cents`; None for plain PQ) and their codes
+    (`residual_codes`) — of the rows themselves without `cents`, else
+    of their IVF-PQ residuals (`assign_residuals`). `unit` encodes the
+    unit vectors (`unit_rows`); zero-norm rows do not encode under
+    `unit` or `cents`."""
     rows = np.arange(len(x))
     if unit:
         ok, x = unit_rows(x)
         rows = rows[ok]
     if cents is None:
-        return rows, None, pq_codes(x, books)
+        return rows, None, residual_codes(x, books)
     ok, pick, resid = assign_residuals(x, cents)
     return rows[ok], pick, residual_codes(resid, books)
 
@@ -264,7 +257,9 @@ def adc(luts, cids, slots, codes: np.ndarray, cell: np.ndarray | None):
     `slots[c, j]` is query j's LUT slot for cell `cids[c]` (-1: not
     probed), or, with `cids` None, one row of slots every code row
     uses. Each distance sums its m lookups in subspace order from 0.0,
-    like the SQL form's unrolled fold."""
+    the order of the DuckDB oracles' `list_sum(list(d ORDER BY mi))`.
+    With no (row, query) pair probed it returns NaN distances: a batch
+    of unscorable probes has no LUT slot to gather from."""
     if cids is None:
         slot = np.broadcast_to(slots, (len(codes), slots.shape[1]))
     else:
@@ -272,6 +267,8 @@ def adc(luts, cids, slots, codes: np.ndarray, cell: np.ndarray | None):
         # a cell the centroids do not know is probed by no query
         slot = np.where((cids[at] == cell)[:, None], slots[at], -1)
     probed = slot >= 0
+    if not probed.any():
+        return np.full(slot.shape, np.nan), probed
     slot = np.where(probed, slot, 0)
     d = np.zeros(slot.shape, dtype=np.float64)
     for mi in range(codes.shape[1]):
@@ -431,14 +428,17 @@ def merge_topk(
     cands: DataFrame, k: int, query_col: str, id_col: str, dist_col: str
 ) -> DataFrame:
     """Global top-k per query over the local candidates: row_number()
-    by (distance, id) <= k. Returns (query, rank bigint, id, distance)
-    — bigint rank on every public ranking, the int64 a SQL engine's
-    row_number() emits."""
+    by (distance, id) <= k. Returns (query, rank bigint, id, *other
+    candidate columns, distance) — bigint rank on every public ranking,
+    the int64 a SQL engine's row_number() emits."""
     w = Window.partitionBy(query_col).orderBy(
         F.col(dist_col).asc(), F.col(id_col).asc()
     )
+    rest = [c for c in cands.columns if c not in (query_col, id_col, dist_col)]
     return (
         cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_col, F.col("rank").cast("long").alias("rank"), id_col, dist_col)
+        .select(
+            query_col, F.col("rank").cast("long").alias("rank"), id_col, *rest, dist_col
+        )
     )

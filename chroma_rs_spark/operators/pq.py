@@ -37,34 +37,39 @@ Spark shapes (matching the repo's discipline):
   stores its code (`stored_codes`, written by materialize), rows
   without a code of the live index generation are encoded on the fly,
   and the candidates carry their vectors to the rescore.
-  `pq_topk_rescored_df` is the SQL-replayable chain the declared
-  `pq_topk` row runs.
-* **IVF-PQ** — the composite index encodes residuals against a cosine
-  coarse quantizer. Each op has two forms with one contract. The
-  collection runs the numpy forms: `ivfpq_probes` picks the probed
-  cells on the driver, kernel.encode_rows encodes
-  (`_ivfpq_codes_arrow`), and kernel.adc scores with one LUT
-  per (query, probed cell) (`pq_adc_topk(cells=)`, inside
-  `pq_pooled_topk`). The oracle-replayed rows
-  (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`) run the SQL
-  forms: `ivfpq_codes_df`, `ivfpq_probe_cells` (collected once by
-  `_collect_probe_cells` to prune a cell-partitioned code tier) and
-  `ivfpq_adc_topk_df`; `_ivfpq_residuals` is the SQL form of
-  `kernel.assign_residuals`. The numpy forms replay the SQL forms'
-  arithmetic (in-order folds, Spark ROUND's HALF_UP to 6 places, ties
-  low), so they assign the same cells, residuals and codes, and the
-  numpy ADC returns the same rows on the same codes and probes
-  (tests/test_ivfpq.py).
+  `pq_topk_rescored_df` is the same search with a SQL join rescore,
+  the chain the declared `pq_topk` row runs.
+* **IVF-PQ** — the composite index (Jégou et al. TPAMI 2011 §IV, the
+  `IndexIVFPQ` behind billion-scale Faiss): a cosine coarse quantizer
+  routes each vector to a cell, PQ encodes its RESIDUAL against the
+  cell's centroid (residuals concentrate near the origin, so the
+  codebook budget spends its resolution where the data lives), and a
+  query scans only its `n_probe` nearest cells with one lookup table
+  of its residual per probed cell — m code bytes per vector, only in
+  the probed cells. `ivfpq_probes` picks the cells on the driver,
+  `_ivfpq_codes_arrow` encodes (kernel.encode_rows) and
+  `pq_adc_topk(cells=)` scores (kernel.adc).
 
-Verification: tests/test_pq.py pins encode codes and ADC distances
-bit-for-bit against a pure-numpy reference and checks determinism;
-tests/test_collection_pq.py holds the exact re-scored distances and
-the measured recall band end to end. Every suite seat is FULLY
-oracle-checked (round 11 retired the last rows-only row):
-`pq_adc_topk` runs `pq_adc_topk_df` over `hash_codebooks`
-(data-independent md5-derived literals a DuckDB oracle embeds
-verbatim), and `pq_topk` runs the TRAINED chain end to end —
-`train_pq_codebooks_df` is kmeans' fixed-point Lloyd's loop
+Each op has one form, the numpy one, in one arithmetic: every sum is
+an in-order fold from 0.0 (kernel.fold_*), every distance is rounded
+to DIST_DECIMALS with Spark ROUND's HALF_UP (kernel.rounded_half_up)
+before an argmin or a ranking, and ties break low (code, cell, then
+id). That is the arithmetic the suite rows' DuckDB oracles replay
+(`list_sum`, `round`, `row_number() OVER (ORDER BY d, id)`), so the
+oracle is the direct reference for the code the collection runs: the
+plain-PQ and IVF-PQ codes, the lookup tables, the ADC sums and the
+probed cells are the same in both.
+
+Verification: tests/test_pq.py and tests/test_ivfpq.py pin encode
+codes, probed cells and ADC distances bit for bit against pure-numpy
+references, DuckDB replays and hand-derived halves, and check
+determinism; tests/test_collection_pq.py holds the exact re-scored
+distances and the measured recall band end to end. Every suite row
+is oracle-checked: `pq_adc_topk` and `pq_recall` search over
+`hash_codebooks` (data-independent md5-derived literals a DuckDB
+oracle embeds verbatim), the IVF-PQ rows over those codebooks and
+the lowest-id cells, and `pq_topk` runs the TRAINED chain end to end
+— `train_pq_codebooks_df` is kmeans' fixed-point Lloyd's loop
 (operators/centroids.py:_lloyd — micro-unit HUGEINT means, in-order
 round-6 folds) run grouped by subspace, so the DuckDB twin unrolls
 the full training and replays encode + LUT + ADC + exact rescore on
@@ -82,7 +87,6 @@ from pyspark.sql import functions as F
 
 from chroma_rs_spark.operators import kernel
 from chroma_rs_spark.operators.centroids import _lloyd, _md5_sample
-from chroma_rs_spark.operators.kernel import DIST_DECIMALS
 
 
 def _md5_matrix(
@@ -201,22 +205,28 @@ def pq_encode(
 ) -> DataFrame:
     """(id, codes ARRAY<INT>): nearest-centroid code per subspace.
 
-    One shuffle-free Arrow pass; ties break to the lower code index
-    (numpy argmin's first-occurrence rule — the repo convention).
-    `unit=True` encodes the unit vectors (kernel.unit_rows; zero-norm
-    rows drop), as in `train_pq_codebooks`.
+    One shuffle-free Arrow pass (kernel.encode_rows): the argmin of the
+    rounded in-order squared-L2 fold, ties to the lower code — the
+    codes `_ivfpq_codes_arrow` assigns to residuals and the DuckDB
+    oracles replay. NULL and wrong-dim rows (not m*sub long) drop, as
+    in `_ivfpq_codes_arrow`. `unit=True` encodes the unit vectors
+    (kernel.unit_rows; zero-norm rows drop), as in
+    `train_pq_codebooks`.
     """
     import numpy as np
     import pandas as pd
 
     books = np.asarray(codebooks, dtype=np.float64)
+    m, _k, sub = books.shape
 
     def encode(pdf):
         emb = kernel.matrix(pdf[item_emb])
         rows, _, codes = kernel.encode_rows(emb, books, unit=unit)
         return pd.DataFrame({"id": pdf[item_id].to_numpy()[rows], "codes": list(codes)})
 
-    out = items.filter(F.col(item_emb).isNotNull()).select(item_id, item_emb)
+    out = items.filter(
+        F.col(item_emb).isNotNull() & (F.size(item_emb) == m * sub)
+    ).select(item_id, item_emb)
     return kernel.map_batches(out, encode, f"id {id_type}, codes array<int>")
 
 
@@ -225,13 +235,14 @@ def ivfpq_probes(
     queries: Sequence[tuple],
     n_probe: int,
 ) -> list[np.ndarray]:
-    """The numpy form of `ivfpq_probe_cells` for a driver-side query
-    list: per query, the cell ids of its `n_probe` nearest cells
+    """The IVF-PQ probe selection for a driver-side query list: per
+    query, the cell ids of its `n_probe` nearest cells
     (kernel.probe_cells — ties to the lower cell id; unscorable
-    queries probe no cell). The cosine distances replay the SQL form's
+    queries probe no cell). The cosine distance is
     `round(1 - dot / (|q| |c|), 6) + 0.0` with dot and norms folded in
-    position order, so both forms probe the same cells. Pass the
-    result, with the same `centroids`, as `pq_adc_topk(cells=...)`."""
+    position order and Spark ROUND's HALF_UP, the arithmetic the
+    oracle's probe ranking replays. Pass the result, with the same
+    `centroids`, as `pq_adc_topk(cells=...)`."""
     import numpy as np
 
     cids = np.asarray([c for c, _ in centroids], dtype=np.int64)
@@ -245,10 +256,12 @@ def ivfpq_probes(
 
 
 def _fold_luts(books, resid):
-    """(m, k, n) LUTs of `resid` (n, m*sub), in `pq_adc_topk_df`'s
-    SQL-replayable arithmetic (_SUB_DIST_SQL): each subspace distance
-    is kernel.fold_l2's in-order fold, rounded to DIST_DECIMALS with
-    Spark ROUND's HALF_UP (kernel.rounded_half_up)."""
+    """(m, k, n) ADC lookup tables of the n rows of `resid` (n, m*sub):
+    plain-PQ query vectors or IVF-PQ query residuals. Each subspace
+    distance is kernel.fold_l2's in-order fold rounded to DIST_DECIMALS
+    with Spark ROUND's HALF_UP (kernel.rounded_half_up) — the
+    encode's own distance (kernel.residual_codes), so a query's LUT
+    entry for its own code is the distance the encode minimized."""
     import numpy as np
 
     m, _kk, sub = books.shape
@@ -268,77 +281,74 @@ def pq_adc_topk(
     id_type: str = "long",
     cells: tuple | None = None,
 ) -> DataFrame:
-    """(query_id, rank, id, adc_dist): approximate top-k by ADC over
-    PQ codes (id, codes[, cell]). `queries` is a driver-side list of
-    (qid, vector) — small by contract, like every probe set in the
-    engine.
+    """(query_id, rank, id[, cell], adc_dist): approximate top-k by ADC
+    over PQ codes (id, codes[, cell]). `queries` is a driver-side list
+    of (qid, vector) — small by contract, like every probe set in the
+    engine; each vector must be m*sub long (callers drop NULL and
+    wrong-dim probes).
 
-    The LUTs are built once on the driver and shipped in the task
-    closure; a candidate's distance is the sum of its m lookups,
-    accumulated in subspace order from 0.0. Local top-k per Arrow
-    batch and the window merge are the shared numpy kernel's
-    (operators/kernel.py): distances rounded to DIST_DECIMALS with
-    -0.0 folded, ranks tie-break on id — the engine-wide determinism
-    contract.
+    The LUTs are built once on the driver (`_adc_tables`, _fold_luts)
+    and shipped in the task closure; a candidate's distance is the sum
+    of its m lookups, accumulated in subspace order from 0.0 and
+    rounded with Spark ROUND's HALF_UP (kernel.adc). Local top-k per
+    Arrow batch (kernel.topk_rows) and the window merge
+    (kernel.merge_topk) rank by (distance, id) — the engine-wide
+    determinism contract and the DuckDB oracles' ORDER BY.
 
     Plain PQ (`cells=None`) is the one-cell case: each query has one
-    LUT, of its own vector, LUT[m][j] = unrounded squared L2 between
-    the query's m-th subvector and codebook[m][j], and every code row
-    is a candidate.
+    LUT, of its own vector, and every code row is a candidate.
 
     IVF-PQ (`cells=(centroids, probed)`, `probed` from `ivfpq_probes`):
     the codes carry a `cell` column and encode residuals against that
     cell's centroid (`_ivfpq_codes_arrow`). Each (query, probed cell)
-    pair has its own LUT of the query's residual against the cell,
-    in `ivfpq_adc_topk_df`'s arithmetic (_fold_luts), so the ADC
-    distances equal that SQL form's bit for bit on the same codes and
-    probes. Code rows outside a query's probed cells are no candidates
-    of it. The collection's `pq_pooled_topk` scores with the same
-    tables (`_adc_tables`, kernel.adc); `ivfpq_adc_topk_df` serves the
-    oracle-replayed rows.
+    pair has its own LUT of the query's residual against the cell;
+    code rows outside a query's probed cells are no candidates of it.
+    The output then carries each candidate's `cell`. The collection's
+    `pq_pooled_topk` scores with the same tables (`_adc_tables`,
+    kernel.adc).
     """
     import numpy as np
+    import pandas as pd
 
     books = np.asarray(codebooks, dtype=np.float64)
     qids = [q[0] for q in queries]
     tables = _adc_tables(books, queries, cells)
 
     def score(pdf):
+        ids = pdf["id"].to_numpy()
         codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
         cell = None if cells is None else pdf["cell"].to_numpy()
         d, probed = kernel.adc(*tables, codes, cell)
-        if not probed.any():
-            return None
-        return kernel.topk_per_query(
-            qids, pdf["id"].to_numpy(), d, k, ("query_id", "id", "adc_dist"),
-            mask=probed,
-        )
+        tops = kernel.topk_rows(ids, d, k, mask=probed)
+        frames = [
+            pd.DataFrame(
+                {"query_id": qid, "id": ids[top]}
+                | ({} if cell is None else {"cell": cell[top]})
+                | {"adc_dist": d[top, j]}
+            )
+            for j, (qid, top) in enumerate(zip(qids, tops))
+            if top.size
+        ]
+        return pd.concat(frames, ignore_index=True) if frames else None
 
-    cands = kernel.map_batches(
-        codes, score, f"query_id long, id {id_type}, adc_dist double"
-    )
+    schema = f"query_id long, id {id_type}, " + ("" if cells is None else "cell int, ")
+    cands = kernel.map_batches(codes, score, schema + "adc_dist double")
     return kernel.merge_topk(cands, k, "query_id", "id", "adc_dist")
 
 
 def _adc_tables(books, queries: Sequence[tuple], cells: tuple | None):
     """(luts, cids, slots) of `kernel.adc` for the driver-side (qid,
-    vector) `queries`. Plain PQ (`cells` None): one LUT per query of
-    its own vector, LUT[m][j] = unrounded squared L2 between the
-    query's m-th subvector and codebook[m][j]. IVF-PQ (`cells` =
+    vector) `queries`, every LUT built by _fold_luts. Plain PQ (`cells`
+    None): one LUT per query, of its own vector. IVF-PQ (`cells` =
     (centroids, probed) from `ivfpq_probes`): one LUT per (query,
-    probed cell) of the query's residual against that cell, in
-    `ivfpq_adc_topk_df`'s arithmetic (_fold_luts)."""
+    probed cell), of the query's residual against that cell."""
     import numpy as np
 
     m, _k, sub = books.shape
     qmat = np.asarray([q[1] for q in queries], dtype=np.float64).reshape(-1, m * sub)
     if cells is None:
         # (m, k, nq) LUTs; query j reads slot j from every code row
-        luts = np.stack([
-            ((books[mi][:, None, :] - qmat[None, :, mi * sub : (mi + 1) * sub]) ** 2).sum(2)
-            for mi in range(m)
-        ])
-        return luts, None, np.arange(len(qmat))[None, :]
+        return _fold_luts(books, qmat), None, np.arange(len(qmat))[None, :]
     centroids, probed = cells
     cvec = dict(centroids)
     cids = np.asarray(sorted(cvec), dtype=np.int64)
@@ -683,29 +693,40 @@ def pq_topk_rescored_df(
     probe_id: str = "query_id",
     probe_emb: str = "query_embedding",
 ) -> DataFrame:
-    """Production PQ search, end-to-end SQL-replayable: the DataFrame
-    ADC chain (pq_adc_topk_df — packed codes, broadcast flat LUT,
-    unrolled in-order folds) retrieves k*oversample candidates, the
+    """Production PQ search with an exact rescore, end to end
+    oracle-replayable: the numpy PQ search (`pq_encode` +
+    `pq_adc_topk`) retrieves k*oversample candidates per probe, the
     id-join against the raw vectors re-scores them with the exact
     round-6 squared L2, and the final top-k ranks on exact distances
     (ties to the lower id). With `codebooks` from
-    train_pq_codebooks_df every stage — training included — replays
-    in ANSI SQL, unlike the numpy pq_encode + pq_adc_topk kernels,
-    whose pairwise summation no SQL engine reproduces bitwise.
+    train_pq_codebooks_df every stage — training included — replays in
+    DuckDB (the declared `pq_topk` row). The probes are collected to
+    the driver, the probe list `pq_adc_topk` takes (small by contract);
+    NULL and wrong-dim probes drop.
 
     Returns (probe_id, rank, neighbor_id, distance)."""
+    import numpy as np
+
     from chroma_rs_spark.functions.vector import l2_distance
 
-    cand = pq_adc_topk_df(
-        items,
-        codebooks,
-        probes,
+    books = np.asarray(codebooks, dtype=np.float64)
+    m, _k, sub = books.shape
+    queries = [
+        (r[0], [float(x) for x in r[1]])
+        for r in probes.filter(
+            F.col(probe_emb).isNotNull() & (F.size(probe_emb) == m * sub)
+        )
+        .select(probe_id, probe_emb)
+        .collect()
+    ]
+    id_type = dict(items.dtypes)[item_id]
+    cand = pq_adc_topk(
+        pq_encode(items, books, item_id, item_emb, id_type),
+        books,
+        queries,
         k=int(k) * int(oversample),
-        item_id=item_id,
-        item_emb=item_emb,
-        probe_id=probe_id,
-        probe_emb=probe_emb,
-    ).select(probe_id, "neighbor_id")
+        id_type=id_type,
+    ).select(F.col("query_id").alias(probe_id), F.col("id").alias("neighbor_id"))
     raw = items.select(
         F.col(item_id).alias("neighbor_id"), F.col(item_emb).alias("_re")
     )
@@ -750,242 +771,14 @@ def hash_codebooks(m: int = 8, k: int = 16, sub: int = 8):
 
 def _subspace_sql(emb_col: str, m: int, sub: int) -> str:
     """inline() projection of a dim-(m*sub) array column into
-    (mi, sv) subspace rows — shared by the encode and LUT stages."""
+    (mi, sv) subspace rows — train_pq_codebooks_df's training
+    relation and seeds."""
     return "inline(array({}))".format(
         ",".join(
             f"struct({mi} AS mi, slice(`{emb_col}`, {mi * sub + 1}, {sub})"
             " AS sv)"
             for mi in range(m)
         )
-    )
-
-
-_SUB_DIST_SQL = (
-    "round(aggregate(transform(sequence(1, {sub}),"
-    " i -> (element_at(sv, i) - element_at(cvec, i))"
-    " * (element_at(sv, i) - element_at(cvec, i))),"
-    " 0D, (a, x) -> a + x), {nd})"
-)
-
-
-def _codebook_df(spark, books) -> DataFrame:
-    """(mi, ci, cvec): one row per codeword — the tiny broadcast
-    relation the LUT stages join (m*k rows; the encode side uses
-    codebook literals instead, see _code_col_sql)."""
-    m, kk, _sub = books.shape
-    return spark.createDataFrame(
-        [
-            (mi, ci, [float(x) for x in books[mi, ci]])
-            for mi in range(m)
-            for ci in range(kk)
-        ],
-        "mi INT, ci INT, cvec ARRAY<DOUBLE>",
-    )
-
-
-def _books_by_mi_df(spark, books) -> DataFrame:
-    """One row PER SUBSPACE (mi, cb ARRAY<ARRAY<DOUBLE>>): the
-    broadcast relation the shuffle-free encode joins — k centroids per
-    row instead of _codebook_df's k rows per codeword, so the argmin
-    runs as one per-row least() instead of a min-struct aggregate."""
-    m, kk, _sub = books.shape
-    return spark.createDataFrame(
-        [
-            (mi, [[float(x) for x in books[mi, ci]] for ci in range(kk)])
-            for mi in range(m)
-        ],
-        "mi INT, cb ARRAY<ARRAY<DOUBLE>>",
-    )
-
-
-def _code_least_sql(kk: int, sub: int, nd: int) -> str:
-    """Codeword argmin as ONE map-side expression — the assign_cells
-    least-struct discipline applied to the encode stage. Evaluated per
-    (row, subspace) after the inline() explode, against the joined
-    per-subspace centroid list `cb`. Bit-identical doubles to the old
-    broadcast-join + min-struct-aggregate form: per ci the squared
-    terms accumulate left-to-right from 0D exactly like
-    _SUB_DIST_SQL's in-order fold, the same round(, nd) lands before
-    the argmin, and least() over (d, ci) structs breaks ties to the
-    lower code like min(struct(_d, ci)).
-
-    Sizing (hard-won, keep): the k*sub multiply-adds here (128 at the
-    8x16 default) compile fine, but fusing all m subspaces into one
-    projection — as array()/stack() of least()s over centroid
-    LITERALS, whether as one expression or m separate columns — blows
-    janino's method limit once whole-stage codegen pipelines the
-    encode with the assign/residual stages into a single
-    processNext(), and the silent interpreted fallback ran ~3x
-    slower end to end. The per-subspace explode keeps every generated
-    method small at the cost of an m-row Generate."""
-    cands = []
-    for ci in range(kk):
-        acc = "0D"
-        for i in range(sub):
-            e = f"element_at(sv, {i + 1})"
-            c = f"element_at(element_at(cb, {ci + 1}), {i + 1})"
-            acc = f"({acc} + ({e} - {c}) * ({e} - {c}))"
-        cands.append(f"struct(round({acc}, {nd}) AS d, {ci} AS c)")
-    if len(cands) == 1:
-        return f"{cands[0]}.c"
-    return f"least({', '.join(cands)}).c"
-
-
-def _codes_long(df: DataFrame, emb_col: str, books, nd: int) -> DataFrame:
-    """Append (mi, code) rows per input row: inline the m (mi, sv)
-    subspace slices (a map-side Generate — m small rows per vector,
-    never m*k), broadcast-join the m-row per-subspace codebook
-    relation, then one least-struct argmin per row. One shuffle-free
-    codegen stage; all non-emb columns are carried through. Replaces
-    the k-rows-per-codeword join + min-struct groupBy that shuffled
-    |rows|*m*k exploded rows through an exchange."""
-    m, kk, sub = books.shape
-    carried = [f"`{c}`" for c in df.columns if c != emb_col]
-    bmi = _books_by_mi_df(df.sparkSession, books)
-    return (
-        df.selectExpr(*carried, _subspace_sql(emb_col, m, sub))
-        .join(F.broadcast(bmi), "mi")
-        .selectExpr(
-            *carried, "mi", f"{_code_least_sql(kk, sub, nd)} AS code"
-        )
-    )
-
-
-def _collect_codes_array(long: DataFrame, keys: list[str]) -> DataFrame:
-    """(keys..., codes ARRAY<INT>) from _codes_long rows — codes[i] is
-    subspace i's codeword (array_sort over (mi, code) structs pins the
-    order). One exchange of |rows|*m tiny int rows; the packed array
-    is what makes ADC m lookups per candidate instead of an m-row join
-    fan, so the search side never explodes codes again."""
-    return (
-        long.groupBy(*keys)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("mi", F.col("code").alias("c")))
-                ),
-                lambda s: s["c"],
-            ).alias("codes")
-        )
-    )
-
-
-def _lut_flat(rows: DataFrame, keys: list[str], books) -> DataFrame:
-    """The ADC lookup table of (keys..., mi, sv) probe subspace rows:
-    each subvector's round-6 squared L2 to every codeword of its
-    subspace (the broadcast _codebook_df relation), flattened into ONE
-    m*k-double array L per key group, ordered by (mi, code) so
-    element_at(L, mi*k + code + 1) is subspace mi's distance for
-    `code`. Tiny by contract: |probes| x n_probe groups."""
-    sub = books.shape[2]
-    lut = (
-        rows.join(F.broadcast(_codebook_df(rows.sparkSession, books)), "mi")
-        .withColumn("_d", F.expr(_SUB_DIST_SQL.format(sub=sub, nd=DIST_DECIMALS)))
-        .select(*keys, "mi", F.col("ci").alias("code"), "_d")
-    )
-    return lut.groupBy(*keys).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("mi", "code", "_d"))),
-            lambda s: s["_d"],
-        ).alias("L")
-    )
-
-
-def _adc_fold_sql(m: int, kk: int, nd: int) -> str:
-    """The ADC distance as an unrolled in-order fold of m LUT lookups
-    — element_at(L, mi*k + codes[mi] + 1) accumulated left-to-right
-    from 0D, round(nd) + 0.0 exactly like the aggregate() fold over
-    the mi-sorted collect_list it replaces (same addition order, same
-    doubles), but as one codegen expression per candidate row with no
-    groupBy behind it."""
-    acc = "0D"
-    for mi in range(m):
-        acc = (
-            f"({acc} + element_at(L,"
-            f" {mi * kk} + element_at(codes, {mi + 1}) + 1))"
-        )
-    return f"round({acc}, {nd}) + 0.0D"
-
-
-def pq_codes_df(
-    items: DataFrame,
-    codebooks,
-    item_id: str = "vec_id",
-    item_emb: str = "embedding",
-) -> DataFrame:
-    """(_vid, mi, code): the DataFrame-native encode stage of
-    `pq_adc_topk_df`, exposed so tests can pin its code assignments
-    directly against the numpy `pq_encode` kernel. One shuffle-free
-    codegen stage (_codes_long): inline to (row, mi) rows, broadcast
-    per-subspace codebooks, per-row least-struct argmin — the old
-    k-rows join + min-struct groupBy shuffled |rows|*m*k rows."""
-    import numpy as np
-
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, _kk, sub = books.shape
-    dim = m * sub
-    it = items.filter(
-        F.col(item_emb).isNotNull() & (F.size(item_emb) == dim)
-    ).select(F.col(item_id).alias("_vid"), F.col(item_emb).alias("_e"))
-    return _codes_long(it, "_e", books, DIST_DECIMALS)
-
-
-def pq_adc_topk_df(
-    items: DataFrame,
-    codebooks,
-    probes: DataFrame,
-    k: int = 10,
-    item_id: str = "vec_id",
-    item_emb: str = "embedding",
-    probe_id: str = "query_id",
-    probe_emb: str = "query_embedding",
-) -> DataFrame:
-    """(query_id, rank, neighbor_id, adc_dist): PQ encode + ADC top-k
-    expressed ENTIRELY in DataFrame operators — the oracle-checkable
-    twin of pq_encode + pq_adc_topk (whose numpy kernels use pairwise
-    summation a SQL engine cannot replay bitwise).
-
-    Every float reduction is an IN-ORDER left fold over a
-    deterministically ordered list (the bm25/centroid discipline):
-    subspace distances fold positions 1..sub left-to-right and are
-    rounded to DIST_DECIMALS before the (dist, code) argmin; the ADC
-    sum folds the m per-subspace LUT entries in subspace order and is
-    rounded again with -0.0 folded. Parity of this plan with the numpy
-    production path on the same codebooks is pinned by
-    tests/test_pq.py.
-
-    Scale shape: the per-subspace codebook relation is broadcast to
-    both the encode join and the LUT join; the encode argmin is one
-    map-side least-struct per (row, subspace); codes are packed into
-    an m-int array per candidate (one tiny-row exchange) and the ADC
-    distance is an unrolled m-lookup codegen fold against the
-    broadcast per-query flat LUT — each candidate row is touched
-    exactly once, no per-candidate join fan, no aggregate behind the
-    distance; the final top-k is a bounded per-query window. No
-    driver collect of corpus data.
-    """
-    import numpy as np
-
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, kk, sub = books.shape
-    dim = m * sub
-    codes = _collect_codes_array(
-        pq_codes_df(items, books, item_id=item_id, item_emb=item_emb),
-        ["_vid"],
-    )
-    pr = probes.filter(
-        F.col(probe_emb).isNotNull() & (F.size(probe_emb) == dim)
-    ).selectExpr(f"`{probe_id}` AS _qid", _subspace_sql(probe_emb, m, sub))
-    adc = codes.crossJoin(F.broadcast(_lut_flat(pr, ["_qid"], books))).selectExpr(
-        "_qid",
-        "_vid",
-        f"{_adc_fold_sql(m, kk, DIST_DECIMALS)} AS adc_dist",
-    )
-    return kernel.merge_topk(adc, k, "_qid", "_vid", "adc_dist").select(
-        F.col("_qid").alias(probe_id),
-        "rank",
-        F.col("_vid").alias("neighbor_id"),
-        "adc_dist",
     )
 
 
@@ -999,19 +792,18 @@ def _ivfpq_codes_arrow(
 ) -> DataFrame:
     """(item_id, cell, codes ARRAY<INT>): the composite index's encode
     as one shuffle-free Arrow pass on the shared numpy kernel — the
-    arithmetic the collection stores in its rows (`stored_codes`) and
-    runs on late rows at query time (`pq_pooled_topk`).
-    `ivfpq_codes_df` is the SQL form of the same op, for the
-    oracle-replayed rows.
+    arithmetic the collection stores in its rows (`stored_codes`), runs
+    on late rows at query time (`pq_pooled_topk`) and the IVF-PQ suite
+    rows persist as their cell-partitioned code tier.
 
-    It replays the SQL form's arithmetic: cells and residuals come
-    from kernel.assign_residuals, and each subspace code is the argmin
-    of the round-6 in-order squared-L2 fold (_code_least_sql, ties to
-    the lower code). So both forms assign the same (cell, codes).
-    Zero-norm/NULL/wrong-dim vectors drop, as in the SQL form.
-    `unit=True` encodes the unit vectors (kernel.unit_rows), as in
-    `pq_encode`: the collection passes its raw rows, so no SQL
-    higher-order function normalizes them in its plans."""
+    Cells and residuals come from kernel.assign_residuals, and each
+    subspace code is the argmin of the round-6 in-order squared-L2
+    fold, ties to the lower code (kernel.residual_codes, `pq_encode`'s
+    code rule), which the DuckDB oracle replays. Zero-norm, NULL and
+    wrong-dim vectors have no cosine cell and drop. `unit=True`
+    encodes the unit vectors (kernel.unit_rows), as in `pq_encode`:
+    the collection passes its raw rows, so no SQL higher-order
+    function normalizes them in its plans."""
     import numpy as np
     import pandas as pd
 
@@ -1039,295 +831,4 @@ def _ivfpq_codes_arrow(
     id_type = dict(items.dtypes)[item_id]
     return kernel.map_batches(
         scorable, encode, f"{item_id} {id_type}, cell int, codes array<int>"
-    )
-
-
-def _cells_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """(cell INT, cvec ARRAY<DOUBLE>): the tiny centroid relation the
-    residual and probe stages broadcast-join."""
-    return spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
-
-
-def _ivfpq_residuals(
-    items: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    item_id: str,
-    item_emb: str,
-    cent_df: DataFrame | None = None,
-) -> DataFrame:
-    """(_vid, cell, _r): each vector's cosine cell (map-side
-    least-struct over centroid literals, operators/ivf.py:assign_cells)
-    and its residual against that cell's centroid — the domain the
-    SQL encode (`ivfpq_codes_df`) quantizes; kernel.assign_residuals
-    is its numpy form. The subtraction is a `zip_with` over the
-    broadcast centroid relation (exact binary doubles, replayable by
-    the SQL oracle). Zero-norm vectors have no cosine cell and drop."""
-    from chroma_rs_spark.operators.ivf import assign_cells
-
-    if cent_df is None:
-        cent_df = _cells_df(items.sparkSession, centroids)
-    assigned = assign_cells(items, centroids, item_emb=item_emb).select(
-        F.col(item_id).alias("_vid"),
-        F.col(item_emb).cast("array<double>").alias("_e"),
-        F.col("cell").cast("int").alias("cell"),
-    )
-    return assigned.join(F.broadcast(cent_df), "cell").select(
-        "_vid",
-        "cell",
-        F.expr("zip_with(_e, cvec, (x, y) -> x - y)").alias("_r"),
-    )
-
-
-def ivfpq_codes_df(
-    items: DataFrame,
-    codebooks,
-    centroids: list[tuple[int, list[float]]],
-    item_id: str = "vec_id",
-    item_emb: str = "embedding",
-    cent_df: DataFrame | None = None,
-) -> DataFrame:
-    """(item_id, cell, codes ARRAY<INT>): the composite index's encode
-    stage — cell assignment and residual (_ivfpq_residuals), the
-    shuffle-free per-subspace argmin (_codes_long), then one tiny-row
-    exchange packing codes[i] = subspace i's codeword
-    (_collect_codes_array). This is the materializable scan tier:
-    persisted, a query reads m bytes per candidate instead of raw
-    vectors. Zero-norm/NULL/wrong-dim vectors are unscorable under the
-    cosine quantizer and are dropped.
-
-    This is the SQL form, fully oracle-replayable: the declared and
-    extra rows (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`)
-    encode here. The collection encodes with the Arrow form of the
-    same op (`_ivfpq_codes_arrow`), which assigns the same codes — the
-    round-12 scale proof measured this HOF expression at 17x the Arrow
-    wall on a 409.6k x 64-cell encode."""
-    import numpy as np
-
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, _kk, sub = books.shape
-    scorable = items.filter(
-        F.col(item_emb).isNotNull() & (F.size(item_emb) == m * sub)
-    )
-    resid = _ivfpq_residuals(scorable, centroids, item_id, item_emb, cent_df)
-    long = _codes_long(resid, "_r", books, DIST_DECIMALS)
-    return _collect_codes_array(long, ["_vid", "cell"]).select(
-        F.col("_vid").alias(item_id), "cell", "codes"
-    )
-
-
-def ivfpq_probe_cells(
-    probes: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    n_probe: int = 4,
-    dim: int | None = None,
-    probe_id: str = "query_id",
-    probe_emb: str = "query_embedding",
-    cent_df: DataFrame | None = None,
-) -> DataFrame:
-    """(_qid, cell, _qr): each query's `n_probe` nearest cells by
-    rounded cosine (ties to the lower cell id — the oracle's ROW_NUMBER
-    contract) with the per-cell query residual. |queries| x |cells| is
-    tiny; both relations broadcast. Factored out of ivfpq_adc_topk_df
-    so a caller holding a cell-partitioned materialized code tier can
-    collect the probed cell ids (n_queries x n_probe ints) and push an
-    isin() partition-pruning filter into the code scan before a byte
-    of codes is read. Zero-norm / NULL / wrong-dim probes drop."""
-    from chroma_rs_spark.functions.vector import dot_product_sql, l2_norm_sql
-
-    pr = probes
-    if dim is not None:
-        pr = pr.filter(
-            F.col(probe_emb).isNotNull() & (F.size(probe_emb) == dim)
-        )
-    else:
-        pr = pr.filter(F.col(probe_emb).isNotNull())
-    pr = pr.select(
-        F.col(probe_id).alias("_qid"),
-        F.col(probe_emb).cast("array<double>").alias("_qe"),
-    )
-    if cent_df is None:
-        cent_df = _cells_df(pr.sparkSession, centroids)
-    qnorm = pr.withColumn(
-        "_qnorm", F.expr(l2_norm_sql("_qe"))
-    ).filter(F.col("_qnorm") != F.lit(0.0))
-    qc = qnorm.crossJoin(F.broadcast(cent_df)).withColumn(
-        "_cd",
-        F.expr(
-            f"round(1.0D - {dot_product_sql('_qe', 'cvec')}"
-            f" / (_qnorm * {l2_norm_sql('cvec')}),"
-            f" {DIST_DECIMALS}) + 0.0D"
-        ),
-    )
-    wp = Window.partitionBy("_qid").orderBy(
-        F.col("_cd").asc(), F.col("cell").asc()
-    )
-    return (
-        qc.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "_qid",
-            "cell",
-            F.expr("zip_with(_qe, cvec, (x, y) -> x - y)").alias("_qr"),
-        )
-    )
-
-
-def _collect_probe_cells(
-    probes: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    n_probe: int,
-    dim: int,
-) -> tuple[DataFrame, list[int]]:
-    """ivfpq_probe_cells run ONCE and collected (n_queries x n_probe
-    driver-tiny rows), for the oracle-replayed `ivfpq_topk` row, which
-    holds a cell-partitioned code tier (the collection picks its
-    probed cells with the numpy `ivfpq_probes` and runs no job):
-    returns the rows as a DataFrame to pass back as
-    ivfpq_adc_topk_df's `probed=` — so the |queries| x |cells|
-    assignment does not run a second time in-plan — and the sorted
-    probed cell ids for an isin() partition filter on the code scan.
-    Doubles round-trip collect/createDataFrame bit-exactly, so the LUT
-    is identical to the in-plan assignment's."""
-    probed = ivfpq_probe_cells(probes, centroids, n_probe=n_probe, dim=dim)
-    rows = probed.collect()
-    return (
-        probes.sparkSession.createDataFrame(rows, probed.schema),
-        sorted({r["cell"] for r in rows}),
-    )
-
-
-def ivfpq_adc_topk_df(
-    items: DataFrame,
-    codebooks,
-    centroids: list[tuple[int, list[float]]],
-    n_probe: int = 4,
-    k: int = 10,
-    probes: DataFrame | None = None,
-    item_id: str = "vec_id",
-    item_emb: str = "embedding",
-    probe_id: str = "query_id",
-    probe_emb: str = "query_embedding",
-    codes: DataFrame | None = None,
-    probed: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding — the composite Faiss index
-    (Jégou et al. TPAMI 2011 §IV; the `IndexIVFPQ` everyone runs at
-    billion scale): a coarse quantizer routes each vector to its
-    nearest centroid cell, PQ encodes the RESIDUAL (vector − cell
-    centroid) rather than the raw vector — residuals concentrate near
-    the origin, so the same codebook budget spends its resolution
-    where the data actually lives — and a query scans only its
-    `n_probe` nearest cells with a PER-CELL ADC lookup table built
-    from the query's residual against that cell.
-
-    Returns (query_id, rank, neighbor_id, cell, adc_dist).
-
-    Why this matters at 100 TB: IVF alone still reads raw vectors in
-    the probed cells (256 B/vector at dim=64 float32); PQ alone scans
-    every code. IVF-PQ reads codes only (m bytes/vector), only in the
-    probed cells — |corpus| × n_probe/n_cells × m bytes per query.
-
-    This is the SQL form, the one the oracle-replayed rows run
-    (`ivfpq_topk`, `ivfpq_recall`, `hybrid_search_ivfpq`). The numpy
-    form of the same search — `ivfpq_probes` + `pq_adc_topk(cells=)`
-    over `_ivfpq_codes_arrow` codes, the arithmetic of the
-    collection's `pq_pooled_topk` — returns the same (query_id, id,
-    adc_dist) rows on the same codes and probes (tests/test_ivfpq.py).
-
-    Physical shape (all DataFrame, oracle-replayable):
-    * cell assignment: one map-side `least(struct(...))` expression
-      over broadcast centroid literals (operators/ivf.py:assign_cells)
-      — no shuffle;
-    * residuals: broadcast join on the ≤|cells| centroid relation,
-      `zip_with` subtract (exact binary doubles both engines share);
-    * encode: per-subspace least-struct argmin (_codes_long, one
-      shuffle-free codegen stage), packed to an m-int array per
-      candidate by one tiny-row exchange (ivfpq_codes_df — the same
-      relation the persisted tier stores);
-    * search: the LUT is flattened to ONE m*k-double array per
-      (query, probed cell) and broadcast; candidates join on `cell`
-      only, so each probed-cell code row is touched exactly once and
-      its ADC distance is an unrolled m-lookup in-order fold
-      (round-6 + -0.0, the bm25 discipline — _adc_fold_sql) inside
-      codegen; the final top-k is one bounded per-query window.
-
-    Determinism contract: `centroids` is a driver-tiny list (the
-    persisted index artifact; lowest-id placeholder or trained
-    k-means — same as ivf_topk), codebooks may be `hash_codebooks`
-    (data-independent md5 literals) for full SQL replay or trained.
-    Zero-norm and NULL embeddings are unscorable under the cosine
-    coarse quantizer and are dropped on both the item and probe side
-    (the ann_recall universe rule).
-
-    `codes`: optional precomputed `ivfpq_codes_df` output (the
-    materialized 100 TB scan tier — id, cell, codes ARRAY<INT>);
-    when given, the assignment+encode stages are skipped entirely and
-    the search reads m bytes per candidate instead of raw vectors.
-    """
-    import numpy as np
-
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, kk, sub = books.shape
-    dim = m * sub
-    cent_df = _cells_df(items.sparkSession, centroids)
-
-    if codes is None:
-        codes = ivfpq_codes_df(
-            items, books, centroids, item_id=item_id, item_emb=item_emb,
-            cent_df=cent_df,
-        )
-    codes = codes.select(
-        F.col(item_id).alias("_vid"),
-        F.col("cell").cast("int").alias("cell"),
-        "codes",
-    )
-
-    if probes is None:
-        raise ValueError("ivfpq_adc_topk_df: probes DataFrame required")
-    if probed is None:
-        # `probed`: optional precomputed ivfpq_probe_cells output
-        # (_qid, cell, _qr) — _collect_probe_cells' DataFrame, from a
-        # caller that already collected the assignment to prune a
-        # cell-partitioned code tier
-        probed = ivfpq_probe_cells(
-            probes,
-            centroids,
-            n_probe=n_probe,
-            dim=dim,
-            probe_id=probe_id,
-            probe_emb=probe_emb,
-            cent_df=cent_df,
-        )
-    lut = _lut_flat(
-        probed.selectExpr("_qid", "cell", _subspace_sql("_qr", m, sub)),
-        ["_qid", "cell"],
-        books,
-    )
-    # codes stay PACKED: the broadcast join on cell already restricts
-    # the scan to probed-cell candidates, and the ADC distance is an
-    # unrolled m-lookup codegen fold per candidate row — no m-way
-    # explode of the code tier, no collect_list aggregate behind the
-    # distance (same in-order doubles; _adc_fold_sql).
-    adc = codes.join(F.broadcast(lut), "cell").selectExpr(
-        "_qid",
-        "_vid",
-        "cell",
-        f"{_adc_fold_sql(m, kk, DIST_DECIMALS)} AS adc_dist",
-    )
-    wq = Window.partitionBy("_qid").orderBy(
-        F.col("adc_dist").asc(), F.col("_vid").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(probe_id),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("_vid").alias("neighbor_id"),
-            F.col("cell").cast("int").alias("cell"),
-            "adc_dist",
-        )
     )

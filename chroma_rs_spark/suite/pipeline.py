@@ -3065,7 +3065,9 @@ QUERIES["dedup_simhash_pairs"] = QueryDef(
 # ---------------------------------------------------------------------------
 # hybrid_search_ivfpq (round 10, session 3): the SCALE-PATH hybrid —
 # RRF fusion where the vector leg is the composite IVF-PQ index's ADC
-# candidate list (probed-cell codes, not a corpus-wide exact ranking).
+# candidate list (probed-cell codes, not a corpus-wide exact ranking),
+# searched by the numpy forms the collection runs (the ivfpq_topk
+# row's `_ivfpq_search` over an inline `_ivfpq_codes_arrow` encode).
 # The oracle composes the full _ivfpq_oracle chain (centroids,
 # residuals, encode, per-cell LUT, ADC) with the _bm25_oracle lexical
 # chain and the RRF arithmetic — every stage already individually
@@ -3078,31 +3080,27 @@ def q_hybrid_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         RRF_DEPTH,
         hybrid_search_rrf_from_candidates,
     )
-    from chroma_rs_spark.operators.pq import hash_codebooks, ivfpq_adc_topk_df
+    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, hash_codebooks
     from chroma_rs_spark.suite.text import _BM25_B, _BM25_K1, _BM25_TERMS
     from chroma_rs_spark.suite.vector import (
         _PQ_K,
         _PQ_M,
         _PQ_SUB,
         IVF_CENTROIDS,
-        IVF_PROBE,
+        _ivfpq_search,
         _small_vectors,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_embedding"),
-    )
-    ann = ivfpq_adc_topk_df(
-        emb,
+    codes = _ivfpq_codes_arrow(
+        load_table(spark, sf_dir, "embeddings"),
         hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),
         _small_vectors(spark, sf_dir, IVF_CENTROIDS),
-        n_probe=IVF_PROBE,
-        k=RRF_DEPTH,
-        probes=probes,
+        "vec_id",
+        "embedding",
     )
+    # the one probe is vec_id 0
+    ann = _ivfpq_search(spark, sf_dir, codes, 1, RRF_DEPTH)
     vec_ranked = ann.select(
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").cast("int").alias("vec_rank"),

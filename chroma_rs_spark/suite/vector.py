@@ -726,20 +726,29 @@ QUALIFY rank <= {top_k}
 _PQ_M, _PQ_K, _PQ_SUB = 8, 16, 8
 
 
+def _pq_queries(spark: SparkSession, sf_dir: str, n: int) -> list[tuple[int, list[float]]]:
+    """The PQ rows' driver-side probe list: the `n` lowest-id vectors
+    of the PQ dim (_small_vectors drops NULLs) — the oracles' probe
+    filter (`embedding IS NOT NULL AND len(embedding) = dim`)."""
+    return [
+        (i, v) for i, v in _small_vectors(spark, sf_dir, n) if len(v) == _PQ_M * _PQ_SUB
+    ]
+
+
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode + ADC top-10 over md5-derived (data-independent)
-    codebooks, expressed entirely in DataFrame operators with in-order
-    float folds — the oracle-checkable twin of the numpy PQ path
-    (operators/pq.py:pq_adc_topk_df docstring)."""
-    from chroma_rs_spark.operators.pq import hash_codebooks, pq_adc_topk_df
+    codebooks — the numpy search the collection runs (pq_encode +
+    pq_adc_topk), whose in-order folds and HALF_UP rounding the
+    DuckDB twin replays bit for bit."""
+    from chroma_rs_spark.operators.pq import hash_codebooks, pq_adc_topk, pq_encode
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk_df(
-        emb,
-        hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),
-        _probe_queries(emb),
+    books = hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB)
+    return pq_adc_topk(
+        pq_encode(load_table(spark, sf_dir, "embeddings"), books),
+        books,
+        _pq_queries(spark, sf_dir, N_PROBES),
         k=TOP_K,
-    )
+    ).select("query_id", "rank", F.col("id").alias("neighbor_id"), "adc_dist")
 
 
 def _pq_adc_oracle(final_select: str | None = None) -> str:
@@ -879,13 +888,12 @@ QUERIES.update(
             q_knn_cosine_scale, _knn_oracle(_COSINE_EXPR)
         ),
         # PQ, fully oracle-checked: data-independent md5-derived
-        # codebooks (identical literals embedded in the SQL) + the
-        # DataFrame-native in-order-fold ADC plan, so DuckDB replays
-        # encode + LUT + ADC exactly. The trained-codebook production
-        # search (collection query(index="pq"): numpy pq_encode +
-        # pq_adc_topk, re-scored by knn_exact) stays pinned by
-        # tests/test_pq.py numpy bit-parity and tests/test_collection_pq.py
-        # end to end (exact distances, recall).
+        # codebooks (identical literals embedded in the SQL) and the
+        # numpy encode + ADC the collection's query(index="pq") runs,
+        # whose in-order folds and HALF_UP rounding DuckDB replays.
+        # The collection's trained-codebook search and its exact
+        # rescore stay pinned by tests/test_collection_pq.py (exact
+        # distances, recall).
         "pq_adc_topk": QueryDef(q_pq_adc_topk, _pq_adc_oracle()),
         # the FULL train -> encode -> ADC -> rescore pipeline is
         # hash-gated; iterative=True charges the (memoized) training to
@@ -1120,16 +1128,10 @@ QUERIES["find_duplicates"] = QueryDef(
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from chroma_rs_spark.operators.pq import hash_codebooks, pq_adc_topk_df
     from chroma_rs_spark.operators.similarity import recall_vs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    approx = pq_adc_topk_df(
-        emb,
-        hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),
-        _probe_queries(emb),
-        k=TOP_K,
-    )
+    approx = q_pq_adc_topk(spark, sf_dir)
     rep = recall_vs_exact(
         emb,
         _probe_queries(emb),
@@ -1364,74 +1366,71 @@ QUERIES["find_duplicates_embedding"] = QueryDef(
 # ---------------------------------------------------------------------------
 # ivfpq_topk (round 10): the COMPOSITE Faiss-style index — IVF coarse
 # quantizer + PQ on the RESIDUALS, ADC search with a per-probed-cell
-# lookup table (operators/pq.py:ivfpq_adc_topk_df). Centroids are the
-# deterministic lowest-id vectors (the ivf_topk contract) and codebooks
-# the md5-derived hash_codebooks, so the ENTIRE index build + search —
+# lookup table — run by the numpy forms the collection runs:
+# `_ivfpq_codes_arrow` encodes, `ivfpq_probes` picks the cells and
+# `pq_adc_topk(cells=)` searches. Centroids are the deterministic
+# lowest-id vectors (the ivf_topk contract) and codebooks the
+# md5-derived hash_codebooks, so the ENTIRE index build + search —
 # assignment, residuals, encode, per-cell LUT, ADC, top-k — replays in
-# ANSI SQL with the same rounded doubles. The trained-artifact variants
+# DuckDB with the same rounded doubles. The trained-artifact variants
 # stay covered by knn_ivf_trained (trained coarse quantizer, oracle-
-# replayed k-means) and pq_topk/pq_recall (trained codebooks, pytest-
-# pinned + recall-measured).
+# replayed k-means) and pq_topk (trained codebooks, oracle-replayed).
 # ---------------------------------------------------------------------------
 
 
 # Materialized-codes tier, memoized like _trained_centroids: at 100 TB
-# the (id, cell, codes) table IS the persisted index artifact — encoded once at build time,
-# hive-partitioned BY CELL so a query's n_probe cell ids prune to
-# n_probe of n_cells directories before a byte of codes moves. The
-# round-11 verdict flagged the driver seat for building the full
-# encode chain inline each run while this scale tier sat unexercised
-# (VERDICT r11 #3); the seat now queries the tier the 100 TB argument
-# describes. Encoding is deterministic (md5 codebooks, lowest-id
-# centroids, round-6 argmin), so the persisted codes are bit-identical
-# to what the inline chain computes — the oracle replays the same
-# build+search chain unchanged.
+# the (id, cell, codes) table IS the persisted index artifact — encoded
+# once at build time, hive-partitioned BY CELL so a query's n_probe cell
+# ids prune to n_probe of n_cells directories before a byte of codes
+# moves. Encoding is deterministic (md5 codebooks, lowest-id centroids,
+# round-6 argmin), so the oracle replays the build+search chain.
 @fixture
 def _ivfpq_codes_tier(spark: SparkSession, sf_dir: str) -> str:
     import os
 
-    from chroma_rs_spark.operators.pq import hash_codebooks, ivfpq_codes_df
+    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, hash_codebooks
 
     out = os.path.join(fixture_dir("ivfpq_tier_"), "codes")
-    emb = load_table(spark, sf_dir, "embeddings")
-    # ivfpq_codes_df is the SQL (round-6 argmin) encode the oracle
-    # replays, so the tier is bit-identical to the inline chain
-    ivfpq_codes_df(
-        emb,
+    _ivfpq_codes_arrow(
+        load_table(spark, sf_dir, "embeddings"),
         hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),
         _small_vectors(spark, sf_dir, IVF_CENTROIDS),
+        "vec_id",
+        "embedding",
     ).write.partitionBy("cell").mode("overwrite").parquet(out)
     return out
 
 
-def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from chroma_rs_spark.operators.pq import (
-        _collect_probe_cells,
-        hash_codebooks,
-        ivfpq_adc_topk_df,
-    )
+def _ivfpq_search(
+    spark: SparkSession, sf_dir: str, codes: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """(query_id, rank, neighbor_id, cell, adc_dist): the `n_queries`
+    lowest-id probes' IVF-PQ top-k over `codes` (vec_id, cell, codes)
+    under the suite's centroids and hash codebooks. The probed cells
+    are picked on the driver (`ivfpq_probes`, n_queries x n_probe
+    ints); their ids push an isin() filter into the code scan — on the
+    cell-partitioned tier a PARTITION filter, so the plan lists n_probe
+    directories, not n_cells."""
+    from chroma_rs_spark.operators.pq import hash_codebooks, ivfpq_probes, pq_adc_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
     cents = _small_vectors(spark, sf_dir, IVF_CENTROIDS)
-    probes = _probe_queries(emb)
-    tier = spark.read.parquet(_ivfpq_codes_tier(spark, sf_dir))
-    # collect the probe assignment ONCE: the cell ids push an isin()
-    # PARTITION filter into the cell-partitioned code scan — the plan
-    # lists n_probe directories, not n_cells — and the same rows feed
-    # the ADC LUT build via `probed=` (round 13)
-    probed, probed_cells = _collect_probe_cells(
-        probes, cents, n_probe=IVF_PROBE, dim=_PQ_M * _PQ_SUB
-    )
-    return ivfpq_adc_topk_df(
-        emb,
+    queries = _pq_queries(spark, sf_dir, n_queries)
+    probed = ivfpq_probes(cents, queries, IVF_PROBE)
+    cells = sorted({int(c) for cs in probed for c in cs})
+    return pq_adc_topk(
+        codes.filter(F.col("cell").isin(cells)).select(
+            F.col("vec_id").alias("id"), "cell", "codes"
+        ),
         hash_codebooks(_PQ_M, _PQ_K, _PQ_SUB),
-        cents,
-        n_probe=IVF_PROBE,
-        k=TOP_K,
-        probes=probes,
-        codes=tier.filter(F.col("cell").isin(probed_cells)),
-        probed=probed,
-    )
+        queries,
+        k=k,
+        cells=(cents, probed),
+    ).select("query_id", "rank", F.col("id").alias("neighbor_id"), "cell", "adc_dist")
+
+
+def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tier = spark.read.parquet(_ivfpq_codes_tier(spark, sf_dir))
+    return _ivfpq_search(spark, sf_dir, tier, N_PROBES, TOP_K)
 
 
 def _ivfpq_oracle(final_select: str | None = None) -> str:
@@ -1554,9 +1553,9 @@ QUALIFY rank <= {TOP_K}
 
 
 # iterative=True: fn() materializes the codes tier on first call per
-# (sf_dir, mtime) and collects the probed cells each run — bench charges
-# the build to train_sec and the warm reps time the pruned probe path
-# (the build-once/query-many shape the tier exists for).
+# (sf_dir, mtime) — bench charges the build to train_sec and the warm
+# reps time the pruned probe path (the build-once/query-many shape the
+# tier exists for).
 QUERIES["ivfpq_topk"] = QueryDef(
     q_ivfpq_topk, _ivfpq_oracle(), iterative=True
 )
@@ -1578,13 +1577,8 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the approximate side IS q_ivfpq_topk — the materialized,
-    # partition-pruned codes tier (round 13): the old inline form
-    # re-ran the full corpus encode chain (assignment + residual + PQ
-    # argmin) on every call, a shape no 100 TB deployment uses —
-    # production queries read the persisted codes, which the tier
-    # build pins bit-identical to the inline chain (SQL encode gear
-    # guard above), so the recall verdicts are unchanged row-for-row
-    # and the benched plan is the production one
+    # partition-pruned codes tier, the shape a 100 TB deployment
+    # queries (no corpus encode per call)
     approx = q_ivfpq_topk(spark, sf_dir)
     rep = recall_vs_exact(
         emb,

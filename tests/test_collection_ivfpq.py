@@ -258,6 +258,34 @@ def test_rebuild_between_queries_serves_the_new_generation(ivfpq_coll, engine):
     assert (len(cents), books.shape[0]) == (3, 4)
 
 
+def _hexed(x):
+    if isinstance(x, (tuple, list, np.ndarray)):
+        return tuple(_hexed(v) for v in x)
+    return float(x).hex() if isinstance(x, float) else x
+
+
+def test_build_seeds_the_index_memo(ivfpq_coll, engine):
+    """Each build stores what it wrote in the index memo, so a
+    materialize right after the build runs only its write job, and a
+    cold re-read of the tables returns bit-equal artifacts and the same
+    generation id."""
+    from chroma_rs_spark.collection import _INDEX_MEMO, _load_generation
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    c, ids, vecs = ivfpq_coll
+    c.build_ivf_index(n_centroids=4, max_iter=3)
+    c.build_pq_index(m=2, k=8, sample_size=64)
+    c.build_ivfpq_index(n_centroids=4, max_iter=3, m=2, k=8, sample_size=64)
+    jobs, _, _ = count_jobs_stages(engine.spark, c.materialize_ivfpq_codes)
+    assert jobs == 1, f"materialize after a build ran {jobs} jobs"
+    seeded = {ix: _load_generation(engine, c, ix) for ix in ("ivf", "pq", "ivfpq")}
+    _INDEX_MEMO.clear()
+    for ix, (loaded, gen) in seeded.items():
+        cold, cold_gen = _load_generation(engine, c, ix)
+        assert cold_gen == gen, ix
+        assert _hexed(cold) == _hexed(loaded), ix
+
+
 def test_removed_index_takes_the_transient_path(ivfpq_coll, engine, monkeypatch):
     """A memo entry never outlives its index dir: once the dir is gone
     the query trains a transient index, as if none had been built."""

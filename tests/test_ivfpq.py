@@ -1,7 +1,10 @@
-"""IVF-PQ composite index (operators/pq.py:ivfpq_adc_topk_df):
-residual encoding + per-probed-cell ADC. The suite row's DuckDB twin
-is the primary gate (tools/check.py ivfpq_topk); these tests pin the
-structural contracts that a value-hash alone wouldn't localize."""
+"""IVF-PQ composite index (operators/pq.py: `_ivfpq_codes_arrow`,
+`ivfpq_probes`, `pq_adc_topk(cells=)`): residual encoding +
+per-probed-cell ADC. The suite row's DuckDB twin is the primary gate
+(tools/check.py ivfpq_topk); these tests pin the structural contracts
+that a value-hash alone wouldn't localize, and each numpy step against
+a DuckDB replay of the oracle's SQL (tests/pq_replay.py) or against
+hand-derived literals."""
 
 from __future__ import annotations
 
@@ -104,17 +107,18 @@ def _hash_fixture(spark):
 
 
 def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
-    """The encode op's two physical forms (SQL expression pipeline
-    `ivfpq_codes_df` vs Arrow numpy batch `_ivfpq_codes_arrow`) produce
-    identical (cell, codes) on a seeded corpus with no rounding ties.
-    With `unit=True` the Arrow form normalizes its rows in numpy
-    (kernel.unit_rows); fed the same rows normalized by the SQL
-    `transform` over the folded `l2_norm`, the SQL form must agree, so
+    """The encode (`_ivfpq_codes_arrow`: cell, residual, per-subspace
+    argmin of the rounded in-order fold) assigns the (cell, codes) the
+    oracle's SQL assigns, on a seeded corpus with no rounding ties.
+    With `unit=True` it normalizes its rows in numpy
+    (kernel.unit_rows); the replay, fed the same rows normalized by
+    Spark's SQL `transform` over the folded `l2_norm`, must agree, so
     the two normalizations are pinned too."""
     from chroma_rs_spark.functions.vector import l2_norm
-    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow, ivfpq_codes_df
+    from chroma_rs_spark.operators.pq import _ivfpq_codes_arrow
+    from tests.pq_replay import CODES, replay
 
-    _vecs, items, cents, books = _hash_fixture(spark)
+    vecs, items, cents, books = _hash_fixture(spark)
 
     def rows(df):
         return sorted(
@@ -122,10 +126,15 @@ def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
             for r in df.collect()
         )
 
+    def replayed(pairs):
+        return sorted(
+            (i, c, tuple(codes))
+            for i, c, codes in replay(pairs, books, CODES, cents=cents)
+        )
+
     arrow = rows(_ivfpq_codes_arrow(items, books, cents, "vec_id", "embedding"))
-    sql = rows(ivfpq_codes_df(items, books, cents))
     assert len(arrow) == 200
-    assert arrow == sql
+    assert arrow == replayed([(i, v.tolist()) for i, v in enumerate(vecs)])
 
     raw = items.selectExpr("vec_id", "transform(embedding, x -> x * 3.0) AS embedding")
     unit = raw.withColumn("_n", l2_norm("embedding")).selectExpr(
@@ -135,65 +144,59 @@ def test_ivfpq_codes_arrow_gear_matches_sql_gear(spark):
         _ivfpq_codes_arrow(raw, books, cents, "vec_id", "embedding", unit=True)
     )
     assert len(arrow_unit) == 200
-    assert arrow_unit == rows(ivfpq_codes_df(unit, books, cents))
+    assert arrow_unit == replayed(
+        [(r["vec_id"], list(r["embedding"])) for r in unit.collect()]
+    )
 
 
 def test_numpy_adc_matches_sql_adc(spark):
-    """The collection's IVF-PQ search (`ivfpq_probes` +
-    `pq_adc_topk(cells=)`) returns the same (query_id, rank, id,
-    adc_dist) rows as the SQL form `ivfpq_adc_topk_df` on the same
-    codes and probes: same probed cells, LUTs folded in position order
-    and rounded like _SUB_DIST_SQL, ADC summed in subspace order from
-    0.0 and rounded like _adc_fold_sql. The zero probe is unscorable
-    under the cosine quantizer and drops on both sides."""
+    """The IVF-PQ search (`ivfpq_probes` + `pq_adc_topk(cells=)`) over
+    `_ivfpq_codes_arrow` codes returns the (query_id, rank, id, cell,
+    adc_dist) rows of the oracle's SQL: same probed cells, LUTs folded
+    in position order and rounded, ADC summed in subspace order from
+    0.0 and rounded, ties to the lower id. The zero probe is
+    unscorable under the cosine quantizer and drops on both sides."""
     from chroma_rs_spark.operators.pq import (
-        ivfpq_adc_topk_df,
-        ivfpq_codes_df,
+        _ivfpq_codes_arrow,
         ivfpq_probes,
         pq_adc_topk,
     )
+    from tests.pq_replay import replay, topk
 
     vecs, items, cents, books = _hash_fixture(spark)
     queries = [(q, vecs[i].tolist()) for q, i in enumerate((3, 50, 117, 199))]
     queries.append((4, (0.5 * vecs[7] - 0.25 * vecs[90]).tolist()))
     queries.append((5, [0.0] * 64))
-    probes = spark.createDataFrame(
-        queries, "query_id long, query_embedding array<double>"
+    codes = _ivfpq_codes_arrow(items, books, cents, "vec_id", "embedding")
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(
+            codes.withColumnRenamed("vec_id", "id"),
+            books,
+            queries,
+            k=10,
+            cells=(cents, ivfpq_probes(cents, queries, 4)),
+        ).collect()
     )
-    codes = ivfpq_codes_df(items, books, cents).cache()
-    try:
-        sql = sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"], r["adc_dist"])
-            for r in ivfpq_adc_topk_df(
-                items, books, cents, n_probe=4, k=10, probes=probes,
-                codes=codes,
-            ).collect()
+    sql = sorted(
+        replay(
+            [(i, v.tolist()) for i, v in enumerate(vecs)], books, topk(10),
+            cents=cents, queries=queries, n_probe=4,
         )
-        got = sorted(
-            tuple(r)
-            for r in pq_adc_topk(
-                codes.withColumnRenamed("vec_id", "id"),
-                books,
-                queries,
-                k=10,
-                cells=(cents, ivfpq_probes(cents, queries, 4)),
-            ).collect()
-        )
-    finally:
-        codes.unpersist()
+    )
     assert len(sql) == 50
     assert got == sql
 
 
-def test_numpy_residuals_match_sql_residuals(spark):
+def test_numpy_residuals_match_sql_residuals():
     """`kernel.assign_residuals`, the cell-and-residual step of the
-    trainer and of the Arrow encode, returns the same (id, cell,
-    residual) rows as the SQL `_ivfpq_residuals` on the same centroids,
-    every double compared by float.hex. Row 900 lies exactly between cells 3 and 5
+    trainer and of the Arrow encode, returns the (id, cell, residual)
+    rows of the oracle's SQL on the same centroids, every double
+    compared by float.hex. Row 900 lies exactly between cells 3 and 5
     (both sides pick the lower cell id); row 901 has zero norm and has
     no cosine cell on either side."""
     from chroma_rs_spark.operators.kernel import assign_residuals
-    from chroma_rs_spark.operators.pq import _ivfpq_residuals
+    from tests.pq_replay import replay
 
     rng = np.random.RandomState(7)
     vecs = {i: rng.normal(size=4).tolist() for i in range(60)}
@@ -205,16 +208,16 @@ def test_numpy_residuals_match_sql_residuals(spark):
         (8, [0.0, 0.0, 0.6, 0.8]),
         (11, [-0.5, 0.25, -0.5, 0.25]),
     ]
-    items = spark.createDataFrame(
-        list(vecs.items()), "vec_id long, embedding array<double>"
-    )
 
     def hexed(v):
         return tuple(float(x).hex() for x in v)
 
     sql = sorted(
-        (r["_vid"], r["cell"], hexed(r["_r"]))
-        for r in _ivfpq_residuals(items, cents, "vec_id", "embedding").collect()
+        (i, c, hexed(r))
+        for i, c, r in replay(
+            list(vecs.items()), np.zeros((1, 1, 4)),
+            "SELECT vec_id, cell, r FROM resid", cents=cents,
+        )
     )
     order = sorted(cents)
     cids = [cid for cid, _ in order]
@@ -232,16 +235,13 @@ def test_numpy_residuals_match_sql_residuals(spark):
 
 
 def test_numpy_adc_rounds_binary_halves_like_spark(spark):
-    """The numpy ADC rounds its lookup tables and sums with Spark
-    ROUND's HALF_UP, like its SQL twin: the probe's residual (1/16,
-    1/16) against the codeword (0, 0) is exactly 1/128 = 0.0078125,
-    which half-even rounding would turn into 0.007812 and Spark into
-    0.007813 (and (15/16)^2 * 2 = 1.7578125 is a half too)."""
-    from chroma_rs_spark.operators.pq import (
-        ivfpq_adc_topk_df,
-        ivfpq_probes,
-        pq_adc_topk,
-    )
+    """The IVF-PQ ADC rounds its lookup tables and sums with Spark
+    ROUND's HALF_UP, as the oracle's SQL does: the probe's residual
+    (1/16, 1/16) against the codeword (0, 0) is exactly 1/128 =
+    0.0078125, which half-even rounding would turn into 0.007812 and
+    Spark into 0.007813 (and (15/16)^2 * 2 = 1.7578125 is a half too).
+    Row c sits in the unprobed cell 1."""
+    from chroma_rs_spark.operators.pq import ivfpq_probes, pq_adc_topk
 
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
     books = np.asarray([[[0.0, 0.0], [1.0, 1.0]]])  # m=1, k=2, sub=2
@@ -250,16 +250,6 @@ def test_numpy_adc_rounds_binary_halves_like_spark(spark):
         "id string, cell int, codes array<int>",
     )
     queries = [(0, [1.0625, 0.0625])]  # cell 0, residual (1/16, 1/16)
-    probes = spark.createDataFrame(
-        queries, "query_id long, query_embedding array<double>"
-    )
-    sql = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["adc_dist"])
-        for r in ivfpq_adc_topk_df(
-            codes, books, cents, n_probe=1, k=5, probes=probes, codes=codes,
-            item_id="id",
-        ).collect()
-    )
     got = sorted(
         tuple(r)
         for r in pq_adc_topk(
@@ -267,5 +257,24 @@ def test_numpy_adc_rounds_binary_halves_like_spark(spark):
             cells=(cents, ivfpq_probes(cents, queries, 1)),
         ).collect()
     )
-    assert sql == [(0, 1, "a", 0.007813), (0, 2, "b", 1.757813)]
-    assert got == sql
+    assert got == [(0, 1, "a", 0, 0.007813), (0, 2, "b", 0, 1.757813)]
+
+
+def test_batch_of_unscorable_probes_returns_no_rows(spark):
+    """A batch whose every probe has zero norm probes no cell, so the
+    IVF-PQ search has no lookup table at all: it returns no rows
+    instead of failing the scoring task."""
+    from chroma_rs_spark.operators.pq import ivfpq_probes, pq_adc_topk
+
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    books = np.asarray([[[0.0, 0.0], [1.0, 1.0]]])  # m=1, k=2, sub=2
+    codes = spark.createDataFrame(
+        [("a", 0, [0]), ("b", 1, [1])], "id string, cell int, codes array<int>"
+    )
+    queries = [(0, [0.0, 0.0])]
+    probed = ivfpq_probes(cents, queries, 1)
+    assert [p.tolist() for p in probed] == [[]]
+    res = pq_adc_topk(
+        codes, books, queries, k=5, id_type="string", cells=(cents, probed)
+    ).collect()
+    assert res == []

@@ -255,22 +255,30 @@ def test_normalize_text_partition_invariant(spark):
 
 
 def test_ivfpq_partition_invariant(spark):
-    from chroma_rs_spark.operators.pq import hash_codebooks, ivfpq_adc_topk_df
+    from chroma_rs_spark.operators.pq import (
+        _ivfpq_codes_arrow,
+        hash_codebooks,
+        ivfpq_probes,
+        pq_adc_topk,
+    )
 
     emb = _emb(spark)
     cents = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
         for r in emb.filter("vec_id < 8 AND embedding IS NOT NULL").collect()
     ]
-    probes = emb.filter("vec_id < 3").selectExpr(
-        "vec_id AS query_id",
-        "CAST(embedding AS ARRAY<DOUBLE>) AS query_embedding",
-    )
+    queries = [c for c in cents if c[0] < 3]
     books = hash_codebooks(8, 8, 8)
+    cells = (cents, ivfpq_probes(cents, queries, 2))
+
+    def search(items):
+        codes = _ivfpq_codes_arrow(items, books, cents, "vec_id", "embedding")
+        return pq_adc_topk(
+            codes.withColumnRenamed("vec_id", "id"), books, queries, k=5, cells=cells
+        )
+
     a, b = _layouts(emb, "vec_id")
-    got_a = _canon(ivfpq_adc_topk_df(a, books, cents, n_probe=2, k=5, probes=probes))
-    got_b = _canon(ivfpq_adc_topk_df(b, books, cents, n_probe=2, k=5, probes=probes))
-    assert got_a == got_b
+    assert _canon(search(a)) == _canon(search(b))
 
 
 def test_simhash_pairs_partition_invariant(spark):

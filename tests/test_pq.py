@@ -1,5 +1,6 @@
 """Product quantization (operators/pq.py): encode/ADC bit-parity with
-a pure-numpy reference and deterministic training. The re-scored
+a pure-numpy reference and with a DuckDB replay of the oracle's SQL
+(tests/pq_replay.py), and deterministic training. The re-scored
 search's exact distances and recall band are pinned end to end in
 tests/test_collection_pq.py."""
 
@@ -64,23 +65,33 @@ def test_encode_matches_numpy_reference(emb, np_data, books):
         assert got[vid] == expected[i].tolist(), f"codes differ for {vid}"
 
 
+def _half_up(x: float) -> float:
+    """Spark's ROUND(x, 6) + 0.0: HALF_UP on the shortest decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP)) + 0.0
+
+
 def test_adc_matches_numpy_reference(emb, np_data, books):
     ids, mat = np_data
     queries = [(int(ids[i]), mat[i].tolist()) for i in range(3)]
     res = pq_adc_topk(pq_encode(emb, books), books, queries, k=5).collect()
-    # numpy reference: LUT sum over reference codes
+    # reference: rounded in-order LUT, summed in subspace order from
+    # 0.0 over the reference codes, rounded again
     codes = _np_encode(mat, books)
     sub = mat.shape[1] // M
     for qid, qv in queries:
-        qv = np.asarray(qv)
         lut = np.empty((M, K))
         for mi in range(M):
-            diff = books[mi] - qv[mi * sub : (mi + 1) * sub][None, :]
-            lut[mi] = (diff * diff).sum(axis=1)
+            for ci in range(K):
+                acc = 0.0
+                for x, c in zip(qv[mi * sub : (mi + 1) * sub], books[mi, ci]):
+                    acc += (x - c) * (x - c)
+                lut[mi, ci] = _half_up(acc)
         d = np.zeros(len(ids))
         for mi in range(M):
             d += lut[mi][codes[:, mi]]
-        d = np.round(d, 6) + 0.0
+        d = np.asarray([_half_up(x) for x in d])
         order = np.lexsort((ids, d))[:5]
         expect = [(int(ids[o]), d[o]) for o in order]
         got = [
@@ -98,22 +109,14 @@ def test_adc_matches_numpy_reference(emb, np_data, books):
 
 
 def test_df_adc_path_matches_numpy_path_on_hash_codebooks(spark):
-    """pq_adc_topk_df (the oracle-checkable DataFrame plan) and the
-    numpy production kernels (pq_encode + pq_adc_topk) must agree on
-    the same codebooks: identical codes for every row and the same
-    ADC top-k ranking. This closes the chain: the driver hash-checks
-    the DF plan against DuckDB; this test pins the numpy path to the
-    DF plan."""
-    import numpy as np
-    import pandas as pd
-
-    from chroma_rs_spark.operators.pq import (
-        hash_codebooks,
-        pq_adc_topk,
-        pq_adc_topk_df,
-        pq_codes_df,
-        pq_encode,
-    )
+    """The numpy PQ search (pq_encode + pq_adc_topk) equals a DuckDB
+    replay of the pq_adc_topk oracle's SQL on the same codebooks:
+    identical codes for every row (rounded in-order fold, ties low) and
+    the same ADC top-k rows, distances compared exactly. This closes
+    the chain: the driver hash-checks the suite row against DuckDB;
+    this test pins the numpy kernels to that SQL on another shape."""
+    from chroma_rs_spark.operators.pq import hash_codebooks
+    from tests.pq_replay import CODES, replay, topk
 
     rng = np.random.default_rng(23)
     n, m, k_codes, sub = 300, 4, 8, 4
@@ -124,37 +127,66 @@ def test_df_adc_path_matches_numpy_path_on_hash_codebooks(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     books = hash_codebooks(m, k_codes, sub)
-
-    # codes parity: numpy argmin (unrounded, expansion form) vs the DF
-    # plan's rounded-fold min_by — identical assignment for EVERY
-    # (row, subspace) on this corpus
-    np_codes = {
-        r["id"]: list(r["codes"]) for r in pq_encode(df, books).collect()
-    }
-    df_codes: dict[int, list[int | None]] = {
-        i: [None] * m for i in np_codes
-    }
-    for r in pq_codes_df(df, books).collect():
-        df_codes[r["_vid"]][r["mi"]] = r["code"]
-    assert df_codes == np_codes
     queries = [(0, rows[0][1]), (1, rows[7][1])]
-    probes = spark.createDataFrame(
-        [(q, v) for q, v in queries],
-        "query_id long, query_embedding array<double>",
+
+    np_codes = sorted(
+        (r["id"], tuple(r["codes"])) for r in pq_encode(df, books).collect()
     )
-    got_df = (
-        pq_adc_topk_df(df, books, probes, k=15)
-        .orderBy("query_id", "rank")
-        .toPandas()
+    sql_codes = sorted((i, tuple(c)) for i, _cell, c in replay(rows, books, CODES))
+    assert len(np_codes) == n
+    assert np_codes == sql_codes
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(pq_encode(df, books), books, queries, k=15).collect()
     )
-    got_np = (
-        pq_adc_topk(pq_encode(df, books), books, queries, k=15)
-        .orderBy("query_id", "rank")
-        .toPandas()
-        .rename(columns={"id": "neighbor_id", "adc_dist": "adc_dist"})
+    sql = sorted(
+        (q, rank, i, d)
+        for q, rank, i, _cell, d in replay(rows, books, topk(15), queries=queries)
     )
-    assert list(got_df["neighbor_id"]) == list(got_np["neighbor_id"])
-    assert np.allclose(got_df["adc_dist"], got_np["adc_dist"], atol=2e-6)
+    assert len(sql) == 30
+    assert got == sql
+
+
+def test_adc_rounds_binary_halves_like_spark(spark):
+    """Plain PQ rounds each LUT entry before the ADC sum, as the oracle
+    does: the probe's subvectors (1/16, 1/16) against the codeword
+    (0, 0) are exactly 1/128 = 0.0078125 each, which rounds HALF_UP to
+    0.007813, so two such lookups sum to 0.015626 (an unrounded LUT
+    gives 0.015625)."""
+    books = np.asarray([[[0.0, 0.0], [1.0, 1.0]]] * 2)  # m=2, k=2, sub=2
+    codes = spark.createDataFrame(
+        [("a", [0, 0]), ("b", [1, 1])], "id string, codes array<int>"
+    )
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(
+            codes, books, [(0, [0.0625] * 4)], k=5, id_type="string"
+        ).collect()
+    )
+    # (15/16)^2 * 2 = 1.7578125, a half too: 1.757813 + 1.757813
+    assert got == [(0, 1, "a", 0.015626), (0, 2, "b", 3.515626)]
+
+
+def test_pq_encode_drops_null_and_wrong_dim_rows(spark):
+    """A NULL or wrong-dim row cannot be encoded: pq_encode drops it,
+    like `_ivfpq_codes_arrow`, instead of failing the batch; and the
+    rescored search drops such probes."""
+    from chroma_rs_spark.operators.pq import hash_codebooks, pq_topk_rescored_df
+
+    books = hash_codebooks(2, 4, 2)
+    items = spark.createDataFrame(
+        [
+            (0, [0.1, 0.2, 0.3, 0.4]),
+            (1, None),
+            (2, [0.5, 0.6, 0.7]),
+            (3, [-0.1, 0.2, -0.3, 0.4]),
+        ],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    assert sorted(r["id"] for r in pq_encode(items, books).collect()) == [0, 3]
+    probes = items.selectExpr("vec_id AS query_id", "embedding AS query_embedding")
+    res = pq_topk_rescored_df(items, books, probes, k=1, oversample=2).collect()
+    assert sorted((r["query_id"], r["neighbor_id"]) for r in res) == [(0, 0), (3, 3)]
 
 
 def test_train_pq_codebooks_df_deterministic_and_dense(spark):
@@ -204,56 +236,6 @@ def test_train_pq_codebooks_df_raises_on_emptied_cluster(spark):
     )
     with _pytest.raises(ValueError, match="clusters emptied|train"):
         train_pq_codebooks_df(dup, m=4, k=8, max_iter=2, sample_size=20)
-
-
-def test_ivfpq_adc_topk_precollected_probed_parity(spark):
-    """The round-13 `probed=` reuse path: passing ivfpq_probe_cells'
-    COLLECTED rows back into ivfpq_adc_topk_df (the q_ivfpq_topk shape
-    — one probe assignment feeding both the partition-pruning isin()
-    and the ADC LUT) must reproduce the default in-plan assignment
-    bit-for-bit: doubles round-trip collect/createDataFrame exactly."""
-    import numpy as np
-
-    from chroma_rs_spark.operators.pq import (
-        hash_codebooks,
-        ivfpq_adc_topk_df,
-        ivfpq_probe_cells,
-    )
-
-    rng = np.random.default_rng(7)
-    n, m, k_codes, sub, n_cells = 200, 4, 8, 4, 8
-    dim = m * sub
-    rows = [
-        (i, [float(x) for x in rng.normal(0.0, 1.0, size=dim)])
-        for i in range(n)
-    ]
-    items = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    cents = [(c, rows[c][1]) for c in range(n_cells)]
-    probes = spark.createDataFrame(
-        [(i, rows[i][1]) for i in (3, 50, 117)],
-        "query_id long, query_embedding array<double>",
-    )
-    books = hash_codebooks(m, k_codes, sub)
-
-    base = ivfpq_adc_topk_df(
-        items, books, cents, n_probe=3, k=5, probes=probes
-    ).collect()
-    pre = ivfpq_probe_cells(probes, cents, n_probe=3, dim=dim).collect()
-    probed_df = spark.createDataFrame(
-        [(r["_qid"], int(r["cell"]), list(r["_qr"])) for r in pre],
-        "_qid LONG, cell INT, _qr ARRAY<DOUBLE>",
-    )
-    reused = ivfpq_adc_topk_df(
-        items, books, cents, n_probe=3, k=5, probes=probes,
-        probed=probed_df,
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(map(tuple, base), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, reused), key=lambda t: (t[0], t[1])
-    )
-    assert len(base) == 15
 
 
 @pytest.mark.parametrize("max_iter", [3, 10])
