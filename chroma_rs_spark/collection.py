@@ -43,7 +43,7 @@ from chroma_rs_spark.errors import (
 )
 from chroma_rs_spark.filters import compile_where, compile_where_document
 from chroma_rs_spark.functions.vector import l2_norm
-from chroma_rs_spark.operators.knn import knn_exact_local_topk
+from chroma_rs_spark.operators.knn import knn_exact
 
 ITEM_SCHEMA = T.StructType(
     [
@@ -1252,13 +1252,6 @@ def _has_codes(engine: Engine, coll: Collection, index: str) -> bool:
 # probed cells.
 
 
-def _probe_df(spark, vectors: Sequence[Sequence[float]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, [float(x) for x in q]) for i, q in enumerate(vectors)],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
-
-
 def _default_m(query_embeddings: Sequence[Sequence[float]]) -> int:
     """Subspace count of a transient PQ quantizer: the largest m <= 8
     that divides the collection dim (build_*_index is the place to
@@ -1333,21 +1326,18 @@ def _exact_topk(
     k: int,
     metric: str,
 ) -> DataFrame:
-    """The exact ranking: knn_exact_local_topk under the collection
-    metric — knn_exact's arithmetic in the numpy kernel, bit for bit —
-    on the add-time norm "index" (maintained by update/upsert: one
-    stored norm per item instead of one recompute per (item, query)
-    pair). Each partition scores its rows in one Arrow pass and keeps
-    k per query; only those candidates shuffle into the final window.
-    The pq/ivfpq pool rescore (pq_pooled_topk) runs the same
-    arithmetic."""
-    ranked = knn_exact_local_topk(
+    """The exact ranking: knn_exact under the collection metric on the
+    add-time norm "index" (maintained by update/upsert: one stored norm
+    per item instead of one recompute per (item, query) pair). Each
+    partition scores its rows in one Arrow pass and keeps k per query;
+    only those candidates shuffle into the final window. The pq/ivfpq
+    pool rescore (pq_pooled_topk) runs the same arithmetic."""
+    ranked = knn_exact(
         df,
         [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
         k=k,
         metric=metric,
         item_id="id",
-        id_type="string",
         item_norm="embedding_norm" if metric == "cosine" else None,
     )
     return ranked.select(
@@ -1410,8 +1400,9 @@ def query(
     numpy forms of its operators (driver-side index and probe cells,
     Arrow scorers). pq and ivfpq have no other form: the suite's
     oracle-checked pq/ivfpq rows run the same encode, probe and ADC
-    code. The exact ranking is knn_exact's arithmetic, bit for bit;
-    knn_exact's SQL form serves the oracle-replayed exact rows.
+    code. The exact ranking is `knn_exact`, the one exact-KNN operator,
+    whose arithmetic the suite's exact rows replay in DuckDB;
+    `query_diverse` takes its pool from the same scorer.
     All paths share the filter pushdown (where / where_document /
     partition pruning run before the distance work).
 
@@ -1521,7 +1512,10 @@ def query_diverse(
     greedy stage cannot honor. Cosine collections only (the MMR
     pairwise term is the engine's round-6 cosine). Filters push down
     exactly like query(): where / where_document / partition pruning
-    run before any distance work.
+    run before any distance work. The pool comes from query()'s exact
+    scorer (`knn_exact` on the stored `embedding_norm`) in one scan of
+    the items, collected once with its vectors; the pool x pool
+    distances and the greedy picks run on the driver.
 
     Returns (query_id, rank, id, distance, mmr_score[, document]
     [, metadata])."""
@@ -1544,7 +1538,7 @@ def query_diverse(
     df = _filtered_items(engine, coll, None, where, where_document)
     result = mmr_topk(
         df,
-        _probe_df(engine.spark, query_embeddings),
+        [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
         k=int(n_results),
         pool=(
             int(pool)
@@ -1554,7 +1548,8 @@ def query_diverse(
         lam=lam,
         item_id="id",
         item_emb="embedding",
-    )
+        item_norm="embedding_norm",
+    ).withColumn("query_id", F.col("query_id").cast("int"))
     return _with_includes(result, df, include, ["distance", "mmr_score"])
 
 

@@ -29,9 +29,11 @@ HOF tree, plus a one-time ~2 s Janino compile). So the unrolled path
 pays off when partitions are large (millions of pairs per action —
 the collection-API / cluster regime, where per-row interpretation
 dominates), while small interactive queries are faster with the HOF
-form. The suite queries (2k-row embeddings at sf0.1) therefore keep
-dim=None. `collection.query()` runs neither: it scores in the numpy
-kernel (operators/kernel.py:exact_distances), the same in-order fold.
+form. No KNN ranking runs either: `knn_exact` (operators/knn.py),
+behind `collection.query()` and the suite's exact rows, scores in the
+numpy kernel (operators/kernel.py:exact_distances), the same in-order
+fold. These functions serve the per-row distance columns (the norm
+"index", assignment, pair and bucket scores) and their SQL oracles.
 """
 
 from __future__ import annotations

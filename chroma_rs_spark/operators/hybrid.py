@@ -11,9 +11,11 @@ fused score replays bit-for-bit in SQL.
 
 Scale shape: RRF in the literature fuses bounded candidate LISTS, not
 whole-corpus rankings — each system contributes its top-`depth`. That
-is also exactly the scalable plan: `orderBy(...).limit(depth)` lowers
-to TakeOrderedAndProject (per-partition partial top-depth, then a
-single bounded merge of ≤ depth rows per partition), so no corpus-wide
+is also exactly the scalable plan. The lexical leg's
+`orderBy(...).limit(depth)` lowers to TakeOrderedAndProject
+(per-partition partial top-depth, then a single bounded merge of
+≤ depth rows per partition), and the dense leg is `knn_exact`'s
+per-batch top-depth and window merge, so no corpus-wide
 single-partition sort ever runs. Ranks are then assigned on the
 ≤ depth surviving rows — identical to the global rank for every row
 that survives, because a row in the global top-depth is necessarily in
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from chroma_rs_spark.functions.vector import vector_lit_sql
+from chroma_rs_spark.operators.knn import knn_exact
 from chroma_rs_spark.operators.text import bm25_scores
 
 RRF_K0 = 60  # the standard damping constant from the RRF literature
@@ -86,49 +88,13 @@ def hybrid_search_rrf(
     """
     if not terms:
         raise ValueError("hybrid_search_rrf needs a non-empty terms list")
-    from chroma_rs_spark.functions.vector import (
-        dot_product_sql,
-        float_sql,
-        l2_norm_sql,
-    )
-
-    # zero-norm guard (the knn_exact convention): cosine undefined for
-    # the zero vector; ANSI SQL would raise on the division. NULL
-    # distances are filtered, so zero-norm docs never rank. Norms are
-    # evaluated ONCE each: the query norm is a driver-computed literal
-    # (same left-to-right fold as the HOF — operators/ivf._seq_norm)
-    # and the item norm is a projected column the CASE references
-    # twice, instead of re-running the interpreted HOF aggregate per
-    # use.
-    from chroma_rs_spark.operators.ivf import _seq_norm
-
-    qv = vector_lit_sql(query_vec)
-    qn = float_sql(_seq_norm([float(x) for x in query_vec]))
-    dist = (
-        F.round(
-            F.expr(
-                f"CASE WHEN _n * {qn} = 0.0D THEN NULL"
-                f" ELSE 1.0D - {dot_product_sql(f'`{emb_col}`', qv)}"
-                f" / (_n * {qn}) END"
-            ),
-            6,
-        )
-        + F.lit(0.0)
-    )
-    vec_ranked = _ranked_topn(
-        emb.filter(F.col(emb_col).isNotNull())
-        .select(
-            F.col(vec_id).alias(doc_id),
-            F.col(emb_col),
-            F.expr(l2_norm_sql(f"`{emb_col}`")).alias("_n"),
-        )
-        .select(F.col(doc_id), dist.alias("_dist"))
-        .filter(F.col("_dist").isNotNull()),
-        [F.col("_dist").asc(), F.col(doc_id).asc()],
-        depth,
-        "vec_rank",
-        key=doc_id,
-    ).select(doc_id, "vec_rank")
+    # the dense leg is the exact cosine top-`depth` of knn_exact: NULL
+    # embeddings and NaN distances (zero-norm, NaN components) never
+    # rank
+    vec_ranked = knn_exact(
+        emb, [(0, query_vec)], k=depth, metric="cosine", item_id=vec_id,
+        item_emb=emb_col,
+    ).select(F.col(vec_id).alias(doc_id), F.col("rank").alias("vec_rank"))
     # lexical leg + fusion shared with the ANN-candidate path — only
     # MATCHING documents are lexical candidates (the bm25 > 0 filter
     # lives there; ranking 0.0 non-matches by the tie-break would hand

@@ -134,7 +134,7 @@ def ivf_topk(
     against the broadcast centroid/query matrices), keeping only the
     local top-k per query — the shuffle after mapInPandas carries at
     most |batches| x |queries| x k rows, exactly like
-    `knn_exact_local_topk`. Assignment, driver-side probe selection
+    `knn_exact`. Assignment, driver-side probe selection
     and scoring all run the shared numpy kernel (operators/kernel.py):
     round to DIST_DECIMALS, -0.0 folded to +0.0, ties to the lower
     centroid/neighbor id, so results stay oracle-checkable

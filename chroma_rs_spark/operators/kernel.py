@@ -1,7 +1,8 @@
 """The one numpy scoring kernel behind every vectorized top-k path.
 
-The exact cosine-pair operator (operators/similarity.py), the
-scale-path exact KNN (`knn_exact_local_topk`), IVF search (`ivf_topk`:
+The exact cosine-pair operator (operators/similarity.py), the one
+exact KNN (`knn_exact`, which also takes the MMR pool and the hybrid
+dense leg), IVF search (`ivf_topk`:
 cell assignment, probe selection and probed-cell scoring) and PQ ADC
 (`pq_adc_topk`, `pq_pooled_topk`) share one shape: score a block of
 rows locally with a float64 matmul inside an Arrow batch or group,
@@ -15,7 +16,8 @@ construction:
 * `cosine_sim` / `distances` — cosine, squared-l2 and ip matrices;
 * `fold_dot` / `fold_norms` / `fold_l2` — the same sums in a SQL
   fold's order, for numpy forms that replay a SQL form bit for bit;
-* `exact_distances` — `knn_exact`'s distances in that arithmetic;
+* `exact_distances` — `knn_exact`'s distances (and the MMR pairwise
+  cosine) in that arithmetic;
 * `unit_rows` — the cosine candidate domain's unit normalization;
 * `rounded` — DIST_DECIMALS rounding with -0.0 folded to +0.0;
 * `rounded_half_up` — the same rounding as Spark's ROUND, for numpy
@@ -147,10 +149,11 @@ def fold_l2(a, b) -> np.ndarray:
 
 
 def exact_distances(metric: str, a, b, a_norm=None) -> np.ndarray:
-    """(len(a), len(b)) unrounded distances in `knn_exact`'s SQL
-    arithmetic, bit for bit: cosine `1 - dot / (|a| |b|)` with NaN
-    where `|a| |b| == 0` (the SQL CASE's NULL), l2 the squared-L2 fold,
-    ip `1 - dot`; every sum folded in position order. `a_norm` is a
+    """(len(a), len(b)) unrounded distances of `knn_exact`, in the
+    arithmetic of a SQL fold, bit for bit: cosine `1 - dot / (|a| |b|)`
+    with NaN where `|a| |b| == 0` (where a SQL division by zero yields
+    NULL), l2 the squared-L2 fold, ip `1 - dot`; every sum folded in
+    position order. `a_norm` is a
     stored norm of the rows of `a` (the collection's add-time norm)."""
     with np.errstate(all="ignore"):
         if metric == "cosine":
@@ -328,11 +331,11 @@ def topk_rows(
     id) entries in that order, optionally restricted by a same-shape
     boolean `mask`. Non-finite distances are unscorable pairs
     (zero-norm under cosine, NaN components) and never become
-    candidates; `keep_inf` drops only NaN, as `knn_exact`'s NULL/NaN
-    filter does. lexsort rather than argpartition: ties at the k-th
-    boundary (rounding manufactures exact ties) must break on id like
-    the global window, or a tied lowest-id candidate could be dropped
-    locally."""
+    candidates; `keep_inf` drops only NaN, as `knn_exact` ranks and its
+    oracles' `NOT isnan` filter does. lexsort rather than argpartition:
+    ties at the k-th boundary (rounding manufactures exact ties) must
+    break on id like the global window, or a tied lowest-id candidate
+    could be dropped locally."""
     ids = _sortable(ids)
     keep = ~np.isnan(d) if keep_inf else np.isfinite(d)
     if mask is not None:
@@ -352,16 +355,24 @@ def topk_per_query(
     cols: tuple[str, str, str],
     mask: np.ndarray | None = None,
     keep_inf: bool = False,
+    carry: dict[str, np.ndarray] | None = None,
 ) -> pd.DataFrame | None:
-    """Local top-k per query (`topk_rows`) as (query, id, distance)
-    rows, named by `cols`, in (query, distance, id) order."""
+    """Local top-k per query (`topk_rows`) as (query, id, *carry,
+    distance) rows, named by `cols` and the `carry` keys (per-row
+    arrays returned beside each kept row), in (query, distance, id)
+    order."""
     import pandas as pd
 
     ids = _sortable(ids)
     q_col, id_col, d_col = cols
+    carry = carry or {}
     tops = topk_rows(ids, d, k, mask, keep_inf)
     frames = [
-        pd.DataFrame({q_col: qid, id_col: ids[top], d_col: d[top, j]})
+        pd.DataFrame(
+            {q_col: qid, id_col: ids[top]}
+            | {c: v[top] for c, v in carry.items()}
+            | {d_col: d[top, j]}
+        )
         for j, (qid, top) in enumerate(zip(qids, tops))
         if top.size
     ]

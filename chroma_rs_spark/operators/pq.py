@@ -26,7 +26,7 @@ Spark shapes (matching the repo's discipline):
   closure, gather + sum per subspace, then the shared numpy kernel's
   local top-k per partition and one tiny window over |partitions| x
   |queries| x k candidates (operators/kernel.py — the same
-  bounded-shuffle shape and arithmetic as knn_exact_local_topk).
+  bounded-shuffle shape and arithmetic as knn.knn_exact).
 * **rescore** — the production pattern: PQ retrieves an oversampled
   candidate set, the raw vectors re-score it exactly (distances
   identical to the exact path's doubles), and the final top-k ranks
@@ -473,7 +473,7 @@ def pq_pooled_topk(
       query's global pool.
     * One Arrow step rescores the UNION of the queries' pools against
       every query with `kernel.exact_distances` +
-      `kernel.rounded_half_up` — `knn_exact_local_topk`'s arithmetic on
+      `kernel.rounded_half_up` — `knn_exact`'s arithmetic on
       the stored norm — and ranks by (distance, id), keeping ±inf and
       dropping NaN like `knn_exact`.
 

@@ -17,6 +17,8 @@ Exact KNN (brute force top-k per query) lives in operators/knn.py.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -562,15 +564,15 @@ def ann_recall(
     legitimately when the probe's bucket is thin — recall = n_hits/k
     charges the miss to the index, as it should.
 
-    Scale shape: exact side is the broadcast-probe cross join of
-    `knn_exact` (|probes| is small by construction of an evaluation);
-    approx side is the bucket-equijoin of `signbucket_ann`; the
+    Scale shape: the probes are collected (|probes| is small by
+    construction of an evaluation); the exact side is one `knn_exact`
+    scan of the items, which keeps k candidates per probe in each Arrow
+    batch and drops the zero-norm items (NaN cosine) and self pairs;
+    the approx side is the bucket-equijoin of `signbucket_ann`; the
     intersection is a (query, neighbor) equi-join on two k-bounded
     sets. Nothing quadratic in |items| beyond the exact baseline the
     evaluation exists to compare against.
     """
-    from chroma_rs_spark.functions.vector import l2_norm_sql
-    from chroma_rs_spark.operators.knn import knn_exact
     from chroma_rs_spark.plans.partitioning import spread_compute
 
     # the exact baseline scores |probes| x dim per item row — spread a
@@ -578,21 +580,9 @@ def ann_recall(
     # approximate side reuses the same materialization. No-op at
     # cluster scale or on pytest-sized inputs.
     items = spread_compute(items)
-    universe = items.filter(F.col(item_emb).isNotNull()).filter(
-        F.expr(f"{l2_norm_sql(f'`{item_emb}`', dim)} <> 0.0D")
+    exact = _exact_neighbors(
+        items, probes, k, "cosine", item_id, item_emb, probe_id, probe_emb, True
     )
-    exact = knn_exact(
-        universe,
-        probes,
-        k,
-        metric="cosine",
-        item_id=item_id,
-        item_emb=item_emb,
-        query_id=probe_id,
-        query_emb=probe_emb,
-        dim=dim,
-        exclude_self=True,
-    ).select(F.col(probe_id), F.col(item_id).alias("_nid"))
     approx = signbucket_ann(
         items,
         probes,
@@ -623,8 +613,9 @@ def _recall_report(
     Tagged-union form (round 14, guide §2.4): the old
     three-aggregations-joined shape consumed EACH input subtree twice
     (its count + the hits join) with zero exchange reuse — for the
-    recall rows that means the corpus-sized exact-KNN cross join and
-    the approximate index chain both executed twice per action
+    recall rows that meant the corpus-sized exact-KNN scan (then a
+    cross join) and the approximate index chain both executed twice
+    per action
     (plan-audited: 8 BroadcastNestedLoopJoin / 16 WindowGroupLimit in
     pq_recall's before-plan). Tagging each side and grouping once per
     (probe, neighbor) then per probe reads each subtree ONCE; counts
@@ -672,6 +663,35 @@ def _recall_report(
     )
 
 
+def _exact_neighbors(
+    items: DataFrame,
+    probes: DataFrame,
+    k: int,
+    metric: str,
+    item_id: str,
+    item_emb: str,
+    probe_id: str,
+    probe_emb: str,
+    exclude_self: bool,
+) -> DataFrame:
+    """(probe_id, _nid): the exact top-k of each probe of the small
+    `probes` frame, collected once for `knn_exact` (NULL probes drop;
+    they keep their report row through `_recall_report`)."""
+    from chroma_rs_spark.operators.knn import knn_exact
+
+    queries = [tuple(r) for r in probes.select(probe_id, probe_emb).collect()]
+    return knn_exact(
+        items,
+        queries,
+        k,
+        metric=metric,
+        item_id=item_id,
+        item_emb=item_emb,
+        query_id=probe_id,
+        exclude_self=exclude_self,
+    ).select(F.col(probe_id), F.col(item_id).alias("_nid"))
+
+
 def recall_vs_exact(
     items: DataFrame,
     probes: DataFrame,
@@ -682,7 +702,6 @@ def recall_vs_exact(
     probe_id: str = "query_id",
     probe_emb: str = "query_embedding",
     neighbor_col: str = "neighbor_id",
-    dim: int | None = None,
     exclude_self: bool = False,
     metric: str = "cosine",
 ) -> DataFrame:
@@ -695,43 +714,34 @@ def recall_vs_exact(
     define the neighbor universe identically, and the `metric` the
     index approximates (cosine for IVF/sign-bucket, l2 for PQ-ADC) so
     the exact truth ranks by the distance the index is trying to
-    reproduce."""
-    from chroma_rs_spark.operators.knn import knn_exact
-
-    exact = knn_exact(
-        items,
-        probes,
-        k,
-        metric=metric,
-        item_id=item_id,
-        item_emb=item_emb,
-        query_id=probe_id,
-        query_emb=probe_emb,
-        dim=dim,
-        exclude_self=exclude_self,
-    ).select(F.col(probe_id), F.col(item_id).alias("_nid"))
+    reproduce. The exact side is one `knn_exact` scan of the items."""
+    exact = _exact_neighbors(
+        items, probes, k, metric, item_id, item_emb, probe_id, probe_emb,
+        exclude_self,
+    )
     ap = approx.select(F.col(probe_id), F.col(neighbor_col).alias("_nid"))
     return _recall_report(probes, exact, ap, k, probe_id)
 
 
 # Upper bound on mmr_topk's candidate pool: the greedy stage collects
-# |probes| * pool^2 pairwise-distance rows driver-side (three 8-byte-ish
-# fields each), so 512 keeps a 100-probe batch under ~30M tiny rows —
-# the same "bounded by construction" budget as the centroid collects.
+# |probes| * pool candidates with their vectors and scores pool^2
+# pairwise distances per probe on the driver, so 512 keeps a 100-probe
+# batch at ~50k collected rows and ~26M driver-side distances — the
+# same "bounded by construction" budget as the centroid collects.
 MMR_MAX_POOL = 512
 
 
 def mmr_topk(
-    items,
-    probes,
+    items: DataFrame,
+    probes: Sequence[tuple],
     k: int = 10,
     pool: int = 30,
     lam: float = 0.7,
     item_id: str = "vec_id",
     item_emb: str = "embedding",
     probe_id: str = "query_id",
-    probe_emb: str = "query_embedding",
-):
+    item_norm: str | None = None,
+) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k (Carbonell &
     Goldstein, SIGIR 1998) — the retrieval feature plain KNN lacks:
     near-duplicate neighbors crowd the result list, MMR greedily picks
@@ -740,54 +750,47 @@ def mmr_topk(
     so each pick trades relevance against similarity to the already-
     selected set S (lam = 1 degenerates to plain KNN).
 
-    Physical shape: exact top-`pool` per probe (the knn_exact
-    broadcast-cross plan — the only corpus-sized work), ONE bounded
-    pool x pool self-join for the pairwise round-6 cosine distances
-    (|probes| * pool^2 tiny rows), then the greedy selection runs on
-    the driver over the ALREADY-ROUNDED scalars — a bounded collect of
-    |probes| * (pool + pool^2) rows by contract (the centroid-collect
-    class), never corpus data. At 100 TB the pool stage is the ANN
-    index's cost; MMR's own cost is independent of corpus size.
+    `probes` is a driver-side list of (qid, vector), as for
+    `knn_exact`; pass `item_norm` for a stored norm column (the
+    collection's `embedding_norm`).
+
+    Physical shape: the exact cosine top-`pool` per probe is one
+    `knn_exact` scan of the items carrying each candidate's vector —
+    the only corpus-sized work — collected once (|probes| * pool rows
+    by contract, the centroid-collect class, never corpus data). The
+    pool x pool round-6 cosine distances and the greedy selection then
+    run on the driver. At 100 TB the pool stage is the ANN index's
+    cost; MMR's own cost is independent of corpus size.
 
     Determinism contract (what makes the row oracle-checkable): the
-    pool is top-`pool` by (round-6 distance, id); every pairwise
-    distance is the engine-wide round-6 + -0.0 cosine; the greedy
-    arithmetic runs on python float64 with the exact literal
+    pool is top-`pool` by (round-6 distance, id) and excludes the
+    zero-norm items (their cosine is NaN); every pairwise distance is
+    the engine-wide round-6 + -0.0 cosine (`kernel.exact_distances`
+    rounded by `kernel.rounded_half_up`, Spark ROUND's bits); the
+    greedy arithmetic runs on python float64 with the exact literal
     `lam` and `1 - lam` factors an unrolled SQL replay uses, ties
     break to the lower id.
 
-    Returns (probe_id, rank, item_id, distance, mmr_score) — distance
-    is the exact round-6 cosine to the probe, mmr_score the raw
-    (unrounded) greedy objective at selection time.
+    Returns (probe_id, rank, item_id, distance, mmr_score) —
+    distance is the exact round-6 cosine to the probe, mmr_score the
+    raw (unrounded) greedy objective at selection time.
     """
-    from pyspark.sql import functions as F
+    import numpy as np
 
-    from chroma_rs_spark.functions.vector import cosine_distance
     from chroma_rs_spark.operators.knn import knn_exact
 
     if not (0.0 <= lam <= 1.0):
         raise ValueError(f"mmr_topk: lam must be in [0, 1], got {lam}")
-    # Hard cap: the greedy stage collects |probes| * pool^2 pairwise
-    # rows to the driver by design (bounded-collect class). That bound
-    # is only a bound if pool stays small — pool=10k would be 1e8 rows
-    # per probe. Larger pools need a distributed greedy variant, not a
-    # silently bigger collect.
+    # Hard cap: the greedy stage scores |probes| * pool^2 pairs on the
+    # driver by design (bounded-collect class). That bound is only a
+    # bound if pool stays small — pool=10k would be 1e8 pairs per
+    # probe. Larger pools need a distributed greedy variant, not a
+    # silently bigger driver stage.
     if not (0 < int(pool) <= MMR_MAX_POOL):
         raise ValueError(
             f"mmr_topk: pool must be in [1, {MMR_MAX_POOL}] (the greedy"
-            f" stage collects |probes| * pool^2 rows), got {pool}"
+            f" stage scores |probes| * pool^2 pairs), got {pool}"
         )
-    # Zero-norm embeddings have no defined cosine distance: knn_exact
-    # only filters NULLs, and a zero-norm vector reaching the pool
-    # yields NaN pairwise distances — NaN wins every > comparison on
-    # whichever candidate is evaluated first, silently corrupting the
-    # greedy order. Drop them from the candidate universe up front.
-    nz = F.aggregate(
-        F.col(item_emb).cast("array<double>"),
-        F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    )
-    items = items.filter(nz > 0)
     cand = knn_exact(
         items,
         probes,
@@ -796,77 +799,46 @@ def mmr_topk(
         item_id=item_id,
         item_emb=item_emb,
         query_id=probe_id,
-        query_emb=probe_emb,
+        item_norm=item_norm,
+        carry=[item_emb],
     )
-    vecs = items.select(
-        F.col(item_id).alias("_pid"),
-        F.col(item_emb).cast("array<double>").alias("_pe"),
-    )
-    pool_df = cand.join(
-        vecs, cand[item_id] == vecs["_pid"]
-    ).select(probe_id, item_id, "distance", "_pe")
-    a = pool_df.select(
-        F.col(probe_id).alias("_q"),
-        F.col(item_id).alias("_ia"),
-        F.col("_pe").alias("_ea"),
-    )
-    b = pool_df.select(
-        F.col(probe_id).alias("_q"),
-        F.col(item_id).alias("_ib"),
-        F.col("_pe").alias("_eb"),
-    )
-    pw = (
-        a.join(b, "_q")
-        .filter(F.col("_ia") != F.col("_ib"))
-        .select(
-            "_q",
-            "_ia",
-            "_ib",
-            (
-                F.round(cosine_distance(F.col("_ea"), F.col("_eb")), 6)
-                + F.lit(0.0)
-            ).alias("_dab"),
-        )
-    )
-    # bounded driver collects: |probes| * pool and |probes| * pool^2
     by_q: dict = {}
-    for r in pool_df.select(probe_id, item_id, "distance").collect():
-        by_q.setdefault(r[probe_id], {})[r[item_id]] = float(r["distance"])
-    pair: dict = {}
-    for r in pw.collect():
-        pair[(r["_q"], r["_ia"], r["_ib"])] = float(r["_dab"])
+    for r in cand.collect():
+        by_q.setdefault(r[probe_id], []).append(r)
 
     lam = float(lam)
     one_minus = 1.0 - lam  # the EXACT float the oracle must embed
     out_rows = []
     for q in sorted(by_q):
-        dq = by_q[q]
+        ids = [r[item_id] for r in by_q[q]]
+        dq = [float(r["distance"]) for r in by_q[q]]
+        vecs = np.asarray([r[item_emb] for r in by_q[q]], dtype=np.float64)
+        pair = kernel.rounded_half_up(
+            kernel.exact_distances("cosine", vecs, vecs)
+        ).tolist()
         selected: list = []
-        remaining = set(dq)
-        for rank in range(1, min(int(k), len(dq)) + 1):
-            best_id, best_score = None, None
-            for i in sorted(remaining):
+        remaining = sorted(range(len(ids)), key=lambda i: ids[i])
+        for rank in range(1, min(int(k), len(ids)) + 1):
+            best, best_score = None, None
+            for i in remaining:
                 # TRUE max over (1 - dab) for j in S — similarities can
                 # be negative (cosine distance runs to 2), so this must
                 # not clip at 0; the empty-S convention is 0.0 (first
                 # pick = pure relevance), mirrored by the oracle's m1
                 if selected:
-                    mx = max(1.0 - pair[(q, i, j)] for j in selected)
+                    mx = max(1.0 - pair[i][j] for j in selected)
                 else:
                     mx = 0.0
                 score = lam * (1.0 - dq[i]) - one_minus * mx
-                if best_score is None or score > best_score or (
-                    score == best_score and i < best_id
-                ):
-                    best_id, best_score = i, score
-            selected.append(best_id)
-            remaining.discard(best_id)
-            out_rows.append((q, rank, best_id, dq[best_id], best_score))
-    spark = items.sparkSession
-    id_type = dict(items.dtypes)[item_id]
-    probe_id_type = dict(probes.dtypes)[probe_id]
-    return spark.createDataFrame(
+                # `remaining` runs in id order: the first best wins ties
+                if best_score is None or score > best_score:
+                    best, best_score = i, score
+            selected.append(best)
+            remaining.remove(best)
+            out_rows.append((q, rank, ids[best], dq[best], best_score))
+    types = dict(cand.dtypes)
+    return items.sparkSession.createDataFrame(
         out_rows,
-        f"{probe_id} {probe_id_type}, rank long, {item_id} {id_type},"
+        f"`{probe_id}` {types[probe_id]}, rank long, `{item_id}` {types[item_id]},"
         " distance double, mmr_score double",
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from chroma_rs_spark.filters import column_resolver, compile_where, compile_where_document
 from chroma_rs_spark.functions.vector import l2_norm
-from chroma_rs_spark.operators.knn import knn_exact, knn_exact_local_topk, with_norm
+from chroma_rs_spark.operators.knn import knn_exact
 from chroma_rs_spark.sources.tables import load_table
 from chroma_rs_spark.suite import QueryDef, fixture, fixture_dir
 
@@ -51,34 +51,29 @@ def _probe_queries(emb: DataFrame) -> DataFrame:
     )
 
 
-def _knn(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    norm_col = None
-    if metric == "cosine":
-        # use the add-time norm "index": same doubles, one norm per item
-        # instead of one per (item, query) pair
-        emb = with_norm(emb)
-        norm_col = "embedding_norm"
+def _knn(spark: SparkSession, sf_dir: str, metric: str, items=None) -> DataFrame:
+    """The top-10 of the N_PROBES lowest-id vectors among `items` (all
+    embeddings by default) under `metric`: one numpy scan of the items
+    (operators/knn.py), whose arithmetic the oracles replay."""
+    if items is None:
+        items = load_table(spark, sf_dir, "embeddings")
     res = knn_exact(
-        emb,
-        _probe_queries(emb),
+        items,
+        _small_vectors(spark, sf_dir, N_PROBES),
         k=TOP_K,
         metric=metric,
         item_id="vec_id",
-        item_norm=norm_col,
     )
     return res.select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("vec_id").cast("long").alias("neighbor_id"),
-        F.col("distance"),
+        "query_id", "rank", F.col("vec_id").cast("long").alias("neighbor_id"), "distance"
     )
 
 
 def _knn_oracle(metric_expr: str) -> str:
     # NULL-embedding rows and NaN distances (zero-norm cosine pairs)
-    # are excluded — the engine's unscorable-vector rule (knn_exact's
-    # NULL-distance filter); no-ops on well-formed corpora
+    # are excluded — the engine's unscorable-vector rule (knn_exact
+    # skips NULL embeddings and drops NaN distances); no-ops on
+    # well-formed corpora
     return f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
@@ -131,18 +126,9 @@ def q_knn_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_cosine_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as knn_cosine via the bounded-shuffle scale path."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = _small_vectors(spark, sf_dir, N_PROBES)
-    res = knn_exact_local_topk(
-        emb, probes, k=TOP_K, metric="cosine", item_id="vec_id"
-    )
-    return res.select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("vec_id").cast("long").alias("neighbor_id"),
-        F.col("distance"),
-    )
+    """knn_cosine under its own name: the declared row of the
+    bounded-shuffle form, which is now the only exact KNN."""
+    return _knn(spark, sf_dir, "cosine")
 
 
 def q_vector_index_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -832,21 +818,7 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowed = docs.filter(F.col("lang").isin("en", "de")).select(
         F.col("doc_id").alias("vec_id")
     )
-    items = with_norm(emb).join(allowed, "vec_id", "left_semi")
-    res = knn_exact(
-        items,
-        _probe_queries(emb),
-        k=TOP_K,
-        metric="cosine",
-        item_id="vec_id",
-        item_norm="embedding_norm",
-    )
-    return res.select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("vec_id").cast("long").alias("neighbor_id"),
-        F.col("distance"),
-    )
+    return _knn(spark, sf_dir, "cosine", emb.join(allowed, "vec_id", "left_semi"))
 
 
 _KNN_FILTERED_ORACLE = f"""
@@ -1901,10 +1873,9 @@ _MMR_LAM = 0.7
 def q_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chroma_rs_spark.operators.similarity import mmr_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
     return mmr_topk(
-        emb,
-        _probe_queries(emb),
+        load_table(spark, sf_dir, "embeddings"),
+        _small_vectors(spark, sf_dir, N_PROBES),
         k=_MMR_K,
         pool=_MMR_POOL,
         lam=_MMR_LAM,

@@ -115,6 +115,15 @@ QUERIES = [
     "knn_ivf",
     "knn_ivf_trained",
     "pq_adc_topk",
+    # every caller of the one exact KNN (operators/knn.py) over the
+    # same NULL/zero vector edges: the ip metric, the where-filtered
+    # scan, the recall evaluations' exact sides and the MMR pool
+    "knn_ip",
+    "knn_filtered",
+    "ivf_recall",
+    "pq_recall",
+    "ann_recall",
+    "mmr_diversified",
 ]
 
 

@@ -6,12 +6,13 @@ hash even though every comparison says equal. The fix canonicalizes
 with `+ 0.0` after rounding on BOTH sides (operators/knn.py,
 suite/vector.py). This test pins the contract: for adversarial vector
 sets (exact duplicates -> rank-1 distance == 0, scaled copies ->
-cosine 0, negatives), every rounded distance from knn_exact and
-knn_exact_local_topk is BIT-identical to DuckDB evaluating the same
-math — compared via IEEE-754 bit patterns, not ==. The collection's
-`query()` ranks with the numpy form, so it is pinned to knn_exact on
-the same set extended with zero, NaN, ±inf and NULL rows and k-th
-distance ties.
+cosine 0, negatives), every rounded distance from knn_exact is
+BIT-identical to DuckDB evaluating the same math — compared via
+IEEE-754 bit patterns, not ==. Its rankings and the collection's
+`query()` (which ranks with knn_exact) are pinned to a DuckDB replay
+of the suite's exact-KNN oracle (suite/vector.py `_knn_oracle`), on
+the same set extended with zero, NaN, ±inf and NULL rows, k-th
+distance ties and rounding halves.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import struct
 import numpy as np
 import pytest
 
-from chroma_rs_spark.operators.knn import knn_exact, knn_exact_local_topk
+from chroma_rs_spark.operators.knn import knn_exact
 
 DIM = 8
 METRIC_SQL = {
@@ -57,10 +58,7 @@ def test_rounded_distances_bit_match_duckdb(spark, metric):
         [(i, v) for i, v in enumerate(vecs)],
         "doc_id long, embedding array<double>",
     )
-    queries = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs[:6])],
-        "query_id long, query_embedding array<double>",
-    )
+    queries = list(enumerate(vecs[:6]))
     spark_rows = {
         (r["query_id"], r["doc_id"]): _bits(r["distance"])
         for r in knn_exact(items, queries, k=len(vecs), metric=metric).collect()
@@ -89,29 +87,63 @@ def test_rounded_distances_bit_match_duckdb(spark, metric):
         assert spark_rows[(1, 7)] == _bits(0.0)
 
 
+def _duckdb_ranked(ids, vecs, probes, metric: str, k: int) -> list[tuple]:
+    """(query_id, rank, id, distance.hex()) rows of a DuckDB replay of
+    the suite's exact-KNN oracle (`_knn_oracle`: its metric
+    expressions, NULL embeddings and NaN distances dropped, ROW_NUMBER
+    over (distance, id)) for the items (ids, vecs) and the probes,
+    numbered from 0."""
+    import duckdb
+
+    from chroma_rs_spark.suite.vector import _COSINE_EXPR, _IP_EXPR, _L2_EXPR
+
+    expr = {"cosine": _COSINE_EXPR, "l2": _L2_EXPR, "ip": _IP_EXPR}[metric]
+    def lit(v):  # the python client would bind a NaN element as NULL
+        return None if v is None else "[" + ", ".join(repr(float(x)) for x in v) + "]"
+
+    con = duckdb.connect()
+    id_type = "VARCHAR" if isinstance(ids[0], str) else "BIGINT"
+    con.execute(f"CREATE TABLE e (id {id_type}, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO e VALUES (?, CAST(? AS DOUBLE[]))",
+        [(i, lit(v)) for i, v in zip(ids, vecs)],
+    )
+    con.execute("CREATE TABLE q (query_id INTEGER, qe DOUBLE[])")
+    con.executemany(
+        "INSERT INTO q VALUES (?, CAST(? AS DOUBLE[]))",
+        [(j, lit(v)) for j, v in enumerate(probes)],
+    )
+    rows = con.execute(
+        f"""
+        SELECT query_id, rank, id, distance FROM (
+          SELECT query_id, id, distance,
+                 ROW_NUMBER() OVER (PARTITION BY query_id
+                                    ORDER BY distance, id) AS rank
+          FROM (
+            SELECT q.query_id, e.id, ROUND(({expr}), 6) + 0.0 AS distance
+            FROM e CROSS JOIN q WHERE e.embedding IS NOT NULL
+          ) WHERE NOT isnan(distance)
+        ) WHERE rank <= {k}
+        """
+    ).fetchall()
+    return sorted((q, r, i, float(d).hex()) for q, r, i, d in rows)
+
+
 def test_scale_path_bit_matches_exact_path(spark):
-    """knn_exact_local_topk (numpy) and knn_exact (HOF) agree bit-wise
-    on rounded distances, including the canonicalized zero."""
+    """knn_exact's ranked top-5 (ranks, ids and distance bits,
+    including the canonicalized zero) equals the DuckDB replay of the
+    exact-KNN oracle."""
     vecs = _vectors()
     items = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)],
         "doc_id long, embedding array<double>",
     )
-    queries_df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs[:6])],
-        "query_id long, query_embedding array<double>",
+    got = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], float(r["distance"]).hex())
+        for r in knn_exact(items, list(enumerate(vecs[:6])), k=5).collect()
     )
-    exact = {
-        (r["query_id"], r["rank"]): (r["doc_id"], _bits(r["distance"]))
-        for r in knn_exact(items, queries_df, k=5, metric="cosine").collect()
-    }
-    local = {
-        (r["query_id"], r["rank"]): (r["doc_id"], _bits(r["distance"]))
-        for r in knn_exact_local_topk(
-            items, [(i, v) for i, v in enumerate(vecs[:6])], k=5, metric="cosine"
-        ).collect()
-    }
-    assert exact == local
+    assert got == _duckdb_ranked(list(range(len(vecs))), vecs, vecs[:6], "cosine", 5)
+    assert (0, 1, 0, float(0.0).hex()) in got and (0, 2, 3, float(0.0).hex()) in got
 
 
 # id -> (item, probe, distance): float32-exact pairs whose distance is
@@ -157,26 +189,17 @@ def _collection_vectors():
     return ids, vecs + list(extra.values())
 
 
-def _probe_df(spark, probes):
-    return spark.createDataFrame(
-        [(i, [float(x) for x in q]) for i, q in enumerate(probes)],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
-
-
 @pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
 def test_collection_query_bit_matches_knn_exact(engine, metric):
-    """Collection `query` (the numpy exact ranking) returns knn_exact's
-    rows: same ids, ranks and distance bits (compared by float.hex),
-    ±inf distances kept and NULL/NaN ones dropped, as knn_exact does."""
-    from chroma_rs_spark.collection import items_df
-
+    """Collection `query` (knn_exact on the stored norms) returns the
+    rows of the DuckDB replay of knn_exact's oracle: same ids, ranks
+    and distance bits (compared by float.hex), ±inf distances kept and
+    NULL/NaN ones dropped."""
     ids, vecs = _collection_vectors()
     c = engine.create_collection(f"parity_{metric}", {"hnsw:space": metric})
     c.add(ids=ids, embeddings=vecs)
     probes = [vecs[0], vecs[4], [0.0] * DIM, [float("nan")] * DIM,
               [1.0, -2.0, 0.5, 0.0, 3.0, -1.0, 0.25, 2.0], _E1, _C1, _C3]
-    queries = _probe_df(engine.spark, probes)
 
     def rows(df):
         return sorted(
@@ -185,12 +208,8 @@ def test_collection_query_bit_matches_knn_exact(engine, metric):
         )
 
     for k in (1, 2, 3, 4, len(ids)):
-        ref = knn_exact(
-            items_df(engine, c), queries, k=k, metric=metric, item_id="id",
-            item_norm="embedding_norm" if metric == "cosine" else None,
-        )
         got = c.query(probes, n_results=k, include=["distances"])
-        assert rows(got) == rows(ref), (metric, k)
+        assert rows(got) == _duckdb_ranked(ids, vecs, probes, metric, k), (metric, k)
         assert [f.dataType.simpleString() for f in got.schema.fields[:2]] == [
             "int", "bigint"
         ]

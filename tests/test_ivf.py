@@ -32,10 +32,9 @@ def test_ivf_recall_vs_exact(emb):
     got = {
         (r["query_id"], r["neighbor_id"]) for r in approx.collect()
     }
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_embedding"),
-    )
+    queries = [
+        (r["vec_id"], r["embedding"]) for r in emb.filter(F.col("vec_id") < 5).collect()
+    ]
     exact = knn_exact(emb, queries, k=k, metric="cosine", item_id="vec_id")
     want = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     # every query returns a full top-k, and each query's own vector
@@ -74,14 +73,7 @@ def test_ivf_with_trained_centroids(emb):
         assert top["neighbor_id"] == qid and top["distance"] == 0.0
 
     # recall vs exact cosine on the same probes stays in the IVF band
-    from chroma_rs_spark.operators.knn import knn_exact
-    from pyspark.sql import functions as F
-
-    probes = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_embedding"),
-    )
-    exact = knn_exact(emb, probes, k=10, metric="cosine", item_id="vec_id")
+    exact = knn_exact(emb, queries, k=10, metric="cosine", item_id="vec_id")
     want = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in res}
     recall = len(got & want) / len(want)

@@ -171,3 +171,26 @@ def test_collection_upsert_and_exact_query_job_ceilings(spark, tmp_path):
     total, _, rows = count_jobs_stages(spark, df.collect)
     assert len(rows) == 20
     assert plan + total <= 4, f"exact query ran {plan + total} jobs (ceiling 4)"
+
+
+def test_collection_query_diverse_job_ceiling(spark, tmp_path):
+    """query_diverse takes its MMR pool from the exact scorer in one
+    scan of the items and collects it once with its vectors; the
+    pairwise distances and the greedy picks run on the driver:
+    measured 2 plan jobs (the pool collect) + 3 collect jobs (the
+    ranking broadcast into the include join, the single-partition
+    sort). Before, it ran 8 + 3 jobs: the SQL pool, its join back to
+    the vectors and a pairwise self-join scored the whole collection
+    once per collect."""
+    from chroma_rs_spark.jobcount import count_jobs_stages
+
+    c, vecs, _rng = _ceiling_collection(spark, tmp_path)
+
+    def query():
+        return c.query_diverse(vecs[:8], n_results=10)
+
+    query().collect()  # warm the JVM
+    plan, _, df = count_jobs_stages(spark, query)
+    total, _, rows = count_jobs_stages(spark, df.collect)
+    assert len(rows) == 80
+    assert plan + total <= 5, f"query_diverse ran {plan + total} jobs (ceiling 5)"

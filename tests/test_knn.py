@@ -2,9 +2,8 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from chroma_rs_spark.operators.knn import knn_exact, knn_exact_local_topk
+from chroma_rs_spark.operators.knn import knn_exact
 from tests.conftest import SF001_DIR
 
 
@@ -39,25 +38,8 @@ def np_topk(mat, ids, qvecs, k, metric):
 @pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
 def test_knn_exact_matches_numpy(spark, emb, np_data, metric):
     ids, mat = np_data
-    qvecs = mat[:3]
-    queries = spark.createDataFrame(
-        [(i, list(map(float, q))) for i, q in enumerate(qvecs)],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
-    res = knn_exact(emb, queries, k=5, metric=metric, item_id="vec_id").collect()
-    got = {}
-    for r in res:
-        got.setdefault(r["query_id"], []).append(r["vec_id"])
-    assert got == np_topk(mat, ids, qvecs, 5, metric)
-
-
-@pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
-def test_local_topk_matches_exact(spark, emb, np_data, metric):
-    ids, mat = np_data
     queries = [(i, list(map(float, q))) for i, q in enumerate(mat[:3])]
-    res = knn_exact_local_topk(
-        emb, queries, k=5, metric=metric, item_id="vec_id"
-    ).collect()
+    res = knn_exact(emb, queries, k=5, metric=metric, item_id="vec_id").collect()
     got = {}
     for r in res:
         got.setdefault(r["query_id"], []).append(r["vec_id"])
@@ -65,38 +47,49 @@ def test_local_topk_matches_exact(spark, emb, np_data, metric):
 
 
 @pytest.mark.parametrize("metric", ["cosine", "l2", "ip"])
-def test_unrolled_dim_form_bit_identical(spark, emb, np_data, metric):
-    """The dim= unrolled expression (a bare `+` chain in SQL-string
-    form) must stay one parenthesized unit inside the surrounding
-    `1 - dot / norms` arithmetic — regression for the precedence bug
-    where `1.0D - t1 + t2 + ...` parsed as `(1.0D - t1) + t2 + ...`."""
+def test_local_topk_matches_exact(spark, emb, np_data, metric):
+    """Spread over many partitions, each Arrow batch keeps its own k
+    per query and the window merges them: the merged top-k equals the
+    brute-force one, rank for rank."""
     ids, mat = np_data
-    dim = mat.shape[1]
-    queries = spark.createDataFrame(
-        [(i, list(map(float, q))) for i, q in enumerate(mat[:2])],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
-    hof = knn_exact(emb, queries, k=5, metric=metric, item_id="vec_id").collect()
-    unrolled = knn_exact(
-        emb, queries, k=5, metric=metric, item_id="vec_id", dim=dim
+    queries = [(i, list(map(float, q))) for i, q in enumerate(mat[:3])]
+    res = knn_exact(
+        emb.repartition(7), queries, k=5, metric=metric, item_id="vec_id"
     ).collect()
-    assert [(r["query_id"], r["rank"], r["vec_id"]) for r in hof] == [
-        (r["query_id"], r["rank"], r["vec_id"]) for r in unrolled
-    ]
-    for a, b in zip(hof, unrolled):
-        assert np.float64(a["distance"]).view(np.int64) == np.float64(
-            b["distance"]
-        ).view(np.int64)
+    got = {}
+    for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
+        got.setdefault(r["query_id"], []).append(r["vec_id"])
+    assert got == np_topk(mat, ids, [q for _, q in queries], 5, metric)
 
 
 def test_self_query_rank1_is_self(spark, emb, np_data):
     ids, mat = np_data
-    queries = spark.createDataFrame(
-        [(int(ids[7]), list(map(float, mat[7])))],
-        "query_id INT, query_embedding ARRAY<DOUBLE>",
-    )
+    queries = [(int(ids[7]), list(map(float, mat[7])))]
     res = knn_exact(emb, queries, k=1, metric="cosine", item_id="vec_id").collect()
     assert res[0]["vec_id"] == ids[7] and res[0]["distance"] == 0.0
+
+
+def test_knn_exact_probe_and_item_edges(spark):
+    """NULL probes drop, string probe ids keep their type, items of
+    another length or with a NULL embedding are unscorable, and
+    `exclude_self` drops only the probe's own id; probes of mixed
+    lengths raise."""
+    items = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, None), (3, [1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = knn_exact(
+        items, [("a", [1.0, 0.0]), ("b", None)], k=5, metric="l2", item_id="vec_id"
+    )
+    assert got.schema["query_id"].dataType.simpleString() == "string"
+    rows = sorted(got.collect(), key=lambda r: r["rank"])
+    assert [(r["query_id"], r["vec_id"]) for r in rows] == [("a", 0), ("a", 1)]
+    own = knn_exact(
+        items, [(0, [1.0, 0.0])], k=5, metric="l2", item_id="vec_id", exclude_self=True
+    )
+    assert [r["vec_id"] for r in own.collect()] == [1]
+    with pytest.raises(ValueError, match="mixed dims"):
+        knn_exact(items, [(0, [1.0, 0.0]), (1, [1.0])], k=1, item_id="vec_id")
 
 
 def test_collection_query_diverse(engine):

@@ -509,6 +509,31 @@ def test_hybrid_rrf_union_semantics_surfaces_one_sided_docs(spark):
     assert r1["rrf"] == round(1.0 / (60 + r1["bm25_rank"]) + 1.0 / (60 + 101), 6)
 
 
+def test_hybrid_rrf_dense_leg_drops_nan_distances(spark):
+    """A document whose embedding has a NaN component has a NaN cosine
+    distance: the dense leg drops it before ranking, as the DuckDB
+    oracle's `NOT isnan(d)` does, instead of ranking it last and fusing
+    it with the lexical leg."""
+    from chroma_rs_spark.operators.hybrid import hybrid_search_rrf
+
+    docs = spark.createDataFrame(
+        [(0, "term one"), (1, "term two"), (3, "term three")],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.6, 0.8, 0.0]), (3, [float("nan"), 0.5, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    for both in (True, False):
+        out = {
+            r["doc_id"]: r["vec_rank"]
+            for r in hybrid_search_rrf(
+                docs, emb, ["term"], [1.0, 0.0, 0.0], k=5, require_both=both
+            ).collect()
+        }
+        assert out == ({0: 1, 1: 2} if both else {0: 1, 1: 2, 3: None}), out
+
+
 def test_simhash_packed_matches_python_reference(docs):
     """Pin the 16-bit-field bit-count packing against a direct Python
     reimplementation of the published formulation (per-bit +/-1 sums of

@@ -64,11 +64,13 @@ def test_no_cartesian_product(spark, name):
     )
 
 
-def test_knn_broadcasts_the_probe_side(spark):
-    # the KNN design point: the tiny query set broadcasts; the
-    # collection never shuffles for the cross score
+def test_knn_scores_the_items_before_the_only_shuffle(spark):
+    # the KNN design point: the tiny probe set rides in the scoring
+    # closure and each Arrow batch keeps k candidates per probe, so the
+    # collection never shuffles; the one exchange carries candidates
     plan = _plan(spark, "knn_cosine")
-    assert "BroadcastExchange" in plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.index("Exchange") < plan.index("MapInPandas"), plan
     # the item scan must not read columns the query never uses
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "embedding" in m.group(1)

@@ -354,14 +354,13 @@ def test_mmr_topk_diversifies_planted_clones(spark):
         (12, [0.8, 0.0, 0.0, 0.6]),
     ]
     items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    probes = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0])],
-        "query_id long, query_embedding array<double>",
-    )
+    probes = [(0, [1.0, 0.0, 0.0, 0.0])]
     knn_top4 = [
         r["vec_id"]
-        for r in knn_exact(items, probes, k=4, metric="cosine",
-                           item_id="vec_id").collect()
+        for r in sorted(
+            knn_exact(items, probes, k=4, metric="cosine", item_id="vec_id").collect(),
+            key=lambda r: r["rank"],
+        )
     ]
     assert knn_top4 == [0, 1, 2, 3]  # clones crowd plain KNN
     mmr = mmr_topk(items, probes, k=4, pool=7, lam=0.5)
@@ -394,10 +393,7 @@ def test_mmr_topk_advice_hardening(spark):
         (11, [0.8, 0.0, 0.6, 0.0]),
     ]
     items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    probes = spark.createDataFrame(
-        [("qa", [1.0, 0.0, 0.0, 0.0])],
-        "query_id string, query_embedding array<double>",
-    )
+    probes = [("qa", [1.0, 0.0, 0.0, 0.0])]
     got = mmr_topk(items, probes, k=3, pool=5, lam=0.5).collect()
     assert got and all(r["query_id"] == "qa" for r in got)
     ids = [r["vec_id"] for r in sorted(got, key=lambda r: r["rank"])]
