@@ -43,6 +43,7 @@ from chroma_rs_spark.errors import (
     PreflightError,
     ResetDisabledError,
 )
+from chroma_rs_spark.session import local_frame
 
 DEFAULT_TENANT = "default_tenant"
 DEFAULT_DATABASE = "default_database"
@@ -261,7 +262,8 @@ class Engine:
             )
             for r in self._read_registry()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "name STRING, id STRING, metadata MAP<STRING,STRING>, created_at DOUBLE",
         )

@@ -44,6 +44,7 @@ from chroma_rs_spark.errors import (
 from chroma_rs_spark.filters import compile_where, compile_where_document
 from chroma_rs_spark.functions.vector import l2_norm
 from chroma_rs_spark.operators.knn import knn_exact
+from chroma_rs_spark.session import local_frame
 
 ITEM_SCHEMA = T.StructType(
     [
@@ -131,7 +132,7 @@ def items_df(
     if os.path.isdir(path) and _has_parquet(path):
         df = engine.spark.read.schema(schema).parquet(path)
     else:
-        df = engine.spark.createDataFrame([], schema)
+        df = local_frame(engine.spark, [], schema)
     if partitioned and not keep_partition_col:
         df = df.drop(PARTITION_COL)
     if not keep_codes:
@@ -290,7 +291,7 @@ def _items_from_args(
         )
         for i, e, d, m in zip(ids, embeddings, documents, metadatas)
     ]
-    df = engine.spark.createDataFrame(rows, ITEM_SCHEMA)
+    df = local_frame(engine.spark, rows, ITEM_SCHEMA)
     return df.withColumn("embedding_norm", l2_norm("embedding"))
 
 
@@ -773,14 +774,15 @@ _CODEBOOK_SCHEMA = "m INT, code INT, pos INT, value DOUBLE"
 
 
 def _centroid_table(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (int(lab), int(pos), float(v))
             for lab, vec in cents
             for pos, v in enumerate(vec)
         ],
         _CENTROID_SCHEMA,
-    ).coalesce(1)
+    )
 
 
 def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]] | None:
@@ -799,7 +801,8 @@ def _read_centroids(spark, path: str) -> list[tuple[int, list[float]]] | None:
 
 
 def _codebook_table(spark, books) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (mi, ci, pos, float(books[mi, ci, pos]))
             for mi in range(books.shape[0])
@@ -807,7 +810,7 @@ def _codebook_table(spark, books) -> DataFrame:
             for pos in range(books.shape[2])
         ],
         _CODEBOOK_SCHEMA,
-    ).coalesce(1)
+    )
 
 
 def _read_codebooks(spark, path: str):

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from chroma_rs_spark.session import local_frame
+
 
 def _ntokens_col(text_col: str):
     """Per-row null-safe token count — the ONE definition the
@@ -151,10 +153,17 @@ def curate_corpus(
             return sdf.sparkSession.read.parquet(path)
         # truncates the logical plan IMMEDIATELY (the exponential-tree
         # cut — see module docstring; the plan becomes a LogicalRDD at
-        # call time) while materializing LAZILY: eager=False lets
-        # consecutive narrow stages compute inside one job instead of
-        # one barrier each (measured at sf0.1: eager 9.8 s -> lazy
-        # 8.8 s warmed, bit-identical). Two earlier measured negative
+        # call time). eager=False does not make the cut lazy: under
+        # AQE, building the checkpoint's RDD runs every exchange of the
+        # stage as its own job, so curate_corpus runs each stage's
+        # shuffles at call time, before any action. Measured at the
+        # perfbench size (5000 docs, seed 301), jobs per cut:
+        # line_dedup 7, exact_dedup 1, pairs 3, near_dup 3, spans 5,
+        # split 0, decontam 3 (22 in the call; 29 while the split
+        # re-ran the pair clustering: split 4, decontam 6). Only the
+        # final narrow work of each stage is left for the consuming
+        # job (measured at sf0.1: eager 9.8 s -> lazy 8.8 s warmed,
+        # bit-identical). Two earlier measured negative
         # results stand: spreading each narrow stage checkpoint across
         # the cores DOUBLES the wall (6.99 s -> 13.4 s — per-stage
         # repartition shuffles cost more than the single-thread scans
@@ -282,9 +291,9 @@ def curate_corpus(
         )
 
     # 5. near-duplicate clusters (banded MinHash candidates -> CC),
-    # keep one doc per cluster. The pair list is reused by the
-    # leakage-safe split below, so it is built even when the dedup
-    # stage itself is skipped.
+    # keep one doc per cluster. When the dedup stage is skipped the
+    # leakage-safe split below clusters on the pair list instead, so it
+    # is built either way.
     # "auto" defers to the operator's own size gate (small corpora
     # run uncapped — bit-compatible and census-free; large corpora get
     # the MINHASH_MAX_BUCKET protection the 10x zipf stress required).
@@ -302,10 +311,7 @@ def curate_corpus(
     pairs = minhash_lsh_pairs(
         s4, id_col=id_col, text_col=text_col, max_bucket=minhash_max_bucket
     )
-    # the pair list feeds BOTH the stage-5 clustering and the stage-7
-    # split restriction; without a cut the full minhash-LSH plan
-    # (shingle -> 64 hashes -> band join) executes twice (measured:
-    # ~1.5 s of the sf0.1 report wall was the second minhash pass).
+    # the cut is the pair list's restart point under checkpoint_dir
     pairs = _cut(pairs, "pairs_minhash")
     s5 = s4
     if "near_dup_clusters" not in skip:
@@ -358,40 +364,41 @@ def curate_corpus(
 
     # 7. leakage-safe split over the SURVIVING docs: restrict the
     # candidate pairs to both-surviving endpoints so clustering matches
-    # the corpus being split. Fused form (round 14): leakage_safe_split
-    # joins the corpus internally (dedup_clusters) and the old outer
-    # join attached the result to s6 AGAIN — the label attach + the
-    # split's map-side bucket arithmetic (dataset_split on cluster_id,
-    # the same one-definition call leakage_safe_split makes) need only
-    # ONE left join against the bounded component-label set. Split
-    # values are identical: cluster_id == coalesce(component, id) is
-    # dedup_clusters' cluster_id, and dataset_split is deterministic
-    # per cluster_id.
-    # Both-surviving restriction: semi joins against the survivor id
-    # set. A measured NEGATIVE result (round 14) stands against the
-    # "anti join the bounded dropped sets instead" rewrite — dropped =
-    # dup_ids UNION span-emptied is provably equivalent (endpoints
-    # live in s4) and exchanges fewer bytes at scale, but the small
-    # subtrees re-execute per consumer here: 71 -> 95 warm stages, and
-    # 103 with a dup_ids checkpoint to stop the re-execution. The
-    # survivor-set semi join reads the ALREADY-CHECKPOINTED s6 RDD —
-    # cheap scans beat extra materialization boundaries.
-    ids6 = s6.select(id_col)
-    pairs6 = (
-        pairs.join(ids6.withColumnRenamed(id_col, "id_a"), "id_a", "left_semi")
-        .join(ids6.withColumnRenamed(id_col, "id_b"), "id_b", "left_semi")
-    )
-    labels6 = pair_graph_components(
-        pairs6, threshold=near_dup_threshold
-    ).select(F.col("node").alias(id_col), F.col("component").alias("cluster_id"))
-    with_cluster = s6.join(labels6, id_col, "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col(id_col))
-    )
+    # the corpus being split, and split on the cluster id. When stage 5
+    # ran, no thresholded pair has both endpoints in s6: stage 5 kept
+    # one node per component of the same thresholded graph, and s6 is
+    # a subset of s5. So every cluster is a single doc and the split is
+    # keyed on the id itself: cluster_id == coalesce(component, id) ==
+    # id, and dataset_split hashes the id's string form, so splits are
+    # identical to the clustering path without running it.
+    if "near_dup_clusters" in skip:
+        # Fused form (round 14): one left join against the bounded
+        # component-label set attaches cluster_id (dedup_clusters'
+        # coalesce(component, id)). The both-surviving restriction is
+        # semi joins against the survivor id set; a measured NEGATIVE
+        # result (round 14) stands against "anti join the bounded
+        # dropped sets instead": the small subtrees re-execute per
+        # consumer (71 -> 95 warm stages, 103 with a checkpoint to
+        # stop it), while the survivor semi join reads the
+        # ALREADY-CHECKPOINTED s6 RDD.
+        ids6 = s6.select(id_col)
+        pairs6 = pairs.join(
+            ids6.withColumnRenamed(id_col, "id_a"), "id_a", "left_semi"
+        ).join(ids6.withColumnRenamed(id_col, "id_b"), "id_b", "left_semi")
+        labels6 = pair_graph_components(
+            pairs6, threshold=near_dup_threshold
+        ).select(F.col("node").alias(id_col), F.col("component").alias("cluster_id"))
+        split = dataset_split(
+            s6.join(labels6, id_col, "left").withColumn(
+                "cluster_id", F.coalesce("cluster_id", F.col(id_col))
+            ),
+            weights,
+            id_col="cluster_id",
+        )
+    else:
+        split = dataset_split(s6, weights, id_col=id_col)
     s7 = _stage(
-        "leakage_safe_split",
-        dataset_split(with_cluster, weights, id_col="cluster_id").select(
-            id_col, text_col, "_nt", "split"
-        ),
+        "leakage_safe_split", split.select(id_col, text_col, "_nt", "split")
     )
 
     # 8. decontamination against the ACTUAL split from stage 7:
@@ -438,7 +445,8 @@ def curate_corpus(
     # spine join: a stage that empties the corpus contributes no rows
     # to the union, but its ledger row (n_docs=0) must still appear —
     # the old per-stage agg form always produced one
-    spine = docs.sparkSession.createDataFrame(
+    spine = local_frame(
+        docs.sparkSession,
         [(i, name) for i, (name, _) in enumerate(stages)],
         "stage_no INT, stage STRING",
     )

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chroma_rs_spark.session import local_frame
+
 MICRO = 1_000_000.0
 
 
@@ -214,12 +216,12 @@ def kmeans(
     schema = "label int, pos long, centroid double, n_vectors long"
     assign = assign_nearest_centroid(
         emb,
-        spark.createDataFrame(assign_state, schema),
+        local_frame(spark, assign_state, schema),
         id_col=id_col,
         vec_col=vec_col,
         dim=dim,
     )
-    return assign, spark.createDataFrame(state, schema)
+    return assign, local_frame(spark, state, schema)
 
 
 def _lloyd(
@@ -294,7 +296,8 @@ def _lloyd(
         cvecs: dict[tuple, list[float]] = {}
         for *key, _pos, mean, _n in st:
             cvecs.setdefault(tuple(key), []).append(mean)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(*key, cvec) for key, cvec in cvecs.items()],
             "".join(f"{col} int, " for col in g) + "label int, cvec array<double>",
         )

@@ -26,6 +26,7 @@ from chroma_rs_spark.functions.vector import cosine_distance, dot_product, l2_no
 from chroma_rs_spark.operators import kernel
 from chroma_rs_spark.operators.graph import _require_integral_id
 from chroma_rs_spark.plans import fan_out
+from chroma_rs_spark.session import local_frame
 
 def _norm_scorable(norm_col: Column) -> Column:
     """norm ∈ (0, inf) — semantic_dedup's unscorable-row exclusion —
@@ -110,7 +111,7 @@ def cosine_topk_pairs(
 def _collect_shape(src: DataFrame, top_n: int, schema: str) -> DataFrame:
     ref = src.orderBy("_id").toPandas()
     if ref.empty:
-        return src.sparkSession.createDataFrame([], schema)
+        return local_frame(src.sparkSession, [], schema)
     ref_ids = ref["_id"].to_numpy()
     ref_mat = kernel.matrix(ref["_emb"])
     ref_norm = kernel.norms(ref_mat)
@@ -130,7 +131,8 @@ def _tile_shape(src: DataFrame, top_n: int, n_blocks: int, schema: str) -> DataF
     import pandas as pd
 
     keyed = src.withColumn("_blk", F.pmod(F.hash("_id"), F.lit(n_blocks)))
-    tiles = src.sparkSession.createDataFrame(
+    tiles = local_frame(
+        src.sparkSession,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
@@ -837,7 +839,8 @@ def mmr_topk(
             remaining.remove(best)
             out_rows.append((q, rank, ids[best], dq[best], best_score))
     types = dict(cand.dtypes)
-    return items.sparkSession.createDataFrame(
+    return local_frame(
+        items.sparkSession,
         out_rows,
         f"`{probe_id}` {types[probe_id]}, rank long, `{item_id}` {types[item_id]},"
         " distance double, mmr_score double",

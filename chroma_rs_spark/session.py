@@ -16,7 +16,44 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A one-partition DataFrame of driver-side `rows` (tuples in
+    `schema` field order; `schema` a StructType or a DDL string),
+    planned as a JVM `LocalRelation` (`LocalTableScan`). The rows cross
+    to the JVM once as one Arrow table, so no Python worker
+    deserializes them, where `createDataFrame(list)` pickles them into
+    a `PythonRDD` that every action re-reads through Python workers.
+    One partition: a LocalTableScan alone splits into one task per row
+    up to the core count, so a 5-row add would write 5 files.
+
+    The checks of `createDataFrame(list)` hold: a NULL in a NOT NULL
+    field and a value of the wrong type raise. Floats convert to FLOAT
+    round-to-nearest (1e39 stores as +inf; NaN and -0.0 are kept), and
+    map entries keep the order of the caller's dict."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(f"local_frame: row of {len(r)} fields, schema has {width}")
+    cols = list(zip(*rows)) if rows else [()] * width
+    for c, f in zip(cols, schema.fields):
+        # Arrow truncates a float into an integer column; refuse it
+        if isinstance(f.dataType, T.IntegralType) and any(isinstance(v, float) for v in c):
+            raise TypeError(f"local_frame: float value in integer field {f.name}")
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def driver_memory() -> str:

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame
 
 from chroma_rs_spark.catalog import Collection, Engine
+from chroma_rs_spark.session import local_frame
 
 
 def stream_add(
@@ -149,7 +150,7 @@ def stream_dedup_ingest(
         try:
             return spark.read.schema(schema).parquet(path)
         except AnalysisException:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
         batch = batch_df.dropDuplicates([id_col])
@@ -398,7 +399,7 @@ def repair_band_index(
     try:
         indexed = spark.read.schema(index_schema).parquet(index_dir)
     except AnalysisException:
-        indexed = spark.createDataFrame([], index_schema)
+        indexed = local_frame(spark, [], index_schema)
     missing = corpus.join(
         indexed.select(F.col("id").alias(id_col)).distinct(),
         id_col,

@@ -32,6 +32,7 @@ from chroma_rs_spark.operators.similarity import (
     cosine_topk_pairs,
     signbucket_ann,
 )
+from chroma_rs_spark.session import local_frame
 from chroma_rs_spark.sources.tables import load_table
 from chroma_rs_spark.suite import QueryDef, fixture, fixture_dir
 
@@ -2652,7 +2653,8 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         disjoint = True
     except ValueError:
         disjoint = False
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 len(rows),
@@ -2714,7 +2716,8 @@ def q_zorder_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("o_totalprice", 240000.0, 265000.0),
         ],
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(full["n_files"]),

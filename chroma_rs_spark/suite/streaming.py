@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from chroma_rs_spark.scratch import mkscratch
+from chroma_rs_spark.session import local_frame
 from chroma_rs_spark.sources.tables import load_table
 from chroma_rs_spark.streaming.events import (
     session_window_agg,
@@ -170,7 +171,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("embedding", 1).cast("double").alias("c_first"),
             F.element_at("embedding", -1).cast("double").alias("c_last"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -17,6 +17,7 @@ from chroma_rs_spark.operators.text import (
     quality_score,
     token_stats,
 )
+from chroma_rs_spark.session import local_frame
 from chroma_rs_spark.sources.tables import load_table
 from chroma_rs_spark.suite import QueryDef
 
@@ -1377,7 +1378,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = train_bpe(
         load_table(spark, sf_dir, "documents"), n_merges=_BPE_MERGES
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "merge_no INT, lhs STRING, rhs STRING, pair_count LONG",
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from chroma_rs_spark.filters import column_resolver, compile_where, compile_where_document
 from chroma_rs_spark.functions.vector import l2_norm
 from chroma_rs_spark.operators.knn import knn_exact
+from chroma_rs_spark.session import local_frame
 from chroma_rs_spark.sources.tables import load_table
 from chroma_rs_spark.suite import QueryDef, fixture, fixture_dir
 
@@ -225,7 +226,8 @@ def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     eng, coll = _stats_lifecycle(spark, sf_dir)
     s = item_ops.stats(eng, coll)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(s["count"]),

@@ -17,6 +17,8 @@ threshold (the span pair must survive stage 5 to reach the span CUT).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -389,3 +391,57 @@ def test_normalize_stage_makes_nfc_variants_exact_dupes(spark):
     rep = {r["stage"]: r["n_docs"] for r in report.collect()}
     assert rep["input"] == 4 and rep["normalize_text"] == 3
     assert rep["exact_dedup"] == 2
+
+
+def test_split_keeps_near_dups_together_when_clusters_are_skipped(spark):
+    """With near_dup_clusters skipped both near duplicates (1, 101)
+    reach the split, which must cluster them: they share one split
+    even under weights that split their ids apart."""
+    from chroma_rs_spark.operators.sampling import hash_bucket
+
+    df = spark.createDataFrame(_rows(), "doc_id long, text string")
+    buckets = dict(
+        df.filter(F.col("doc_id").isin(1, 101))
+        .select("doc_id", hash_bucket("doc_id").alias("b"))
+        .collect()
+    )
+    assert buckets[1] != buckets[101]
+    cut = min(buckets.values()) + 1
+    weights = {"train": cut / 10000, "test": 1 - cut / 10000}
+    corpus, _ = curate_corpus(
+        df, weights, line_min_df=5, skip={"near_dup_clusters"}
+    )
+    split = {r["doc_id"]: r["split"] for r in corpus.collect()}
+    assert 1 in split and 101 in split
+    assert split[1] == split[101]
+
+
+def test_split_stage_skips_clustering_after_near_dup_stage(
+    curated, spark, tmp_path, monkeypatch
+):
+    """Stage 5 keeps one doc per thresholded-pair component, so no pair
+    survives to the split and its clusters are the docs themselves:
+    the split stage's plan runs no union-find (no MapInPandas), and
+    the corpus equals the clustered run's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        plans[os.path.basename(path)] = str(
+            self._df._jdf.queryExecution().executedPlan().toString()
+        )
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    df, out, _ = curated
+    corpus, _ = curate_corpus(
+        df, line_min_df=5, checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    stage = {d.split("_", 2)[2]: p for d, p in plans.items() if d.startswith("stage_")}
+    # the near-dup stage itself runs the union-find
+    assert "MapInPandas" in stage["near_dup_clusters"]
+    assert "MapInPandas" not in stage["leakage_safe_split"]
+    got = sorted(tuple(r) for r in corpus.collect())
+    assert got == sorted((d, r["text"], r["split"]) for d, r in out.items())
